@@ -169,21 +169,23 @@ def train_eval_all(
         labelCol="label", predictionCol="prediction", metricName="accuracy"
     )
     out = []
-    for algo in algos:
-        model = build_pipeline(algo).fit(train)
-        preds = model.transform(test)
-        acc = float(evaluator.evaluate(preds))
-        out.append(
-            {
-                "model": algo,
-                "accuracy": acc,
-                "error_rate": 1.0 - acc,
-                "n_train": train.count(),
-                "n_test": test.count(),
-            }
-        )
-    train.unpersist()
-    test.unpersist()
+    try:
+        for algo in algos:
+            model = build_pipeline(algo).fit(train)
+            preds = model.transform(test)
+            acc = float(evaluator.evaluate(preds))
+            out.append(
+                {
+                    "model": algo,
+                    "accuracy": acc,
+                    "error_rate": 1.0 - acc,
+                    "n_train": train.count(),
+                    "n_test": test.count(),
+                }
+            )
+    finally:
+        train.unpersist()
+        test.unpersist()
     return out
 
 
@@ -216,13 +218,20 @@ def q_ml_predict_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sessionize→window→feature pipeline (RecognizeActivity.java:130
     # caches for the same reason).
     df = feature_frame(spark, sf_dir).cache()
-    train, test = train_test_split(df)
-    model = build_pipeline("decision_tree").fit(train)
-    return (
-        model.transform(test)
-        .groupBy("label", "prediction")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    try:
+        train, test = train_test_split(df)
+        model = build_pipeline("decision_tree").fit(train)
+        counts = (
+            model.transform(test)
+            .groupBy("label", "prediction")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        # the confusion matrix is at most 6x6 rows: materialize it while
+        # the cache still stands, so the returned frame outlives the
+        # release
+        return counts.localCheckpoint(eager=True)
+    finally:
+        df.unpersist()
 
 
 def save_model(model: PipelineModel, path: str) -> None:

@@ -10,11 +10,10 @@ nearest center is the pruning signal (drop the closest-covered
 points first) and max(d2_min) is the cover radius the method bounds.
 
 Scale shape: the greedy loop is inherently k sequential passes —
-each round is ONE full scan computing min-d2 to the selected set (an
-array_min over a k-entry broadcast literal, no exchange) followed by
-a TakeOrderedAndProject (per-partition top-1 + a 1-row driver merge)
-— the same bounded-driver-fetch-per-round pattern as the BPE merge
-loop.  Work is N·k d2 folds total; at production k the per-row fold
+each round is ONE full scan folding the newest center into a carried
+min-d2 column (no exchange), checkpointed, with the round's argmax
+observed on that same job (a per-partition max merged on the driver)
+— one job per round.  Work is N·k d2 folds total; at production k the per-row fold
 becomes a per-Arrow-batch BLAS matmul exactly like
 ``similarity.blas_assign`` (the q_semdedup_blas precedent applies
 verbatim: d2 is 6-dp rounded, selections are integer ids).
@@ -35,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
+from .iterate import RoundLoop
 from .similarity import _D2_FOLD, _sql_d2
 
 K_CENTERS = 16
@@ -54,19 +54,6 @@ def _centers_literal(centers: list[tuple[int, int, list[float]]]) -> str:
     return "array(" + ", ".join(parts) + ")"
 
 
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint-ed frame's storage blocks eagerly.  The
-    checkpointed internal RDD hangs off the Dataset's LogicalRDD node;
-    DataFrame.unpersist() only covers persist().  Safe here because the
-    caller only drops a round AFTER the next round's checkpoint has
-    materialized — the blocks are never read again.  Best-effort: if
-    the internals move, blocks free at driver GC exactly as before."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def kcenter_select(
     emb: DataFrame, k: int = K_CENTERS
 ) -> list[tuple[int, int, list[float]]]:
@@ -84,34 +71,36 @@ def kcenter_select(
     the k driver fetches, dominate: the interpreted HOF is the
     per-row constant).  The state is localCheckpoint-ed per round so
     round i actually reads round i-1's column instead of replaying
-    the whole expression lineage."""
+    the whole expression lineage.  The round's argmax — the next
+    center — is observed on that same checkpoint job: max over
+    struct(md2, -vec_id, embedding) is exactly the row an
+    ``orderBy(md2 DESC, vec_id ASC).limit(1)`` fetch would return
+    (structs compare field by field, null and NaN ordered as in the
+    sort), with no second job per round."""
     corpus = emb.select("vec_id", "embedding")
     first = corpus.orderBy("vec_id").limit(1).collect()[0]
     centers = [(0, int(first.vec_id), [float(x) for x in first.embedding])]
     state = corpus
-    prev = None  # round i-1's checkpointed frame, freed after round i
-    for i in range(1, k):
-        _, _, cvec = centers[-1]
-        arr = ", ".join(f"CAST({v!r} AS DOUBLE)" for v in cvec)
-        d2_new = F.expr(_D2_FOLD.format(x="embedding", c=f"array({arr})"))
-        md2 = (
-            d2_new if i == 1 else F.least(F.col("md2"), d2_new)
-        )
-        state = state.withColumn("md2", md2).localCheckpoint(eager=True)
-        # the new round's checkpoint is materialized; the previous
-        # round's copy is dead weight in executor storage — drop it
-        # instead of accumulating k-1 full corpus copies until GC
-        if prev is not None:
-            _unpersist_checkpoint(prev)
-        prev = state
-        nxt = (
-            state.orderBy(F.col("md2").desc(), F.col("vec_id").asc())
-            .limit(1)  # TakeOrderedAndProject: 1-row driver merge
-            .collect()[0]
-        )
-        centers.append(
-            (i, int(nxt.vec_id), [float(x) for x in nxt.embedding])
-        )
+    with RoundLoop("kcenter") as loop:
+        for i in loop.rounds(range(1, k)):
+            _, _, cvec = centers[-1]
+            arr = ", ".join(f"CAST({v!r} AS DOUBLE)" for v in cvec)
+            d2_new = F.expr(
+                _D2_FOLD.format(x="embedding", c=f"array({arr})")
+            )
+            md2 = d2_new if i == 1 else F.least(F.col("md2"), d2_new)
+            state = loop.checkpoint(
+                state.withColumn("md2", md2),
+                far=F.max(
+                    F.struct(
+                        "md2", (-F.col("vec_id")).alias("nv"), "embedding"
+                    )
+                ),
+            )
+            far = loop.stats["far"]
+            centers.append(
+                (i, -int(far.nv), [float(x) for x in far.embedding])
+            )
     return centers
 
 

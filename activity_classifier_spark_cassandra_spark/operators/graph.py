@@ -23,13 +23,14 @@ adversarial long chains where plain propagation needs diameter rounds.
 This is the 100 TB safety choice when the similarity graph's shape is
 unknown.
 
-Iterative Spark mechanics both demonstrate deliberately:
-- ``localCheckpoint(eager=True)`` per round — truncates lineage so the
-  plan doesn't grow by two joins every iteration (the classic
+Iterative Spark mechanics both demonstrate deliberately (both loops
+run on ``iterate.RoundLoop``):
+- an eager checkpoint per round — truncates lineage so the plan
+  doesn't grow by two joins every iteration (the classic
   iterative-algorithm OOM/stack blowup);
-- convergence detected by a CHEAP scalar action on the just-
-  materialized frame (decimal label-sum / edge-set fingerprint —
-  monotone, so equality ⇔ fixpoint), never a full frame compare;
+- convergence detected by a scalar OBSERVED on that same checkpoint
+  job (decimal label-sum / edge-set fingerprint — monotone, so
+  equality ⇔ fixpoint), never a second action or a frame compare;
 - the edge frame is persisted pre-partitioned on the join key, so each
   round shuffles only the (small) label frame, not the edges.
 
@@ -45,12 +46,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .dedup import q_simhash_near_dup
+from .iterate import RoundLoop
 
 MAX_ITER = 50
-
-#: rounds taken by the last connected_components* call (logged for the
-#: bench: the sf0.1 dedup graph should converge in a handful).
-LAST_ROUNDS: int = 0
 
 
 def connected_components(
@@ -70,55 +68,49 @@ def connected_components(
     ``path_halving_every``-th round additionally follows one pointer
     (label-of-label), which is what keeps chain-y graphs at O(log d)
     without paying the extra join on the near-clique common case."""
-    global LAST_ROUNDS
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
     nodes = sym.select("a").distinct()
-    # self-loops: the join+min below then computes min over N(v) ∪ {v}
-    # in one pass — no left join, no coalesce
-    sym2 = (
-        sym.unionByName(nodes.select("a", F.col("a").alias("b")))
-        .distinct()
-        .repartition("b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        nodes.select(F.col("a").alias("id"), F.col("a").alias("comp"))
-        .localCheckpoint(eager=True)
-    )
     # labels only ever decrease ⇒ sum(comp) strictly decreases until
     # the fixpoint; decimal keeps the 100 TB id-sum overflow-proof
-    prev = labels.agg(
-        F.sum(F.col("comp").cast("decimal(38,0)"))
-    ).first()[0]
-    LAST_ROUNDS = 0
-    for i in range(MAX_ITER):
-        LAST_ROUNDS += 1
-        nxt = (
-            sym2.join(labels, sym2["b"] == labels["id"])
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("comp").alias("comp"))
+    label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
+    with RoundLoop("connected_components", keep_last=True) as loop:
+        # self-loops: the join+min below then computes min over
+        # N(v) ∪ {v} in one pass — no left join, no coalesce
+        sym2 = loop.cache(
+            sym.unionByName(nodes.select("a", F.col("a").alias("b")))
+            .distinct()
+            .repartition("b"),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        if path_halving_every and (i + 1) % path_halving_every == 0:
-            ptr = nxt.select(
-                F.col("id").alias("pid"), F.col("comp").alias("pcomp")
+        labels = loop.checkpoint(
+            nodes.select(F.col("a").alias("id"), F.col("a").alias("comp")),
+            label_sum=label_sum,
+        )
+        for i in loop.rounds(range(1, MAX_ITER + 1)):
+            prev = loop.stats["label_sum"]
+            nxt = (
+                sym2.join(labels, sym2["b"] == labels["id"])
+                .groupBy(F.col("a").alias("id"))
+                .agg(F.min("comp").alias("comp"))
             )
-            nxt = nxt.join(ptr, nxt["comp"] == F.col("pid"), "left").select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("pcomp"), F.col("comp"))
-                ).alias("comp"),
-            )
-        nxt = nxt.localCheckpoint(eager=True)
-        cur = nxt.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)"))
-        ).first()[0]
-        labels = nxt
-        if cur == prev:
-            break
-        prev = cur
-    sym2.unpersist()
+            if path_halving_every and i % path_halving_every == 0:
+                ptr = nxt.select(
+                    F.col("id").alias("pid"), F.col("comp").alias("pcomp")
+                )
+                nxt = nxt.join(
+                    ptr, nxt["comp"] == F.col("pid"), "left"
+                ).select(
+                    "id",
+                    F.least(
+                        F.col("comp"),
+                        F.coalesce(F.col("pcomp"), F.col("comp")),
+                    ).alias("comp"),
+                )
+            labels = loop.checkpoint(nxt, label_sum=label_sum)
+            if loop.stats["label_sum"] == prev:
+                break
     return labels
 
 
@@ -162,33 +154,28 @@ def connected_components_star(
     ``connected_components``, O(log n)-ish rounds on ANY graph shape.
 
     Convergence = the edge set stops changing; detected by a
-    (count, order-insensitive xxhash64 fingerprint) pair computed in
-    one scalar action per round on the just-checkpointed frame."""
-    global LAST_ROUNDS
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev = None
-    LAST_ROUNDS = 0
-    for _ in range(MAX_ITER):
-        LAST_ROUNDS += 1
-        sym = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    (count, order-insensitive xxhash64 fingerprint) pair observed on
+    each round's checkpoint job."""
+    fingerprint = {
+        "n": F.count(F.lit(1)),
+        "h": F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
+    }
+    with RoundLoop("connected_components_star", keep_last=True) as loop:
+        e = loop.checkpoint(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .where(F.col("a") != F.col("b"))
+            .distinct()
         )
-        e = _small_star(_large_star(sym)).localCheckpoint(eager=True)
-        cur = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64("a", "b").cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        cur = (cur["n"], cur["h"])
-        if cur == prev:
-            break
-        prev = cur
+        prev = None
+        for _ in loop.rounds(range(1, MAX_ITER + 1)):
+            sym = e.unionByName(
+                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+            )
+            e = loop.checkpoint(_small_star(_large_star(sym)), **fingerprint)
+            cur = (loop.stats["n"], loop.stats["h"])
+            if cur == prev:
+                break
+            prev = cur
     # fixpoint: e is a star forest (child -> root); roots appear only
     # on the b side (and point to themselves implicitly)
     roots = (
@@ -379,54 +366,51 @@ def pagerank_fixed_point(
     that keeps plan depth bounded on long runs without paying 3 eager
     materializations for a 3-iteration query."""
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    withdeg = (
-        edges.join(deg, "src")
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # node set = src ∪ dst, so sink-only vertices of a DIRECTED input
-    # still get rank rows (teleport + inbound mass).  Their own
-    # outgoing mass is simply dropped, not redistributed — the
-    # standard simplification; symmetric inputs (trade_edges) have no
-    # sinks and lose nothing.
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     teleport = (100 - PR_DAMPING_PCT) * PR_SCALE // 100
-    ranks = nodes.select("node", F.lit(PR_SCALE).cast("long").alias("rank"))
-    for i in range(iters):
-        contrib = (
-            withdeg.join(ranks, withdeg.src == ranks.node)
-            # exact integer floor division — `/` would go through a
-            # double and can round up across the floor near exact
-            # quotients, breaking bit-parity with the oracle's `//`
-            .select("dst", F.expr("rank DIV od").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
+    with RoundLoop("pagerank", keep_last=True) as loop:
+        withdeg = loop.cache(
+            edges.join(deg, "src").repartition("src"),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
+        # node set = src ∪ dst, so sink-only vertices of a DIRECTED
+        # input still get rank rows (teleport + inbound mass).  Their
+        # own outgoing mass is simply dropped, not redistributed — the
+        # standard simplification; symmetric inputs (trade_edges) have
+        # no sinks and lose nothing.
+        nodes = loop.pin(
+            edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        ranks = nodes.select(
+            "node", F.lit(PR_SCALE).cast("long").alias("rank")
+        )
+        for i in loop.rounds(range(1, iters + 1)):
+            contrib = (
+                withdeg.join(ranks, withdeg.src == ranks.node)
+                # exact integer floor division — `/` would go through a
+                # double and can round up across the floor near exact
+                # quotients, breaking bit-parity with the oracle's `//`
+                .select("dst", F.expr("rank DIV od").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("s"))
+            )
+            ranks = nodes.join(
+                contrib, nodes.node == contrib.dst, "left"
+            ).select(
                 "node",
                 F.expr(
                     f"{teleport}L + ({PR_DAMPING_PCT} * coalesce(s, 0L))"
                     f" DIV 100"
                 ).alias("rank"),
             )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    # materialize BEFORE unpersisting: the loop may have run no eager
-    # action (iters < checkpoint_every), and dropping the cache
-    # registration on a still-lazy frame would make every consumer
-    # re-derive the edge join with no cache at all — the persist
-    # would never have cached anything
-    if iters == 0 or iters % checkpoint_every != 0:
-        ranks = ranks.localCheckpoint(eager=True)
-    withdeg.unpersist(blocking=False)
+            if i % checkpoint_every == 0 or i == iters:
+                ranks = loop.checkpoint(ranks)
+        # the loop frees the edge cache and the node set on exit, so
+        # the returned ranks must be materialized even when no round
+        # ran
+        if iters == 0:
+            ranks = loop.checkpoint(ranks)
     return ranks
 
 

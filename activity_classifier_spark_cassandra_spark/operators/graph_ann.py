@@ -64,10 +64,11 @@ corpus size — so the wider beam is the correct knob to spend on.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
+from .iterate import RoundLoop
 from .similarity import _DOT, _N1, _N2, N_QUERIES, TOP_K
 
 # Tuned on the sf test corpus (dim-64, weak cluster structure) via
@@ -136,9 +137,9 @@ def _score(cand: DataFrame, corpus: DataFrame) -> DataFrame:
     )
 
 
-def _top_k(scored: DataFrame, k: int) -> DataFrame:
+def _top_k(scored: DataFrame, k: int, col: str = "cosine") -> DataFrame:
     w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        F.col(col).desc(), F.col("neighbor_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
@@ -190,6 +191,98 @@ def _init_pairs(ids: DataFrame, k: int, n: int) -> DataFrame:
     )
 
 
+def _descend(
+    loop: RoundLoop,
+    seed: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    score: Column,
+    col: str,
+    k: int,
+    iters: int,
+    min_updates: float,
+) -> DataFrame:
+    """NN-descent rounds from ``seed`` (vec_id, neighbor_id, <col>)
+    until a round updates fewer than ``min_updates`` edges or ``iters``
+    rounds have run.  ``left`` (v, ...) and ``right`` (w, ...) carry
+    the vector columns ``score`` reads; ``col`` names the rounded
+    similarity the graph ranks by.  Returns the last round's
+    checkpointed graph.
+
+    NN-descent rounds in Dong's LOCAL-JOIN shape.  The naive form
+    (generate thin candidate pairs, then join the corpus twice to
+    score) shuffles the first join's OUTPUT — K²·N rows each
+    carrying a full vector — which measured 11.5 GB / 333 s at the
+    100x probe.  Instead:
+      * the graph carries its cosines between rounds, so g's own
+        edges and all REVERSE edges need no rescoring at all — the
+        element-order fold is bit-symmetric in its arguments;
+      * only genuinely NEW pairs (two-hop: v -> u -> w) are scored,
+        and both vectors are co-located AT u by shuffling the
+        adjacency list with ONE vector attached per row (2·K·N
+        rows), never the K²·N pair frame: the pair join, the
+        cosine fold, and the thin projection all happen inside u's
+        partition.  Every exchange after that carries 24-byte rows.
+    """
+    global last_realized_rounds
+    last_realized_rounds = 0
+    g = loop.checkpoint(seed)
+    for rnd in loop.rounds(range(1, iters + 1)):
+        two_hop = (
+            g.select(
+                F.col("neighbor_id").alias("u"), F.col("vec_id").alias("v")
+            )
+            .join(left, "v")
+            .join(
+                g.select(
+                    F.col("vec_id").alias("u"),
+                    F.col("neighbor_id").alias("w"),
+                ).join(right, "w"),
+                "u",
+            )
+            .filter(F.col("v") != F.col("w"))
+            .withColumn(col, score)
+            .select(
+                F.col("v").alias("vec_id"),
+                F.col("w").alias("neighbor_id"),
+                col,
+            )
+        )
+        rev = g.select(
+            F.col("neighbor_id").alias("vec_id"),
+            F.col("vec_id").alias("neighbor_id"),
+            col,
+        )
+        # δ-termination bookkeeping rides the EXISTING candidate
+        # exchange: rows from the current edge list carry old=1, so
+        # after the dedup-agg a kept pair with max(old)=0 is exactly
+        # an edge of g_new \ g_old, counted by an observation on the
+        # round's own checkpoint job — no anti-join, no count job.
+        # (On the final round the count cannot change control flow,
+        # and the oracle's first-round-under-threshold selection
+        # returns g_iters for stop == iters regardless.)
+        cand = (
+            g.withColumn("old", F.lit(1))
+            .unionByName(rev.withColumn("old", F.lit(0)))
+            .unionByName(two_hop.withColumn("old", F.lit(0)))
+            .groupBy("vec_id", "neighbor_id")
+            .agg(  # duplicates carry the identical rounded value; min
+                # is just a deterministic pick that fuses dedup into
+                # the same exchange
+                F.min(col).alias(col),
+                F.max("old").alias("old"),
+            )
+        )
+        g = loop.checkpoint(
+            _top_k(cand, k, col).select("vec_id", "neighbor_id", col, "old"),
+            updates=F.count_if(F.col("old") == 0),
+        ).drop("old")
+        last_realized_rounds = rnd
+        if loop.stats["updates"] < min_updates:
+            break
+    return g
+
+
 def build_knn_graph(
     emb: DataFrame,
     k: int = G_K,
@@ -201,103 +294,25 @@ def build_knn_graph(
     Rounds run until the per-round update count drops below
     ``delta``·k·N or ``iters`` rounds have run (δ-termination,
     Dong 2011 §2.3)."""
-    global last_realized_rounds
     corpus = emb.select("vec_id", F.col("embedding").alias("e"))
     n = emb.count()  # one scalar aggregate — metadata-scale
     init = _init_pairs(corpus.select("vec_id"), k, n)
 
-    g = _top_k(_score(init, corpus), k).select(
+    seed = _top_k(_score(init, corpus), k).select(
         "vec_id", "neighbor_id", "cosine"
     )
-    g = g.localCheckpoint(eager=True)
-
-    # NN-descent rounds in Dong's LOCAL-JOIN shape.  The naive form
-    # (generate thin candidate pairs, then join the corpus twice to
-    # score) shuffles the first join's OUTPUT — K²·N rows each
-    # carrying a full vector — which measured 11.5 GB / 333 s at the
-    # 100x probe.  Instead:
-    #   * the graph carries its cosines between rounds, so g's own
-    #     edges and all REVERSE edges need no rescoring at all — the
-    #     element-order fold is bit-symmetric in its arguments;
-    #   * only genuinely NEW pairs (two-hop: v -> u -> w) are scored,
-    #     and both vectors are co-located AT u by shuffling the
-    #     adjacency list with ONE vector attached per row (2·K·N
-    #     rows), never the K²·N pair frame: the pair join, the
-    #     cosine fold, and the thin projection all happen inside u's
-    #     partition.  Every exchange after that carries 24-byte rows.
-    last_realized_rounds = 0
-    for rnd in range(1, iters + 1):
-        in_vec = (
-            g.select(
-                F.col("neighbor_id").alias("u"), F.col("vec_id").alias("v")
-            )
-            .join(
-                corpus.select(
-                    F.col("vec_id").alias("v"), F.col("e").alias("e1")
-                ),
-                "v",
-            )
-        )
-        out_vec = (
-            g.select(
-                F.col("vec_id").alias("u"), F.col("neighbor_id").alias("w")
-            )
-            .join(
-                corpus.select(
-                    F.col("vec_id").alias("w"), F.col("e").alias("e2")
-                ),
-                "w",
-            )
-        )
-        two_hop = (
-            in_vec.join(out_vec, "u")
-            .filter(F.col("v") != F.col("w"))
-            .withColumn("cosine", F.round(F.expr(_COS), 6))
-            .select(
-                F.col("v").alias("vec_id"),
-                F.col("w").alias("neighbor_id"),
-                "cosine",
-            )
-        )
-        rev = g.select(
-            F.col("neighbor_id").alias("vec_id"),
-            F.col("vec_id").alias("neighbor_id"),
+    with RoundLoop("nn_descent", keep_last=True) as loop:
+        g = _descend(
+            loop,
+            seed,
+            corpus.select(F.col("vec_id").alias("v"), F.col("e").alias("e1")),
+            corpus.select(F.col("vec_id").alias("w"), F.col("e").alias("e2")),
+            F.round(F.expr(_COS), 6),
             "cosine",
+            k,
+            iters,
+            delta * k * n,
         )
-        # δ-termination bookkeeping rides the EXISTING candidate
-        # exchange: rows from the current edge list carry old=1, so
-        # after the dedup-agg a kept pair with max(old)=0 is exactly
-        # an edge of g_new \ g_old — no separate anti-join job, just a
-        # flag count on the frame the checkpoint materializes anyway.
-        cand = (
-            g.withColumn("old", F.lit(1))
-            .unionByName(rev.withColumn("old", F.lit(0)))
-            .unionByName(two_hop.withColumn("old", F.lit(0)))
-            .groupBy("vec_id", "neighbor_id")
-            .agg(  # duplicates carry the identical rounded value; min
-                # is just a deterministic pick that fuses dedup into
-                # the same exchange
-                F.min("cosine").alias("cosine"),
-                F.max("old").alias("old"),
-            )
-        )
-        g_full = (
-            _top_k(cand, k)
-            .select("vec_id", "neighbor_id", "cosine", "old")
-            .localCheckpoint(eager=True)
-        )
-        g = g_full.drop("old")
-        last_realized_rounds = rnd
-        # Count skipped on the FINAL round — the loop exits either
-        # way, and the oracle's first-round-under-threshold selection
-        # returns g_iters for stop == iters regardless, so semantics
-        # match.
-        if rnd == iters or delta <= 0:
-            continue
-        updates = g_full.filter(F.col("old") == 0).count()
-        if updates < delta * k * n:
-            break
-
     return _top_k(g, k).select("vec_id", "neighbor_id", "cosine", "rank")
 
 
@@ -348,18 +363,15 @@ def _qcos():
     return F.round(F.expr(_QCOS_EXPR), 6)
 
 
-def _q8_corpus(corpus: DataFrame) -> DataFrame:
+def _q8_corpus(corpus: DataFrame, barrier) -> DataFrame:
     """(vec_id, q TINYINT[], qn DOUBLE) — SQ8 codes + quantized norm.
-    Two small checkpoints keep qm and q as plain attributes: without
-    the barrier CollapseProject re-inlines the maxabs fold into the
-    quantize lambda (64x per vector) and the quantize lambda into the
-    norm fold (the documented HOF re-inline trap)."""
-    cq = corpus.withColumn("qm", F.expr(_MAXABS_E)).localCheckpoint(
-        eager=True
-    )
-    cq8 = cq.select("vec_id", F.expr(_Q8T).alias("q")).localCheckpoint(
-        eager=True
-    )
+    Two small checkpoints (``barrier``: DataFrame -> materialized
+    DataFrame) keep qm and q as plain attributes: without the barrier
+    CollapseProject re-inlines the maxabs fold into the quantize
+    lambda (64x per vector) and the quantize lambda into the norm fold
+    (the documented HOF re-inline trap)."""
+    cq = barrier(corpus.withColumn("qm", F.expr(_MAXABS_E)))
+    cq8 = barrier(cq.select("vec_id", F.expr(_Q8T).alias("q")))
     return cq8.withColumn(
         "qn",
         F.expr(
@@ -388,15 +400,6 @@ def _score_q8(cand: DataFrame, q8: DataFrame) -> DataFrame:
     )
 
 
-def _top_k_q(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("qcos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
 def build_knn_graph_q8(
     emb: DataFrame,
     k: int = G_K,
@@ -415,79 +418,33 @@ def build_knn_graph_q8(
     quantized throughout, pay the corpus join once at the end).
     Rounds δ-terminate like ``build_knn_graph`` (update counts over
     the quantized-ranked edge sets)."""
-    global last_realized_rounds
     corpus = emb.select("vec_id", F.col("embedding").alias("e"))
     n = emb.count()
-    q8 = _q8_corpus(corpus).localCheckpoint(eager=True)
-
     init = _init_pairs(corpus.select("vec_id"), k, n)
-    g = (
-        _top_k_q(_score_q8(init, q8), k)
-        .select("vec_id", "neighbor_id", "qcos")
-        .localCheckpoint(eager=True)
-    )
-
-    last_realized_rounds = 0
-    for rnd in range(1, iters + 1):
-        in_q = g.select(
-            F.col("neighbor_id").alias("u"), F.col("vec_id").alias("v")
-        ).join(
+    with RoundLoop("nn_descent_q8", keep_last=True) as loop:
+        q8 = loop.pin(_q8_corpus(corpus, loop.pin))
+        seed = _top_k(_score_q8(init, q8), k, "qcos").select(
+            "vec_id", "neighbor_id", "qcos"
+        )
+        g = _descend(
+            loop,
+            seed,
             q8.select(
                 F.col("vec_id").alias("v"),
                 F.col("q").alias("q1"),
                 F.col("qn").alias("qn1"),
             ),
-            "v",
-        )
-        out_q = g.select(
-            F.col("vec_id").alias("u"), F.col("neighbor_id").alias("w")
-        ).join(
             q8.select(
                 F.col("vec_id").alias("w"),
                 F.col("q").alias("q2"),
                 F.col("qn").alias("qn2"),
             ),
-            "w",
-        )
-        two_hop = (
-            in_q.join(out_q, "u")
-            .filter(F.col("v") != F.col("w"))
-            .withColumn("qcos", _qcos())
-            .select(
-                F.col("v").alias("vec_id"),
-                F.col("w").alias("neighbor_id"),
-                "qcos",
-            )
-        )
-        rev = g.select(
-            F.col("neighbor_id").alias("vec_id"),
-            F.col("vec_id").alias("neighbor_id"),
+            _qcos(),
             "qcos",
+            k,
+            iters,
+            delta * k * n,
         )
-        # same fold-in update flag as build_knn_graph
-        cand = (
-            g.withColumn("old", F.lit(1))
-            .unionByName(rev.withColumn("old", F.lit(0)))
-            .unionByName(two_hop.withColumn("old", F.lit(0)))
-            .groupBy("vec_id", "neighbor_id")
-            .agg(
-                F.min("qcos").alias("qcos"),
-                F.max("old").alias("old"),
-            )
-        )
-        g_full = (
-            _top_k_q(cand, k)
-            .select("vec_id", "neighbor_id", "qcos", "old")
-            .localCheckpoint(eager=True)
-        )
-        g = g_full.drop("old")
-        last_realized_rounds = rnd
-        # final-round count skipped — see build_knn_graph
-        if rnd == iters or delta <= 0:
-            continue
-        updates = g_full.filter(F.col("old") == 0).count()
-        if updates < delta * k * n:
-            break
 
     # one exact rescore + exact re-rank of the final K·N edges — the
     # only corpus join in the build
@@ -607,82 +564,6 @@ def load_knn_graph(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-# Hop-loop implementation switch.  "agg" (default): groupBy(query_id)
-# in-group top-k aggregate over a pre-aggregated adjacency — <=1
-# exchange per hop, linear plan (round-13 redesign).  "window": the
-# round-12 union -> distinct -> row_number shape, kept for the
-# output-parity pytest and same-session A/B probes.  Both produce
-# bit-identical results (pinned in test_graph_ann.py).
-BEAM_IMPL = "agg"
-
-
-def _beam_loop_window(
-    corpus: DataFrame,
-    graph: DataFrame,
-    queries: DataFrame,
-    frontier: DataFrame,
-    k: int,
-) -> DataFrame:
-    """Round-12 hop loop (reference implementation for parity tests):
-    per hop, union the frontier with its graph expansion, distinct,
-    score, keep top-BEAM per query via a row_number window — 2
-    exchanges per hop, frontier subtree duplicated by the union."""
-
-    def beam(fr: DataFrame) -> DataFrame:
-        scored = (
-            fr.join(
-                corpus.select(
-                    F.col("vec_id").alias("node"), F.col("e").alias("e2")
-                ),
-                "node",
-            )
-            .join(queries, "query_id")
-            .withColumn("cosine", F.round(F.expr(_COS), 6))
-            .filter(F.col("node") != F.col("query_id"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("node").asc()
-        )
-        return (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= BEAM)
-            .select("query_id", "node")
-        )
-
-    frontier = beam(frontier)
-    for i in range(HOPS):
-        hop = frontier.join(
-            graph.withColumnRenamed("vec_id", "node"), "node"
-        ).select("query_id", F.col("neighbor_id").alias("node"))
-        frontier = beam(frontier.unionByName(hop).distinct())
-        if i % 3 == 2 or i == HOPS - 1:
-            frontier = frontier.localCheckpoint(eager=True)
-
-    scored = (
-        frontier.join(
-            corpus.select(
-                F.col("vec_id").alias("node"), F.col("e").alias("e2")
-            ),
-            "node",
-        )
-        .join(queries, "query_id")
-        .withColumn("cosine", F.round(F.expr(_COS), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("node").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("node").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
-    )
-
-
 def beam_search(
     emb: DataFrame,
     graph: DataFrame,
@@ -739,9 +620,6 @@ def beam_search(
             F.broadcast(entries)
         )
 
-    if BEAM_IMPL == "window":
-        return _beam_loop_window(corpus, graph, queries, frontier, k)
-
     corpus_nodes = corpus.select(
         F.col("vec_id").alias("node"), F.col("e").alias("e2")
     )
@@ -795,36 +673,35 @@ def beam_search(
     # the old shape paid.  (A checkpoint's LogicalRDD has unknown
     # stats: measured, it forced a per-hop SortMergeJoin + two node
     # exchanges and DOUBLED search wall.)
-    adj = (
-        graph.select(F.col("vec_id").alias("node"), "neighbor_id")
-        .groupBy("node")
-        .agg(F.collect_list("neighbor_id").alias("nbrs"))
-        .persist()
-    )
-    adj.count()  # materialize -> accurate sizeInBytes for the planner
-
-    frontier = beam(frontier)
-    for i in range(HOPS):
-        cand = frontier.join(adj, "node", "left").select(
-            "query_id",
-            F.explode(
-                F.when(
-                    F.col("nbrs").isNull(), F.array(F.col("node"))
-                ).otherwise(
-                    F.concat(F.array(F.col("node")), F.col("nbrs"))
-                )
-            ).alias("node"),
+    with RoundLoop("beam_search", keep_last=True) as loop:
+        adj = loop.cache(
+            graph.select(F.col("vec_id").alias("node"), "neighbor_id")
+            .groupBy("node")
+            .agg(F.collect_list("neighbor_id").alias("nbrs")),
+            count=True,  # materialize -> accurate sizeInBytes
         )
-        frontier = beam(cand)
-        # checkpoint every third hop: keeps the nested-aggregate plan
-        # shallow without paying a materialization per hop (the
-        # frontier is |queries|*BEAM rows — the cost is all fixed
-        # per-job overhead)
-        if i % 3 == 2 or i == HOPS - 1:
-            frontier = frontier.localCheckpoint(eager=True)
-    # the final checkpoint above materialized every adjacency read;
-    # the returned plan only re-reads the corpus and the queries
-    adj.unpersist(False)
+        frontier = beam(frontier)
+        for hop in loop.rounds(range(1, HOPS + 1)):
+            cand = frontier.join(adj, "node", "left").select(
+                "query_id",
+                F.explode(
+                    F.when(
+                        F.col("nbrs").isNull(), F.array(F.col("node"))
+                    ).otherwise(
+                        F.concat(F.array(F.col("node")), F.col("nbrs"))
+                    )
+                ).alias("node"),
+            )
+            frontier = beam(cand)
+            # checkpoint every third hop: keeps the nested-aggregate
+            # plan shallow without paying a materialization per hop
+            # (the frontier is |queries|*BEAM rows — the cost is all
+            # fixed per-job overhead)
+            if hop % 3 == 0 or hop == HOPS:
+                frontier = loop.checkpoint(frontier)
+    # the final checkpoint above materialized every adjacency read, so
+    # the loop frees the adjacency; the returned plan only re-reads
+    # the corpus and the queries
 
     scored = (
         frontier.join(
@@ -960,8 +837,19 @@ def _build_ctes(p: str, corpus: str) -> list[str]:
   ) WHERE neighbor_id <> vec_id
 )""",
     ]
-    ctes.append(_sql_score(f"{p}init", f"{p}s0", corpus))
-    ctes.append(_sql_top_k(f"{p}s0", f"{p}g0", G_K, keep_score=False))
+    return ctes + _round_ctes(
+        p,
+        corpus,
+        lambda cand, out: _sql_score(cand, out, corpus),
+        lambda sc, out: _sql_top_k(sc, out, G_K, keep_score=False),
+    )
+
+
+def _round_ctes(p: str, corpus: str, score, top_k) -> list[str]:
+    """The seed graph ``{p}g0`` from ``{p}init``, the G_ITERS NN-descent
+    rounds and their δ-termination; ``score(cand, out)`` and
+    ``top_k(scored, out)`` render one CTE each."""
+    ctes = [score(f"{p}init", f"{p}s0"), top_k(f"{p}s0", f"{p}g0")]
     for i in range(1, G_ITERS + 1):
         ctes.append(f"""{p}cand{i} AS (
   SELECT vec_id, neighbor_id FROM {p}g{i - 1}
@@ -972,10 +860,8 @@ def _build_ctes(p: str, corpus: str) -> list[str]:
   FROM {p}g{i - 1} a JOIN {p}g{i - 1} b ON a.neighbor_id = b.vec_id
   WHERE b.neighbor_id <> a.vec_id
 )""")
-        ctes.append(_sql_score(f"{p}cand{i}", f"{p}s{i}", corpus))
-        ctes.append(
-            _sql_top_k(f"{p}s{i}", f"{p}g{i}", G_K, keep_score=False)
-        )
+        ctes.append(score(f"{p}cand{i}", f"{p}s{i}"))
+        ctes.append(top_k(f"{p}s{i}", f"{p}g{i}"))
     return ctes + _term_ctes(p, corpus)
 
 
@@ -1024,21 +910,12 @@ def _build_q8_ctes(p: str, corpus: str) -> list[str]:
         f" sqrt(CAST(list_dot_product(q, q) AS DOUBLE)) AS qn"
         f" FROM {p}qv)"
     )
-    ctes.append(_sql_score_q(f"{p}init", f"{p}s0", p))
-    ctes.append(_sql_top_k_q(f"{p}s0", f"{p}g0", G_K))
-    for i in range(1, G_ITERS + 1):
-        ctes.append(f"""{p}cand{i} AS (
-  SELECT vec_id, neighbor_id FROM {p}g{i - 1}
-  UNION
-  SELECT neighbor_id AS vec_id, vec_id AS neighbor_id FROM {p}g{i - 1}
-  UNION
-  SELECT a.vec_id, b.neighbor_id
-  FROM {p}g{i - 1} a JOIN {p}g{i - 1} b ON a.neighbor_id = b.vec_id
-  WHERE b.neighbor_id <> a.vec_id
-)""")
-        ctes.append(_sql_score_q(f"{p}cand{i}", f"{p}s{i}", p))
-        ctes.append(_sql_top_k_q(f"{p}s{i}", f"{p}g{i}", G_K))
-    return ctes + _term_ctes(p, corpus)
+    return ctes + _round_ctes(
+        p,
+        corpus,
+        lambda cand, out: _sql_score_q(cand, out, p),
+        lambda sc, out: _sql_top_k_q(sc, out, G_K),
+    )
 
 
 def _graph_ctes() -> list[str]:
@@ -2084,7 +1961,11 @@ def build_graph_index(emb: DataFrame) -> GraphIndex:
     from .similarity import train_kmeans_centroids_blas
 
     graph = build_knn_graph_q8(emb)
-    q8 = _q8_corpus(emb.select("vec_id", F.col("embedding").alias("e")))
+    # the index keeps q8 for its whole life: plain, unreleased barriers
+    q8 = _q8_corpus(
+        emb.select("vec_id", F.col("embedding").alias("e")),
+        lambda df: df.localCheckpoint(eager=True),
+    )
     cents = train_kmeans_centroids_blas(emb, k=ROUTE_K)
     return GraphIndex(graph, q8, cents)
 

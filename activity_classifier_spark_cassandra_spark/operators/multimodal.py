@@ -1285,27 +1285,31 @@ _DEC_CACHE: "OrderedDict[bytes, tuple[int, int, int, bytes]]" = __import__(
 ).OrderedDict()
 
 
-# Per-worker hit/miss counters (observability only — round-12 verdict
-# asked the codec-memo wins to report their hit-rate so repeat-frame
-# gains are never mistaken for first-sight gains).  Read via
+# Per-worker hit/miss counters, one pair per memo (observability only
+# — round-12 verdict asked the codec-memo wins to report their
+# hit-rate so repeat-frame gains are never mistaken for first-sight
+# gains; encoder and decoder rates are kept apart).  Read via
 # codec_cache_stats(); per-process, reset with the worker.
-_CACHE_STATS = {"hits": 0, "misses": 0}
+_CACHE_STATS = {side: {"hits": 0, "misses": 0} for side in ("encode", "decode")}
 
 
 def codec_cache_stats() -> dict:
-    s = dict(_CACHE_STATS)
-    n = s["hits"] + s["misses"]
-    s["hit_rate"] = round(s["hits"] / n, 4) if n else None
-    return s
+    """{"encode": ..., "decode": ...}: hits, misses and hit_rate (None
+    before the first lookup) of each memo."""
+    out = {}
+    for side, c in _CACHE_STATS.items():
+        n = c["hits"] + c["misses"]
+        out[side] = {**c, "hit_rate": round(c["hits"] / n, 4) if n else None}
+    return out
 
 
-def _cache_get(cache, key):
+def _cache_get(cache, key, stats: dict):
     val = cache.get(key)
     if val is not None:
         cache.move_to_end(key)
-        _CACHE_STATS["hits"] += 1
+        stats["hits"] += 1
     else:
-        _CACHE_STATS["misses"] += 1
+        stats["misses"] += 1
     return val
 
 
@@ -1325,7 +1329,7 @@ def encode_jpeg_baseline(pixels: "np.ndarray", ycbcr: bool = False) -> bytes:
     key = None
     if len(raw) <= _CODEC_CACHE_MAX_BYTES:
         key = (pixels.shape, bool(ycbcr), raw)
-        hit = _cache_get(_ENC_CACHE, key)
+        hit = _cache_get(_ENC_CACHE, key, _CACHE_STATS["encode"])
         if hit is not None:
             return hit
     gray = pixels.ndim == 2
@@ -1404,19 +1408,22 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     the decode_ok=False contract shared by every codec here.  That
     contract covers CORRUPT streams too: any parse error a malformed
     segment can produce (short SOF/SOS, unknown component id in a
-    scan, bit-reader overrun) is re-raised as NotImplementedError so
-    one bad file drops one row instead of failing the Spark task."""
+    scan, bit-reader overrun, a corrupt DHT whose DC category builds a
+    magnitude past int64) is re-raised as NotImplementedError so one
+    bad file drops one row instead of failing the Spark task."""
     data = bytes(data)
     cacheable = len(data) <= _CODEC_CACHE_MAX_BYTES
     if cacheable:
-        hit = _cache_get(_DEC_CACHE, data)
+        hit = _cache_get(_DEC_CACHE, data, _CACHE_STATS["decode"])
         if hit is not None:
             return hit
     try:
         out = _decode_jpeg_checked(data)
     except NotImplementedError:
         raise
-    except (struct.error, IndexError, ValueError, KeyError) as e:
+    except (
+        struct.error, IndexError, ValueError, KeyError, OverflowError
+    ) as e:
         raise NotImplementedError(f"corrupt JPEG stream: {e}") from e
     if cacheable and len(out[3]) <= _CODEC_CACHE_MAX_BYTES:
         _cache_put(_DEC_CACHE, data, out)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
+from .iterate import RoundLoop
 
 N_QUERIES = 10
 TOP_K = 5
@@ -2099,54 +2100,50 @@ def train_power_iteration(
     dim = len(mu)
     v = [1.0] + [0.0] * (dim - 1)
     xc_expr = f"zip_with(e, {_arr_literal(mu)}, (a, b) -> a - b)"
-    for _ in range(iters):
-        vlit = _arr_literal(v)
-        y_expr = (
-            f"round(aggregate(zip_with(xc, {vlit}, (a, b) -> a * b),"
-            " CAST(0.0 AS DOUBLE), (acc, t) -> acc + t), 6)"
-        )
-        s = (
-            e.select(F.expr(xc_expr).alias("xc"))
-            .select(
-                F.expr(y_expr).alias("y"),
-                F.posexplode("xc").alias("pos", "xv"),
+    with RoundLoop("power_iteration") as loop:
+        for _ in loop.rounds(range(1, iters + 1)):
+            vlit = _arr_literal(v)
+            y_expr = (
+                f"round(aggregate(zip_with(xc, {vlit}, (a, b) -> a * b),"
+                " CAST(0.0 AS DOUBLE), (acc, t) -> acc + t), 6)"
             )
-            .groupBy("pos")
-            .agg(
-                F.round(
-                    F.sum(
-                        (F.col("y") * F.col("xv")).cast("decimal(38,18)")
-                    ).cast("double"),
+            s = (
+                e.select(F.expr(xc_expr).alias("xc"))
+                .select(
+                    F.expr(y_expr).alias("y"),
+                    F.posexplode("xc").alias("pos", "xv"),
+                )
+                .groupBy("pos")
+                .agg(
+                    F.round(
+                        F.sum(
+                            (F.col("y") * F.col("xv")).cast("decimal(38,18)")
+                        ).cast("double"),
+                        6,
+                    ).alias("s")
+                )
+            )
+            # the 64-row aggregate is materialized once and its norm is
+            # observed on that same job: normalizing then reads the
+            # checkpoint only, never the corpus scan again
+            s = loop.checkpoint(
+                s,
+                nrm=F.round(
+                    F.sqrt(
+                        F.sum(
+                            F.round(F.col("s") * F.col("s"), 6).cast(
+                                "decimal(38,18)"
+                            )
+                        ).cast("double")
+                    ),
                     6,
-                ).alias("s")
-            )
-            # persisted: the normalize crossJoin references this
-            # 64-row aggregate twice (values + norm); without the
-            # persist both plan branches re-scan the corpus
-            .persist()
-        )
-        nrm = s.groupBy().agg(
-            F.round(
-                F.sqrt(
-                    F.sum(
-                        F.round(F.col("s") * F.col("s"), 6).cast(
-                            "decimal(38,18)"
-                        )
-                    ).cast("double")
                 ),
-                6,
-            ).alias("nrm")
-        )
-        v_rows = (
-            s.crossJoin(F.broadcast(nrm))
-            .select(
-                "pos", F.round(F.col("s") / F.col("nrm"), 6).alias("v")
             )
-            .orderBy("pos")
-            .collect()
-        )
-        s.unpersist()
-        v = [float(r.v) for r in v_rows]
+            v_rows = s.select(
+                "pos",
+                F.round(F.col("s") / F.lit(loop.stats["nrm"]), 6).alias("v"),
+            ).collect()
+            v = [float(r.v) for r in sorted(v_rows, key=lambda r: r.pos)]
     return mu, v
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
+from .iterate import RoundLoop
 
 # tiny fixed stopword lists (public knowledge); used for both the
 # stopword-ratio quality signal and the n-gram language heuristic
@@ -1206,37 +1207,45 @@ def bpe_train(
             ).alias("toks"),
         )
     )
-    w = words.localCheckpoint()
     merges: list[tuple] = []
-    for r in range(1, n_merges + 1):
-        rows = (
-            w.filter(F.size("toks") >= 2)
-            .select("cnt", F.explode(F.expr(_BPE_PAIRS_EXPR)).alias("pr"))
-            .groupBy(F.col("pr.a").alias("pa"), F.col("pr.b").alias("pb"))
-            .agg(F.sum("cnt").alias("pair_count"))
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.col("pa").asc(),
-                F.col("pb").asc(),
+    with RoundLoop("bpe", keep_last=True) as loop:
+        w = loop.checkpoint(words)
+        for r in loop.rounds(range(1, n_merges + 1)):
+            # the merge decision is an argmax over a GROUPED count, which
+            # no observation on the checkpoint job can express — it stays
+            # one bounded fetch
+            rows = (
+                w.filter(F.size("toks") >= 2)
+                .select(
+                    "cnt", F.explode(F.expr(_BPE_PAIRS_EXPR)).alias("pr")
+                )
+                .groupBy(
+                    F.col("pr.a").alias("pa"), F.col("pr.b").alias("pb")
+                )
+                .agg(F.sum("cnt").alias("pair_count"))
+                .orderBy(
+                    F.col("pair_count").desc(),
+                    F.col("pa").asc(),
+                    F.col("pb").asc(),
+                )
+                .limit(1)
+                .collect()
             )
-            .limit(1)
-            .collect()
-        )
-        if not rows:
-            # vocabulary fully merged before n_merges rounds — stop,
-            # like real trainers do.  (The registered query's corpus
-            # always supports N_BPE_MERGES rounds; the chained-CTE
-            # oracle assumes it, so a short merge table would surface
-            # as a row-count mismatch there, not silently.)
-            break
-        top = rows[0]
-        merges.append(
-            (r, top.pa, top.pb, top.pa + top.pb, int(top.pair_count))
-        )
-        fold = _BPE_MERGE_FOLD.format(
-            PA=_sql_str(top.pa), PB=_sql_str(top.pb)
-        )
-        w = w.select("cnt", F.expr(fold).alias("toks")).localCheckpoint()
+            if not rows:
+                # vocabulary fully merged before n_merges rounds — stop,
+                # like real trainers do.  (The registered query's corpus
+                # always supports N_BPE_MERGES rounds; the chained-CTE
+                # oracle assumes it, so a short merge table would
+                # surface as a row-count mismatch there, not silently.)
+                break
+            top = rows[0]
+            merges.append(
+                (r, top.pa, top.pb, top.pa + top.pb, int(top.pair_count))
+            )
+            fold = _BPE_MERGE_FOLD.format(
+                PA=_sql_str(top.pa), PB=_sql_str(top.pb)
+            )
+            w = loop.checkpoint(w.select("cnt", F.expr(fold).alias("toks")))
     return merges, w
 
 

@@ -40,6 +40,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.iterate import RoundLoop
+
 OPS_SCHEMA_FMT = "op string, vec_id long, embedding array<{elem}>"
 
 
@@ -108,29 +110,36 @@ def foreach_batch_index_updater(state_path: str):
 
     def _update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)  # |batch|-bounded
-        row = batch.agg(
-            F.max((F.col("op") == "delete").cast("int")).alias("d"),
-            F.max((F.col("op") == "insert").cast("int")).alias("i"),
-        ).collect()[0]  # ONE bounded probe job (emptiness + op mix)
-        if not (row.d or row.i):
-            return
-        corpus = spark.read.parquet(f"{state_path}/corpus")
-        graph = spark.read.parquet(f"{state_path}/graph")
-        corpus2, graph2 = apply_index_ops(
-            corpus, graph, batch,
-            has_delete=bool(row.d), has_insert=bool(row.i),
-        )
-        # Only the GRAPH must be materialized before the swaps: its
-        # plan reads BOTH old parquet state tables that the swaps
-        # rename away.  The corpus swap itself writes corpus.new
-        # while the old state is still in place (_swap_in renames
-        # only after the write completes), so corpus2 streams
-        # straight into its parquet write — one materialization per
-        # trigger saved vs checkpointing both.
-        graph2 = graph2.localCheckpoint(eager=True)
-        _swap_in(corpus2, f"{state_path}/corpus")
-        _swap_in(graph2, f"{state_path}/graph")
+        # each trigger is one round: its |batch|-bounded checkpoint
+        # carries the op-mix probe (emptiness + which ops) as observed
+        # metrics, and both checkpoints are freed once the swaps land
+        with RoundLoop("stream_index") as loop:
+            for _ in loop.rounds([batch_id]):
+                batch = loop.checkpoint(
+                    batch_df,
+                    d=F.max((F.col("op") == "delete").cast("int")),
+                    i=F.max((F.col("op") == "insert").cast("int")),
+                )
+                has_delete = bool(loop.stats["d"])
+                has_insert = bool(loop.stats["i"])
+                if not (has_delete or has_insert):
+                    return
+                corpus = spark.read.parquet(f"{state_path}/corpus")
+                graph = spark.read.parquet(f"{state_path}/graph")
+                corpus2, graph2 = apply_index_ops(
+                    corpus, graph, batch,
+                    has_delete=has_delete, has_insert=has_insert,
+                )
+                # Only the GRAPH must be materialized before the swaps:
+                # its plan reads BOTH old parquet state tables that the
+                # swaps rename away.  The corpus swap itself writes
+                # corpus.new while the old state is still in place
+                # (_swap_in renames only after the write completes), so
+                # corpus2 streams straight into its parquet write — one
+                # materialization per trigger saved vs checkpointing both.
+                graph2 = loop.checkpoint(graph2)
+                _swap_in(corpus2, f"{state_path}/corpus")
+                _swap_in(graph2, f"{state_path}/graph")
 
     return _update
 

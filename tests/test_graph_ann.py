@@ -609,31 +609,3 @@ def test_memo_matches_fresh(spark):
     c1 = GA.memo_route_cents(spark, SF)
     c2 = GA.memo_route_cents(spark, SF)
     assert c1 is c2 and len(c1) == GA.ROUTE_K
-
-
-def test_beam_impl_parity(spark):
-    """The round-13 hop loop (groupBy(query_id) in-group top-k
-    aggregate over the pre-aggregated adjacency) must return results
-    bit-identical to the round-12 reference implementation (union ->
-    distinct -> row_number window) — same frontier SET every hop by
-    the total-order argument (cosine DESC, node ASC over deduped
-    (query_id, node) pairs), hence the same final ranking.  Checked
-    for the default hash-spread entries AND the insert-batch caller
-    shape (custom queries, k=G_K)."""
-    emb = load_table(spark, SF, "embeddings")
-    graph = GA.memo_graph_q8(spark, SF)
-    new, _old = GA._split_insert_batch(emb)
-    bq = new.select(
-        new.vec_id.alias("query_id"), new.e.alias("e1")
-    )
-    try:
-        GA.BEAM_IMPL = "agg"
-        a1 = GA.beam_search(emb, graph).collect()
-        a2 = GA.beam_search(emb, graph, queries=bq, k=GA.G_K).collect()
-        GA.BEAM_IMPL = "window"
-        w1 = GA.beam_search(emb, graph).collect()
-        w2 = GA.beam_search(emb, graph, queries=bq, k=GA.G_K).collect()
-    finally:
-        GA.BEAM_IMPL = "agg"
-    assert sorted(map(tuple, a1)) == sorted(map(tuple, w1))
-    assert sorted(map(tuple, a2)) == sorted(map(tuple, w2))

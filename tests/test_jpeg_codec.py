@@ -271,3 +271,44 @@ def test_malformed_streams_raise_notimplemented_not_crash():
             MM.decode_jpeg(junk)
         except NotImplementedError:
             pass
+
+
+def test_corrupt_dht_category_overflow_is_notimplemented():
+    """A single-byte flip inside the luma DC DHT values (offset 200 of
+    a 16x16 RGB blob) declares a DC category past 63; the magnitude it
+    builds overflows int64.  That must surface as NotImplementedError
+    (-> decode_ok=False row), never as OverflowError."""
+    img = np.random.default_rng(0).integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    blob = bytearray(MM.encode_jpeg_baseline(img))
+    blob[200] ^= 0x42
+    MM._DEC_CACHE.clear()
+    with pytest.raises(NotImplementedError):
+        MM.decode_jpeg(bytes(blob))
+
+
+def test_decoders_byte_flip_fuzz_only_notimplemented_escapes():
+    """Seeded byte-flip fuzz over every pure-Python decoder: whatever a
+    corrupt payload does, the only exception that may escape is the
+    documented NotImplementedError."""
+    rng = np.random.default_rng(0)
+    img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    jpg = MM.encode_jpeg_baseline(img)
+    pcm = [int(x) for x in rng.integers(-3000, 3000, 64)]
+    cases = [
+        (MM.decode_jpeg, jpg, 2000),
+        (MM.decode_png, MM.encode_png(16, 16, img.tobytes(), filters=[0, 1, 2, 3] * 4), 500),
+        (MM.decode_wav, MM.encode_wav(8000, pcm), 500),
+        (MM.decode_avi_mjpeg, MM.encode_avi_mjpeg([jpg, jpg], 16, 16), 500),
+    ]
+    flips = np.random.default_rng(1)
+    for decode, blob, trials in cases:
+        decode(blob)  # the unflipped payload decodes
+        for trial in range(trials):
+            b = bytearray(blob)
+            for _ in range(1 + trial % 2):
+                b[int(flips.integers(len(b)))] ^= int(flips.integers(1, 256))
+            MM._DEC_CACHE.clear()
+            try:
+                decode(bytes(b))
+            except NotImplementedError:
+                pass

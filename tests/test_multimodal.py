@@ -764,6 +764,7 @@ def test_codec_cache_roundtrip_and_bounds():
 
     MM._ENC_CACHE.clear()
     MM._DEC_CACHE.clear()
+    before = MM.codec_cache_stats()
     img = np.full((16, 16), 99, dtype=np.uint8)
     img[:8, :8] = 37
     first = MM.encode_jpeg_baseline(img)
@@ -773,6 +774,15 @@ def test_codec_cache_roundtrip_and_bounds():
     dec1 = MM.decode_jpeg(first)
     assert len(MM._DEC_CACHE) == 1
     assert MM.decode_jpeg(first) == dec1  # hit == fresh tuple
+    assert MM.decode_jpeg(first) == dec1
+
+    # encoder and decoder traffic are counted apart: one encode miss +
+    # one hit, one decode miss + two hits
+    after = MM.codec_cache_stats()
+    for side, hits in (("encode", 1), ("decode", 2)):
+        a, b = after[side], before[side]
+        assert (a["hits"] - b["hits"], a["misses"] - b["misses"]) == (hits, 1)
+        assert a["hit_rate"] == round(a["hits"] / (a["hits"] + a["misses"]), 4)
 
     # distinct pixels -> distinct entry, distinct jpeg
     img2 = img.copy()

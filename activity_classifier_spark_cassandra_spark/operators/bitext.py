@@ -54,13 +54,8 @@ _COS_RAW = f"({_DOT}) / (({_N1}) * ({_N2}))"
 # exact integer work; both engines floor the same double
 _COS6 = f"CAST(FLOOR(({_COS_RAW}) * 1000000) AS BIGINT)"
 
-# per-pair variant with PRE-COMPUTED norms (n1, n2 scalar columns):
-# the interpreted HOF fold is the per-pair cost at corpus scale, and
-# the two norm folds are pair-INDEPENDENT — hoisting them to one fold
-# per side row cuts the per-pair work to the dot alone (~3x fewer
-# fold elements, bit-identical: same fold over the same array yields
-# the same double wherever it runs)
-_COS6_PRE = f"CAST(FLOOR((({_DOT}) / (n1 * n2)) * 1000000) AS BIGINT)"
+# per-row vector norm as a JVM fold: hoisted to one fold per side row
+# (pair-INDEPENDENT), so pair scoring divides by precomputed norms
 _NORM = (
     "sqrt(aggregate({e}, CAST(0.0 AS DOUBLE),"
     " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
@@ -236,6 +231,133 @@ BT_CELLS = 8     # cells per side's coarse quantizer (registry scale;
 BT_NPROBE = 2    # probed cells per query
 
 
+def _blas_route(
+    queries: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    nprobe: int,
+    qid: str,
+) -> DataFrame:
+    """(qid, bucket, e1) x nprobe per query via one BLAS matmul per
+    Arrow batch — the production routing for large cell counts, where
+    the interpreted d2 fold (|queries| x cells x dim) dominates.
+    Assignment-identical to the oracle's probe routing: d2 rounded
+    half-up to 6 dp (``blas_assign``'s rounding argument), ties to the
+    lowest cluster (stable argsort over k-ordered columns)."""
+    import numpy as np
+    import pandas as pd
+
+    C = np.array([c for _, c in sorted(cents)], dtype=np.float64)
+    ks = np.array([k for k, _ in sorted(cents)], dtype=np.int32)
+    cn = (C * C).sum(axis=1)
+
+    # A degenerate/tiny corpus can train fewer centroids than nprobe;
+    # route to every cell that exists instead of raising a pandas
+    # length mismatch inside the Arrow stage (fewer distinct probe
+    # buckets per query).
+    p = min(nprobe, len(C))
+
+    def batches(it):
+        for pdf in it:
+            if not len(pdf):  # np.stack raises on an empty batch
+                continue
+            E = np.stack(pdf["e1"].to_numpy()).astype(np.float64)
+            d2 = (
+                (E * E).sum(axis=1)[:, None]
+                - 2.0 * (E @ C.T)
+                + cn[None, :]
+            )
+            d2 = np.floor(d2 * 1e6 + 0.5) / 1e6
+            top = np.argsort(d2, axis=1, kind="stable")[:, :p]
+            n = len(pdf)
+            yield pd.DataFrame(
+                {
+                    qid: pdf[qid].to_numpy().repeat(p),
+                    "bucket": ks[top].reshape(-1),
+                    "e1": [
+                        pdf["e1"].iloc[i] for i in range(n) for _ in range(p)
+                    ],
+                }
+            )
+
+    elem = dict(queries.dtypes)["e1"]
+    return queries.select(qid, "e1").mapInPandas(
+        batches, schema=f"{qid} long, bucket int, e1 {elem}"
+    )
+
+
+_QBLOCK = 1024  # probe rows scored per accumulation block
+
+
+def _blas_cell_scores(
+    probes: DataFrame, corpus: DataFrame, qid: str, nid: str
+) -> DataFrame:
+    """Cell-local pair scoring: cogroup (qid, e1, n1) probes with
+    (nid, e2, n2) members on ``bucket`` and emit every (qid, nid, c6)
+    pair — the Arrow-matmul shape of the candidate scan.
+
+    Why cogroup and not a pair join: the joined pair frame ships BOTH
+    vectors per pair through Arrow (|pairs| ~ |side|·nprobe·avg_cell
+    rows x ~1 KB — tens of GB at the 100x probe; measured SLOWER than
+    the interpreted fold it replaced).  Cogrouping ships each vector
+    ONCE per cell and materializes only the thin (qid, nid, c6) rows.
+
+    Scores match the oracle's FLOOR(cos * 1e6) bit for bit because
+    the pair-score matrix is accumulated dimension-at-a-time
+    (``acc += Q[:, d, None] * M[None, :, d]`` — one IEEE double
+    multiply then one add per step, a sequential dot product's
+    left-to-right order), NOT a BLAS ``@``,
+    whose unspecified summation order can differ in the last ulp and
+    flip a FLOOR(x·1e6) boundary.  Division by the JVM-computed norm
+    product, the 1e6 scale, and the floor are single IEEE ops in both
+    engines.  Probe rows are processed in ``_QBLOCK`` chunks so the
+    accumulator stays cache-sized regardless of cell skew."""
+    import numpy as np
+    import pandas as pd
+
+    def score(probes_pdf: pd.DataFrame, members_pdf: pd.DataFrame):
+        if not len(probes_pdf) or not len(members_pdf):
+            return pd.DataFrame({qid: [], nid: [], "c6": []})
+        M = np.stack(members_pdf["e2"].to_numpy()).astype(np.float64)
+        n2 = members_pdf["n2"].to_numpy()
+        nids = members_pdf[nid].to_numpy()
+        out = []
+        for lo in range(0, len(probes_pdf), _QBLOCK):
+            blk = probes_pdf.iloc[lo : lo + _QBLOCK]
+            Q = np.stack(blk["e1"].to_numpy()).astype(np.float64)
+            acc = np.zeros((len(Q), len(M)), dtype=np.float64)
+            for d in range(Q.shape[1]):
+                acc += Q[:, d, None] * M[None, :, d]
+            denom = blk["n1"].to_numpy()[:, None] * n2[None, :]
+            # denom == 0 (zero-norm embedding): Spark's double
+            # divide-by-zero yields NULL; mirror that instead of
+            # letting floor(inf/nan) cast to an undefined int64.
+            zero = denom == 0.0
+            with np.errstate(divide="ignore", invalid="ignore"):
+                c6 = np.floor(acc / denom * 1e6)
+            flat = np.where(zero, 0.0, c6).reshape(-1).astype(np.int64)
+            c6_col = (
+                pd.Series(flat).mask(zero.reshape(-1)).astype("Int64")
+                if zero.any()
+                else pd.Series(flat)
+            )
+            out.append(
+                pd.DataFrame(
+                    {
+                        qid: np.repeat(blk[qid].to_numpy(), len(M)),
+                        nid: np.tile(nids, len(Q)),
+                        "c6": c6_col,
+                    }
+                )
+            )
+        return pd.concat(out, ignore_index=True)
+
+    return (
+        probes.groupBy("bucket")
+        .cogroup(corpus.groupBy("bucket"))
+        .applyInPandas(score, schema=f"{qid} long, {nid} long, c6 long")
+    )
+
+
 def _ivf_topk_c6(
     queries: DataFrame,
     side: DataFrame,
@@ -248,42 +370,23 @@ def _ivf_topk_c6(
     """Candidate-bounded top-k by 1e6-floored cosine: route each
     (qid, e1) query row to its ``nprobe`` nearest cells of the side's
     trained quantizer and score only members of those cells.  Returns
-    (qid, nid, c6, rn) with rn <= k.  Mirrors
-    ``similarity.ivf_trained_search`` minus the broadcast — the query
-    frame here is corpus-scale."""
-    from .similarity import _D2_FOLD, _assign_expr, _cents_literal
+    (qid, nid, c6, rn) with rn <= k.  Corpus assignment, query routing
+    and cell-local scoring run as Arrow-vectorized stages; nothing
+    broadcasts — the query frame here is corpus-scale."""
+    from .similarity import blas_assign
 
-    cents_lit = _cents_literal(cents)
-    corpus = side.select(
+    corpus = blas_assign(side, cents, keep_embedding=True).select(
         F.col("vec_id").alias(nid),
         F.col("embedding").alias("e2"),
         F.expr(_NORM.format(e="embedding")).alias("n2"),
-        F.expr(_assign_expr(cents_lit)).alias("bucket"),
+        F.col("cluster").alias("bucket"),
     )
-    probes = (
-        queries.select(
-            qid, "e1", F.explode(F.expr(cents_lit)).alias("c")
-        )
-        .withColumn("d2", F.expr(_D2_FOLD.format(x="e1", c="c.c")))
-        .withColumn(
-            "cent_rank",
-            F.row_number().over(
-                Window.partitionBy(qid).orderBy(
-                    F.col("d2").asc(), F.col("c.k").asc()
-                )
-            ),
-        )
-        .filter(F.col("cent_rank") <= nprobe)
-        .select(
-            qid,
-            F.col("c.k").alias("bucket"),
-            "e1",
-            F.expr(_NORM.format(e="e1")).alias("n1"),
-        )
+    # n1 via the same JVM fold as n2 (numpy's SIMD sum could differ
+    # in the last ulp — norms must stay bit-identical)
+    probes = _blas_route(queries, cents, nprobe, qid).withColumn(
+        "n1", F.expr(_NORM.format(e="e1"))
     )
-    scored = corpus.join(probes, "bucket").select(
-        qid, nid, F.expr(_COS6_PRE).alias("c6")
-    )
+    scored = _blas_cell_scores(probes, corpus, qid, nid)
     w = Window.partitionBy(qid).orderBy(
         F.col("c6").desc(), F.col(nid).asc()
     )
@@ -302,11 +405,14 @@ def mine_bitext_corpus(
 ) -> DataFrame:
     """(src_id, tgt_id, cosine, margin, mined) for EVERY source
     sentence: forward-best target among the probed-cell candidates,
-    ratio margin over the candidate-bounded k-NN sums of both sides."""
-    from .similarity import train_kmeans_centroids
+    ratio margin over the candidate-bounded k-NN sums of both sides.
+    Training, assignment and routing are BLAS stages — interpreted
+    folds would be |side| x cells x dim per pass, the binding cost
+    once cells grows with N."""
+    from .similarity import train_kmeans_centroids_blas
 
-    cents_t = train_kmeans_centroids(tgt, k=cells)
-    cents_s = train_kmeans_centroids(src, k=cells)
+    cents_t = train_kmeans_centroids_blas(tgt, k=cells)
+    cents_s = train_kmeans_centroids_blas(src, k=cells)
 
     sq = src.select(
         F.col("vec_id").alias("src_id"), F.col("embedding").alias("e1")
@@ -347,16 +453,12 @@ def q_bitext_mine_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mine the WHOLE source side against the target side with
     IVF-bounded candidate generation on both directions.
 
-    Registry path = the BLAS variant (round 12): trainer, assignment,
-    routing AND cell-cogrouped pair scoring run as Arrow stages.  The
-    interpreted-fold composition (``mine_bitext_corpus``) remains the
-    readable reference implementation; blas == fold is pinned end to
-    end by tests/test_bitext.py::test_bitext_corpus_blas_matches_fold
-    and the swap was re-proven against the DuckDB oracle at all three
-    SFs before landing (the 100x probe reads 38.9s BLAS vs 100.1s
-    fold — the per-pair dot fold was the binding constant)."""
+    Trainer, assignment, routing AND cell-cogrouped pair scoring run
+    as Arrow stages (the 100x probe read 38.9s vs 100.1s for the
+    interpreted per-pair dot fold this replaced); the DuckDB oracle
+    ``BITEXT_MINE_CORPUS_SQL`` pins the output."""
     src, tgt = _sides(spark, sf_dir)
-    return mine_bitext_corpus_blas(src, tgt)
+    return mine_bitext_corpus(src, tgt)
 
 
 def _bitext_corpus_sql() -> str:
@@ -461,218 +563,3 @@ JOIN nn_y y USING (tgt_id)"""
 
 
 BITEXT_MINE_CORPUS_SQL = _bitext_corpus_sql()
-
-
-def _blas_route(
-    queries: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    nprobe: int,
-    qid: str,
-) -> DataFrame:
-    """(qid, bucket, e1) x nprobe per query via one BLAS matmul per
-    Arrow batch — the production routing for large cell counts, where
-    the interpreted d2 fold (|queries| x cells x dim) dominates.
-    Assignment-identical to the fold path: d2 rounded half-up to 6 dp
-    (``blas_assign``'s rounding argument), ties to the lowest cluster
-    (stable argsort over k-ordered columns)."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.array([c for _, c in sorted(cents)], dtype=np.float64)
-    ks = np.array([k for k, _ in sorted(cents)], dtype=np.int32)
-    cn = (C * C).sum(axis=1)
-
-    # A degenerate/tiny corpus can train fewer centroids than nprobe;
-    # route to every cell that exists instead of raising a pandas
-    # length mismatch inside the Arrow stage (the fold path degrades
-    # the same way: fewer distinct probe buckets per query).
-    p = min(nprobe, len(C))
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):  # np.stack raises on an empty batch
-                continue
-            E = np.stack(pdf["e1"].to_numpy()).astype(np.float64)
-            d2 = (
-                (E * E).sum(axis=1)[:, None]
-                - 2.0 * (E @ C.T)
-                + cn[None, :]
-            )
-            d2 = np.floor(d2 * 1e6 + 0.5) / 1e6
-            top = np.argsort(d2, axis=1, kind="stable")[:, :p]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    qid: pdf[qid].to_numpy().repeat(p),
-                    "bucket": ks[top].reshape(-1),
-                    "e1": [
-                        pdf["e1"].iloc[i] for i in range(n) for _ in range(p)
-                    ],
-                }
-            )
-
-    elem = dict(queries.dtypes)["e1"]
-    return queries.select(qid, "e1").mapInPandas(
-        batches, schema=f"{qid} long, bucket int, e1 {elem}"
-    )
-
-
-_QBLOCK = 1024  # probe rows scored per accumulation block
-
-
-def _blas_cell_scores(
-    probes: DataFrame, corpus: DataFrame, qid: str, nid: str
-) -> DataFrame:
-    """Cell-local pair scoring: cogroup (qid, e1, n1) probes with
-    (nid, e2, n2) members on ``bucket`` and emit every (qid, nid, c6)
-    pair — the Arrow-matmul shape of the candidate scan.
-
-    Why cogroup and not a pair join: the joined pair frame ships BOTH
-    vectors per pair through Arrow (|pairs| ~ |side|·nprobe·avg_cell
-    rows x ~1 KB — tens of GB at the 100x probe; measured SLOWER than
-    the interpreted fold it replaced).  Cogrouping ships each vector
-    ONCE per cell and materializes only the thin (qid, nid, c6) rows.
-
-    BIT-IDENTICAL to the interpreted ``_COS6_PRE`` fold by
-    construction: the pair-score matrix is accumulated
-    dimension-at-a-time (``acc += Q[:, d, None] * M[None, :, d]`` —
-    one IEEE double multiply then one add per step, the exact
-    operation order of the Catalyst left fold), NOT a BLAS ``@``,
-    whose unspecified summation order can differ in the last ulp and
-    flip a FLOOR(x·1e6) boundary.  Division by the JVM-computed norm
-    product, the 1e6 scale, and the floor are single IEEE ops in both
-    engines.  Probe rows are processed in ``_QBLOCK`` chunks so the
-    accumulator stays cache-sized regardless of cell skew."""
-    import numpy as np
-    import pandas as pd
-
-    def score(probes_pdf: pd.DataFrame, members_pdf: pd.DataFrame):
-        if not len(probes_pdf) or not len(members_pdf):
-            return pd.DataFrame({qid: [], nid: [], "c6": []})
-        M = np.stack(members_pdf["e2"].to_numpy()).astype(np.float64)
-        n2 = members_pdf["n2"].to_numpy()
-        nids = members_pdf[nid].to_numpy()
-        out = []
-        for lo in range(0, len(probes_pdf), _QBLOCK):
-            blk = probes_pdf.iloc[lo : lo + _QBLOCK]
-            Q = np.stack(blk["e1"].to_numpy()).astype(np.float64)
-            acc = np.zeros((len(Q), len(M)), dtype=np.float64)
-            for d in range(Q.shape[1]):
-                acc += Q[:, d, None] * M[None, :, d]
-            denom = blk["n1"].to_numpy()[:, None] * n2[None, :]
-            # denom == 0 (zero-norm embedding): the interpreted fold's
-            # divide-by-zero yields NULL; mirror that instead of
-            # letting floor(inf/nan) cast to an undefined int64.
-            zero = denom == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c6 = np.floor(acc / denom * 1e6)
-            flat = np.where(zero, 0.0, c6).reshape(-1).astype(np.int64)
-            c6_col = (
-                pd.Series(flat).mask(zero.reshape(-1)).astype("Int64")
-                if zero.any()
-                else pd.Series(flat)
-            )
-            out.append(
-                pd.DataFrame(
-                    {
-                        qid: np.repeat(blk[qid].to_numpy(), len(M)),
-                        nid: np.tile(nids, len(Q)),
-                        "c6": c6_col,
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True)
-
-    return (
-        probes.groupBy("bucket")
-        .cogroup(corpus.groupBy("bucket"))
-        .applyInPandas(score, schema=f"{qid} long, {nid} long, c6 long")
-    )
-
-
-def _ivf_topk_c6_blas(
-    queries: DataFrame,
-    side: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    k: int,
-    nprobe: int,
-    qid: str,
-    nid: str,
-) -> DataFrame:
-    """BLAS variant of ``_ivf_topk_c6``: corpus assignment, query
-    routing, AND cell-local candidate scoring as Arrow-vectorized
-    stages (all output-identical to the fold path — pinned in
-    tests)."""
-    from .similarity import blas_assign
-
-    corpus = blas_assign(side, cents, keep_embedding=True).select(
-        F.col("vec_id").alias(nid),
-        F.col("embedding").alias("e2"),
-        F.expr(_NORM.format(e="embedding")).alias("n2"),
-        F.col("cluster").alias("bucket"),
-    )
-    # n1 via the same JVM fold as the fold path (numpy's SIMD sum
-    # could differ in the last ulp — norms must stay bit-identical)
-    probes = _blas_route(queries, cents, nprobe, qid).withColumn(
-        "n1", F.expr(_NORM.format(e="e1"))
-    )
-    scored = _blas_cell_scores(probes, corpus, qid, nid)
-    w = Window.partitionBy(qid).orderBy(
-        F.col("c6").desc(), F.col(nid).asc()
-    )
-    return scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
-
-
-def mine_bitext_corpus_blas(
-    src: DataFrame,
-    tgt: DataFrame,
-    k: int = BT_K,
-    threshold: float = BT_THRESHOLD,
-    cells: int = BT_CELLS,
-    nprobe: int = BT_NPROBE,
-) -> DataFrame:
-    """Production-scale variant of ``mine_bitext_corpus``: the BLAS
-    trainer and BLAS assignment/routing stages replace the interpreted
-    folds (which are |side| x cells x dim per pass — the binding cost
-    once cells grows with N).  Candidate scoring, margins, and output
-    are identical; tests pin blas == fold output at sf0.001."""
-    from .similarity import train_kmeans_centroids_blas
-
-    cents_t = train_kmeans_centroids_blas(tgt, k=cells)
-    cents_s = train_kmeans_centroids_blas(src, k=cells)
-
-    sq = src.select(
-        F.col("vec_id").alias("src_id"), F.col("embedding").alias("e1")
-    )
-    fw = _ivf_topk_c6_blas(sq, tgt, cents_t, k, nprobe, "src_id", "tgt_id")
-    nn_x = fw.groupBy("src_id").agg(F.sum("c6").alias("sum_x"))
-    best = fw.filter(F.col("rn") == 1).select("src_id", "tgt_id", "c6")
-
-    ys = best.select("tgt_id").distinct().join(
-        tgt.select(
-            F.col("vec_id").alias("tgt_id"),
-            F.col("embedding").alias("e1"),
-        ),
-        "tgt_id",
-    )
-    bw = _ivf_topk_c6_blas(ys, src, cents_s, k, nprobe, "tgt_id", "cand_id")
-    nn_y = bw.groupBy("tgt_id").agg(F.sum("c6").alias("sum_y"))
-
-    denom = F.col("sum_x") + F.col("sum_y")
-    margin = F.when(
-        denom > 0,
-        F.round(F.lit(2 * k) * F.col("c6") / denom, 6),
-    )
-    return (
-        best.join(nn_x, "src_id")
-        .join(nn_y, "tgt_id")
-        .select(
-            "src_id",
-            "tgt_id",
-            F.round(F.col("c6") / F.lit(1e6), 6).alias("cosine"),
-            margin.alias("margin"),
-            (F.coalesce(margin, F.lit(0.0)) >= threshold).alias("mined"),
-        )
-    )

@@ -2,37 +2,21 @@
 
 Every near-dup operator in operators/dedup.py emits pairs; a real
 corpus clean needs the transitive closure (A~B, B~C ⇒ {A,B,C} is one
-cluster with one survivor).  Two interchangeable distributed
-algorithms, both returning (id, comp = min reachable vertex):
+cluster with one survivor).  ``connected_components_star`` returns
+(id, comp = min reachable vertex) by alternating large-star /
+small-star (Kiveris et al., "Connected Components in MapReduce and
+Beyond", SoCC'14): each round rewrites the EDGE set, provably
+converging in O(log² n) (O(log n) in practice) rounds on ANY graph,
+including the adversarial long chains where plain label propagation
+needs diameter rounds.  This is the 100 TB safety choice when the
+similarity graph's shape is unknown.
 
-``connected_components`` — min-label propagation with a self-loop
-trick: label(v) ← min over N(v) ∪ {v} of label(u) is ONE join + ONE
-min-aggregate per round (the self-loop edge carries v's own label
-through the same dataflow, eliminating the left-join-and-least step a
-naive implementation needs).  Converges in diameter rounds — and
-dedup-similarity graphs are short-diameter by construction (clusters
-are near-cliques), so a handful of rounds suffices at any corpus size.
-Optional path halving (adopt the label OF my label) costs one more
-join per applied round and brings chain-shaped graphs to O(log d).
-
-``connected_components_star`` — alternating large-star / small-star
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14): each round rewrites the EDGE set, provably converging in
-O(log² n) (O(log n) in practice) rounds on ANY graph, including the
-adversarial long chains where plain propagation needs diameter rounds.
-This is the 100 TB safety choice when the similarity graph's shape is
-unknown.
-
-Iterative Spark mechanics both demonstrate deliberately (both loops
-run on ``iterate.RoundLoop``):
+Iterative Spark mechanics (the loop runs on ``iterate.RoundLoop``):
 - an eager checkpoint per round — truncates lineage so the plan
-  doesn't grow by two joins every iteration (the classic
-  iterative-algorithm OOM/stack blowup);
-- convergence detected by a scalar OBSERVED on that same checkpoint
-  job (decimal label-sum / edge-set fingerprint — monotone, so
-  equality ⇔ fixpoint), never a second action or a frame compare;
-- the edge frame is persisted pre-partitioned on the join key, so each
-  round shuffles only the (small) label frame, not the edges.
+  doesn't grow by one large-star + small-star pair per round (the
+  classic iterative-algorithm OOM/stack blowup);
+- convergence detected by an edge-set fingerprint OBSERVED on that
+  same checkpoint job, never a second action or a frame compare.
 
 The DuckDB oracle computes the same components with a recursive CTE —
 exact reachability, so any propagation bug (dropped vertex, one-way
@@ -49,69 +33,6 @@ from .dedup import q_simhash_near_dup
 from .iterate import RoundLoop
 
 MAX_ITER = 50
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    path_halving_every: int = 2,
-) -> DataFrame:
-    """(vertex_id, component) with component = min vertex id reachable.
-
-    ``edges`` is undirected input (each pair listed once, either
-    order); vertices are exactly the ids appearing in edges.
-
-    Per round: join labels to the cached symmetric+self-loop edge
-    frame on its partitioning key, min-aggregate by the other endpoint
-    — two exchanges, one of them only over the label frame.  Every
-    ``path_halving_every``-th round additionally follows one pointer
-    (label-of-label), which is what keeps chain-y graphs at O(log d)
-    without paying the extra join on the near-clique common case."""
-    sym = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    nodes = sym.select("a").distinct()
-    # labels only ever decrease ⇒ sum(comp) strictly decreases until
-    # the fixpoint; decimal keeps the 100 TB id-sum overflow-proof
-    label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
-    with RoundLoop("connected_components", keep_last=True) as loop:
-        # self-loops: the join+min below then computes min over
-        # N(v) ∪ {v} in one pass — no left join, no coalesce
-        sym2 = loop.cache(
-            sym.unionByName(nodes.select("a", F.col("a").alias("b")))
-            .distinct()
-            .repartition("b"),
-            StorageLevel.MEMORY_AND_DISK,
-        )
-        labels = loop.checkpoint(
-            nodes.select(F.col("a").alias("id"), F.col("a").alias("comp")),
-            label_sum=label_sum,
-        )
-        for i in loop.rounds(range(1, MAX_ITER + 1)):
-            prev = loop.stats["label_sum"]
-            nxt = (
-                sym2.join(labels, sym2["b"] == labels["id"])
-                .groupBy(F.col("a").alias("id"))
-                .agg(F.min("comp").alias("comp"))
-            )
-            if path_halving_every and i % path_halving_every == 0:
-                ptr = nxt.select(
-                    F.col("id").alias("pid"), F.col("comp").alias("pcomp")
-                )
-                nxt = nxt.join(
-                    ptr, nxt["comp"] == F.col("pid"), "left"
-                ).select(
-                    "id",
-                    F.least(
-                        F.col("comp"),
-                        F.coalesce(F.col("pcomp"), F.col("comp")),
-                    ).alias("comp"),
-                )
-            labels = loop.checkpoint(nxt, label_sum=label_sum)
-            if loop.stats["label_sum"] == prev:
-                break
-    return labels
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -150,8 +71,12 @@ def _small_star(e: DataFrame) -> DataFrame:
 def connected_components_star(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """Large-star/small-star alternation — same (id, comp) contract as
-    ``connected_components``, O(log n)-ish rounds on ANY graph shape.
+    """(vertex_id, component) with component = min vertex id reachable,
+    by large-star/small-star alternation: O(log n)-ish rounds on ANY
+    graph shape.
+
+    ``edges`` is undirected input (each pair listed once, either
+    order); vertices are exactly the ids appearing in edges.
 
     Convergence = the edge set stops changing; detected by a
     (count, order-insensitive xxhash64 fingerprint) pair observed on
@@ -298,7 +223,7 @@ GROUP BY lang
 #
 # Fixed-point integer PageRank over the supplier↔customer trade graph
 # (edges = who shipped to whom, from lineitem⋈orders), the weighted
-# iterative-propagation complement to the min-label components above.
+# iterative-propagation complement to the connected components above.
 # At corpus scale the same operator ranks hosts in a link graph for
 # crawl prioritization / quality priors (the original use).
 #
@@ -355,7 +280,7 @@ def pagerank_fixed_point(
     rank'(v) = (15·SCALE) DIV 100 + (85·Σ_{u→v} rank(u) DIV deg(u)) DIV 100
     starting from rank = SCALE everywhere.
 
-    Iterative mechanics (same discipline as connected_components):
+    Iterative mechanics (same discipline as connected_components_star):
     the degree-annotated edge frame is persisted pre-partitioned on
     the join key and the node frame is checkpointed — both are reused
     every round, and without this the whole edge derivation re-plans

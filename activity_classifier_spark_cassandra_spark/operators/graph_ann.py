@@ -69,7 +69,7 @@ from pyspark.sql import functions as F
 
 from ..sources.io import load_table
 from .iterate import RoundLoop
-from .similarity import _DOT, _N1, _N2, N_QUERIES, TOP_K
+from .similarity import _DOT, _N1, _N2, N_QUERIES, TOP_K, q_knn_brute
 
 # Tuned on the sf test corpus (dim-64, weak cluster structure) via
 # tools/graph_ann_proto.py: K=12/4 rounds reaches graph recall@12 =
@@ -1095,55 +1095,53 @@ KNN_GRAPH_SEARCH_SQL = _knn_graph_search_sql()
 KNN_GRAPH_Q8_SQL = _knn_graph_q8_sql()
 
 
-def q_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-quality audit for the EXACT replay build: beam-search
-    top-5 vs brute-force top-5 per query — (query_id, n_hits,
-    recall_at_5).  Same shape as q_ann_recall_eval: the ground-truth
-    side IS the documented brute scan (bounded: |queries| x corpus).
-    Builds ``build_knn_graph`` inline (q_knn_graph_search composes
-    the SQ8 default since round 10; this audit keeps the exact build
-    measured — its q8 counterpart is q_graph_q8_recall_eval)."""
-    from .similarity import q_knn_brute
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    graph = memo_graph_exact(spark, sf_dir)
-    search = beam_search(emb, graph).select("query_id", "neighbor_id")
-    truth = (
-        q_knn_brute(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
+def _recall_hits(search: DataFrame, truth: DataFrame) -> DataFrame:
+    """(query_id, n_hits): how many of each query's searched neighbors
+    the brute-force ``truth`` (q_knn_brute) also returns."""
+    hit = truth.select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
     return (
-        search.join(truth, ["query_id", "neighbor_id"], "left")
+        search.select("query_id", "neighbor_id")
+        .join(hit, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
         .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"))
-        .withColumn(
-            "recall_at_5",
-            F.round(F.col("n_hits") / F.lit(float(TOP_K)), 6),
-        )
     )
 
 
-def _graph_recall_eval_sql() -> str:
-    ctes = _search_ctes()
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""searchres AS (
+def _recall_at_k(n_hits: str) -> Column:
+    return F.round(F.col(n_hits) / F.lit(float(TOP_K)), 6)
+
+
+def _sql_search_top(out: str, frontier: str) -> str:
+    """CTE ``out``: each query's top-TOP_K from a scored frontier."""
+    return f"""{out} AS (
   SELECT query_id, neighbor_id FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
       ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM fs{HOPS}
+    FROM {frontier}
   ) WHERE rank <= {TOP_K}
-)""")
-    ctes.append(f"""btop AS (
+)"""
+
+
+def _sql_btop(corpus: str) -> str:
+    """CTE ``btop``: brute-force top-TOP_K truth over ``corpus``."""
+    cos = _SQL_COS.format(q="q.e", c="y.e")
+    return f"""btop AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
       ROW_NUMBER() OVER (PARTITION BY q.vec_id
         ORDER BY {cos} DESC, y.vec_id ASC) AS r
-    FROM corpus q JOIN corpus y ON y.vec_id <> q.vec_id
+    FROM {corpus} q JOIN {corpus} y ON y.vec_id <> q.vec_id
     WHERE q.vec_id < {N_QUERIES}
   ) WHERE r <= {TOP_K}
-)""")
-    sql = (
+)"""
+
+
+def _sql_recall_eval(ctes: list[str], frontier: str) -> str:
+    """Oracle of a recall audit: the search's top-TOP_K from the scored
+    ``frontier`` CTE left-joined to the brute-force top-TOP_K —
+    (query_id, n_hits, recall_at_5)."""
+    ctes = ctes + [_sql_search_top("searchres", frontier), _sql_btop("corpus")]
+    return (
         "WITH " + ",\n".join(ctes)
         + f"""
 SELECT s.query_id,
@@ -1156,7 +1154,25 @@ LEFT JOIN btop b
   ON b.query_id = s.query_id AND b.neighbor_id = s.neighbor_id
 GROUP BY s.query_id"""
     )
-    return _materialize(sql)
+
+
+def q_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Index-quality audit for the EXACT replay build: beam-search
+    top-5 vs brute-force top-5 per query — (query_id, n_hits,
+    recall_at_5).  Same shape as q_ann_recall_eval: the ground-truth
+    side IS the documented brute scan (bounded: |queries| x corpus).
+    Builds ``build_knn_graph`` inline (q_knn_graph_search composes
+    the SQ8 default since round 10; this audit keeps the exact build
+    measured — its q8 counterpart is q_graph_q8_recall_eval)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    search = beam_search(emb, memo_graph_exact(spark, sf_dir))
+    return _recall_hits(search, q_knn_brute(spark, sf_dir)).withColumn(
+        "recall_at_5", _recall_at_k("n_hits")
+    )
+
+
+def _graph_recall_eval_sql() -> str:
+    return _materialize(_sql_recall_eval(_search_ctes(), f"fs{HOPS}"))
 
 
 GRAPH_RECALL_EVAL_SQL = _graph_recall_eval_sql()
@@ -1168,24 +1184,10 @@ def q_graph_q8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, n_hits, recall_at_5), the driver-checkable counterpart
     of q_graph_recall_eval for build_knn_graph_q8 (the pytest recall
     parity, as an oracle row)."""
-    from .similarity import q_knn_brute
-
     emb = load_table(spark, sf_dir, "embeddings")
-    graph = memo_graph_q8(spark, sf_dir)
-    search = beam_search(emb, graph).select("query_id", "neighbor_id")
-    truth = (
-        q_knn_brute(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        search.join(truth, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"))
-        .withColumn(
-            "recall_at_5",
-            F.round(F.col("n_hits") / F.lit(float(TOP_K)), 6),
-        )
+    search = beam_search(emb, memo_graph_q8(spark, sf_dir))
+    return _recall_hits(search, q_knn_brute(spark, sf_dir)).withColumn(
+        "recall_at_5", _recall_at_k("n_hits")
     )
 
 
@@ -1199,37 +1201,7 @@ def _graph_q8_recall_eval_sql() -> str:
         f" WHERE vec_id < {N_QUERIES})"
     )
     ctes += _sql_search_ctes("", "gf", "queries", "corpus")
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""searchres AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM fs
-  ) WHERE rank <= {TOP_K}
-)""")
-    ctes.append(f"""btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        ORDER BY {cos} DESC, y.vec_id ASC) AS r
-    FROM corpus q JOIN corpus y ON y.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE r <= {TOP_K}
-)""")
-    sql = (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT s.query_id,
-  CAST(SUM(CASE WHEN b.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hits,
-  ROUND(CAST(SUM(CASE WHEN b.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) / {float(TOP_K)}, 6) AS recall_at_5
-FROM searchres s
-LEFT JOIN btop b
-  ON b.query_id = s.query_id AND b.neighbor_id = s.neighbor_id
-GROUP BY s.query_id"""
-    )
-    return _materialize(sql)
+    return _materialize(_sql_recall_eval(ctes, "fs"))
 
 
 GRAPH_Q8_RECALL_EVAL_SQL = _graph_q8_recall_eval_sql()
@@ -1472,8 +1444,6 @@ def q_graph_insert_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, n_hits_insert, n_hits_rebuild, recall_insert,
     recall_rebuild): beam-search recall@TOP_K vs full-corpus brute
     truth, for the insert-updated graph and a fresh rebuild."""
-    from .similarity import q_knn_brute
-
     emb = load_table(spark, sf_dir, "embeddings")
     new, _old = _split_insert_batch(emb)
     # both standing indexes are the SQ8 build — the production
@@ -1485,32 +1455,17 @@ def q_graph_insert_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fresh = memo_graph_q8(spark, sf_dir)
 
-    truth = (
-        q_knn_brute(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
+    truth = q_knn_brute(spark, sf_dir)
 
     def hits(graph: DataFrame, out: str) -> DataFrame:
-        return (
-            beam_search(emb, graph)
-            .select("query_id", "neighbor_id")
-            .join(truth, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias(out))
-        )
+        hit = _recall_hits(beam_search(emb, graph), truth)
+        return hit.withColumnRenamed("n_hits", out)
 
     return (
         hits(updated, "n_hits_insert")
         .join(hits(fresh, "n_hits_rebuild"), "query_id")
-        .withColumn(
-            "recall_insert",
-            F.round(F.col("n_hits_insert") / F.lit(float(TOP_K)), 6),
-        )
-        .withColumn(
-            "recall_rebuild",
-            F.round(F.col("n_hits_rebuild") / F.lit(float(TOP_K)), 6),
-        )
+        .withColumn("recall_insert", _recall_at_k("n_hits_insert"))
+        .withColumn("recall_rebuild", _recall_at_k("n_hits_rebuild"))
     )
 
 
@@ -1579,24 +1534,9 @@ def _graph_insert_policy_sql() -> str:
     )
     ctes += _sql_search_ctes("u_", "upd", "sq", "allv")
     ctes += _sql_search_ctes("v_", "fb_gf", "sq", "allv")
-    for p, out in (("u_", "utop"), ("v_", "vtop")):
-        ctes.append(f"""{out} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM {p}fs
-  ) WHERE rank <= {TOP_K}
-)""")
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        ORDER BY {cos} DESC, y.vec_id ASC) AS r
-    FROM allv q JOIN allv y ON y.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE r <= {TOP_K}
-)""")
+    ctes.append(_sql_search_top("utop", "u_fs"))
+    ctes.append(_sql_search_top("vtop", "v_fs"))
+    ctes.append(_sql_btop("allv"))
     sql = (
         "WITH " + ",\n".join(ctes)
         + f"""
@@ -1763,24 +1703,9 @@ def q_graph_routed_recall_eval(
     brute-force truth — (query_id, n_hits, recall_at_5).  The
     ground-truth side IS the documented brute scan (bounded:
     |queries| x corpus), same as q_graph_recall_eval."""
-    from .similarity import q_knn_brute
-
-    search = q_knn_graph_routed(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    truth = (
-        q_knn_brute(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        search.join(truth, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"))
-        .withColumn(
-            "recall_at_5",
-            F.round(F.col("n_hits") / F.lit(float(TOP_K)), 6),
-        )
+    search = q_knn_graph_routed(spark, sf_dir)
+    return _recall_hits(search, q_knn_brute(spark, sf_dir)).withColumn(
+        "recall_at_5", _recall_at_k("n_hits")
     )
 
 
@@ -1891,38 +1816,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 
 
 def _graph_routed_recall_eval_sql() -> str:
-    ctes = _routed_ctes()
-    ctes.append(f"""searchres AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM fs
-  ) WHERE rank <= {TOP_K}
-)""")
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""btop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        ORDER BY {cos} DESC, y.vec_id ASC) AS r
-    FROM corpus q JOIN corpus y ON y.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE r <= {TOP_K}
-)""")
-    sql = (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT s.query_id,
-  CAST(SUM(CASE WHEN b.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hits,
-  ROUND(CAST(SUM(CASE WHEN b.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) / {float(TOP_K)}, 6) AS recall_at_5
-FROM searchres s
-LEFT JOIN btop b
-  ON b.query_id = s.query_id AND b.neighbor_id = s.neighbor_id
-GROUP BY s.query_id"""
-    )
-    return _materialize_routed(sql)
+    return _materialize_routed(_sql_recall_eval(_routed_ctes(), "fs"))
 
 
 KNN_GRAPH_ROUTED_SQL = _knn_graph_routed_sql()

@@ -19,6 +19,9 @@ double accumulation in element order) so the DuckDB oracle
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1011,11 +1014,25 @@ def _assign_expr(cents_lit: str, vec_col: str = "embedding") -> str:
     )
 
 
-def train_kmeans_centroids(
-    emb: DataFrame, k: int = K_TRAIN, iters: int = KMEANS_ITERS
+def _fold_assign(
+    emb: DataFrame, cents: list[tuple[int, list[float]]]
+) -> DataFrame:
+    lit = _cents_literal(cents)
+    return emb.withColumn("cluster", F.expr(_assign_expr(lit)))
+
+
+def _lloyd(
+    emb: DataFrame,
+    k: int,
+    iters: int,
+    assign: Callable[[DataFrame, list[tuple[int, list[float]]]], DataFrame],
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's: returns [(cluster, centroid 6-dp)] after
-    ``iters`` assign/update rounds from the k lowest-vec_id seeds."""
+    ``iters`` assign/update rounds from the k lowest-vec_id seeds.
+    ``assign(emb, cents)`` is the assignment stage (a frame carrying
+    ``cluster`` and ``embedding``); the update is a decimal-exact
+    per-dimension mean, so stages that agree on every integer
+    assignment give the same trajectory."""
     seed_rows = (
         emb.orderBy("vec_id")
         .limit(k)
@@ -1028,10 +1045,7 @@ def train_kmeans_centroids(
     )
     cents = [(i, list(r.centroid)) for i, r in enumerate(seed_rows)]
     for _ in range(iters):
-        assigned = emb.select(
-            F.expr(_assign_expr(_cents_literal(cents))).alias("cluster"),
-            "embedding",
-        )
+        assigned = assign(emb, cents).select("cluster", "embedding")
         new_rows = (
             assigned.select(
                 "cluster", F.posexplode("embedding").alias("pos", "v")
@@ -1059,6 +1073,13 @@ def train_kmeans_centroids(
         )
         cents = [(r.cluster, list(r.centroid)) for r in new_rows]
     return cents
+
+
+def train_kmeans_centroids(
+    emb: DataFrame, k: int = K_TRAIN, iters: int = KMEANS_ITERS
+) -> list[tuple[int, list[float]]]:
+    """Lloyd's with the interpreted-fold assignment (``_assign_expr``)."""
+    return _lloyd(emb, k, iters, _fold_assign)
 
 
 def blas_assign(
@@ -1120,52 +1141,9 @@ def train_kmeans_centroids_blas(
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's with the BLAS assignment stage — the large-k production
     trainer.  The trajectory is identical to ``train_kmeans_centroids``
-    (assignments are integers and the centroid update is the same
-    decimal-exact Spark aggregation over them), so the exact-fold
-    DuckDB replay oracles remain valid; only the per-round assignment
-    compute path differs."""
-    seed_rows = (
-        emb.orderBy("vec_id")
-        .limit(k)
-        .select(
-            F.expr(
-                "transform(embedding, x -> round(CAST(x AS DOUBLE), 6))"
-            ).alias("centroid")
-        )
-        .collect()
-    )
-    cents = [(i, list(r.centroid)) for i, r in enumerate(seed_rows)]
-    for _ in range(iters):
-        assigned = blas_assign(emb, cents, keep_embedding=True).select(
-            "cluster", "embedding"
-        )
-        new_rows = (
-            assigned.select(
-                "cluster", F.posexplode("embedding").alias("pos", "v")
-            )
-            .groupBy("cluster", "pos")
-            .agg(
-                F.round(
-                    F.sum(
-                        F.col("v").cast("double").cast("decimal(38,18)")
-                    ).cast("double")
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("m")
-            )
-            .groupBy("cluster")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias(
-                    "pm"
-                )
-            )
-            .select(
-                "cluster", F.expr("transform(pm, x -> x.m)").alias("centroid")
-            )
-            .collect()
-        )
-        cents = [(r.cluster, list(r.centroid)) for r in new_rows]
-    return cents
+    (assignments are integers and the update is shared), so the
+    exact-fold DuckDB replay oracles remain valid."""
+    return _lloyd(emb, k, iters, partial(blas_assign, keep_embedding=True))
 
 
 def q_knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,6 @@
 """Margin-based bitext mining: numpy full replay, the hub-discount
-property the margin exists for, and the batch contract."""
+property the margin exists for, the batch contract, and the
+full-corpus miner against its DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -175,18 +176,24 @@ def test_bitext_corpus_contract(spark):
         assert assign[int(r.tgt_id)] in probed[int(r.src_id)], r
 
 
-def test_bitext_corpus_blas_matches_fold(spark):
-    """The BLAS trainer/assignment/routing variant must produce the
-    IDENTICAL mined frame as the interpreted-fold registry path (the
-    assignment-identity argument from similarity.blas_assign, now
-    pinned end to end through the mining composition)."""
+def test_bitext_corpus_matches_duckdb_oracle(spark):
+    """The registry's full-corpus miner hash-matches its DuckDB replay
+    (per-side Lloyd's as chained CTEs, probed-cell scans, integer
+    margins)."""
+    import duckdb
     import pandas as pd
 
-    src, tgt = BT._sides(spark, SF)
-    a = BT.mine_bitext_corpus(src, tgt).toPandas()
-    b = BT.mine_bitext_corpus_blas(src, tgt).toPandas()
-    cols = sorted(a.columns)
-    a = a[cols].sort_values(cols).reset_index(drop=True)
-    b = b[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-    assert len(a) > 0
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * "
+        f"FROM read_parquet('{SF}/embeddings.parquet')"
+    )
+    want = con.execute(BT.BITEXT_MINE_CORPUS_SQL).df()
+    con.close()
+    got = BT.q_bitext_mine_corpus(spark, SF).toPandas()
+    cols = sorted(got.columns)
+    assert cols == sorted(want.columns)
+    got = got[cols].sort_values(cols).reset_index(drop=True)
+    want = want[cols].sort_values(cols).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    assert len(got) > 0

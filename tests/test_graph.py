@@ -7,7 +7,7 @@ import pandas as pd
 
 import __spark_entry__ as entrymod
 from activity_classifier_spark_cassandra_spark.operators.graph import (
-    connected_components,
+    connected_components_star,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -16,7 +16,8 @@ SF_DIR = "/root/testdata/sf0.01"
 def _comp(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
     return {
-        r["id"]: r["comp"] for r in connected_components(df).collect()
+        r["id"]: r["comp"]
+        for r in connected_components_star(df).collect()
     }
 
 
@@ -55,41 +56,26 @@ def test_matches_recursive_cte_oracle(spark):
     con.close()
 
 
-# ---------------------------------------------- large-star/small-star
-def _comp_star(spark, edges):
-    from activity_classifier_spark_cassandra_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    return {
-        r["id"]: r["comp"]
-        for r in connected_components_star(df).collect()
-    }
-
-
 def test_star_long_chain(spark):
-    """A 12-hop chain — the adversarial shape where min-propagation
+    """A 12-hop chain — the adversarial shape where label propagation
     needs diameter rounds; star rounds must still find one component
     (and each vertex must get exactly one label)."""
     edges = [(i, i + 1) for i in range(1, 13)]
-    got = _comp_star(spark, edges)
+    got = _comp(spark, edges)
     assert got == {i: 1 for i in range(1, 14)}
 
 
-def test_star_matches_minprop_on_mixed_graph(spark):
-    """Cliques + chains + isolated pairs, shuffled ids: both
-    algorithms must produce the identical labeling."""
+def test_star_mixed_graph_labeling(spark):
+    """Cliques + chains + isolated pairs, shuffled ids: every vertex
+    is labeled with its component's min id."""
     edges = (
         [(100, 7), (7, 55), (55, 100)]          # triangle
         + [(2, 9), (9, 30), (30, 4)]            # chain
         + [(77, 78)]                            # pair
         + [(40, 41), (41, 42), (42, 40), (42, 43)]  # clique + tail
     )
-    star = _comp_star(spark, edges)
-    prop = _comp(spark, edges)
-    assert star == prop
-    assert set(star.values()) == {7, 2, 77, 40}
+    comps = {7: [100, 7, 55], 2: [2, 9, 30, 4], 77: [77, 78], 40: [40, 41, 42, 43]}
+    assert _comp(spark, edges) == {v: c for c, vs in comps.items() for v in vs}
 
 
 def test_triangle_count_matches_bruteforce(spark):

@@ -156,7 +156,6 @@ def test_observed_statistics_equal_the_actions_they_replace(spark, monkeypatch, 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)], "src long, dst long"
     )
-    G.connected_components(edges).count()
     G.connected_components_star(edges).count()
     # the trigger's op-mix probe: unknown ops stop at the probe; a
     # delete+insert batch passes it, then fails on the missing state
@@ -171,7 +170,6 @@ def test_observed_statistics_equal_the_actions_they_replace(spark, monkeypatch, 
         "nn_descent_q8",
         "kcenter",
         "power_iteration",
-        "connected_components",
         "connected_components_star",
         "stream_index",
     }

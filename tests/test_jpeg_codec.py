@@ -294,11 +294,18 @@ def test_decoders_byte_flip_fuzz_only_notimplemented_escapes():
     img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
     jpg = MM.encode_jpeg_baseline(img)
     pcm = [int(x) for x in rng.integers(-3000, 3000, 64)]
+    png = MM.encode_png(16, 16, img.tobytes(), filters=[0, 1, 2, 3] * 4)
+    wav = MM.encode_wav(8000, pcm)
     cases = [
         (MM.decode_jpeg, jpg, 2000),
-        (MM.decode_png, MM.encode_png(16, 16, img.tobytes(), filters=[0, 1, 2, 3] * 4), 500),
-        (MM.decode_wav, MM.encode_wav(8000, pcm), 500),
+        (MM.decode_png, png, 500),
+        (MM.decode_wav, wav, 500),
         (MM.decode_avi_mjpeg, MM.encode_avi_mjpeg([jpg, jpg], 16, 16), 500),
+        # the header dispatcher: FIMG fixture, PNG IHDR, RIFF/WAVE, JPEG SOF walk
+        (MM._decode_header, MM.encode_fake_image(16, 16, payload=b"x" * 32), 500),
+        (MM._decode_header, png, 500),
+        (MM._decode_header, wav, 500),
+        (MM._decode_header, jpg, 500),
     ]
     flips = np.random.default_rng(1)
     for decode, blob, trials in cases:

@@ -33,12 +33,12 @@ def encode_label(col: str | Column, mapping: Mapping[str, float]) -> Column:
     return expr.otherwise(F.lit(0.0))
 
 
-def encode_activity(col: str | Column = "activity") -> Column:
-    return encode_label(col, ACTIVITY_LABELS)
+def encode_activity() -> Column:
+    return encode_label("activity", ACTIVITY_LABELS)
 
 
-def encode_event_type(col: str | Column = "event_type") -> Column:
-    return encode_label(col, EVENT_TYPE_LABELS)
+def encode_event_type() -> Column:
+    return encode_label("event_type", EVENT_TYPE_LABELS)
 
 
 def label_case_sql(col: str, mapping: Mapping[str, float]) -> str:

@@ -82,13 +82,10 @@ def train_test_split(
     return train, test
 
 
-def build_pipeline(
-    algo: str, feature_cols: list[str] | None = None
-) -> Pipeline:
+def build_pipeline(algo: str) -> Pipeline:
     """VectorAssembler + classifier with the reference's hyperparams."""
-    feature_cols = feature_cols or EVENTS_FEATURE_COLS
     assembler = VectorAssembler(
-        inputCols=feature_cols, outputCol="features"
+        inputCols=EVENTS_FEATURE_COLS, outputCol="features"
     )
     if algo == "decision_tree":
         clf = DecisionTreeClassifier(
@@ -248,13 +245,11 @@ def predict_point(
     spark: SparkSession,
     model: PipelineModel,
     feature_values: list[float],
-    feature_cols: list[str] | None = None,
 ) -> float:
     """ML7 point-lookup serving: one feature vector -> class id
     (job/PredictActivity.java:28-40, hard-coded vector at :33)."""
-    feature_cols = feature_cols or EVENTS_FEATURE_COLS
     row_df = spark.createDataFrame(
-        [tuple(float(v) for v in feature_values)], schema=feature_cols
+        [tuple(float(v) for v in feature_values)], schema=EVENTS_FEATURE_COLS
     )
     pred = model.transform(row_df).select("prediction").collect()[0]
     return float(pred["prediction"])
@@ -292,45 +287,3 @@ def q_ml_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-
-# ---------------------------------------------------------------- tuning
-def tune_tree_depth(
-    spark: SparkSession,
-    df: DataFrame,
-    depths: list[int] | None = None,
-    train_ratio: float = 0.75,
-) -> tuple[PipelineModel, dict]:
-    """Model selection beyond the reference (it hard-codes maxDepth=9):
-    grid-search tree depth with TrainValidationSplit (one split, not
-    k-fold — at 100 TB each fit is expensive; TVS fits |grid|+1 models
-    vs CV's k*|grid|).  Returns (best model, {depth: metric})."""
-    from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
-
-    depths = depths or [3, 6, 9]
-    pipeline = build_pipeline("decision_tree")
-    dt = pipeline.getStages()[-1]
-    grid = ParamGridBuilder().addGrid(dt.maxDepth, depths).build()
-    evaluator = MulticlassClassificationEvaluator(
-        labelCol="label", predictionCol="prediction", metricName="accuracy"
-    )
-    tvs = TrainValidationSplit(
-        estimator=pipeline,
-        estimatorParamMaps=grid,
-        evaluator=evaluator,
-        trainRatio=train_ratio,
-        seed=RANDOM_SEED,
-    )
-    model = tvs.fit(df)
-    metrics = dict(zip(depths, [float(m) for m in model.validationMetrics]))
-    return model.bestModel, metrics
-
-
-def feature_importances(
-    model: PipelineModel, feature_cols: list[str] | None = None
-) -> dict[str, float]:
-    """Per-feature importance from the fitted tree/forest — the model
-    introspection surface the reference lacks entirely."""
-    feature_cols = feature_cols or EVENTS_FEATURE_COLS
-    clf = model.stages[-1]
-    imps = clf.featureImportances.toArray()
-    return {c: float(v) for c, v in zip(feature_cols, imps)}

@@ -40,20 +40,19 @@ def asof_join(
     keys: Sequence[str],
     ts_col: str,
     payload_cols: Sequence[str],
-    prefix: str = "asof_",
 ) -> DataFrame:
-    """Left as-of join: left's columns plus ``prefix``-renamed right
+    """Left as-of join: left's columns plus ``asof_``-prefixed right
     payload columns (null where no right row precedes).
 
     ``right`` must contain (keys..., ts_col, payload_cols...) with
     unique (keys, ts_col)."""
     l_tagged = left.withColumn(_TAG, F.lit(1))
     for c in payload_cols:
-        l_tagged = l_tagged.withColumn(f"{prefix}{c}", F.lit(None))
+        l_tagged = l_tagged.withColumn(f"asof_{c}", F.lit(None))
     r_tagged = right.select(
         *keys,
         F.col(ts_col),
-        *[F.col(c).alias(f"{prefix}{c}") for c in payload_cols],
+        *[F.col(c).alias(f"asof_{c}") for c in payload_cols],
     ).withColumn(_TAG, F.lit(0))
 
     u = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
@@ -66,9 +65,9 @@ def asof_join(
     carried = u
     for c in payload_cols:
         carried = carried.withColumn(
-            f"{prefix}{c}",
+            f"asof_{c}",
             F.last(
-                F.when(F.col(_TAG) == 0, F.col(f"{prefix}{c}")),
+                F.when(F.col(_TAG) == 0, F.col(f"asof_{c}")),
                 ignorenulls=True,
             ).over(w),
         )
@@ -131,19 +130,17 @@ def range_join(
     left_ts: str,
     right_ts: str,
     upper: int,
-    lower: int = 0,
 ) -> DataFrame:
     """Band/range join: pairs (l, r) with the same keys and
-    ``l.ts + lower <= r.ts <= l.ts + upper``.
+    ``l.ts <= r.ts <= l.ts + upper``.
 
     A raw inequality join plans as a nested-loop (quadratic per key);
-    the scalable shape buckets time into (upper - lower)-wide bins and
+    the scalable shape buckets time into ``upper``-wide bins and
     equi-joins on (keys, bucket) — each left row's target interval
     spans at most 2 bins, so the join is linear in matches.  The exact
     band predicate filters the bucket candidates afterwards."""
-    width = upper - lower
-    if width <= 0:
-        raise ValueError("upper must exceed lower")
+    if upper <= 0:
+        raise ValueError("upper must be positive")
     # integer DIV: float division of ns-scale longs loses precision
     # near bucket boundaries (double mantissa < 2^63)
     l = left.withColumn(
@@ -151,8 +148,8 @@ def range_join(
         F.explode(
             F.array_distinct(
                 F.array(
-                    F.expr(f"({left_ts} + {lower}) DIV {width}"),
-                    F.expr(f"({left_ts} + {upper}) DIV {width}"),
+                    F.expr(f"{left_ts} DIV {upper}"),
+                    F.expr(f"({left_ts} + {upper}) DIV {upper}"),
                 )
             )
         ),
@@ -161,13 +158,13 @@ def range_join(
     # surfaced as "<right_ts>_right" in that case
     rts = "_range_rts"
     r = right.withColumnRenamed(right_ts, rts).withColumn(
-        "_bucket", F.expr(f"{rts} DIV {width}")
+        "_bucket", F.expr(f"{rts} DIV {upper}")
     )
     joined = (
         l.join(r, [*keys, "_bucket"])
         .drop("_bucket")
         .filter(
-            (F.col(rts) >= F.col(left_ts) + lower)
+            (F.col(rts) >= F.col(left_ts))
             & (F.col(rts) <= F.col(left_ts) + upper)
         )
     )

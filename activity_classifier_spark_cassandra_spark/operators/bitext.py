@@ -75,8 +75,6 @@ def mine_bitext(
     src: DataFrame,
     tgt: DataFrame,
     batch_ids_below: int = 2 * BT_BATCH,
-    k: int = BT_K,
-    threshold: float = BT_THRESHOLD,
 ) -> DataFrame:
     """(src_id, tgt_id, cosine, margin, mined): forward-best target
     per batch source sentence with its ratio margin."""
@@ -94,7 +92,7 @@ def mine_bitext(
     )
     ranked = fw.withColumn("rn", F.row_number().over(wx))
     nn_x = (
-        ranked.filter(F.col("rn") <= k)
+        ranked.filter(F.col("rn") <= BT_K)
         .groupBy("src_id")
         .agg(F.sum("c6").alias("sum_x"))
     )
@@ -118,14 +116,14 @@ def mine_bitext(
     )
     nn_y = (
         bw.withColumn("rn", F.row_number().over(wy))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= BT_K)
         .groupBy("tgt_id")
         .agg(F.sum("c6b").alias("sum_y"))
     )
     denom = F.col("sum_x") + F.col("sum_y")
     margin = F.when(
         denom > 0,
-        F.round(F.lit(2 * k) * F.col("c6") / denom, 6),
+        F.round(F.lit(2 * BT_K) * F.col("c6") / denom, 6),
     )
     return (
         best.join(nn_x, "src_id")
@@ -135,7 +133,7 @@ def mine_bitext(
             "tgt_id",
             F.round(F.col("c6") / F.lit(1e6), 6).alias("cosine"),
             margin.alias("margin"),
-            (F.coalesce(margin, F.lit(0.0)) >= threshold).alias("mined"),
+            (F.coalesce(margin, F.lit(0.0)) >= BT_THRESHOLD).alias("mined"),
         )
     )
 
@@ -398,10 +396,6 @@ def _ivf_topk_c6(
 def mine_bitext_corpus(
     src: DataFrame,
     tgt: DataFrame,
-    k: int = BT_K,
-    threshold: float = BT_THRESHOLD,
-    cells: int = BT_CELLS,
-    nprobe: int = BT_NPROBE,
 ) -> DataFrame:
     """(src_id, tgt_id, cosine, margin, mined) for EVERY source
     sentence: forward-best target among the probed-cell candidates,
@@ -411,13 +405,13 @@ def mine_bitext_corpus(
     once cells grows with N."""
     from .similarity import train_kmeans_centroids_blas
 
-    cents_t = train_kmeans_centroids_blas(tgt, k=cells)
-    cents_s = train_kmeans_centroids_blas(src, k=cells)
+    cents_t = train_kmeans_centroids_blas(tgt, k=BT_CELLS)
+    cents_s = train_kmeans_centroids_blas(src, k=BT_CELLS)
 
     sq = src.select(
         F.col("vec_id").alias("src_id"), F.col("embedding").alias("e1")
     )
-    fw = _ivf_topk_c6(sq, tgt, cents_t, k, nprobe, "src_id", "tgt_id")
+    fw = _ivf_topk_c6(sq, tgt, cents_t, BT_K, BT_NPROBE, "src_id", "tgt_id")
     nn_x = fw.groupBy("src_id").agg(F.sum("c6").alias("sum_x"))
     best = fw.filter(F.col("rn") == 1).select("src_id", "tgt_id", "c6")
 
@@ -428,13 +422,15 @@ def mine_bitext_corpus(
         ),
         "tgt_id",
     )
-    bw = _ivf_topk_c6(ys, src, cents_s, k, nprobe, "tgt_id", "cand_id")
+    bw = _ivf_topk_c6(
+        ys, src, cents_s, BT_K, BT_NPROBE, "tgt_id", "cand_id"
+    )
     nn_y = bw.groupBy("tgt_id").agg(F.sum("c6").alias("sum_y"))
 
     denom = F.col("sum_x") + F.col("sum_y")
     margin = F.when(
         denom > 0,
-        F.round(F.lit(2 * k) * F.col("c6") / denom, 6),
+        F.round(F.lit(2 * BT_K) * F.col("c6") / denom, 6),
     )
     return (
         best.join(nn_x, "src_id")
@@ -444,7 +440,7 @@ def mine_bitext_corpus(
             "tgt_id",
             F.round(F.col("c6") / F.lit(1e6), 6).alias("cosine"),
             margin.alias("margin"),
-            (F.coalesce(margin, F.lit(0.0)) >= threshold).alias("mined"),
+            (F.coalesce(margin, F.lit(0.0)) >= BT_THRESHOLD).alias("mined"),
         )
     )
 

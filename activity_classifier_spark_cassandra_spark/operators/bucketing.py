@@ -34,7 +34,6 @@ def bucketed_table(
     sf_dir: str,
     name: str,
     key: str,
-    n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """Idempotent ingest of one testdata table into a bucketed+sorted
     parquet table (one-time shuffle).  The table name carries the SF
@@ -47,7 +46,7 @@ def bucketed_table(
         clear_stale_table_location(spark, tbl)
         (
             load_table(spark, sf_dir, name)
-            .write.bucketBy(n_buckets, key)
+            .write.bucketBy(N_BUCKETS, key)
             .sortBy(key)
             .option("path", managed_table_path(spark, tbl))
             .mode("overwrite")

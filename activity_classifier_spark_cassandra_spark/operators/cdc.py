@@ -207,22 +207,22 @@ FROM runs
 # merge-order-exact.
 
 def snapshot_diff(
-    old: DataFrame, new: DataFrame, key: str, value_col: str = "value"
+    old: DataFrame, new: DataFrame, key: str
 ) -> DataFrame:
     """Per-class (status, n_keys, sum_value_old, sum_value_new) from a
-    full-outer key join of two (key, value_col) snapshots.
+    full-outer key join of two (key, value) snapshots.
 
     Presence is carried as EXPLICIT per-side flags, never inferred
     from value nullness — a NULL value in a present row must classify
     as changed/unchanged, not masquerade as a missing key."""
     o = old.select(
         F.col(key).alias("k"),
-        F.col(value_col).alias("v_old"),
+        F.col("value").alias("v_old"),
         F.lit(True).alias("in_old"),
     )
     n = new.select(
         F.col(key).alias("k"),
-        F.col(value_col).alias("v_new"),
+        F.col("value").alias("v_new"),
         F.lit(True).alias("in_new"),
     )
     status = (

@@ -130,7 +130,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _coreset_sql(k: int = K_CENTERS) -> str:
+def _coreset_sql() -> str:
     d2 = _sql_d2("v.e", "c.e")
     ctes = [
         "corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
@@ -138,7 +138,7 @@ def _coreset_sql(k: int = K_CENTERS) -> str:
         "cum0 AS (SELECT 0 AS cid, vec_id, e FROM corpus"
         " ORDER BY vec_id LIMIT 1)",
     ]
-    for i in range(1, k):
+    for i in range(1, K_CENTERS):
         ctes.append(f"""md{i} AS (
   SELECT v.vec_id, v.e, MIN({d2}) AS md2
   FROM corpus v CROSS JOIN cum{i - 1} c
@@ -151,7 +151,7 @@ def _coreset_sql(k: int = K_CENTERS) -> str:
     SELECT vec_id, e FROM md{i} ORDER BY md2 DESC, vec_id ASC LIMIT 1
   )
 )""")
-    final = f"cum{k - 1}"
+    final = f"cum{K_CENTERS - 1}"
     sql = (
         "WITH " + ",\n".join(ctes)
         + f"""

@@ -119,14 +119,14 @@ FROM overlap o JOIN totals tt USING (doc_id)
 
 
 # ------------------------------------------------- sequence chunking
-def chunk_sequences(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
+def chunk_sequences(docs: DataFrame) -> DataFrame:
     """Concatenate-and-chunk training-sequence assembly: documents in
     doc_id order are laid end-to-end on a global token tape and cut
-    into fixed ``seq_len``-token sequences; each document belongs to
+    into fixed ``SEQ_LEN``-token sequences; each document belongs to
     the sequence where it *starts* (the standard straddle-allowed
     pretraining layout).
 
-    ``seq_id = (tokens before this doc) DIV seq_len`` needs a global
+    ``seq_id = (tokens before this doc) DIV SEQ_LEN`` needs a global
     prefix sum, distributed as: range-partition on doc_id →
     per-partition token totals (one narrow agg) → cumulative offsets
     via a window over that ≤ CHUNK_PARTITIONS-row frame → broadcast
@@ -168,7 +168,7 @@ def chunk_sequences(docs: DataFrame, seq_len: int = SEQ_LEN) -> DataFrame:
     )
     return (
         tape.select(
-            F.expr(f"cum_before DIV {seq_len}").alias("seq_id"),
+            F.expr(f"cum_before DIV {SEQ_LEN}").alias("seq_id"),
             "doc_id",
             "n_tok",
         )
@@ -442,16 +442,16 @@ FROM nb LEFT JOIN nk USING (source)
 
 
 # ------------------------------------------------------ greedy packer
-def pack_greedy(docs: DataFrame, capacity: int = SEQ_LEN) -> DataFrame:
+def pack_greedy(docs: DataFrame) -> DataFrame:
     """No-straddle sequence packing: first-fit-decreasing bin packing
-    of documents into ``capacity``-token bins, independently within
+    of documents into ``SEQ_LEN``-token bins, independently within
     deterministic hash domains (doc_id % PACK_DOMAINS).
 
     Packing is inherently sequential, so it cannot be a pure SQL
     window; the scalable shape is *domain-local* packing — each domain
     packs its own docs in one Arrow batch via ``applyInPandas``, and
     domains run in parallel across the cluster.  Oversize docs (n_tok
-    > capacity) get a singleton bin.  Output is the per-bin summary;
+    > SEQ_LEN) get a singleton bin.  Output is the per-bin summary;
     correctness is pinned by pytest invariants (no bin over capacity
     except singletons, every doc packed exactly once, FFD fill factor)
     plus the ``PACK_GREEDY_SQL`` oracle, which replays the exact same
@@ -480,9 +480,9 @@ def pack_greedy(docs: DataFrame, capacity: int = SEQ_LEN) -> DataFrame:
                     placed = i
                     break
             if placed < 0:
-                bins.append(capacity)
+                bins.append(SEQ_LEN)
                 placed = len(bins) - 1
-            bins[placed] -= min(tok, capacity)
+            bins[placed] -= min(tok, SEQ_LEN)
             assign.append(placed)
         pdf = pdf.assign(bin_id=assign)
         out = (
@@ -583,7 +583,7 @@ TEMP_ALPHA = 0.5  # flattening exponent: sampled share ∝ raw_share^α
 TEMP_SEED = 7
 
 
-def temperature_sample(docs: DataFrame, alpha: float = TEMP_ALPHA) -> DataFrame:
+def temperature_sample(docs: DataFrame) -> DataFrame:
     """Deterministic temperature-scaled domain downsampling — the mix
     step multilingual/multi-domain training corpora apply so dominant
     domains stop drowning the tail (sampled share ∝ raw_share^α).
@@ -607,7 +607,7 @@ def temperature_sample(docs: DataFrame, alpha: float = TEMP_ALPHA) -> DataFrame:
         "source",
         "n_docs",
         F.pow(
-            F.col("n_min").cast("double") / F.col("n_docs"), 1.0 - alpha
+            F.col("n_min").cast("double") / F.col("n_docs"), 1.0 - TEMP_ALPHA
         ).alias("rate"),
     )
     sampled = (

@@ -273,7 +273,7 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS, checkpoint_every: int = 8
+    edges: DataFrame, iters: int = PR_ITERS
 ) -> DataFrame:
     """(node, rank) after ``iters`` damped fixed-point iterations.
 
@@ -286,8 +286,8 @@ def pagerank_fixed_point(
     every round, and without this the whole edge derivation re-plans
     once per iteration per branch (29 joins for 3 iterations).  The
     rank frame itself is used ONCE per round, so short runs chain
-    lazily (one job, no per-round barrier) and only every
-    ``checkpoint_every``-th round truncates lineage — the barrier
+    lazily (one job, no per-round barrier) and only every 8th round
+    (and the last) truncates lineage — the barrier
     that keeps plan depth bounded on long runs without paying 3 eager
     materializations for a 3-iteration query."""
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
@@ -329,7 +329,7 @@ def pagerank_fixed_point(
                     f" DIV 100"
                 ).alias("rank"),
             )
-            if i % checkpoint_every == 0 or i == iters:
+            if i % 8 == 0 or i == iters:
                 ranks = loop.checkpoint(ranks)
         # the loop frees the edge cache and the node set on exit, so
         # the returned ranks must be materialized even when no round

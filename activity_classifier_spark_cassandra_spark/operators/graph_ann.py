@@ -50,16 +50,18 @@ neighborhood transitivity, and the synthetic test embeddings are
 near-random in 64 dims, where cosines concentrate and "a neighbor of
 my neighbor" carries little signal.  The GRAPH plateaus at recall@12
 ~= 0.45 on the 2,000-vector table no matter how many rounds or how
-large K (numpy replication, tools/graph_ann_proto.py: K=24 and 12
-rounds both stall under 0.50) — that is the known hard case for graph
-ANN (Dong 2011 §5).  Round 9 measured that the SEARCH, not the graph,
-was the recall bottleneck at larger N: a single fixed entry vertex
-with a 16-wide beam navigates a low-transitivity graph poorly.  With
-24 hash-spread entry points, beam 64 and 6 hops, search recall@5 over
+large K (numpy replication, BASELINE.md "Graph-ANN recall fix":
+K=24 and 12 rounds both stall under 0.50) — that is the known hard
+case for graph ANN (Dong 2011 §5).  Round 9 measured that the
+SEARCH, not the graph, was the recall bottleneck at larger N: a
+single fixed entry vertex with a 16-wide beam navigates a
+low-transitivity graph poorly.  With 24 hash-spread entry points,
+beam 64 and 6 hops, search recall@5 over
 the SAME plateaued graph is 0.94 at N=2,000 and 1.00 at N=500
 (``q_graph_recall_eval`` is the in-repo audit; the prototype sweep is
-committed).  Search cost stays |queries|·BEAM·HOPS — independent of
-corpus size — so the wider beam is the correct knob to spend on.
+recorded in BASELINE.md).  Search cost stays |queries|·BEAM·HOPS —
+independent of corpus size — so the wider beam is the correct knob
+to spend on.
 """
 
 from __future__ import annotations
@@ -71,11 +73,12 @@ from ..sources.io import load_table
 from .iterate import RoundLoop
 from .similarity import _DOT, _N1, _N2, N_QUERIES, TOP_K, q_knn_brute
 
-# Tuned on the sf test corpus (dim-64, weak cluster structure) via
-# tools/graph_ann_proto.py: K=12/4 rounds reaches graph recall@12 =
-# 0.90 at N=500 (plateau ~0.45 at N=2,000 — inherent to near-random
-# data); 24 entries x beam 64 x 6 hops reaches search recall@5 = 1.00
-# at N=500 and 0.94 at N=2,000 (see test_graph_ann.py).
+# Tuned on the sf test corpus (dim-64, weak cluster structure) by the
+# BASELINE.md "Graph-ANN recall fix" sweep: K=12/4 rounds reaches
+# graph recall@12 = 0.90 at N=500 (plateau ~0.45 at N=2,000 —
+# inherent to near-random data); 24 entries x beam 64 x 6 hops
+# reaches search recall@5 = 1.00 at N=500 and 0.94 at N=2,000 (see
+# test_graph_ann.py).
 # Candidate volume per round is N*(K^2 + 2K) id pairs — linear in N;
 # search volume is |queries|*BEAM*HOPS, independent of N.
 #
@@ -106,7 +109,7 @@ INIT_MULT = 2654435761  # Knuth multiplicative hash base (2^32 * phi)
 INIT_BUCKET = 32        # target hash-bucket size for successor rings
 BEAM = 64        # search beam width
 HOPS = 6         # search hops (recall saturates at 5 on both SFs —
-                 # tools/graph_ann_proto.py sweep; one hop of margin)
+                 # BASELINE.md recall-fix sweep; one hop of margin)
 N_ENTRIES = 24   # hash-spread entry vertices (derived from the graph)
 
 _COS = f"({_DOT}) / (({_N1}) * ({_N2}))"
@@ -285,20 +288,18 @@ def _descend(
 
 def build_knn_graph(
     emb: DataFrame,
-    k: int = G_K,
     iters: int = G_ITERS,
-    delta: float = G_DELTA,
 ) -> DataFrame:
     """NN-descent k-NN graph build; returns (vec_id, neighbor_id,
     cosine, rank) for the final graph.  Init: see ``_init_pairs``.
     Rounds run until the per-round update count drops below
-    ``delta``·k·N or ``iters`` rounds have run (δ-termination,
+    ``G_DELTA``·``G_K``·N or ``iters`` rounds have run (δ-termination,
     Dong 2011 §2.3)."""
     corpus = emb.select("vec_id", F.col("embedding").alias("e"))
     n = emb.count()  # one scalar aggregate — metadata-scale
-    init = _init_pairs(corpus.select("vec_id"), k, n)
+    init = _init_pairs(corpus.select("vec_id"), G_K, n)
 
-    seed = _top_k(_score(init, corpus), k).select(
+    seed = _top_k(_score(init, corpus), G_K).select(
         "vec_id", "neighbor_id", "cosine"
     )
     with RoundLoop("nn_descent", keep_last=True) as loop:
@@ -309,11 +310,11 @@ def build_knn_graph(
             corpus.select(F.col("vec_id").alias("w"), F.col("e").alias("e2")),
             F.round(F.expr(_COS), 6),
             "cosine",
-            k,
+            G_K,
             iters,
-            delta * k * n,
+            G_DELTA * G_K * n,
         )
-    return _top_k(g, k).select("vec_id", "neighbor_id", "cosine", "rank")
+    return _top_k(g, G_K).select("vec_id", "neighbor_id", "cosine", "rank")
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,15 +364,15 @@ def _qcos():
     return F.round(F.expr(_QCOS_EXPR), 6)
 
 
-def _q8_corpus(corpus: DataFrame, barrier) -> DataFrame:
+def _q8_corpus(corpus: DataFrame, loop: RoundLoop) -> DataFrame:
     """(vec_id, q TINYINT[], qn DOUBLE) — SQ8 codes + quantized norm.
-    Two small checkpoints (``barrier``: DataFrame -> materialized
-    DataFrame) keep qm and q as plain attributes: without the barrier
-    CollapseProject re-inlines the maxabs fold into the quantize
-    lambda (64x per vector) and the quantize lambda into the norm fold
-    (the documented HOF re-inline trap)."""
-    cq = barrier(corpus.withColumn("qm", F.expr(_MAXABS_E)))
-    cq8 = barrier(cq.select("vec_id", F.expr(_Q8T).alias("q")))
+    Two small ``loop.pin`` checkpoints keep qm and q as plain
+    attributes: without the barrier CollapseProject re-inlines the
+    maxabs fold into the quantize lambda (64x per vector) and the
+    quantize lambda into the norm fold (the documented HOF re-inline
+    trap)."""
+    cq = loop.pin(corpus.withColumn("qm", F.expr(_MAXABS_E)))
+    cq8 = loop.pin(cq.select("vec_id", F.expr(_Q8T).alias("q")))
     return cq8.withColumn(
         "qn",
         F.expr(
@@ -402,7 +403,6 @@ def _score_q8(cand: DataFrame, q8: DataFrame) -> DataFrame:
 
 def build_knn_graph_q8(
     emb: DataFrame,
-    k: int = G_K,
     iters: int = G_ITERS,
     delta: float = G_DELTA,
 ) -> DataFrame:
@@ -420,10 +420,10 @@ def build_knn_graph_q8(
     the quantized-ranked edge sets)."""
     corpus = emb.select("vec_id", F.col("embedding").alias("e"))
     n = emb.count()
-    init = _init_pairs(corpus.select("vec_id"), k, n)
+    init = _init_pairs(corpus.select("vec_id"), G_K, n)
     with RoundLoop("nn_descent_q8", keep_last=True) as loop:
-        q8 = loop.pin(_q8_corpus(corpus, loop.pin))
-        seed = _top_k(_score_q8(init, q8), k, "qcos").select(
+        q8 = loop.pin(_q8_corpus(corpus, loop))
+        seed = _top_k(_score_q8(init, q8), G_K, "qcos").select(
             "vec_id", "neighbor_id", "qcos"
         )
         g = _descend(
@@ -441,15 +441,15 @@ def build_knn_graph_q8(
             ),
             _qcos(),
             "qcos",
-            k,
+            G_K,
             iters,
-            delta * k * n,
+            delta * G_K * n,
         )
 
     # one exact rescore + exact re-rank of the final K·N edges — the
     # only corpus join in the build
     final = _score(g.select("vec_id", "neighbor_id"), corpus)
-    return _top_k(final, k).select(
+    return _top_k(final, G_K).select(
         "vec_id", "neighbor_id", "cosine", "rank"
     )
 
@@ -464,7 +464,7 @@ def q_knn_graph_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Nine of the ten registry graph queries compose the SAME
 # deterministic full-corpus build (oracle replay needs the build in
-# the plan; serving uses save/load_graph_index), so a bench or sweep
+# the plan; serving uses save/load_knn_graph), so a bench or sweep
 # session was paying up to nine identical SQ8 builds — 47% of the
 # round-11 headline bench.  The builds are pure functions of the
 # parquet input (seeded init, integer prescore, 6-dp rounding), so a
@@ -474,8 +474,8 @@ def q_knn_graph_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Keying on the applicationId means a new session (new JVM, possibly
 # new data under the same path) never sees a stale entry; entries for
 # dead sessions are dropped on first touch from a new app.  This memo
-# is exactly the in-session half of the persisted-index lifecycle:
-# what save_graph_index keeps across sessions, the memo keeps within
+# is exactly the in-session half of the persisted-graph lifecycle:
+# what save_knn_graph keeps across sessions, the memo keeps within
 # one.
 
 _BUILD_MEMO: dict[tuple[str, str, str], object] = {}
@@ -1328,6 +1328,44 @@ def q_knn_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def _sql_repair_ctes(
+    hits: str, graph: str, sfx: str = "", keep_score: bool = True
+) -> list[str]:
+    """The insert repair replayed in SQL: ``new_edges`` (each batch
+    vector's top-G_K of its scored search ``hits``), ``affected{sfx}``
+    (the vertices those edges point at) and ``repaired{sfx}`` (each
+    affected vertex's top-G_K over its ``graph`` edges plus the
+    reverse new edges, with cosine and rank when ``keep_score``)."""
+    cols = out = "vec_id, neighbor_id"
+    if keep_score:
+        cols, out = cols + ", cosine", out + ", cosine, rank"
+    return [
+        f"""new_edges AS (
+  SELECT query_id AS vec_id, neighbor_id, cosine, rank FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      ORDER BY cosine DESC, neighbor_id ASC) AS rank
+    FROM {hits}
+  ) WHERE rank <= {G_K}
+)""",
+        f"affected{sfx} AS (SELECT DISTINCT neighbor_id AS vec_id"
+        " FROM new_edges)",
+        f"""repaired{sfx} AS (
+  SELECT {out} FROM (
+    SELECT {cols},
+      ROW_NUMBER() OVER (PARTITION BY vec_id
+        ORDER BY cosine DESC, neighbor_id ASC) AS rank
+    FROM (
+      SELECT g.vec_id, g.neighbor_id, g.cosine FROM {graph} g
+      WHERE g.vec_id IN (SELECT vec_id FROM affected{sfx})
+      UNION ALL
+      SELECT n.neighbor_id AS vec_id, n.vec_id AS neighbor_id, n.cosine
+      FROM new_edges n
+    )
+  ) WHERE rank <= {G_K}
+)""",
+    ]
+
+
 def _knn_graph_insert_sql() -> str:
     # rebase the SQ8 build CTEs onto the OLD corpus: prepend the
     # batch split and swap the corpus/nn sources
@@ -1376,31 +1414,7 @@ def _knn_graph_insert_sql() -> str:
   JOIN corpus y ON y.vec_id = f.node
   JOIN queries q ON q.query_id = f.query_id
 )""")
-    ctes.append(f"""new_edges AS (
-  SELECT query_id AS vec_id, neighbor_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM fs{HOPS}
-  ) WHERE rank <= {G_K}
-)""")
-    ctes.append(
-        "affected AS (SELECT DISTINCT neighbor_id AS vec_id"
-        " FROM new_edges)"
-    )
-    ctes.append(f"""repaired AS (
-  SELECT vec_id, neighbor_id, cosine, rank FROM (
-    SELECT vec_id, neighbor_id, cosine,
-      ROW_NUMBER() OVER (PARTITION BY vec_id
-        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM (
-      SELECT g.vec_id, g.neighbor_id, g.cosine FROM gfin g
-      WHERE g.vec_id IN (SELECT vec_id FROM affected)
-      UNION ALL
-      SELECT n.neighbor_id AS vec_id, n.vec_id AS neighbor_id, n.cosine
-      FROM new_edges n
-    )
-  ) WHERE rank <= {G_K}
-)""")
+    ctes += _sql_repair_ctes(f"fs{HOPS}", "gfin")
     sql = (
         "WITH " + ",\n".join(ctes)
         + """
@@ -1494,31 +1508,7 @@ def _graph_insert_policy_sql() -> str:
     # corpus — new ids are not in it yet, mirroring insert_into_graph)
     ctes.append("bq AS (SELECT vec_id AS query_id, e FROM newids)")
     ctes += _sql_search_ctes("b_", g, "bq", "corpus")
-    ctes.append(f"""new_edges AS (
-  SELECT query_id AS vec_id, neighbor_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM b_fs
-  ) WHERE rank <= {G_K}
-)""")
-    ctes.append(
-        "affected AS (SELECT DISTINCT neighbor_id AS vec_id"
-        " FROM new_edges)"
-    )
-    ctes.append(f"""repaired AS (
-  SELECT vec_id, neighbor_id FROM (
-    SELECT vec_id, neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY vec_id
-        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM (
-      SELECT g.vec_id, g.neighbor_id, g.cosine FROM gfin g
-      WHERE g.vec_id IN (SELECT vec_id FROM affected)
-      UNION ALL
-      SELECT n.neighbor_id AS vec_id, n.vec_id AS neighbor_id, n.cosine
-      FROM new_edges n
-    )
-  ) WHERE rank <= {G_K}
-)""")
+    ctes += _sql_repair_ctes("b_fs", "gfin", keep_score=False)
     ctes.append("""upd AS (
   SELECT vec_id, neighbor_id FROM gfin
   WHERE vec_id NOT IN (SELECT vec_id FROM affected)
@@ -1590,11 +1580,11 @@ GRAPH_INSERT_POLICY_SQL = _graph_insert_policy_sql()
 # entry frontier).  Every query then STARTS among approximate
 # neighbors, so hop count buys refinement instead of transit, and
 # the entry budget per query stays the same 24 vertices as the
-# hash-spread default.  Measured at N=20,000 (tools/routed_probe.py,
-# fresh dim-64 corpus, BEAM/HOPS unchanged): hash-spread 0.72,
-# centroid-ranked cell representatives 0.82, query-ranked cell
-# members 0.92 (np=3) / 0.96 (np=6) — the query-ranked form is the
-# shipped semantics.
+# hash-spread default.  Measured at N=20,000 (BASELINE.md "IVF-routed
+# entry vertices", fresh dim-64 corpus, BEAM/HOPS unchanged):
+# hash-spread 0.72, centroid-ranked cell representatives 0.82,
+# query-ranked cell members 0.92 (np=3) / 0.96 (np=6) — the
+# query-ranked form is the shipped semantics.
 #
 # Scale shape: the routing table (queries x nprobe) broadcasts; the
 # corpus-side work is ONE BLAS assignment pass plus scoring only the
@@ -1620,11 +1610,9 @@ def routed_entry_frontier(
     graph: DataFrame,
     queries: DataFrame,
     cents: list[tuple[int, list[float]]],
-    nprobe: int = ROUTE_NPROBE,
-    n_entries: int = ROUTE_ENTRIES,
 ) -> DataFrame:
-    """(query_id, node) per-query entry vertices: the ``n_entries``
-    members of the query's ``nprobe`` nearest cells ranked by exact
+    """(query_id, node) per-query entry vertices: the ``ROUTE_ENTRIES``
+    members of the query's ``ROUTE_NPROBE`` nearest cells ranked by exact
     cosine to the query (restricted to graph vertices)."""
     from .similarity import _D2_FOLD, _cents_literal, blas_assign
 
@@ -1651,7 +1639,7 @@ def routed_entry_frontier(
                 )
             ),
         )
-        .filter(F.col("cr") <= nprobe)
+        .filter(F.col("cr") <= ROUTE_NPROBE)
         .select("query_id", F.col("c.k").alias("cluster"), "e1")
     )
     scored = (
@@ -1664,7 +1652,7 @@ def routed_entry_frontier(
     )
     return (
         scored.withColumn("er", F.row_number().over(w))
-        .filter(F.col("er") <= n_entries)
+        .filter(F.col("er") <= ROUTE_ENTRIES)
         .select("query_id", "node")
     )
 
@@ -1673,17 +1661,14 @@ def beam_search_routed(
     emb: DataFrame,
     graph: DataFrame,
     cents: list[tuple[int, list[float]]],
-    queries: DataFrame | None = None,
-    k: int = TOP_K,
 ) -> DataFrame:
     """Beam search starting from IVF-routed per-query entries."""
-    if queries is None:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("e1"),
-        )
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("e1"),
+    )
     ef = routed_entry_frontier(emb, graph, queries, cents)
-    return beam_search(emb, graph, queries=queries, k=k, entry_frontier=ef)
+    return beam_search(emb, graph, queries=queries, entry_frontier=ef)
 
 
 def q_knn_graph_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1821,77 +1806,6 @@ def _graph_routed_recall_eval_sql() -> str:
 
 KNN_GRAPH_ROUTED_SQL = _knn_graph_routed_sql()
 GRAPH_ROUTED_RECALL_EVAL_SQL = _graph_routed_recall_eval_sql()
-
-
-# ------------------------------------------ persisted index lifecycle
-#
-# A production deployment builds ONCE per ingest batch and serves many
-# searches, so the index must live as a table, not a lineage: the
-# graph edges (32 B/edge regardless of vector width), the SQ8 codes
-# (1 B/dim — the form future quantized passes re-read), and the
-# routing centroids (ROUTE_K rows).  Parquet on all three, matching
-# the sources/io.py sink conventions; vec_id-keyed tables are
-# bucketable by vec_id at warehouse scale.  q_knn_graph_insert
-# exercises the lifecycle end to end (build -> save -> load -> insert),
-# and the roundtrip pytest pins loaded-index searches bit-equal to
-# inline ones.
-
-from typing import NamedTuple
-
-
-class GraphIndex(NamedTuple):
-    """A persisted-form ANN index: edges, SQ8 codes, routing cells."""
-
-    graph: DataFrame   # (vec_id, neighbor_id, cosine, rank)
-    q8: DataFrame      # (vec_id, q tinyint[], qn double)
-    centroids: list[tuple[int, list[float]]]
-
-
-def build_graph_index(emb: DataFrame) -> GraphIndex:
-    """SQ8 NN-descent graph + SQ8 corpus codes + trained routing
-    centroids — everything the serving paths (hash-spread or routed
-    beam search, insert/repair) need, built in one pass over the
-    corpus."""
-    from .similarity import train_kmeans_centroids_blas
-
-    graph = build_knn_graph_q8(emb)
-    # the index keeps q8 for its whole life: plain, unreleased barriers
-    q8 = _q8_corpus(
-        emb.select("vec_id", F.col("embedding").alias("e")),
-        lambda df: df.localCheckpoint(eager=True),
-    )
-    cents = train_kmeans_centroids_blas(emb, k=ROUTE_K)
-    return GraphIndex(graph, q8, cents)
-
-
-def save_graph_index(idx: GraphIndex, path: str) -> None:
-    import os
-
-    idx.graph.write.mode("overwrite").parquet(os.path.join(path, "graph"))
-    idx.q8.write.mode("overwrite").parquet(os.path.join(path, "q8"))
-    spark = idx.graph.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(k), [float(x) for x in c]) for k, c in sorted(idx.centroids)],
-        "cluster int, centroid array<double>",
-    )
-    # ROUTE_K rows — one file, no point sharding metadata
-    cdf.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-
-
-def load_graph_index(spark: SparkSession, path: str) -> GraphIndex:
-    """Reload a saved index.  The centroid table is ROUTE_K rows, so
-    collecting it back to the literal list the routing expressions
-    embed is a bounded driver fetch (the same shape the trainers
-    return)."""
-    import os
-
-    graph = spark.read.parquet(os.path.join(path, "graph"))
-    q8 = spark.read.parquet(os.path.join(path, "q8"))
-    rows = spark.read.parquet(os.path.join(path, "centroids")).collect()
-    cents = sorted((int(r.cluster), list(r.centroid)) for r in rows)
-    return GraphIndex(graph, q8, cents)
 
 
 # --------------------------------------------- incremental delete
@@ -2128,31 +2042,7 @@ def _knn_graph_update_sql() -> str:
     # against the updated corpus (alive vertices are unchanged)
     ctes.append("queries AS (SELECT vec_id AS query_id, e FROM updq)")
     ctes += _sql_search_ctes("i_", "gdel", "queries", "corpus2")
-    ctes.append(f"""new_edges AS (
-  SELECT query_id AS vec_id, neighbor_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM i_fs
-  ) WHERE rank <= {G_K}
-)""")
-    ctes.append(
-        "affected2 AS (SELECT DISTINCT neighbor_id AS vec_id"
-        " FROM new_edges)"
-    )
-    ctes.append(f"""repaired2 AS (
-  SELECT vec_id, neighbor_id, cosine, rank FROM (
-    SELECT vec_id, neighbor_id, cosine,
-      ROW_NUMBER() OVER (PARTITION BY vec_id
-        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM (
-      SELECT g.vec_id, g.neighbor_id, g.cosine FROM gdel g
-      WHERE g.vec_id IN (SELECT vec_id FROM affected2)
-      UNION ALL
-      SELECT n.neighbor_id AS vec_id, n.vec_id AS neighbor_id, n.cosine
-      FROM new_edges n
-    )
-  ) WHERE rank <= {G_K}
-)""")
+    ctes += _sql_repair_ctes("i_fs", "gdel", sfx="2")
     sql = (
         "WITH " + ",\n".join(ctes)
         + """

@@ -17,7 +17,7 @@ DataFrame ops:
   at 100 TB you run it once per ingest batch (or read parquet footers
   instead of data — pytest cross-checks our stats against the footers)
   and reuse the manifest across every subsequent query.
-* ``prune_files`` — the planner step: overlap the predicate interval
+* the planner step in ``pruned_range_agg``: overlap the predicate interval
   with each file's [min, max] envelope.  The manifest is
   metadata-scale (one row per file), so collecting the surviving file
   list on the driver is exactly what real planners do with manifests.
@@ -48,10 +48,9 @@ N_TIME_BUCKETS = 8
 def write_time_clustered(
     ev: DataFrame,
     path: str,
-    n_buckets: int = N_TIME_BUCKETS,
     bounds: tuple[int, int] | None = None,
 ) -> None:
-    """Write events clustered into ``n_buckets`` time-range files.
+    """Write events clustered into ``N_TIME_BUCKETS`` time-range files.
 
     The bucket key is an order-preserving rescale of epoch-ms by the
     min/max bounds (integer DIV end-to-end), so bucket k holds a
@@ -65,7 +64,9 @@ def write_time_clustered(
         lo, hi = bounds
         clustered = ev.withColumn("_ms", ms).withColumn(
             "file_bucket",
-            F.expr(f"(_ms - {lo}L) * {n_buckets} DIV ({hi}L - {lo}L + 1)"),
+            F.expr(
+                f"(_ms - {lo}L) * {N_TIME_BUCKETS} DIV ({hi}L - {lo}L + 1)"
+            ),
         )
     else:
         agg = ev.select(ms.alias("_ms")).agg(
@@ -76,13 +77,13 @@ def write_time_clustered(
             .crossJoin(F.broadcast(agg))
             .withColumn(
                 "file_bucket",
-                F.expr(f"(_ms - _lo) * {n_buckets} DIV (_hi - _lo + 1)"),
+                F.expr(f"(_ms - _lo) * {N_TIME_BUCKETS} DIV (_hi - _lo + 1)"),
             )
             .drop("_lo", "_hi")
         )
     (
         clustered.drop("_ms")
-        .repartition(n_buckets, "file_bucket")
+        .repartition(N_TIME_BUCKETS, "file_bucket")
         .write.mode("overwrite")
         .partitionBy("file_bucket")
         .parquet(path)
@@ -102,17 +103,6 @@ def build_manifest(spark: SparkSession, path: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
         )
     )
-
-
-def prune_files(manifest: DataFrame, a: int, b: int) -> list[str]:
-    """Files whose [min, max] envelope overlaps the half-open [a, b).
-
-    The manifest has one row per file — collecting it is a
-    metadata-scale planner step, not a data collect."""
-    rows = manifest.filter(
-        (F.col("max_ms") >= a) & (F.col("min_ms") < b)
-    ).collect()
-    return [r["file"] for r in rows]
 
 
 def pruned_range_agg(

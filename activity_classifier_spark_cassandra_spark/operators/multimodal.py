@@ -398,43 +398,6 @@ PNG_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_png_stats(df: DataFrame) -> DataFrame:
-    """REAL pixel-level feature extraction over (media_id, content:
-    binary) PNG rows via mapInPandas: decode the raster and emit
-    per-image stats.  Same dataflow contract as
-    ``extract_media_features`` — payload pruned inside the Python
-    stage, only typed scalars leave it."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in PNG_STATS_SCHEMA.fieldNames()}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                # null / non-PNG / corrupt rows contribute no stats row
-                # (the typed-metadata extractor above is the place that
-                # preserves them as decode_ok=False)
-                if blob is None:
-                    continue
-                try:
-                    w, h, ch, raster = decode_png(blob)
-                except (NotImplementedError, zlib.error):
-                    continue
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["n_pixels"].append(w * h)
-                out["mean_value"].append(
-                    sum(raster) / len(raster) if raster else 0.0
-                )
-                out["min_value"].append(min(raster) if raster else 0)
-                out["max_value"].append(max(raster) if raster else 0)
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "content").mapInPandas(
-        batches, schema=PNG_STATS_SCHEMA
-    )
-
-
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -500,34 +463,6 @@ def extract_media_features(df: DataFrame) -> DataFrame:
     )
 
 
-def resize_plan(df: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning: compute target dims declaratively from the
-    extracted metadata (no Python).  The actual pixel resample is the
-    stubbed codec step; the plan (scale factor, target dims) is pure
-    Column math and fully pushdown/codegen-friendly."""
-    feats = extract_media_features(df)
-    scale = F.when(
-        F.greatest("width", "height") > max_side,
-        max_side / F.greatest("width", "height").cast("double"),
-    ).otherwise(F.lit(1.0))
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.round(scale, 6).alias("scale"),
-        F.ceil(F.col("width") * scale).cast("int").alias("target_width"),
-        F.ceil(F.col("height") * scale).cast("int").alias("target_height"),
-    )
-
-
-def sample_frames(
-    df: DataFrame, every_n: int = 10, ts_col: str = "frame_idx"
-) -> DataFrame:
-    """Frame sampling for video rows exploded to (media_id, frame_idx):
-    keep every n-th frame — a pure filter, no Python, scales as a scan."""
-    return df.filter((F.col(ts_col) % every_n) == 0)
-
-
 # ---------------------------------------------------- perceptual hash
 #
 # Average-hash (aHash) — the classic perceptual-hash family baseline
@@ -567,7 +502,7 @@ def extract_phash(df: DataFrame) -> DataFrame:
     """(media_id, phash) over (media_id, content: binary) PNG rows via
     mapInPandas: REAL decode (8- or 16-bit), then aHash over the
     decoded samples.  Undecodable/null rows are skipped (same contract
-    as extract_png_stats); payload never leaves the Python stage."""
+    as extract_jpeg_stats); payload never leaves the Python stage."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1197,13 +1132,6 @@ class _BitWriter:
         return bytes(self.out)
 
 
-def _extend(v: int, t: int) -> int:
-    """T.81 EXTEND: map t-bit magnitude to signed coefficient."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
 def _csize(v: int) -> int:
     """Bit size class of a signed coefficient (T.81 F.1.2.1.1)."""
     a = abs(v)
@@ -1651,7 +1579,7 @@ def _decode_scan(
         for ci in range(nc):
             dsym, dlen, asym, alen = luts_flat[ci]
             zz = zz_all[ci]
-            # ---- DC (peek16/recv/_extend inlined: the loop runs once
+            # ---- DC (peek16/recv/EXTEND inlined: the loop runs once
             # per SYMBOL and CPython call overhead was the hot cost)
             i, s = p >> 3, p & 7
             v = (
@@ -1806,8 +1734,9 @@ def _encode_jpeg_px_udf(doc_id: pd.Series, n_chars: pd.Series) -> pd.Series:
 
 def extract_jpeg_stats(df: DataFrame) -> DataFrame:
     """Raster stats over (media_id, content: binary) baseline JPEG
-    rows via mapInPandas — the ``extract_png_stats`` contract with
-    the real JPEG entropy decoder inside; undecodable rows drop."""
+    rows via mapInPandas, with the real JPEG entropy decoder inside:
+    payload pruned inside the Python stage, only typed scalars leave
+    it, and undecodable rows drop."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1931,16 +1860,15 @@ def encode_avi_mjpeg(
     frames: list[bytes],
     width: int,
     height: int,
-    fps: int = 10,
     handler: bytes = b"MJPG",
 ) -> bytes:
-    """Minimal spec-correct AVI wrapping pre-encoded JPEG frames.
+    """Minimal spec-correct 10 fps AVI wrapping pre-encoded JPEG frames.
     ``handler`` other than MJPG builds a structurally valid file the
     DECODER must refuse (the codec-gate fixture)."""
     n = len(frames)
     avih = _struct.pack(
         "<14I",
-        1_000_000 // fps,  # dwMicroSecPerFrame
+        1_000_000 // 10,  # dwMicroSecPerFrame
         0, 0, 0,           # maxbytes/sec, padding, flags
         n, 0, 1,           # totalframes, initialframes, streams
         0, width, height,  # suggested buffer, dims
@@ -1952,7 +1880,7 @@ def encode_avi_mjpeg(
         + _struct.pack(
             "<IHHIIIIIIII4H",
             0, 0, 0, 0,        # flags, priority, language, initialframes
-            1, fps,            # dwScale / dwRate
+            1, 10,             # dwScale / dwRate
             0, n,              # start, length (frames)
             0, 0, 0,           # bufsize, quality, samplesize
             0, 0, width, height,           # rcFrame
@@ -2047,12 +1975,10 @@ VIDEO_N_FRAMES = 8      # synthesized frames per clip
 VIDEO_SAMPLE_EVERY = 3  # keep frames 0, 3, 6 — sampling BEFORE decode
 
 
-def extract_video_frame_stats(
-    df: DataFrame, every_n: int = VIDEO_SAMPLE_EVERY
-) -> DataFrame:
+def extract_video_frame_stats(df: DataFrame) -> DataFrame:
     """Per-SAMPLED-frame raster stats over (media_id, content: binary)
-    video rows: container parse, keep every ``every_n``-th frame, real
-    JPEG decode of only those, mean over the decoded raster.  An
+    video rows: container parse, keep every ``VIDEO_SAMPLE_EVERY``-th
+    frame, real JPEG decode of only those, mean over the decoded raster.  An
     undecodable container (wrong codec, truncation) surfaces ONE
     decode_ok=false row with zeroed stats — the row is preserved, the
     task never fails."""
@@ -2074,7 +2000,7 @@ def extract_video_frame_stats(
                     continue
                 try:
                     w, h, _total, frames = decode_avi_mjpeg(blob)
-                    for idx in range(0, len(frames), every_n):
+                    for idx in range(0, len(frames), VIDEO_SAMPLE_EVERY):
                         fw, fh, _ch, raster = decode_jpeg(frames[idx])
                         mean = (
                             sum(raster) / len(raster) if raster else 0.0

@@ -51,19 +51,20 @@ from ..sources.io import load_table
 PARA_W = 25  # words per paragraph unit
 
 
-def paragraph_dedup(docs: DataFrame, w: int = PARA_W) -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """(doc_id, n_paras, n_kept, text_dedup): corpus-wide exact
     paragraph dedup keeping first occurrence by (doc_id, para_idx)."""
     paras = (
         docs.select("doc_id", F.split("text", " ").alias("words"))
         .withColumn(
-            "np", F.expr(f"CAST(ceil(size(words) / {w}.0) AS INT)")
+            "np", F.expr(f"CAST(ceil(size(words) / {PARA_W}.0) AS INT)")
         )
         .withColumn(
             "paras",
             F.expr(
                 f"transform(sequence(0, np - 1),"
-                f" i -> array_join(slice(words, i * {w} + 1, {w}), ' '))"
+                f" i -> array_join(slice(words, i * {PARA_W} + 1, {PARA_W}),"
+                " ' '))"
             ),
         )
         .select(

@@ -74,12 +74,12 @@ def _dense_rank_w():
     return Window.orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
 
 
-def _dense_ranking(emb: DataFrame, top_n: int = RRF_LIST_N) -> DataFrame:
+def _dense_ranking(emb: DataFrame) -> DataFrame:
     """Brute cosine top-n for the fixed dense query vector, ranked."""
     return (
         _dense_scored(emb)
         .withColumn("dense_rank", F.row_number().over(_dense_rank_w()))
-        .filter(F.col("dense_rank") <= top_n)
+        .filter(F.col("dense_rank") <= RRF_LIST_N)
         .select("doc_id", "dense_rank")
     )
 

@@ -31,7 +31,6 @@ def with_session_id(
     ts_col: str = "timestamp",
     gap: int = SESSION_GAP_TICKS,
     tiebreak: Sequence[str] = (),
-    out_col: str = "session_id",
 ) -> DataFrame:
     """Add a 0-based ``session_id`` per `keys` series.
 
@@ -49,7 +48,7 @@ def with_session_id(
     running = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    return df.withColumn(out_col, F.sum(is_new).over(running))
+    return df.withColumn("session_id", F.sum(is_new).over(running))
 
 
 def session_bounds(
@@ -57,7 +56,6 @@ def session_bounds(
     keys: Sequence[str],
     ts_col: str = "timestamp",
     window_ticks: int = WINDOW_TICKS,
-    session_col: str = "session_id",
 ) -> DataFrame:
     """Per-session [start, end, n_rows, n_windows] — the distributed
     replacement for the driver-side interval list of
@@ -70,7 +68,7 @@ def session_bounds(
     FIXTURES.md §4: the reference code emits them even though its stale
     test asserts otherwise).
     """
-    return df_with_sessions.groupBy(*keys, session_col).agg(
+    return df_with_sessions.groupBy(*keys, "session_id").agg(
         F.min(ts_col).alias("session_start"),
         F.max(ts_col).alias("session_end"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -86,9 +84,7 @@ def with_session_id_bucketed(
     ts_col: str = "timestamp",
     gap: int = SESSION_GAP_TICKS,
     tiebreak: Sequence[str] = (),
-    out_col: str = "session_id",
     bucket_ticks: int | None = None,
-    materialize: bool = False,
     broadcast_meta: bool = False,
 ) -> DataFrame:
     """Skew-resistant sessionizer: bit-identical ``session_id`` to
@@ -149,14 +145,6 @@ def with_session_id_bucketed(
             wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    if materialize:
-        # Optional: forces the scan + bucket window to execute once
-        # when a caller fans this frame out to consumers that cannot
-        # share its exchange.  The default plan below does NOT need it
-        # — both the metadata aggregate and the join back are
-        # partitioning-compatible with the window's exchange, which
-        # Catalyst deduplicates via ReuseExchange.
-        d = d.localCheckpoint()
     stats = d.groupBy(*keys, "_bkt").agg(
         F.min(ts_col).alias("_min_ts"),
         F.max(ts_col).alias("_max_ts"),
@@ -187,7 +175,8 @@ def with_session_id_bucketed(
     return (
         d.join(stats, [*keys, "_bkt"])
         .withColumn(
-            out_col, F.col("_offset") + F.col("_bnew") + F.col("_local_run")
+            "session_id",
+            F.col("_offset") + F.col("_bnew") + F.col("_local_run"),
         )
         .drop("_bkt", "_local_run", "_bnew", "_offset")
     )
@@ -197,8 +186,6 @@ def session_starts_joined(
     df_with_sessions: DataFrame,
     keys: Sequence[str],
     ts_col: str = "timestamp",
-    session_col: str = "session_id",
-    out_col: str = "session_start",
     broadcast_meta: bool = False,
 ) -> DataFrame:
     """``session_start`` via partial-agg + join instead of a
@@ -209,12 +196,12 @@ def session_starts_joined(
     the bucketed sessionizer: per-session rows are data-proportional
     over a whole sparse table, tiny for a few hot keys —
     ``broadcast_meta=True`` only in the latter case."""
-    starts = df_with_sessions.groupBy(*keys, session_col).agg(
-        F.min(ts_col).alias(out_col)
+    starts = df_with_sessions.groupBy(*keys, "session_id").agg(
+        F.min(ts_col).alias("session_start")
     )
     if broadcast_meta:
         starts = F.broadcast(starts)
-    return df_with_sessions.join(starts, [*keys, session_col])
+    return df_with_sessions.join(starts, [*keys, "session_id"])
 
 
 def hot_keys(
@@ -272,7 +259,6 @@ def sessionize_skew_hybrid(
     tiebreak: Sequence[str] = (),
     window_ticks: int = WINDOW_TICKS,
     hot_min_rows: int = 1_000_000,
-    bucket_ticks: int | None = None,
     hot_keys_frame: DataFrame | None = None,
 ) -> DataFrame:
     """Sessionize + window-assign with AQE-skew-join-style hot-key
@@ -320,7 +306,6 @@ def sessionize_skew_hybrid(
         ts_col=ts_col,
         gap=gap,
         tiebreak=tiebreak,
-        bucket_ticks=bucket_ticks,
         broadcast_meta=True,
     )
     hot_w = session_starts_joined(

@@ -9,13 +9,6 @@ same seed ⇒ bit-identical order anywhere.
 
 * ``shuffle_key`` — the md5-derived 60-bit key (shared recipe from
   ``sketches.py``), pure row-local expression.
-* ``shuffle_write`` — ``repartitionByRange(skey)`` +
-  ``sortWithinPartitions(skey)`` + write: a distributed total order
-  (the range partitioner samples split points; each of the n files
-  holds one contiguous skey range, internally sorted), so a trainer
-  streaming file 0, 1, 2, ... reads the full permutation with zero
-  further shuffling.  Same machinery as ``layout.zorder_write`` — a
-  sort-for-locality write, with a hash instead of a Morton code.
 * ``q_shuffle_sample`` — the oracle-checked slice: the first
   SHUFFLE_K documents of epoch 7's order.  Top-k by (skey, doc_id)
   runs as TakeOrderedAndProject (per-partition heaps, k-row driver
@@ -38,35 +31,6 @@ SHUFFLE_K = 40
 def shuffle_key(id_col: Column, epoch: int) -> Column:
     """60-bit deterministic shuffle key for one epoch."""
     return _hash60(id_col, epoch)
-
-
-def shuffle_write(
-    df: DataFrame,
-    id_col: str,
-    path: str,
-    epoch: int,
-    n_files: int = 8,
-) -> None:
-    """Write ``df`` in epoch-``epoch``'s shuffled order across
-    ``n_files`` range files (file k = k-th contiguous slice of the
-    (skey, id) order, sorted within).
-
-    The id tiebreak is part of the RANGE PARTITIONING, not just the
-    within-file sort: 60-bit keys collide with real probability near
-    10^9 rows (birthday bound), and equal-skey rows straddling a file
-    boundary in arbitrary order would silently break the
-    stream-files-in-order == full-permutation contract."""
-    skey = "__shuffle_skey__"  # collision-safe internal column
-    if skey in df.columns:
-        raise ValueError(f"input already has a {skey!r} column")
-    (
-        df.withColumn(skey, shuffle_key(F.col(id_col), epoch))
-        .repartitionByRange(n_files, skey, id_col)
-        .sortWithinPartitions(skey, id_col)
-        .drop(skey)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def q_shuffle_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1137,13 +1137,15 @@ def blas_assign(
 
 
 def train_kmeans_centroids_blas(
-    emb: DataFrame, k: int = K_TRAIN, iters: int = KMEANS_ITERS
+    emb: DataFrame, k: int = K_TRAIN
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's with the BLAS assignment stage — the large-k production
     trainer.  The trajectory is identical to ``train_kmeans_centroids``
     (assignments are integers and the update is shared), so the
     exact-fold DuckDB replay oracles remain valid."""
-    return _lloyd(emb, k, iters, partial(blas_assign, keep_embedding=True))
+    return _lloyd(
+        emb, k, KMEANS_ITERS, partial(blas_assign, keep_embedding=True)
+    )
 
 
 def q_knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1745,9 +1747,6 @@ def ivfpq_residuals(
 
 def train_ivfpq(
     emb: DataFrame,
-    k_coarse: int = K_TRAIN,
-    k_pq: int = PQ_K,
-    iters: int = KMEANS_ITERS,
     resid_out: list | None = None,
 ) -> tuple[
     list[tuple[int, list[float]]],
@@ -1759,11 +1758,11 @@ def train_ivfpq(
     read it; without the cache each Lloyd's job re-derives
     coarse-assign + subtract over the full corpus (~10 extra scans,
     measured dominant at the 100x probe)."""
-    coarse = train_kmeans_centroids(emb, k=k_coarse, iters=iters)
+    coarse = train_kmeans_centroids(emb, k=K_TRAIN, iters=KMEANS_ITERS)
     resid = ivfpq_residuals(emb, coarse).cache()
     if resid_out is not None:
         resid_out.append(resid)
-    return coarse, train_pq_codebooks(resid, k=k_pq, iters=iters)
+    return coarse, train_pq_codebooks(resid, k=PQ_K, iters=KMEANS_ITERS)
 
 
 def ivfpq_search(

@@ -26,15 +26,13 @@ from pyspark.sql import functions as F
 N_SALTS = 16
 
 
-def with_salt(
-    df: DataFrame, n_salts: int = N_SALTS, out_col: str = "_salt"
-) -> DataFrame:
+def with_salt(df: DataFrame) -> DataFrame:
     """Uniform random-ish salt derived from a monotonically varying
     expression (not the group key — salting by a function of the key
     would keep the hot key on one reducer)."""
     return df.withColumn(
-        out_col,
-        F.pmod(F.monotonically_increasing_id(), F.lit(n_salts)).cast("int"),
+        "_salt",
+        F.pmod(F.monotonically_increasing_id(), F.lit(N_SALTS)).cast("int"),
     )
 
 
@@ -42,11 +40,9 @@ def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
     sum_cols: Sequence[str] = (),
-    count: bool = True,
     min_cols: Sequence[str] = (),
     max_cols: Sequence[str] = (),
     avg_cols: Sequence[str] = (),
-    n_salts: int = N_SALTS,
 ) -> DataFrame:
     """Two-stage salted aggregation, exactly equivalent to
     ``df.groupBy(keys).agg(sum/count/min/max/avg)``.
@@ -64,9 +60,8 @@ def salted_agg(
         stage2_aggs.append(
             (F.sum(f"_as_{c}") / F.sum(f"_ac_{c}")).alias(f"avg_{c}")
         )
-    if count:
-        stage1_aggs.append(F.count(F.lit(1)).alias("_n"))
-        stage2_aggs.append(F.sum("_n").alias("n"))
+    stage1_aggs.append(F.count(F.lit(1)).alias("_n"))
+    stage2_aggs.append(F.sum("_n").alias("n"))
     for c in min_cols:
         stage1_aggs.append(F.min(c).alias(f"_mn_{c}"))
         stage2_aggs.append(F.min(f"_mn_{c}").alias(f"min_{c}"))
@@ -74,7 +69,7 @@ def salted_agg(
         stage1_aggs.append(F.max(c).alias(f"_mx_{c}"))
         stage2_aggs.append(F.max(f"_mx_{c}").alias(f"max_{c}"))
 
-    salted = with_salt(df, n_salts)
+    salted = with_salt(df)
     partial = salted.groupBy(*keys, "_salt").agg(*stage1_aggs)
     return partial.groupBy(*keys).agg(*stage2_aggs)
 
@@ -84,27 +79,26 @@ def salted_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    n_salts: int = N_SALTS,
 ) -> DataFrame:
     """Skew-join rewrite for a hot equi-join key when the dim side is
     too big to broadcast outright: salt the fact rows uniformly and
-    replicate every dim row across all ``n_salts`` salt values, then
-    join on (key, salt) — the hot key's fact rows land on ``n_salts``
+    replicate every dim row across all ``N_SALTS`` salt values, then
+    join on (key, salt) — the hot key's fact rows land on ``N_SALTS``
     reducers instead of one.  Pure physical rewrite: the result is
     row-identical to ``fact.join(dim, fact_key == dim_key)``.
 
-    Cost model: dim shuffle volume grows ×n_salts, fact volume is
+    Cost model: dim shuffle volume grows ×N_SALTS, fact volume is
     unchanged — the right trade whenever the straggler task on the hot
     key dominates wall-clock (at 100 TB a single hot key can hold a
     1000-executor stage hostage; 16× dim replication is noise).  AQE's
     skew-join splitting handles the moderate cases at runtime; this is
     the explicit shape for the pathological ones, and for the
     bucketed/sorted layouts AQE can't re-split."""
-    fact_s = with_salt(fact, n_salts)
+    fact_s = with_salt(fact)
     dim_s = dim.withColumn(
         "_salt",
         F.explode(
-            F.array(*[F.lit(i).cast("int") for i in range(n_salts)])
+            F.array(*[F.lit(i).cast("int") for i in range(N_SALTS)])
         ),
     )
     cond = (fact_s[fact_key] == dim_s[dim_key]) & (

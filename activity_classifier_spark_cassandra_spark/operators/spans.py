@@ -486,12 +486,10 @@ def span_longest_runs(
     )
 
 
-def span_longest_report(
-    docs: DataFrame, ns: tuple[int, ...] = MULTIK_NS
-) -> DataFrame:
+def span_longest_report(docs: DataFrame) -> DataFrame:
     """Aggregate ``span_longest_runs`` per document: (doc_id,
     n_tokens, n_spans, longest_k, cut_tokens, cut_ratio)."""
-    spans = span_longest_runs(docs, ns)
+    spans = span_longest_runs(docs, MULTIK_NS)
     return (
         spans.groupBy("doc_id", "n_tokens")
         .agg(

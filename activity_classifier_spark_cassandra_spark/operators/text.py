@@ -788,8 +788,6 @@ BM25_TOP_N = 20
 def bm25_search(
     docs: DataFrame,
     query_terms: list[str],
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     top_n: int = BM25_TOP_N,
 ) -> DataFrame:
     """Lexical retrieval next to the ANN family: score every document
@@ -827,10 +825,11 @@ def bm25_search(
     )
     score_term = idf * (
         F.col("tf")
-        * (k1 + 1.0)
+        * (BM25_K1 + 1.0)
         / (
             F.col("tf")
-            + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+            + BM25_K1
+            * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
         )
     )
     scored = (
@@ -1362,18 +1361,18 @@ def _bpe_merges_sql(n_merges: int = N_BPE_MERGES) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
 
 
-def _bpe_tokenize_sql(n_merges: int = N_BPE_MERGES) -> str:
+def _bpe_tokenize_sql() -> str:
     """Apply-step oracle: the merge replay's final w{N} CTE is exactly
     the post-merge word-type table, so the vocabulary count is one
     aggregate over it — any training divergence surfaces here too."""
-    base = _bpe_merges_sql(n_merges)
+    base = _bpe_merges_sql(N_BPE_MERGES)
     ctes = base[: base.index("\nSELECT CAST(1 AS BIGINT)")]
     return (
         ctes
         + f"""
 SELECT token, CAST(length(token) AS BIGINT) AS token_len,
        CAST(SUM(cnt) AS BIGINT) AS n_occurrences
-FROM (SELECT UNNEST(toks) AS token, cnt FROM w{n_merges})
+FROM (SELECT UNNEST(toks) AS token, cnt FROM w{N_BPE_MERGES})
 GROUP BY token
 ORDER BY n_occurrences DESC, token ASC
 LIMIT {BPE_VOCAB_TOP_K}"""
@@ -1424,10 +1423,10 @@ def q_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_compression_sql(n_merges: int = N_BPE_MERGES) -> str:
+def _bpe_compression_sql() -> str:
     """Oracle: the merge replay's final w{N} CTE again — vocab token
     counts joined back to per-document words."""
-    base = _bpe_merges_sql(n_merges)
+    base = _bpe_merges_sql(N_BPE_MERGES)
     ctes = base[: base.index("\nSELECT CAST(1 AS BIGINT)")]
     return (
         ctes
@@ -1435,7 +1434,7 @@ def _bpe_compression_sql(n_merges: int = N_BPE_MERGES) -> str:
 vocab AS MATERIALIZED (
   SELECT array_to_string(toks, '') AS word,
          CAST(len(toks) AS BIGINT) AS n_toks
-  FROM w{n_merges}
+  FROM w{N_BPE_MERGES}
 ),
 doc_words AS (
   SELECT doc_id, LENGTH(text) AS n_chars_doc,

@@ -89,9 +89,10 @@ def _strip_tracking_pred_spark(var: str) -> str:
     return "NOT (" + " OR ".join(drops) + ")"
 
 
-def canonical_url_expr(url_col: str = "url") -> Column:
-    """Canonical form of ``url_col`` as one built-in expression tree."""
-    u = url_col
+def canonical_url_expr() -> Column:
+    """Canonical form of the ``url`` column as one built-in expression
+    tree."""
+    u = "url"
     # 1. drop the fragment, split path-part from query-part.  The
     # query is everything after the FIRST '?' (RFC 3986 §3.4) — a
     # second '?' is query data, so substring_index(.., '?', -1)
@@ -150,12 +151,12 @@ def canonical_url_expr(url_col: str = "url") -> Column:
     )
 
 
-def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
+def canonicalize_urls(df: DataFrame) -> DataFrame:
     """Append ``canon_url`` to ``df``."""
-    return df.withColumn("canon_url", canonical_url_expr(url_col))
+    return df.withColumn("canon_url", canonical_url_expr())
 
 
-def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """First-occurrence URL dedup: (all input columns, canon_url,
     keep) — ``keep`` is true for the LOWEST doc_id per canonical URL.
 
@@ -166,7 +167,7 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     cannot share the canon expression).  ``url_dedup_hybrid`` routes
     between this and the cheap window per detected key and is the
     registry default."""
-    canon = canonicalize_urls(df, url_col)
+    canon = canonicalize_urls(df)
     firsts = (
         canon.groupBy("canon_url")
         .agg(F.min(F.struct("doc_id")).alias("_f"))
@@ -177,26 +178,26 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     ).drop("_first_doc")
 
 
-def detect_hot_canon_urls(
-    df: DataFrame,
-    url_col: str = "url",
-    hot_min_rows: int = 1_000_000,
-    sample_fraction: float = 0.01,
-    seed: int = 414,
-) -> DataFrame:
+HOT_MIN_ROWS = 1_000_000  # rows one task sorts comfortably
+HOT_SAMPLE_FRACTION = 0.01  # share of the corpus hot-key detection reads
+HOT_SALTS = 64        # tasks a detected hot key is split across
+HOT_KEYS_MAX = 4096   # expression-routing cap (IN-list size)
+
+
+def detect_hot_canon_urls(df: DataFrame) -> DataFrame:
     """(canon_url) keys whose estimated row count exceeds
-    ``hot_min_rows``, from a seeded Bernoulli sample — the detection
-    canonicalizes only ``sample_fraction`` of the corpus, so the scan
-    costs ~1% of a full pass plus one keys-only metadata exchange.
+    ``HOT_MIN_ROWS``, from a seeded Bernoulli sample — the detection
+    canonicalizes only ``HOT_SAMPLE_FRACTION`` of the corpus, so the
+    scan costs ~1% of a full pass plus one keys-only metadata exchange.
 
     The detection threshold is HALF the expected sample count of a
-    key at ``hot_min_rows`` (Chernoff: a genuinely hot key at 2x the
+    key at ``HOT_MIN_ROWS`` (Chernoff: a genuinely hot key at 2x the
     floor misses with vanishing probability; a borderline key near
     the floor may land either side — harmless, both routes compute
-    identical values and both handle ~hot_min_rows rows fine)."""
-    thresh = max(1, int(hot_min_rows * sample_fraction / 2))
+    identical values and both handle ~HOT_MIN_ROWS rows fine)."""
+    thresh = max(1, int(HOT_MIN_ROWS * HOT_SAMPLE_FRACTION / 2))
     sampled = canonicalize_urls(
-        df.sample(fraction=sample_fraction, seed=seed), url_col
+        df.sample(fraction=HOT_SAMPLE_FRACTION, seed=414)
     )
     return (
         sampled.groupBy("canon_url")
@@ -206,17 +207,8 @@ def detect_hot_canon_urls(
     )
 
 
-HOT_SALTS = 64        # tasks a detected hot key is split across
-HOT_KEYS_MAX = 4096   # expression-routing cap (IN-list size)
-
-
 def url_dedup_hybrid(
-    df: DataFrame,
-    url_col: str = "url",
-    hot_min_rows: int = 1_000_000,
-    sample_fraction: float = 0.01,
-    hot_salts: int = HOT_SALTS,
-    hot_keys: list[str] | None = None,
+    df: DataFrame, hot_keys: list[str] | None = None
 ) -> DataFrame:
     """Hot-key-routed first-occurrence URL dedup — same output as
     ``url_dedup``, the skew-hybrid idea applied to the canonical-URL
@@ -229,16 +221,16 @@ def url_dedup_hybrid(
     so the only shapes that canonicalize once are those with a single
     consumer chain or a shared EXCHANGE.  Hence:
 
-    * detection samples ``sample_fraction`` of the corpus and
+    * detection samples ``HOT_SAMPLE_FRACTION`` of the corpus and
       COLLECTS the flagged keys — a bounded driver fetch by
-      construction (<= corpus_rows/hot_min_rows keys, the same
+      construction (<= corpus_rows/HOT_MIN_ROWS keys, the same
       metadata-scale argument as the trained-centroid literals);
     * routing is a pure expression: hot rows get a doc_id salt,
       cold rows salt 0 — no join, so the canonicalizer runs exactly
       once, inside the map side of the window exchange;
     * ``keep`` comes from a window min over (canon_url, salt): for
       cold keys that IS the answer; a hot key is split across
-      ``hot_salts`` bounded tasks, and its true minimum comes from a
+      ``HOT_SALTS`` bounded tasks, and its true minimum comes from a
       direct map-side-combining aggregate over ONLY the hot rows —
       a metadata-scale frame (|hot keys| rows) broadcast back.  The
       corpus shuffles ONCE; the canonicalizer is evaluated a second
@@ -264,14 +256,12 @@ def url_dedup_hybrid(
     if hot_keys is None:
         hot_keys = sorted(
             r["canon_url"]
-            for r in detect_hot_canon_urls(
-                df, url_col, hot_min_rows, sample_fraction
-            ).collect()
+            for r in detect_hot_canon_urls(df).collect()
         )
     if len(hot_keys) > HOT_KEYS_MAX:
-        return url_dedup(df, url_col)
+        return url_dedup(df)
 
-    canon = canonicalize_urls(df, url_col)
+    canon = canonicalize_urls(df)
     if not hot_keys:
         w = Window.partitionBy("canon_url")
         return canon.withColumn(
@@ -281,7 +271,7 @@ def url_dedup_hybrid(
     is_hot = F.col("canon_url").isin(hot_keys)
     salted = canon.withColumn(
         "_salt",
-        F.when(is_hot, F.pmod(F.col("doc_id"), F.lit(hot_salts)))
+        F.when(is_hot, F.pmod(F.col("doc_id"), F.lit(HOT_SALTS)))
         .otherwise(F.lit(0))
         .cast("int"),
     )

@@ -30,8 +30,6 @@ def with_window_id(
     keys: Sequence[str],
     ts_col: str = "timestamp",
     window_ticks: int = WINDOW_TICKS,
-    session_col: str = "session_id",
-    out_col: str = "window_id",
     drop_boundary_rows: bool = False,
 ) -> DataFrame:
     """Add ``window_id = floor((ts - session_start) / W)`` within each
@@ -40,12 +38,12 @@ def with_window_id(
     ``session_start`` is a windowed min over the session partition —
     no extra shuffle: the upstream sessionization already hash-
     partitioned on `keys`, which satisfies the clustering required
-    here (session_col is a function of rows within a key partition).
+    here (session_id is a function of rows within a key partition).
     """
-    part = Window.partitionBy(*keys, session_col)
+    part = Window.partitionBy(*keys, "session_id")
     start = F.min(ts_col).over(part)
     out = df_with_sessions.withColumn("session_start", start).withColumn(
-        out_col,
+        "window_id",
         F.floor((F.col(ts_col) - F.col("session_start")) / F.lit(window_ticks)),
     )
     if drop_boundary_rows:

@@ -37,21 +37,17 @@ DISTINCT_USERS_SQL = "SELECT DISTINCT user_id FROM events"
 
 
 # --------------------------------------------------------------- A2
-def q_count_gate(
-    spark: SparkSession,
-    sf_dir: str,
-    min_samples: int = EVENTS_MIN_SAMPLES,
-) -> DataFrame:
+def q_count_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 count gate: the `> 100 samples` check at
     RecognizeActivity.java:74 as a grouped HAVING instead of one
-    driver-side count() job per (user, activity).  The threshold is a
-    parameter (reference value = constants.MIN_SAMPLES_PER_GROUP;
-    default is the documented events-scale constant)."""
+    count() action per (user, activity).  The threshold is
+    the documented events-scale constant EVENTS_MIN_SAMPLES (the
+    reference value is constants.MIN_SAMPLES_PER_GROUP)."""
     return (
         _t(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > min_samples)
+        .filter(F.col("n") > EVENTS_MIN_SAMPLES)
     )
 
 

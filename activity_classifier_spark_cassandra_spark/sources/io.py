@@ -96,7 +96,7 @@ def _require_legacy_nanos(dt: str, col: str) -> None:
         )
 
 
-def ts_ticks(df: DataFrame, col: str = "ts") -> tuple:
+def ts_ticks(df: DataFrame) -> tuple:
     """(exact integer timeline Column, ticks-per-millisecond).
 
     The exact unit preserves full source precision for ordering, as-of
@@ -104,11 +104,11 @@ def ts_ticks(df: DataFrame, col: str = "ts") -> tuple:
     sub-millisecond instants).  NTZ wall-clock is UTC by contract
     (load_table pins the session tz, so the NTZ->instant cast is the
     identity mapping the DuckDB oracle's epoch_us(ts) applies)."""
-    dt = _ts_dtype(df, col)
+    dt = _ts_dtype(df, "ts")
     if dt.startswith("timestamp"):
-        return F.expr(f"unix_micros(cast({col} as timestamp))"), 1_000
-    _require_legacy_nanos(dt, col)
-    return F.col(col), 1_000_000  # legacy long = epoch nanos
+        return F.expr("unix_micros(cast(ts as timestamp))"), 1_000
+    _require_legacy_nanos(dt, "ts")
+    return F.col("ts"), 1_000_000  # legacy long = epoch nanos
 
 
 def ts_ms_sql(df: DataFrame, col: str = "ts") -> str:
@@ -141,19 +141,19 @@ def ts_event_time(df: DataFrame, col: str = "ts"):
     return F.expr(f"timestamp_micros({col} DIV 1000)")
 
 
-def ts_literal(df: DataFrame, epoch_ms_value: int, col: str = "ts"):
+def ts_literal(df: DataFrame, epoch_ms_value: int):
     """A literal comparable against the raw ts column — used so range
     predicates stay on the stored column and reach the parquet scan as
     PushedFilters (row-group pruning at 100 TB), instead of wrapping
     the column in a conversion that blocks pushdown."""
-    dt = _ts_dtype(df, col)
+    dt = _ts_dtype(df, "ts")
     if dt == "timestamp_ntz":
         return F.expr(
             f"cast(timestamp_millis({epoch_ms_value}) as timestamp_ntz)"
         )
     if dt.startswith("timestamp"):
         return F.expr(f"timestamp_millis({epoch_ms_value})")
-    _require_legacy_nanos(dt, col)
+    _require_legacy_nanos(dt, "ts")
     return F.lit(epoch_ms_value * 1_000_000)  # legacy epoch nanos
 
 
@@ -219,28 +219,6 @@ def read_cassandra(spark: SparkSession, keyspace: str, table: str) -> DataFrame:
     return spark.read.format(cfg["format"]).options(**cfg["options"]).load()
 
 
-def sorted_scan(
-    df: DataFrame, cols: list[str], ascending: bool = True
-) -> DataFrame:
-    """O1/O2: explicit ordered read (the reference pushes ORDER BY into
-    CQL clustering order via withAscOrder, RecognizeActivity.java:62,69).
-    A bare orderBy is a range-partitioned sample sort in Spark; prefer
-    window orderBy / min-max aggregates where the order is only a means
-    to an end (SURVEY.md §2.6)."""
-    return df.orderBy(*[
-        F.asc(c) if ascending else F.desc(c) for c in cols
-    ])
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str]
-) -> None:
-    """Hive-partitioned parquet sink: directory pruning makes reads of
-    one partition value O(that partition), the standard layout for a
-    100 TB feature store keyed by date/type."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
 def warehouse_dir(spark: SparkSession) -> str:
     """Local-filesystem path of the session warehouse, URI-parsed so
     ``file:/p``, ``file:///p`` and bare paths all resolve the same.
@@ -256,9 +234,9 @@ def warehouse_dir(spark: SparkSession) -> str:
 def managed_table_path(spark: SparkSession, table: str) -> str:
     """Directory a managed table's data files live in:
     ``<warehouse>/<identifier lowercased>`` (Spark lowercases table
-    identifiers on disk).  The ONE place this layout is computed —
-    write_bucketed_table and operators/bucketing.py both go through it
-    so their idempotency cleanups can never diverge."""
+    identifiers on disk).  The ONE place this layout is computed, so
+    operators/bucketing.py's idempotency cleanup and its table path
+    can never diverge."""
     return os.path.join(warehouse_dir(spark), table.split(".")[-1].lower())
 
 
@@ -272,35 +250,6 @@ def clear_stale_table_location(spark: SparkSession, table: str) -> None:
         import shutil
 
         shutil.rmtree(leftover, ignore_errors=True)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed managed table: co-locates rows by hash(bucket_cols) at
-    WRITE time, so later equi-joins / aggregations on those keys plan
-    with ZERO exchange (tests/test_io.py pins the no-Exchange plan).
-    This is the 'repartition once, join many times' pattern for fact
-    tables at scale.
-
-    Idempotent against stale state: a managed-table LOCATION left by a
-    previous session (after its metastore-derby was discarded) makes a
-    bare ``mode("overwrite").saveAsTable`` raise LOCATION_ALREADY_EXISTS
-    — drop the catalog entry AND clear the leftover warehouse directory
-    first."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    clear_stale_table_location(spark, table)
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
 
 
 # ------------------------------------------------------- other formats
@@ -481,76 +430,6 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CSV_ROUNDTRIP_SQL = JSONL_ROUNDTRIP_SQL
-
-
-def compact_small_files(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Small-files compaction: rewrite a directory of many undersized
-    parquet parts into ceil(input_bytes / target) files.
-
-    The operational companion to every incremental sink in this repo —
-    streaming and per-batch writers at 100 TB/day emit thousands of
-    sub-HDFS-block files per hour, and scan throughput dies on open()
-    overhead and footer reads long before data volume matters.
-
-    Sizing uses Spark's distributed ``binaryFile`` listing (metadata
-    only — the content column is pruned, so no file bytes move), NOT a
-    driver-side walk: on an object store with millions of keys the
-    driver listing is itself the bottleneck.
-
-    Hive-partitioned inputs must pass ``partition_cols``; the output is
-    then re-partitioned by those columns so directory pruning survives
-    compaction (one shuffle — the price of a partitioned rewrite).  A
-    partitioned input without ``partition_cols`` fails fast instead of
-    silently folding the partition columns into the data files.
-    Unpartitioned inputs compact with a narrow coalesce — no shuffle.
-    Returns the chosen file count."""
-    total = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .load(in_path)
-        .agg(F.sum("length"))
-        .collect()[0][0]
-        or 0
-    )
-    n_files = int(max(1, -(-total // target_file_bytes)))
-    df = spark.read.parquet(in_path)
-    if partition_cols:
-        (
-            df.repartition(n_files, *partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(out_path)
-        )
-        return n_files
-    # Detect an undeclared Hive layout from the files Spark ACTUALLY
-    # resolved (works for file:/, s3://, hdfs:// alike — an os.scandir
-    # here would silently skip the check on any non-local URI, which
-    # is exactly the silent partition-folding this guard exists to
-    # stop): any key=value path segment between in_path and the
-    # filename marks a partition directory.
-    base = in_path.rstrip("/").split("/")[-1]
-    hive_dirs = sorted(
-        {
-            seg
-            for f in df.inputFiles()
-            for seg in f.split("/")[:-1]
-            if "=" in seg and seg != base
-        }
-    )
-    if hive_dirs:
-        raise ValueError(
-            f"{in_path} looks Hive-partitioned ({hive_dirs[:3]}...): pass "
-            "partition_cols so the compacted output keeps its layout"
-        )
-    df.coalesce(n_files).write.mode("overwrite").parquet(out_path)
-    return n_files
 
 
 # ------------------------------------------- schema-evolution read

@@ -9,7 +9,7 @@ scheduling batch jobs.  Each micro-batch applies the EXISTING bounded
 batch operators — deletes first, then inserts (the convention that
 makes a re-embed arrive as one delete+insert pair in any batching) —
 and swaps the state tables with the rename-aside protocol of
-``streaming/incremental.py``.
+``streaming/incremental.py`` (``recover_state`` / ``swap_in``).
 
 Batching-invariance, the property the parity pytest pins: the batch
 ops only read corpus rows that are ALIVE at application time (delete
@@ -35,12 +35,12 @@ scope (SURVEY.md §2.12).
 from __future__ import annotations
 
 import shutil
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.iterate import RoundLoop
+from .incremental import recover_state, swap_in
 
 OPS_SCHEMA_FMT = "op string, vec_id long, embedding array<{elem}>"
 
@@ -87,23 +87,6 @@ def apply_index_ops(
     return corpus, graph
 
 
-def _swap_in(df: DataFrame, path: str) -> None:
-    """write-new / rename-aside / rename-in / drop-aside — a crash at
-    any point leaves old or new state recoverable (single-writer
-    protocol; see streaming/incremental.py for the recovery rule)."""
-    p, prev, tmp = Path(path), Path(f"{path}.old"), f"{path}.new"
-    if not p.exists() and prev.exists():
-        shutil.move(str(prev), path)
-    elif prev.exists():
-        shutil.rmtree(str(prev))
-    df.write.mode("overwrite").parquet(tmp)
-    if p.exists():
-        shutil.move(path, str(prev))
-    shutil.move(tmp, path)
-    if prev.exists():
-        shutil.rmtree(str(prev))
-
-
 def foreach_batch_index_updater(state_path: str):
     """``foreachBatch`` function maintaining ``{state}/corpus`` and
     ``{state}/graph`` parquet tables under arriving index ops."""
@@ -124,6 +107,10 @@ def foreach_batch_index_updater(state_path: str):
                 has_insert = bool(loop.stats["i"])
                 if not (has_delete or has_insert):
                     return
+                # adopt a table a crashed swap left only as .old
+                # BEFORE reading it
+                recover_state(f"{state_path}/corpus")
+                recover_state(f"{state_path}/graph")
                 corpus = spark.read.parquet(f"{state_path}/corpus")
                 graph = spark.read.parquet(f"{state_path}/graph")
                 corpus2, graph2 = apply_index_ops(
@@ -134,12 +121,12 @@ def foreach_batch_index_updater(state_path: str):
                 # its plan reads BOTH old parquet state tables that the
                 # swaps rename away.  The corpus swap itself writes
                 # corpus.new while the old state is still in place
-                # (_swap_in renames only after the write completes), so
+                # (swap_in renames only after the write completes), so
                 # corpus2 streams straight into its parquet write — one
                 # materialization per trigger saved vs checkpointing both.
                 graph2 = loop.checkpoint(graph2)
-                _swap_in(corpus2, f"{state_path}/corpus")
-                _swap_in(graph2, f"{state_path}/graph")
+                swap_in(corpus2, f"{state_path}/corpus")
+                swap_in(graph2, f"{state_path}/graph")
 
     return _update
 

@@ -10,14 +10,9 @@ the lateness bound, so state is O(keys per watermark window), not
 O(keys ever) — the difference between running forever and OOMing at
 100 TB/day.
 
-Two variants:
-- ``dedup_stream``: first-seen-wins on exact key equality, state
-  expired by watermark.  Emits each first occurrence immediately
-  (dedup is not an aggregation — no holdback), so append mode works.
-- ``dedup_within_watermark``: Spark 3.5+'s
-  ``dropDuplicatesWithinWatermark`` — keys may recur after the
-  watermark gap and be treated as new (the right semantics when
-  event_ids are only unique within a producer epoch).
+``dedup_stream`` is first-seen-wins on exact key equality, state
+expired by watermark.  It emits each first occurrence immediately
+(dedup is not an aggregation — no holdback), so append mode works.
 
 The watermark needs a real timestamp column; ``sources/io.ts_event_time``
 derives it for either physical ts encoding (TIMESTAMP_NTZ cast under
@@ -37,37 +32,20 @@ from ..sources.io import ts_event_time
 DEFAULT_WATERMARK = "1 hour"
 
 
-def with_event_time(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def with_event_time(events: DataFrame) -> DataFrame:
     """Derive the watermarkable timestamp from the raw ts column."""
-    return events.withColumn("event_time", ts_event_time(events, ts_col))
+    return events.withColumn("event_time", ts_event_time(events, "ts"))
 
 
 def dedup_stream(
     events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """First-seen-wins streaming dedup with watermark-bounded state."""
-    keys = keys or ["event_id"]
+    """First-seen-wins streaming dedup on ``event_id`` with
+    watermark-bounded state."""
     return (
         with_event_time(events)
-        .withWatermark("event_time", watermark)
-        .dropDuplicates(keys)
-    )
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
-    """Dedup only within the watermark horizon: a key recurring after
-    the gap is a new logical event."""
-    keys = keys or ["event_id"]
-    return (
-        with_event_time(events)
-        .withWatermark("event_time", watermark)
-        .dropDuplicatesWithinWatermark(keys)
+        .withWatermark("event_time", DEFAULT_WATERMARK)
+        .dropDuplicates(["event_id"])
     )
 
 
@@ -338,10 +316,7 @@ def q_stream_simhash_near_dup(spark, sf_dir: str) -> DataFrame:
 # bound dedup_stream gives event_ids.
 
 
-def url_dedup_stream(
-    crawl: DataFrame,
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
+def url_dedup_stream(crawl: DataFrame) -> DataFrame:
     """First-seen-wins per canonical URL.  ``crawl`` carries
     (doc_id, url, event_time); output adds ``canon_url`` and keeps
     one row per canonical key."""
@@ -349,7 +324,7 @@ def url_dedup_stream(
 
     return (
         canonicalize_urls(crawl)
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", DEFAULT_WATERMARK)
         .dropDuplicates(["canon_url"])
     )
 

@@ -9,11 +9,12 @@ uses, so the maintained view converges to exactly the full recompute
 (pytest-pinned).  Merge cost per trigger is O(|batch state| + |view|),
 never O(history); the events themselves are touched once.
 
-Sink caveat (documented, not hidden): the state swap is
-write-new / rename-aside / rename-in / drop-aside, so a crash at any
-point leaves either the old or the new state recoverable (the updater
-adopts a dangling ``.old`` on restart) — but it is still a
-single-writer filesystem protocol.  At production scale the state
+Sink caveat (documented, not hidden): the state swap (``swap_in``, also
+used by streaming/ann_index.py) is write-new / rename-aside /
+rename-in / drop-aside, so a crash at any point leaves either the old
+or the new state recoverable (``recover_state`` adopts a dangling
+``.old`` before the next read) — but it is still a single-writer
+filesystem protocol.  At production scale the state
 table should live in a transactional table format (Delta / Iceberg
 MERGE INTO) so that an at-least-once retry of a micro-batch cannot
 double-apply its partials; the merge ALGEBRA is identical.
@@ -47,6 +48,33 @@ def merge_day_states(*states: DataFrame) -> DataFrame:
     )
 
 
+def recover_state(path: str) -> None:
+    """Crash recovery for ``swap_in``; call it before reading ``path``.
+
+    A kill between the swap's two renames leaves only ``.old`` — adopt
+    it.  A kill after the second rename leaves a stale ``.old`` next
+    to a live state — drop it."""
+    p, prev = Path(path), Path(f"{path}.old")
+    if not p.exists() and prev.exists():
+        shutil.move(str(prev), path)
+    elif prev.exists():
+        shutil.rmtree(str(prev))
+
+
+def swap_in(df: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with ``df``:
+    write-new / rename-aside / rename-in / drop-aside.  At no point is
+    the standing state deleted before its replacement exists, so a
+    crash anywhere leaves a state ``recover_state`` can restore."""
+    p, prev, tmp = Path(path), Path(f"{path}.old"), f"{path}.new"
+    df.write.mode("overwrite").parquet(tmp)
+    if p.exists():
+        shutil.move(path, str(prev))
+    shutil.move(tmp, path)
+    if prev.exists():
+        shutil.rmtree(str(prev))
+
+
 def foreach_batch_state_updater(state_path: str):
     """A ``foreachBatch`` function maintaining the parquet state table
     at ``state_path``: reduce the micro-batch to day-grain partials,
@@ -54,31 +82,14 @@ def foreach_batch_state_updater(state_path: str):
 
     def _update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        p = Path(state_path)
-        prev = Path(f"{state_path}.old")
-        # Crash recovery: a kill between the two renames below leaves
-        # only .old — adopt it before proceeding.  A kill after the
-        # second rename leaves a stale .old next to a live state —
-        # drop it.  At no point is the standing state deleted before
-        # its replacement exists (rename-aside, never rmtree-first).
-        if not p.exists() and prev.exists():
-            shutil.move(str(prev), state_path)
-        elif prev.exists():
-            shutil.rmtree(str(prev))
-
+        recover_state(state_path)
         new = daily_state(batch_df)
-        if p.exists():
+        if Path(state_path).exists():
             old = spark.read.parquet(state_path)
             merged = merge_day_states(old, new)
         else:
             merged = new
-        tmp = f"{state_path}.new"
-        merged.write.mode("overwrite").parquet(tmp)
-        if p.exists():
-            shutil.move(state_path, str(prev))
-        shutil.move(tmp, state_path)
-        if prev.exists():
-            shutil.rmtree(str(prev))
+        swap_in(merged, state_path)
 
     return _update
 

@@ -28,14 +28,12 @@ ATTRIBUTION = "30 minutes"
 def attribute_purchases(
     clicks: DataFrame,
     purchases: DataFrame,
-    window: str = ATTRIBUTION,
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """(purchase event, attributed click) pairs: same user, click before
-    purchase, within the attribution window."""
+    purchase, within the ATTRIBUTION window."""
     c = (
         with_event_time(clicks)
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "1 hour")
         .select(
             F.col("user_id").alias("c_user"),
             F.col("event_id").alias("click_id"),
@@ -44,7 +42,7 @@ def attribute_purchases(
     )
     p = (
         with_event_time(purchases)
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "1 hour")
         .select(
             "user_id",
             F.col("event_id").alias("purchase_id"),
@@ -58,7 +56,7 @@ def attribute_purchases(
         & (F.col("click_time") < F.col("purchase_time"))
         & (
             F.col("click_time")
-            >= F.col("purchase_time") - F.expr(f"INTERVAL {window}")
+            >= F.col("purchase_time") - F.expr(f"INTERVAL {ATTRIBUTION}")
         ),
     ).drop("c_user")
 

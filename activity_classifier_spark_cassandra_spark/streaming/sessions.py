@@ -26,15 +26,16 @@ north-star extension promised in SURVEY.md §2.12.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.io import load_table, ts_event_time
+from ..sources.io import load_table
+from .dedup import with_event_time
+
+_KEYS = ("user_id", "event_type")
 
 
-def _feature_aggs(value_col: str) -> list[Column]:
+def _feature_aggs() -> list[Column]:
     """Feature aggregates from EXACT decimal partials.
 
     ``value`` carries ≤6 decimal places, so DECIMAL(18,6) sums are
@@ -47,7 +48,7 @@ def _feature_aggs(value_col: str) -> list[Column]:
     (caught by the full-registry sf0.1 sweep, round 5).  Algebraic
     sums — unlike a two-pass centered variance — stay streamable:
     they are plain aggregates over one grouping pass."""
-    v = F.col(value_col)
+    v = F.col("value")
     vd = v.cast("decimal(18,6)")
     n = F.count(F.lit(1))
     nd = n.cast("double")
@@ -100,14 +101,6 @@ STREAM_FEATURE_AGGS = [
 ]
 
 
-def _with_event_time(
-    df: DataFrame, ts_col: str, out_col: str = "event_time"
-) -> DataFrame:
-    """Watermarks need a timestamp column; ts_event_time normalizes
-    either physical ts encoding (see sources/io.py)."""
-    return df.withColumn(out_col, ts_event_time(df, ts_col))
-
-
 #: metric names emitted by the arrival audit, for sinks/tests
 AUDIT_METRICS = ("n_input", "n_nonnull_ts", "min_event_time", "max_event_time")
 
@@ -132,33 +125,24 @@ def _with_arrival_audit(d: DataFrame, name: str) -> DataFrame:
     )
 
 
-def session_stream_features(
-    events: DataFrame,
-    keys: Sequence[str] = ("user_id", "event_type"),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap: str = "36 hours",
-    watermark: str = "48 hours",
-    audit_name: str | None = None,
-) -> DataFrame:
-    """W1-W3 streaming analogue: per-(keys, gap-session) features.
+def session_stream_features(events: DataFrame) -> DataFrame:
+    """W1-W3 streaming analogue: per-(user_id, event_type, 36 h
+    gap-session) features.
 
     Works on both streaming and batch frames (``session_window`` is
     valid in batch too, which is how tests pin stream/batch parity).
-    ``audit_name`` attaches the observe-based arrival audit.
     """
-    d = _with_event_time(events, ts_col)
+    d = with_event_time(events)
     if events.isStreaming:
-        d = d.withWatermark("event_time", watermark)
-    if audit_name:
-        d = _with_arrival_audit(d, audit_name)
+        d = d.withWatermark("event_time", "48 hours")
     return (
         d.groupBy(
-            *keys, F.session_window("event_time", gap).alias("session")
+            *_KEYS,
+            F.session_window("event_time", "36 hours").alias("session"),
         )
-        .agg(*_feature_aggs(value_col))
+        .agg(*_feature_aggs())
         .select(
-            *keys,
+            *_KEYS,
             F.col("session.start").alias("session_start"),
             F.col("session.end").alias("session_end"),
             *STREAM_FEATURE_AGGS,
@@ -168,9 +152,6 @@ def session_stream_features(
 
 def windowed_stream_features(
     events: DataFrame,
-    keys: Sequence[str] = ("user_id", "event_type"),
-    ts_col: str = "ts",
-    value_col: str = "value",
     window: str = "24 hours",
     watermark: str = "48 hours",
     audit_name: str | None = None,
@@ -178,16 +159,16 @@ def windowed_stream_features(
     """W4-W5 streaming analogue: tumbling-window features with
     late-data handling.  Batch-compatible for parity testing.
     ``audit_name`` attaches the observe-based arrival audit."""
-    d = _with_event_time(events, ts_col)
+    d = with_event_time(events)
     if events.isStreaming:
         d = d.withWatermark("event_time", watermark)
     if audit_name:
         d = _with_arrival_audit(d, audit_name)
     return (
-        d.groupBy(*keys, F.window("event_time", window).alias("win"))
-        .agg(*_feature_aggs(value_col))
+        d.groupBy(*_KEYS, F.window("event_time", window).alias("win"))
+        .agg(*_feature_aggs())
         .select(
-            *keys,
+            *_KEYS,
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
             *STREAM_FEATURE_AGGS,
@@ -286,16 +267,7 @@ GROUP BY 1, 2, 3, 4
 """
 
 
-def sliding_stream_features(
-    events: DataFrame,
-    keys: Sequence[str] = ("user_id", "event_type"),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window: str = "24 hours",
-    slide: str = "12 hours",
-    watermark: str = "48 hours",
-    audit_name: str | None = None,
-) -> DataFrame:
+def sliding_stream_features(events: DataFrame) -> DataFrame:
     """Sliding-window features — the third window shape next to
     tumbling (``windowed_stream_features``) and gap-session
     (``session_stream_features``).  Each event lands in window/slide
@@ -303,16 +275,17 @@ def sliding_stream_features(
     "rolling 24 h metrics refreshed every 12 h".  State cost scales by
     the same factor; the watermark still bounds it.  Batch-compatible
     for parity testing, like the other two."""
-    d = _with_event_time(events, ts_col)
+    d = with_event_time(events)
     if events.isStreaming:
-        d = d.withWatermark("event_time", watermark)
-    if audit_name:
-        d = _with_arrival_audit(d, audit_name)
+        d = d.withWatermark("event_time", "48 hours")
     return (
-        d.groupBy(*keys, F.window("event_time", window, slide).alias("win"))
-        .agg(*_feature_aggs(value_col))
+        d.groupBy(
+            *_KEYS,
+            F.window("event_time", "24 hours", "12 hours").alias("win"),
+        )
+        .agg(*_feature_aggs())
         .select(
-            *keys,
+            *_KEYS,
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
             *STREAM_FEATURE_AGGS,

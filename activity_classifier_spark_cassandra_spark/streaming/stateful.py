@@ -18,7 +18,7 @@ bounded stream, the final emitted row per key equals the plain batch
 from __future__ import annotations
 
 import tempfile
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
@@ -80,11 +80,10 @@ def _update_totals(
 
 def stateful_running_totals(
     events: DataFrame,
-    keys: Sequence[str] = ("user_id", "event_type"),
 ) -> DataFrame:
     """Running per-key totals across micro-batches.  ``events`` must be
     a streaming frame with (user_id, event_type, value)."""
-    return events.groupBy(*keys).applyInPandasWithState(
+    return events.groupBy("user_id", "event_type").applyInPandasWithState(
         _update_totals,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

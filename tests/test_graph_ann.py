@@ -307,7 +307,7 @@ def test_routed_recall_floor_and_vs_hash(spark, exact_topk):
     """The routed search must clear the 0.8 floor the hash-spread
     default is pinned to, and (the point of routing) must not lose
     to it — measured 0.98 vs 0.94 at sf0.1, 0.92 vs 0.72 at the
-    20k-vector probe (tools/routed_probe.py)."""
+    20k-vector probe (BASELINE.md "IVF-routed entry vertices")."""
     ids, order, _ = exact_topk
     truth = {
         int(ids[i]): {int(ids[j]) for j in order[i, : GA.TOP_K]}
@@ -402,40 +402,6 @@ def test_delta_termination_noop_on_test_corpus(spark):
     emb = load_table(spark, SF, "embeddings")
     GA.build_knn_graph_q8(emb).count()
     assert GA.last_realized_rounds == GA.G_ITERS
-
-
-def test_graph_index_lifecycle_roundtrip(spark, tmp_path):
-    """build_graph_index -> save -> load: the ROUTED search over the
-    LOADED index (graph + centroids) is bit-equal to the inline one,
-    the SQ8 codes survive parquet verbatim, and the centroid list
-    round-trips exactly (the serving contract: build once, load for
-    every search)."""
-    emb = load_table(spark, SF, "embeddings")
-    idx = GA.build_graph_index(emb)
-    inline = GA.beam_search_routed(
-        emb, idx.graph.localCheckpoint(eager=True), idx.centroids
-    ).toPandas()
-
-    path = str(tmp_path / "graph_index")
-    GA.save_graph_index(idx, path)
-    loaded = GA.load_graph_index(spark, path)
-
-    assert loaded.centroids == [
-        (int(k), [float(x) for x in c]) for k, c in sorted(idx.centroids)
-    ]
-    q8_a = idx.q8.toPandas().sort_values("vec_id").reset_index(drop=True)
-    q8_b = loaded.q8.toPandas().sort_values("vec_id").reset_index(drop=True)
-    assert (q8_a.vec_id == q8_b.vec_id).all()
-    assert (q8_a.qn == q8_b.qn).all()
-    assert all(list(a) == list(b) for a, b in zip(q8_a.q, q8_b.q))
-
-    served = GA.beam_search_routed(
-        emb, loaded.graph, loaded.centroids
-    ).toPandas()
-    cols = sorted(served.columns)
-    a = inline[cols].sort_values(cols).reset_index(drop=True)
-    b = served[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_incremental_delete_semantics(spark):

@@ -50,68 +50,6 @@ def test_write_features_parquet_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_write_partitioned_prunes(spark, tmp_path):
-    """Partitioned sink + partition-pruned read."""
-    from pyspark.sql import functions as F
-
-    from activity_classifier_spark_cassandra_spark.sources.io import (
-        load_table,
-        write_partitioned,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "event_type", "value"
-    )
-    path = str(tmp_path / "by_type")
-    write_partitioned(ev, path, ["event_type"])
-    back = spark.read.parquet(path).filter(F.col("event_type") == "click")
-    want = ev.filter(F.col("event_type") == "click").count()
-    assert back.count() == want > 0
-    # pruned read touches only the one partition directory
-    import glob
-    dirs = glob.glob(f"{path}/event_type=*")
-    assert len(dirs) == 5
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key: the equi-join must plan
-    with zero shuffle Exchange (co-located by construction)."""
-    import contextlib
-    import io as _io
-    import re
-
-    from activity_classifier_spark_cassandra_spark.sources.io import (
-        load_table,
-        write_bucketed_table,
-    )
-
-    # warehouse.dir is static; bucketed tables land in the session's
-    # default warehouse and are dropped at the end
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    write_bucketed_table(
-        ev.select("event_id", "user_id", "value"),
-        "ev_bucketed_a", ["user_id"], n_buckets=8,
-    )
-    write_bucketed_table(
-        ev.select("event_id", "user_id", "event_type"),
-        "ev_bucketed_b", ["user_id"], n_buckets=8,
-    )
-    a = spark.table("ev_bucketed_a")
-    b = spark.table("ev_bucketed_b").groupBy("user_id").count()
-    joined = a.join(b, "user_id")
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        joined.explain("formatted")
-    tree = buf.getvalue().split("\n\n")[0]
-    n_exchange = len(re.findall(r"\bExchange \(", tree))
-    try:
-        assert n_exchange == 0, tree
-        assert joined.count() == 1000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ev_bucketed_a")
-        spark.sql("DROP TABLE IF EXISTS ev_bucketed_b")
-
-
 def test_cassandra_scan_config_pins_production_path():
     """S1 production reader spec (job/RecognizeActivity.java:39,49):
     the connector jar isn't in this image, so pin the generated
@@ -195,28 +133,6 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(user_id), GreaterThan(user_id,100)" in plan
 
 
-def test_compact_small_files(spark, tmp_path):
-    """32 tiny parts -> 1 compacted file, same rows."""
-    import glob
-
-    from activity_classifier_spark_cassandra_spark.sources.io import (
-        compact_small_files,
-        load_table,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    ev.repartition(32).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 32
-    n = compact_small_files(spark, src, dst)
-    assert n == 1  # 1000 rows ≪ 128 MiB target
-    assert len(glob.glob(f"{dst}/part-*.parquet")) == 1
-    back = spark.read.parquet(dst)
-    assert back.count() == ev.count()
-    assert back.exceptAll(ev).count() == 0
-
-
 def test_jsonl_roundtrip_matches_oracle(spark):
     """q_jsonl_roundtrip (events → JSONL → re-read → rollup) must equal
     the DuckDB rollup over the ORIGINAL parquet — any timestamp format
@@ -244,65 +160,6 @@ def test_jsonl_roundtrip_matches_oracle(spark):
     s = sdf[cols].sort_values(cols).reset_index(drop=True)
     o = odf[cols].sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(s, o, check_dtype=False)
-
-
-def test_compact_preserves_hive_partitions(spark, tmp_path):
-    """Partitioned input + partition_cols keeps the directory layout;
-    without partition_cols it fails fast instead of silently folding
-    the partition column into the data files."""
-    import glob
-
-    import pytest
-
-    from activity_classifier_spark_cassandra_spark.sources.io import (
-        compact_small_files,
-        load_table,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "part_src")
-    dst = str(tmp_path / "part_dst")
-    (
-        ev.repartition(8)
-        .write.mode("overwrite")
-        .partitionBy("event_type")
-        .parquet(src)
-    )
-    with pytest.raises(ValueError, match="Hive-partitioned"):
-        compact_small_files(spark, src, dst)
-    # the guard must hold for URI-form paths too (a local-FS-only
-    # check would silently skip on file:/s3:/hdfs: inputs)
-    with pytest.raises(ValueError, match="Hive-partitioned"):
-        compact_small_files(spark, f"file:{src}", dst)
-    compact_small_files(spark, src, dst, partition_cols=["event_type"])
-    part_dirs = glob.glob(f"{dst}/event_type=*")
-    assert len(part_dirs) == ev.select("event_type").distinct().count()
-    for d in part_dirs:
-        assert len(glob.glob(f"{d}/part-*.parquet")) == 1
-    back = spark.read.parquet(dst).select(*ev.columns)
-    assert back.count() == ev.count()
-    assert back.exceptAll(ev).count() == 0
-
-
-def test_partitioned_write_prunes_partitions(spark, tmp_path):
-    """Hive-partitioned sink + a partition-value filter: the scan must
-    show PartitionFilters (directory pruning), the scale contract of
-    write_partitioned."""
-    from pyspark.sql import functions as F
-
-    from activity_classifier_spark_cassandra_spark.sources.io import (
-        load_table,
-        write_partitioned,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    path = str(tmp_path / "by_type")
-    write_partitioned(ev, path, ["event_type"])
-    back = spark.read.parquet(path).filter(F.col("event_type") == "view")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(event_type" in plan
-    n_all = ev.filter(F.col("event_type") == "view").count()
-    assert back.count() == n_all
 
 
 def test_schema_evolution_merge_read(spark, tmp_path):

@@ -32,11 +32,9 @@ PKG = Path(__file__).resolve().parents[1] / "activity_classifier_spark_cassandra
 _ALLOWED = {
     "streaming/ann_index.py": 1,  # final state, before its temp dir goes
     "streaming/dedup.py": 1,  # result, before the memory sink is dropped
-    "operators/sessions.py": 1,  # optional fan-out barrier
     "operators/dedup.py": 1,  # _shared signature tables
-    # build memo, insert batch, insert/policy/update results, the graph
-    # index's long-lived SQ8 barrier
-    "operators/graph_ann.py": 6,
+    # build memo, insert batch, insert/policy/update results
+    "operators/graph_ann.py": 5,
     "operators/text.py": 2,  # KN type table, perplexity scores
     "operators/projection.py": 2,  # projected corpus, pair frame
     "operators/multimodal.py": 2,  # per-frame hashes

@@ -113,17 +113,3 @@ def test_naive_bayes_learns_nonnegative(spark):
     train, test = train_test_split(df)
     model = build_pipeline("naive_bayes").fit(train)
     assert error_rate(model.transform(test)) < 0.2
-
-
-def test_tune_tree_depth_picks_working_depth(spark, separable):
-    from activity_classifier_spark_cassandra_spark.ml.models import (
-        feature_importances,
-        tune_tree_depth,
-    )
-
-    best, metrics = tune_tree_depth(spark, separable, depths=[1, 5])
-    assert set(metrics) == {1, 5}
-    assert max(metrics.values()) > 0.9  # separable data
-    imps = feature_importances(best)
-    assert set(imps) == set(EVENTS_FEATURE_COLS)
-    assert abs(sum(imps.values()) - 1.0) < 1e-6

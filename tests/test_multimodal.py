@@ -1,6 +1,6 @@
 """Multimodal binary-column plumbing: Arrow-batched mapInPandas decode
-(fixture codec + REAL stdlib PNG codec), resize planning, frame
-sampling, pixel-exact PNG filter reconstruction."""
+(fixture codec + REAL stdlib PNG codec), pixel-exact PNG filter
+reconstruction."""
 
 from __future__ import annotations
 
@@ -15,9 +15,6 @@ from activity_classifier_spark_cassandra_spark.operators.multimodal import (
     encode_fake_image,
     encode_png,
     extract_media_features,
-    extract_png_stats,
-    resize_plan,
-    sample_frames,
 )
 
 
@@ -129,20 +126,6 @@ def test_png16_roundtrip_every_filter_type(spark):
             assert got == samples, (ch, filters)
 
 
-def test_png16_through_stats_extractor(spark):
-    """A 16-bit PNG flows through the mapInPandas stats path with
-    sample-exact mean/min/max on the 0..65535 scale."""
-    samples = [0, 1000, 30000, 65535, 42, 7]
-    blob = encode_png(3, 2, samples, channels=1, depth=16)
-    df = spark.createDataFrame(
-        [(77, bytearray(blob), "image/png")], schema=MEDIA_SCHEMA
-    )
-    r = extract_png_stats(df).collect()[0]
-    assert (r.width, r.height, r.channels) == (3, 2, 1)
-    assert r.min_value == 0 and r.max_value == 65535
-    assert abs(r.mean_value - sum(samples) / 6) < 1e-9
-
-
 # ------------------------------------------------------ JPEG header walk
 
 def test_jpeg_header_walk_dims(spark):
@@ -208,58 +191,10 @@ def test_jpeg_malformed_streams_raise(spark):
         jpeg_dims(good[:10])
 
 
-def test_extract_png_stats_batch(spark):
-    """Pixel-level stats through the mapInPandas batch path match the
-    locally-decoded ground truth for a multi-row PNG batch."""
-    rasters = {
-        10: _gradient_raster(4, 3, 3),
-        11: bytes([200] * (5 * 5 * 1)),  # constant gray
-        12: _gradient_raster(8, 2, 4),
-    }
-    chans = {10: 3, 11: 1, 12: 4}
-    dims = {10: (4, 3), 11: (5, 5), 12: (8, 2)}
-    rows = [
-        (mid, encode_png(*dims[mid], rasters[mid], channels=chans[mid],
-                         filters=[4, 2]), "image/png")
-        for mid in rasters
-    ]
-    df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA).repartition(3)
-    got = {r["media_id"]: r.asDict() for r in extract_png_stats(df).collect()}
-    for mid, raster in rasters.items():
-        w, h = dims[mid]
-        assert (got[mid]["width"], got[mid]["height"]) == (w, h)
-        assert got[mid]["channels"] == chans[mid]
-        assert got[mid]["n_pixels"] == w * h
-        assert abs(got[mid]["mean_value"] - sum(raster) / len(raster)) < 1e-9
-        assert got[mid]["min_value"] == min(raster)
-        assert got[mid]["max_value"] == max(raster)
-
-
 def test_extract_prunes_payload_column(spark):
     out = extract_media_features(_media_df(spark))
     assert "content" not in out.columns
     assert out.schema["modality"].dataType.typeName() == "integer"
-
-
-def test_resize_plan(spark):
-    plans = {
-        r["media_id"]: r.asDict()
-        for r in resize_plan(_media_df(spark), max_side=256).collect()
-    }
-    big = plans[0]  # 640x480 -> scale 256/640 = 0.4
-    assert big["scale"] == 0.4
-    assert (big["target_width"], big["target_height"]) == (256, 192)
-    small = plans[1]  # 64x64 unchanged
-    assert small["scale"] == 1.0
-    assert (small["target_width"], small["target_height"]) == (64, 64)
-
-
-def test_sample_frames(spark):
-    frames = spark.createDataFrame(
-        [(0, i) for i in range(100)], ["media_id", "frame_idx"]
-    )
-    kept = sample_frames(frames, every_n=10).collect()
-    assert sorted(r["frame_idx"] for r in kept) == list(range(0, 100, 10))
 
 
 def test_mapinpandas_partition_behavior(spark):
@@ -313,8 +248,7 @@ def test_q_media_features_matches_closed_form(spark):
 def test_malformed_png_is_decode_failure_not_crash(spark):
     """A blob with a valid PNG signature but truncated/corrupt IHDR
     must surface as decode_ok=False (row preserved), never a
-    struct.error that kills the task; extract_png_stats must likewise
-    skip null and corrupt rows instead of failing."""
+    struct.error that kills the task."""
     import struct as _s
 
     bad_ihdr = b"\x89PNG\r\n\x1a\n" + _s.pack(">I", 13) + b"IHDR" + b"\x00" * 4
@@ -329,9 +263,6 @@ def test_malformed_png_is_decode_failure_not_crash(spark):
     assert feats[0]["decode_ok"] is False
     assert feats[1]["decode_ok"] is True
     assert feats[2]["decode_ok"] is False
-
-    stats = extract_png_stats(df).collect()
-    assert {r["media_id"] for r in stats} == {1}  # corrupt/null skipped
 
 
 # ------------------------------------------------------ real WAV codec

@@ -1,11 +1,7 @@
-"""Deterministic corpus shuffling: permutation quality, epoch
-independence, and the range-file ordering contract of shuffle_write."""
+"""Deterministic corpus shuffling: permutation quality and epoch
+independence."""
 
 from __future__ import annotations
-
-import pyarrow.parquet as pq
-from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from activity_classifier_spark_cassandra_spark.operators import shuffle as SH
 
@@ -45,38 +41,3 @@ def test_shuffle_actually_shuffles(spark):
         .collect()
     ]
     assert ids != sorted(ids)
-
-
-def test_shuffle_write_range_files_are_disjoint_and_sorted(spark, tmp_path):
-    """File k must hold one contiguous skey range: every file's max
-    key < the next file's min key, and rows inside each file are in
-    key order — the property that lets a trainer stream file 0,1,2,...
-    as the full permutation."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = str(tmp_path / "shuffled")
-    SH.shuffle_write(docs, "doc_id", out, epoch=5, n_files=4)
-
-    import glob
-
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert len(files) > 1
-    ranges = []
-    for f in files:
-        ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
-        keys = [
-            r["k"]
-            for r in spark.createDataFrame([Row(doc_id=i) for i in ids])
-            .select(SH.shuffle_key(F.col("doc_id"), 5).alias("k"))
-            .collect()
-        ]
-        assert keys == sorted(keys)  # sorted within the file
-        ranges.append((min(keys), max(keys)))
-    # part-file names sort in range-partition order; ranges disjoint
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2
-
-    # nothing lost: union of files == corpus
-    total = sum(
-        pq.ParquetFile(f).metadata.num_rows for f in files
-    )
-    assert total == docs.count()

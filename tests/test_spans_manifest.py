@@ -136,19 +136,6 @@ def test_manifest_stats_match_parquet_footers(spark, tmp_path):
         assert pq.ParquetFile(path).metadata.num_rows == n_rows
 
 
-def test_prune_files_boundary_is_half_open(spark):
-    rows = [
-        Row(file="a", min_ms=0, max_ms=9, n_rows=1),
-        Row(file="b", min_ms=10, max_ms=19, n_rows=1),
-        Row(file="c", min_ms=20, max_ms=29, n_rows=1),
-    ]
-    m = spark.createDataFrame(rows)
-    # [10, 20): file c's min_ms == b is excluded, file a's max < 10
-    assert MF.prune_files(m, 10, 20) == ["b"]
-    # a file ending exactly at the start IS kept (max >= a)
-    assert set(MF.prune_files(m, 9, 20)) == {"a", "b"}
-
-
 # ------------------------------------------- weighted bottom-k sample
 def test_weighted_sample_topk_plan_and_determinism(spark):
     q = SM.q_weighted_sample(spark, SF_DIR)

@@ -63,3 +63,43 @@ def test_apply_index_ops_single_batch_invariant(spark):
     pd.testing.assert_frame_equal(
         _sorted(graph2), want, check_dtype=False
     )
+
+
+def test_trigger_adopts_corpus_left_as_old_by_crashed_swap(spark, tmp_path):
+    """A crash between the corpus swap's rename-aside and rename-in
+    leaves the standing corpus only as ``corpus.old``.  The next
+    trigger must adopt it before reading the state, then apply its
+    ops exactly as on an intact state."""
+    import shutil
+
+    emb = load_table(spark, SF, "embeddings")
+    corpus = emb.select("vec_id", "embedding")
+    graph0 = GA.memo_graph_q8(spark, SF)
+    batch, _ = GA._split_insert_batch(emb)
+    elem = (
+        dict(emb.dtypes)["embedding"]
+        .removeprefix("array<")
+        .removesuffix(">")
+    )
+    ops = batch.select(
+        F.lit("delete").alias("op"),
+        "vec_id",
+        F.lit(None).cast(f"array<{elem}>").alias("embedding"),
+    ).localCheckpoint(eager=True)
+
+    state = tmp_path / "state"
+    corpus.write.parquet(str(state / "corpus"))
+    graph0.write.parquet(str(state / "graph"))
+    shutil.move(str(state / "corpus"), str(state / "corpus.old"))
+
+    AI.foreach_batch_index_updater(str(state))(ops, 0)
+
+    assert (state / "corpus").exists()
+    assert not (state / "corpus.old").exists()
+    _, want = AI.apply_index_ops(corpus, graph0, ops)
+    got = spark.read.parquet(str(state / "graph"))
+    pd.testing.assert_frame_equal(
+        _sorted(got), _sorted(want), check_dtype=False
+    )
+    n_left = spark.read.parquet(str(state / "corpus")).count()
+    assert n_left == corpus.count() - ops.count()

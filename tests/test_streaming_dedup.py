@@ -7,10 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from activity_classifier_spark_cassandra_spark.sources.io import load_table
-from activity_classifier_spark_cassandra_spark.streaming.dedup import (
-    dedup_stream,
-    dedup_within_watermark,
-)
+from activity_classifier_spark_cassandra_spark.streaming.dedup import dedup_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,15 +43,6 @@ def test_dedup_stream_exactly_once(spark, tmp_path):
     assert got.count() == n_unique
     # every surviving row is a real input row, once
     assert got.groupBy("event_id").count().filter(F.col("count") > 1).count() == 0
-
-
-def test_dedup_within_watermark_exactly_once_same_batch(spark, tmp_path):
-    """Duplicates landing inside the watermark window collapse; with
-    all data in one replay window the result equals full dedup."""
-    batch, stream = _doubled_stream(spark, tmp_path)
-    _run(dedup_within_watermark(stream, watermark="90 days"), "dedup_ww_sink")
-    got = spark.table("dedup_ww_sink")
-    assert got.count() == batch.select("event_id").distinct().count()
 
 
 def test_dedup_state_is_watermarked(spark, tmp_path):

@@ -30,20 +30,10 @@ MIN_SAMPLES_PER_GROUP = 100
 # would filter everything; 10 keeps the HAVING selective but non-empty.
 EVENTS_MIN_SAMPLES = 10
 
-# Fixed label encoding (job/RecognizeActivity.java:187-200; NOT
-# frequency-ordered, so a StringIndexer would be wrong).
-ACTIVITY_LABELS = {
-    "Walking": 0.0,
-    "Jogging": 1.0,
-    "Standing": 2.0,
-    "Sitting": 3.0,
-    "Upstairs": 4.0,
-    "Downstairs": 5.0,
-}
-
 # The driver testdata's `events` table plays the sensor-stream role
 # (TESTDATA.md); its event_type stands in for `activity`.  Fixed,
-# alphabetical encoding.
+# alphabetical encoding (like job/RecognizeActivity.java:187-200, NOT
+# frequency-ordered, so a StringIndexer would be wrong).
 EVENT_TYPE_LABELS = {
     "click": 0.0,
     "error": 1.0,
@@ -72,17 +62,4 @@ FEATURE_COLS = [
     "avg_abs_diff_z",
     "resultant",
     "avg_time_peak",
-]
-
-TPCH_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
 ]

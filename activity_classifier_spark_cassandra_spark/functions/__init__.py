@@ -1,3 +1,3 @@
-from .labels import encode_activity, encode_event_type
+from .labels import encode_event_type
 
-__all__ = ["encode_activity", "encode_event_type"]
+__all__ = ["encode_event_type"]

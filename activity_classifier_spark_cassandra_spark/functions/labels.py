@@ -14,7 +14,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..constants import ACTIVITY_LABELS, EVENT_TYPE_LABELS
+from ..constants import EVENT_TYPE_LABELS
 
 
 def encode_label(col: str | Column, mapping: Mapping[str, float]) -> Column:
@@ -31,10 +31,6 @@ def encode_label(col: str | Column, mapping: Mapping[str, float]) -> Column:
         )
     assert expr is not None
     return expr.otherwise(F.lit(0.0))
-
-
-def encode_activity() -> Column:
-    return encode_label("activity", ACTIVITY_LABELS)
 
 
 def encode_event_type() -> Column:

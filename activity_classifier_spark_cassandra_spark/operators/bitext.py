@@ -39,20 +39,23 @@ dedup/ANN families.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
-from .similarity import _DOT, _N1, _N2
+from .similarity import cosine, sql_cosine, sql_top_k, top_k
 
 BT_BATCH = 25    # arriving source sentences per mining pass
 BT_K = 4         # neighbors in the margin denominators
 BT_THRESHOLD = 1.06  # ratio-margin mining threshold
 
-_COS_RAW = f"({_DOT}) / (({_N1}) * ({_N2}))"
-# FLOOR to 1e6-scaled LONG: all ranking and margin arithmetic is then
-# exact integer work; both engines floor the same double
-_COS6 = f"CAST(FLOOR(({_COS_RAW}) * 1000000) AS BIGINT)"
+
+def _cos6() -> Column:
+    """Cosine FLOORed to a 1e6-scaled LONG: all ranking and margin
+    arithmetic is then exact integer work; both engines floor the same
+    double."""
+    return F.floor(cosine("e1", "e2") * 1000000).cast("bigint")
+
 
 # per-row vector norm as a JVM fold: hoisted to one fold per side row
 # (pair-INDEPENDENT), so pair scoring divides by precomputed norms
@@ -85,18 +88,11 @@ def mine_bitext(
     fw = (
         tgt.select(F.col("vec_id").alias("tgt_id"), F.col("embedding").alias("e2"))
         .join(F.broadcast(batch))
-        .select("src_id", "tgt_id", F.expr(_COS6).alias("c6"))
+        .select("src_id", "tgt_id", _cos6().alias("c6"))
     )
-    wx = Window.partitionBy("src_id").orderBy(
-        F.col("c6").desc(), F.col("tgt_id").asc()
-    )
-    ranked = fw.withColumn("rn", F.row_number().over(wx))
-    nn_x = (
-        ranked.filter(F.col("rn") <= BT_K)
-        .groupBy("src_id")
-        .agg(F.sum("c6").alias("sum_x"))
-    )
-    best = ranked.filter(F.col("rn") == 1).select("src_id", "tgt_id", "c6")
+    ranked = top_k(fw, BT_K, part="src_id", score="c6", tie="tgt_id")
+    nn_x = ranked.groupBy("src_id").agg(F.sum("c6").alias("sum_x"))
+    best = ranked.filter(F.col("rank") == 1).select("src_id", "tgt_id", "c6")
     # backward: the <= |batch| distinct forward-best candidates vs the
     # full source side (x itself included, per the paper)
     ys = (
@@ -109,14 +105,10 @@ def mine_bitext(
     bw = (
         src.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("e2"))
         .join(F.broadcast(ys))
-        .select("tgt_id", "cand_id", F.expr(_COS6).alias("c6b"))
-    )
-    wy = Window.partitionBy("tgt_id").orderBy(
-        F.col("c6b").desc(), F.col("cand_id").asc()
+        .select("tgt_id", "cand_id", _cos6().alias("c6b"))
     )
     nn_y = (
-        bw.withColumn("rn", F.row_number().over(wy))
-        .filter(F.col("rn") <= BT_K)
+        top_k(bw, BT_K, part="tgt_id", score="c6b", tie="cand_id")
         .groupBy("tgt_id")
         .agg(F.sum("c6b").alias("sum_y"))
     )
@@ -146,17 +138,8 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- DuckDB oracle
 
-_SQL_COS_RAW = (
-    "(list_dot_product({a}, {b})"
-    " / (sqrt(list_dot_product({a}, {a}))"
-    " * sqrt(list_dot_product({b}, {b}))))"
-)
-
-
 def _sql_c6(a: str, b: str) -> str:
-    return (
-        f"CAST(FLOOR({_SQL_COS_RAW.format(a=a, b=b)} * 1000000) AS BIGINT)"
-    )
+    return f"CAST(FLOOR({sql_cosine(a, b)} * 1000000) AS BIGINT)"
 
 
 BITEXT_MINE_SQL = f"""
@@ -167,31 +150,23 @@ src AS (SELECT * FROM emb WHERE vec_id % 2 = 0),
 tgt AS (SELECT * FROM emb WHERE vec_id % 2 = 1),
 batch AS (SELECT vec_id AS src_id, e AS e1 FROM src
           WHERE vec_id < {2 * BT_BATCH}),
-fw AS MATERIALIZED (
-  SELECT b.src_id, t.vec_id AS tgt_id, {_sql_c6("b.e1", "t.e")} AS c6,
-    ROW_NUMBER() OVER (PARTITION BY b.src_id
-      ORDER BY {_sql_c6("b.e1", "t.e")} DESC, t.vec_id ASC) AS rn
+fwc AS (
+  SELECT b.src_id, t.vec_id AS tgt_id, {_sql_c6("b.e1", "t.e")} AS c6
   FROM batch b, tgt t
 ),
-nn_x AS (
-  SELECT src_id, SUM(c6) AS sum_x FROM fw WHERE rn <= {BT_K}
-  GROUP BY src_id
-),
-best AS (SELECT src_id, tgt_id, c6 FROM fw WHERE rn = 1),
+{sql_top_k("fw", "fwc", BT_K, part="src_id", score="c6", tie="tgt_id")},
+nn_x AS (SELECT src_id, SUM(c6) AS sum_x FROM fw GROUP BY src_id),
+best AS (SELECT src_id, tgt_id, c6 FROM fw WHERE rank = 1),
 ys AS (
   SELECT DISTINCT b.tgt_id, t.e AS e1 FROM best b
   JOIN tgt t ON t.vec_id = b.tgt_id
 ),
-bw AS MATERIALIZED (
-  SELECT y.tgt_id, s.vec_id AS cand_id, {_sql_c6("y.e1", "s.e")} AS c6b,
-    ROW_NUMBER() OVER (PARTITION BY y.tgt_id
-      ORDER BY {_sql_c6("y.e1", "s.e")} DESC, s.vec_id ASC) AS rn
+bwc AS (
+  SELECT y.tgt_id, s.vec_id AS cand_id, {_sql_c6("y.e1", "s.e")} AS c6b
   FROM ys y, src s
 ),
-nn_y AS (
-  SELECT tgt_id, SUM(c6b) AS sum_y FROM bw WHERE rn <= {BT_K}
-  GROUP BY tgt_id
-)
+{sql_top_k("bw", "bwc", BT_K, part="tgt_id", score="c6b", tie="cand_id")},
+nn_y AS (SELECT tgt_id, SUM(c6b) AS sum_y FROM bw GROUP BY tgt_id)
 SELECT b.src_id, b.tgt_id,
   ROUND(b.c6 / 1000000.0, 6) AS cosine,
   CASE WHEN x.sum_x + y.sum_y > 0
@@ -368,7 +343,7 @@ def _ivf_topk_c6(
     """Candidate-bounded top-k by 1e6-floored cosine: route each
     (qid, e1) query row to its ``nprobe`` nearest cells of the side's
     trained quantizer and score only members of those cells.  Returns
-    (qid, nid, c6, rn) with rn <= k.  Corpus assignment, query routing
+    (qid, nid, c6, rank) with rank <= k.  Corpus assignment, query routing
     and cell-local scoring run as Arrow-vectorized stages; nothing
     broadcasts — the query frame here is corpus-scale."""
     from .similarity import blas_assign
@@ -385,12 +360,7 @@ def _ivf_topk_c6(
         "n1", F.expr(_NORM.format(e="e1"))
     )
     scored = _blas_cell_scores(probes, corpus, qid, nid)
-    w = Window.partitionBy(qid).orderBy(
-        F.col("c6").desc(), F.col(nid).asc()
-    )
-    return scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
+    return top_k(scored, k, part=qid, score="c6", tie=nid)
 
 
 def mine_bitext_corpus(
@@ -413,7 +383,7 @@ def mine_bitext_corpus(
     )
     fw = _ivf_topk_c6(sq, tgt, cents_t, BT_K, BT_NPROBE, "src_id", "tgt_id")
     nn_x = fw.groupBy("src_id").agg(F.sum("c6").alias("sum_x"))
-    best = fw.filter(F.col("rn") == 1).select("src_id", "tgt_id", "c6")
+    best = fw.filter(F.col("rank") == 1).select("src_id", "tgt_id", "c6")
 
     ys = best.select("tgt_id").distinct().join(
         tgt.select(
@@ -491,22 +461,16 @@ def _bitext_corpus_sql() -> str:
     FROM src v CROSS JOIN {tc} c
   ) WHERE cr <= {BT_NPROBE}
 )""")
-    ctes.append(f"""fw AS (
-  SELECT src_id, tgt_id, c6,
-    ROW_NUMBER() OVER (PARTITION BY src_id
-      ORDER BY c6 DESC, tgt_id ASC) AS rn
-  FROM (
+    ctes.append(sql_top_k("fw", f"""(
     SELECT p.src_id, t.vec_id AS tgt_id,
       {_sql_c6("p.e1", "t.e")} AS c6
     FROM fprobe p JOIN taf t ON t.cluster = p.cluster
-  )
-)""")
+  )""", BT_K, part="src_id", score="c6", tie="tgt_id"))
     ctes.append(
-        f"nn_x AS (SELECT src_id, SUM(c6) AS sum_x FROM fw"
-        f" WHERE rn <= {BT_K} GROUP BY src_id)"
+        "nn_x AS (SELECT src_id, SUM(c6) AS sum_x FROM fw GROUP BY src_id)"
     )
     ctes.append(
-        "best AS (SELECT src_id, tgt_id, c6 FROM fw WHERE rn = 1)"
+        "best AS (SELECT src_id, tgt_id, c6 FROM fw WHERE rank = 1)"
     )
     ctes.append(
         "ys AS (SELECT DISTINCT b.tgt_id, t.e AS e1 FROM best b"
@@ -520,19 +484,13 @@ def _bitext_corpus_sql() -> str:
     FROM ys y CROSS JOIN {sc} c
   ) WHERE cr <= {BT_NPROBE}
 )""")
-    ctes.append(f"""bw AS (
-  SELECT tgt_id, cand_id, c6b,
-    ROW_NUMBER() OVER (PARTITION BY tgt_id
-      ORDER BY c6b DESC, cand_id ASC) AS rn
-  FROM (
+    ctes.append(sql_top_k("bw", f"""(
     SELECT p.tgt_id, s.vec_id AS cand_id,
       {_sql_c6("p.e1", "s.e")} AS c6b
     FROM bprobe p JOIN saf s ON s.cluster = p.cluster
-  )
-)""")
+  )""", BT_K, part="tgt_id", score="c6b", tie="cand_id"))
     ctes.append(
-        f"nn_y AS (SELECT tgt_id, SUM(c6b) AS sum_y FROM bw"
-        f" WHERE rn <= {BT_K} GROUP BY tgt_id)"
+        "nn_y AS (SELECT tgt_id, SUM(c6b) AS sum_y FROM bw GROUP BY tgt_id)"
     )
     sql = (
         "WITH " + ",\n".join(ctes)

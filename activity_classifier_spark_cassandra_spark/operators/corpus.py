@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..sources.io import load_table
 from .dedup import _DOC_SHINGLES_CTE, _doc_shingle_rows, _shared
+from .similarity import sql_cosine, sql_top_k
 from .text import STOPWORDS, _TOKENIZE, _TOKENIZE_SPARK, _sql_in_list
 from .sketches import _hash60_sql
 
@@ -1228,24 +1229,18 @@ corpus AS (
 ),
 scored AS (
   SELECT c.vec_id, b.bench_id,
-    ROUND(list_dot_product(c.e, b.b)
-          / (sqrt(list_dot_product(c.e, c.e))
-           * sqrt(list_dot_product(b.b, b.b))), 6) AS cos
+    ROUND({sql_cosine("c.e", "b.b")}, 6) AS cos
   FROM corpus c CROSS JOIN bench b
 ),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-              ORDER BY cos DESC, bench_id ASC) AS rn
-  FROM scored
-)
+{sql_top_k("nearest", "scored", 1, part="vec_id", score="cos", tie="bench_id")}
 -- corpus LEFT JOIN: with a non-empty benchmark every corpus vector
--- has exactly one rn=1 row (identical to the former inner form);
+-- has exactly one nearest row (identical to the former inner form);
 -- with an EMPTY benchmark this degrades to all-kept NULL verdicts,
 -- mirroring the engine's empty-bench guard
 SELECT c.vec_id, r.bench_id AS nearest_bench_id, r.cos AS max_cos,
        COALESCE(r.cos >= {SEM_DECON_TAU}, FALSE) AS dropped
 FROM corpus c
-LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r ON r.vec_id = c.vec_id
+LEFT JOIN nearest r ON r.vec_id = c.vec_id
 """
 
 

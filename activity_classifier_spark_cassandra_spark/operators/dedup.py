@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ..sources.io import load_table
+from .similarity import sql_cosine
 from .text import STOPWORDS, _TOKENIZE, _TOKENIZE_SPARK, _sql_in_list
 
 
@@ -528,14 +529,8 @@ WITH small AS (
 ),
 pairs AS (
   SELECT a.vec_id AS vec1, b.vec_id AS vec2, a.label AS lbl,
-    ROUND(
-      list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                       CAST(b.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                               CAST(a.embedding AS DOUBLE[])))
-       * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                               CAST(b.embedding AS DOUBLE[])))), 6)
-      AS cosine
+    ROUND({sql_cosine("CAST(a.embedding AS DOUBLE[])",
+                      "CAST(b.embedding AS DOUBLE[])")}, 6) AS cosine
   FROM embeddings a JOIN embeddings b
     ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE a.label IN (SELECT label FROM small)
@@ -1383,9 +1378,7 @@ def _semdedup_sql() -> str:
   FROM afd a JOIN afd b
     ON a.cluster = b.cluster AND a.vec_id < b.vec_id
   WHERE a.cluster IN (SELECT cluster FROM small)
-    AND ROUND(list_dot_product(a.e, b.e)
-              / (sqrt(list_dot_product(a.e, a.e))
-               * sqrt(list_dot_product(b.e, b.e))), 6) >= {SEMDEDUP_TAU}
+    AND ROUND({sql_cosine("a.e", "b.e")}, 6) >= {SEMDEDUP_TAU}
 )""")
     sql = (
         "WITH " + ",\n".join(ctes)

@@ -71,7 +71,16 @@ from pyspark.sql import functions as F
 
 from ..sources.io import load_table
 from .iterate import RoundLoop
-from .similarity import _DOT, _N1, _N2, N_QUERIES, TOP_K, q_knn_brute
+from .similarity import (
+    N_QUERIES,
+    TOP_K,
+    cosine,
+    q_knn_brute,
+    split_queries,
+    sql_cosine,
+    sql_top_k,
+    top_k,
+)
 
 # Tuned on the sf test corpus (dim-64, weak cluster structure) by the
 # BASELINE.md "Graph-ANN recall fix" sweep: K=12/4 rounds reaches
@@ -112,18 +121,10 @@ HOPS = 6         # search hops (recall saturates at 5 on both SFs —
                  # BASELINE.md recall-fix sweep; one hop of margin)
 N_ENTRIES = 24   # hash-spread entry vertices (derived from the graph)
 
-_COS = f"({_DOT}) / (({_N1}) * ({_N2}))"
-
 # rounds the most recent build_knn_graph / build_knn_graph_q8 actually
 # ran (δ-termination observability; tests pin early stop on clustered
 # corpora against this)
 last_realized_rounds: int = 0
-
-_SQL_COS = (
-    "ROUND(list_dot_product({q}, {c})"
-    " / (sqrt(list_dot_product({q}, {q}))"
-    " * sqrt(list_dot_product({c}, {c}))), 6)"
-)
 
 
 def _score(cand: DataFrame, corpus: DataFrame) -> DataFrame:
@@ -135,17 +136,8 @@ def _score(cand: DataFrame, corpus: DataFrame) -> DataFrame:
     return (
         cand.join(e1, cand.vec_id == e1._a)
         .join(e2, cand.neighbor_id == e2._b)
-        .withColumn("cosine", F.round(F.expr(_COS), 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
         .select("vec_id", "neighbor_id", "cosine")
-    )
-
-
-def _top_k(scored: DataFrame, k: int, col: str = "cosine") -> DataFrame:
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col(col).desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
     )
 
 
@@ -277,7 +269,9 @@ def _descend(
             )
         )
         g = loop.checkpoint(
-            _top_k(cand, k, col).select("vec_id", "neighbor_id", col, "old"),
+            top_k(cand, k, part="vec_id", score=col).select(
+                "vec_id", "neighbor_id", col, "old"
+            ),
             updates=F.count_if(F.col("old") == 0),
         ).drop("old")
         last_realized_rounds = rnd
@@ -299,7 +293,7 @@ def build_knn_graph(
     n = emb.count()  # one scalar aggregate — metadata-scale
     init = _init_pairs(corpus.select("vec_id"), G_K, n)
 
-    seed = _top_k(_score(init, corpus), G_K).select(
+    seed = top_k(_score(init, corpus), G_K, part="vec_id").select(
         "vec_id", "neighbor_id", "cosine"
     )
     with RoundLoop("nn_descent", keep_last=True) as loop:
@@ -308,13 +302,15 @@ def build_knn_graph(
             seed,
             corpus.select(F.col("vec_id").alias("v"), F.col("e").alias("e1")),
             corpus.select(F.col("vec_id").alias("w"), F.col("e").alias("e2")),
-            F.round(F.expr(_COS), 6),
+            F.round(cosine("e1", "e2"), 6),
             "cosine",
             G_K,
             iters,
             G_DELTA * G_K * n,
         )
-    return _top_k(g, G_K).select("vec_id", "neighbor_id", "cosine", "rank")
+    return top_k(g, G_K, part="vec_id").select(
+        "vec_id", "neighbor_id", "cosine", "rank"
+    )
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -423,9 +419,9 @@ def build_knn_graph_q8(
     init = _init_pairs(corpus.select("vec_id"), G_K, n)
     with RoundLoop("nn_descent_q8", keep_last=True) as loop:
         q8 = loop.pin(_q8_corpus(corpus, loop))
-        seed = _top_k(_score_q8(init, q8), G_K, "qcos").select(
-            "vec_id", "neighbor_id", "qcos"
-        )
+        seed = top_k(
+            _score_q8(init, q8), G_K, part="vec_id", score="qcos"
+        ).select("vec_id", "neighbor_id", "qcos")
         g = _descend(
             loop,
             seed,
@@ -449,7 +445,7 @@ def build_knn_graph_q8(
     # one exact rescore + exact re-rank of the final K·N edges — the
     # only corpus join in the build
     final = _score(g.select("vec_id", "neighbor_id"), corpus)
-    return _top_k(final, G_K).select(
+    return top_k(final, G_K, part="vec_id").select(
         "vec_id", "neighbor_id", "cosine", "rank"
     )
 
@@ -590,10 +586,7 @@ def beam_search(
     graph = graph.select("vec_id", "neighbor_id")
 
     if queries is None:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("e1"),
-        )
+        queries, _ = split_queries(emb)
 
     if entry_frontier is not None:
         frontier = entry_frontier.select("query_id", "node")
@@ -644,7 +637,7 @@ def beam_search(
             .select(
                 "query_id",
                 F.struct(
-                    F.round(F.expr(_COS), 6).alias("cosine"),
+                    F.round(cosine("e1", "e2"), 6).alias("cosine"),
                     (-F.col("node")).alias("nn"),
                 ).alias("cn"),
             )
@@ -709,20 +702,13 @@ def beam_search(
             "node",
         )
         .join(queries, "query_id")
-        .withColumn("cosine", F.round(F.expr(_COS), 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("node").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("node").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
+    return top_k(scored, k, tie="node").select(
+        "query_id",
+        F.col("node").alias("neighbor_id"),
+        "cosine",
+        "rank",
     )
 
 
@@ -746,7 +732,7 @@ def q_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_score(cand: str, out: str, corpus: str = "corpus") -> str:
-    cos = _SQL_COS.format(q="x.e", c="y.e")
+    cos = f"ROUND({sql_cosine('x.e', 'y.e')}, 6)"
     return f"""{out} AS (
   SELECT c.vec_id, c.neighbor_id, {cos} AS cosine
   FROM {cand} c
@@ -755,20 +741,13 @@ def _sql_score(cand: str, out: str, corpus: str = "corpus") -> str:
 )"""
 
 
-def _sql_top_k(scored: str, out: str, k: int, keep_score: bool) -> str:
-    cols = (
-        "vec_id, neighbor_id, cosine, rank"
-        if keep_score
-        else "vec_id, neighbor_id"
-    )
-    return f"""{out} AS (
-  SELECT {cols} FROM (
-    SELECT vec_id, neighbor_id, cosine,
-      ROW_NUMBER() OVER (PARTITION BY vec_id
-        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM {scored}
-  ) WHERE rank <= {k}
-)"""
+def _sql_gfin(graph: str) -> list[str]:
+    """CTEs ``sfin`` and ``gfin``: the ``graph`` edges exact-rescored
+    and re-ranked — (vec_id, neighbor_id, cosine, rank)."""
+    return [
+        _sql_score(graph, "sfin"),
+        sql_top_k("gfin", "sfin", G_K, part="vec_id"),
+    ]
 
 
 def _term_ctes(p: str, corpus: str) -> list[str]:
@@ -841,7 +820,9 @@ def _build_ctes(p: str, corpus: str) -> list[str]:
         p,
         corpus,
         lambda cand, out: _sql_score(cand, out, corpus),
-        lambda sc, out: _sql_top_k(sc, out, G_K, keep_score=False),
+        lambda sc, out: sql_top_k(
+            out, sc, G_K, "vec_id, neighbor_id", part="vec_id"
+        ),
     )
 
 
@@ -877,17 +858,6 @@ def _sql_score_q(cand: str, out: str, p: str) -> str:
 )"""
 
 
-def _sql_top_k_q(scored: str, out: str, k: int) -> str:
-    return f"""{out} AS (
-  SELECT vec_id, neighbor_id FROM (
-    SELECT vec_id, neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY vec_id
-        ORDER BY qcos DESC, neighbor_id ASC) AS rank
-    FROM {scored}
-  ) WHERE rank <= {k}
-)"""
-
-
 def _build_q8_ctes(p: str, corpus: str) -> list[str]:
     """SQ8-ranked NN-descent build CTEs (mirrors build_knn_graph_q8):
     identical init, every round scored and ranked by quantized
@@ -914,7 +884,9 @@ def _build_q8_ctes(p: str, corpus: str) -> list[str]:
         p,
         corpus,
         lambda cand, out: _sql_score_q(cand, out, p),
-        lambda sc, out: _sql_top_k_q(sc, out, G_K),
+        lambda sc, out: sql_top_k(
+            out, sc, G_K, "vec_id, neighbor_id", part="vec_id", score="qcos"
+        ),
     )
 
 
@@ -938,8 +910,7 @@ def _materialize(sql: str) -> str:
 
 def _knn_graph_sql() -> str:
     ctes = _graph_ctes()
-    ctes.append(_sql_score("gf", "sfin"))
-    ctes.append(_sql_top_k("sfin", "gfin", G_K, keep_score=True))
+    ctes += _sql_gfin("gf")
     sql = (
         "WITH " + ",\n".join(ctes)
         + "\nSELECT vec_id, neighbor_id, cosine, rank FROM gfin"
@@ -957,25 +928,21 @@ def _sql_entries(graph: str, out: str = "entries") -> str:
 )"""
 
 
-def _sql_beam(
-    cand: str,
-    out: str,
-    qsrc: str = "corpus",
-    qid: str = "vec_id",
-    corpus: str = "corpus",
-) -> str:
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    return f"""{out} AS (
-  SELECT query_id, node FROM (
+def _sql_beam(cand: str, out: str, qsrc: str, corpus: str) -> str:
+    return sql_top_k(out, f"""(
     SELECT c.query_id, c.node,
-      ROW_NUMBER() OVER (PARTITION BY c.query_id
-        ORDER BY {cos} DESC, c.node ASC) AS r
+      ROUND({sql_cosine("q.e", "y.e")}, 6) AS cosine
     FROM (SELECT DISTINCT query_id, node FROM {cand}) c
     JOIN {corpus} y ON y.vec_id = c.node
-    JOIN {qsrc} q ON q.{qid} = c.query_id
+    JOIN {qsrc} q ON q.query_id = c.query_id
     WHERE c.node <> c.query_id
-  ) WHERE r <= {BEAM}
-)"""
+  )""", BEAM, "query_id, node", tie="node")
+
+
+_SQL_QUERIES = (
+    f"queries AS (SELECT vec_id AS query_id, e FROM corpus"
+    f" WHERE vec_id < {N_QUERIES})"
+)
 
 
 def _sql_search_ctes(
@@ -985,17 +952,20 @@ def _sql_search_ctes(
     corpus: str,
 ) -> list[str]:
     """Beam-search CTEs over ``graph`` for the (query_id, e) frame
-    ``qsrc``, scored against ``corpus``; names prefixed with ``p``.
-    Final scored frontier CTE: ``{p}fs`` (query_id, neighbor_id,
-    cosine)."""
-    ctes = [_sql_entries(graph, f"{p}entries")]
-    ctes.append(
+    ``qsrc`` from the hash-spread entries, scored against ``corpus``;
+    names prefixed with ``p``.  Final scored frontier CTE: ``{p}fs``
+    (query_id, neighbor_id, cosine)."""
+    return [
+        _sql_entries(graph, f"{p}entries"),
         f"{p}e0 AS (SELECT q.query_id, e.node"
-        f" FROM {qsrc} q CROSS JOIN {p}entries e)"
-    )
-    ctes.append(
-        _sql_beam(f"{p}e0", f"{p}f0", qsrc, "query_id", corpus)
-    )
+        f" FROM {qsrc} q CROSS JOIN {p}entries e)",
+    ] + _sql_hop_ctes(p, graph, qsrc, corpus)
+
+
+def _sql_hop_ctes(p: str, graph: str, qsrc: str, corpus: str) -> list[str]:
+    """The HOPS beam hops from the entry frontier ``{p}e0`` through
+    the scored final frontier ``{p}fs``."""
+    ctes = [_sql_beam(f"{p}e0", f"{p}f0", qsrc, corpus)]
     for i in range(1, HOPS + 1):
         ctes.append(f"""{p}c{i}h AS (
   SELECT query_id, node FROM {p}f{i - 1}
@@ -1003,10 +973,8 @@ def _sql_search_ctes(
   SELECT f.query_id, g.neighbor_id AS node
   FROM {p}f{i - 1} f JOIN {graph} g ON g.vec_id = f.node
 )""")
-        ctes.append(
-            _sql_beam(f"{p}c{i}h", f"{p}f{i}", qsrc, "query_id", corpus)
-        )
-    cos = _SQL_COS.format(q="q.e", c="y.e")
+        ctes.append(_sql_beam(f"{p}c{i}h", f"{p}f{i}", qsrc, corpus))
+    cos = f"ROUND({sql_cosine('q.e', 'y.e')}, 6)"
     ctes.append(f"""{p}fs AS (
   SELECT f.query_id, f.node AS neighbor_id, {cos} AS cosine
   FROM {p}f{HOPS} f
@@ -1016,62 +984,29 @@ def _sql_search_ctes(
     return ctes
 
 
-def _search_ctes() -> list[str]:
-    """Graph build + beam search CTEs, through the scored final
-    frontier fs{HOPS} (shared by the search query and the recall
-    eval)."""
-    ctes = _graph_ctes()
-    g = "gf"
-    ctes.append(
-        f"queries AS (SELECT vec_id AS query_id, e FROM corpus"
-        f" WHERE vec_id < {N_QUERIES})"
+def _q8_search_ctes() -> list[str]:
+    """The SQ8 build replay + the sample queries' beam search over it,
+    through the scored final frontier ``fs``.  Only the edge SET feeds
+    the search, and the final exact rescore re-ranks the same <=K
+    edges per vertex, so the search reads the quantized-ranked
+    g{G_ITERS} directly."""
+    return (
+        [
+            "corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
+            " FROM embeddings)",
+        ]
+        + _build_q8_ctes("", "corpus")
+        + [_SQL_QUERIES]
+        + _sql_search_ctes("", "gf", "queries", "corpus")
     )
-    ctes.append(_sql_entries(g))
-    ctes.append(
-        "e0 AS (SELECT q.query_id, e.node"
-        " FROM queries q CROSS JOIN entries e)"
-    )
-    ctes.append(_sql_beam("e0", "f0"))
-    for i in range(1, HOPS + 1):
-        ctes.append(f"""c{i}h AS (
-  SELECT query_id, node FROM f{i - 1}
-  UNION
-  SELECT f.query_id, g.neighbor_id AS node
-  FROM f{i - 1} f JOIN {g} g ON g.vec_id = f.node
-)""")
-        ctes.append(_sql_beam(f"c{i}h", f"f{i}"))
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""fs{HOPS} AS (
-  SELECT f.query_id, f.node AS neighbor_id, {cos} AS cosine
-  FROM f{HOPS} f
-  JOIN corpus y ON y.vec_id = f.node
-  JOIN corpus q ON q.vec_id = f.query_id
-)""")
-    return ctes
 
 
 def _knn_graph_search_sql() -> str:
-    """Replays the SQ8 build (the composition default) + beam search.
-    Only the edge SET feeds the search, and the final exact rescore
-    re-ranks the same <=K edges per vertex, so the search reads the
-    quantized-ranked g{G_ITERS} directly."""
-    ctes = [
-        "corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
-        " FROM embeddings)",
-    ] + _build_q8_ctes("", "corpus")
-    ctes.append(
-        f"queries AS (SELECT vec_id AS query_id, e FROM corpus"
-        f" WHERE vec_id < {N_QUERIES})"
-    )
-    ctes += _sql_search_ctes("", "gf", "queries", "corpus")
+    """Replays the SQ8 build (the composition default) + beam search."""
+    ctes = _q8_search_ctes() + [sql_top_k("ranked", "fs", TOP_K)]
     sql = (
         "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-    ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM fs
-) WHERE rank <= {TOP_K}"""
+        + "\nSELECT query_id, neighbor_id, cosine, rank FROM ranked"
     )
     return _materialize(sql)
 
@@ -1081,8 +1016,7 @@ def _knn_graph_q8_sql() -> str:
         "corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
         " FROM embeddings)",
     ] + _build_q8_ctes("", "corpus")
-    ctes.append(_sql_score("gf", "sfin"))
-    ctes.append(_sql_top_k("sfin", "gfin", G_K, keep_score=True))
+    ctes += _sql_gfin("gf")
     sql = (
         "WITH " + ",\n".join(ctes)
         + "\nSELECT vec_id, neighbor_id, cosine, rank FROM gfin"
@@ -1113,27 +1047,17 @@ def _recall_at_k(n_hits: str) -> Column:
 
 def _sql_search_top(out: str, frontier: str) -> str:
     """CTE ``out``: each query's top-TOP_K from a scored frontier."""
-    return f"""{out} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM {frontier}
-  ) WHERE rank <= {TOP_K}
-)"""
+    return sql_top_k(out, frontier, TOP_K, "query_id, neighbor_id")
 
 
 def _sql_btop(corpus: str) -> str:
     """CTE ``btop``: brute-force top-TOP_K truth over ``corpus``."""
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    return f"""btop AS (
-  SELECT query_id, neighbor_id FROM (
+    return sql_top_k("btop", f"""(
     SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        ORDER BY {cos} DESC, y.vec_id ASC) AS r
+      ROUND({sql_cosine("q.e", "y.e")}, 6) AS cosine
     FROM {corpus} q JOIN {corpus} y ON y.vec_id <> q.vec_id
     WHERE q.vec_id < {N_QUERIES}
-  ) WHERE r <= {TOP_K}
-)"""
+  )""", TOP_K, "query_id, neighbor_id")
 
 
 def _sql_recall_eval(ctes: list[str], frontier: str) -> str:
@@ -1172,7 +1096,9 @@ def q_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_recall_eval_sql() -> str:
-    return _materialize(_sql_recall_eval(_search_ctes(), f"fs{HOPS}"))
+    ctes = _graph_ctes() + [_SQL_QUERIES]
+    ctes += _sql_search_ctes("", "gf", "queries", "corpus")
+    return _materialize(_sql_recall_eval(ctes, "fs"))
 
 
 GRAPH_RECALL_EVAL_SQL = _graph_recall_eval_sql()
@@ -1192,16 +1118,7 @@ def q_graph_q8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_q8_recall_eval_sql() -> str:
-    ctes = [
-        "corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
-        " FROM embeddings)",
-    ] + _build_q8_ctes("", "corpus")
-    ctes.append(
-        f"queries AS (SELECT vec_id AS query_id, e FROM corpus"
-        f" WHERE vec_id < {N_QUERIES})"
-    )
-    ctes += _sql_search_ctes("", "gf", "queries", "corpus")
-    return _materialize(_sql_recall_eval(ctes, "fs"))
+    return _materialize(_sql_recall_eval(_q8_search_ctes(), "fs"))
 
 
 GRAPH_Q8_RECALL_EVAL_SQL = _graph_q8_recall_eval_sql()
@@ -1274,7 +1191,7 @@ def insert_into_graph(
         .select("vec_id", "neighbor_id", "cosine")
         .unionByName(rev_new)
     )
-    repaired = _top_k(repaired_cand, G_K).select(
+    repaired = top_k(repaired_cand, G_K, part="vec_id").select(
         "vec_id", "neighbor_id", "cosine", "rank"
     )
     untouched = g_old.join(affected, "vec_id", "left_anti").select(
@@ -1336,33 +1253,28 @@ def _sql_repair_ctes(
     (the vertices those edges point at) and ``repaired{sfx}`` (each
     affected vertex's top-G_K over its ``graph`` edges plus the
     reverse new edges, with cosine and rank when ``keep_score``)."""
-    cols = out = "vec_id, neighbor_id"
-    if keep_score:
-        cols, out = cols + ", cosine", out + ", cosine, rank"
     return [
-        f"""new_edges AS (
-  SELECT query_id AS vec_id, neighbor_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM {hits}
-  ) WHERE rank <= {G_K}
-)""",
+        sql_top_k(
+            "new_edges",
+            hits,
+            G_K,
+            "query_id AS vec_id, neighbor_id, cosine, rank",
+        ),
         f"affected{sfx} AS (SELECT DISTINCT neighbor_id AS vec_id"
         " FROM new_edges)",
-        f"""repaired{sfx} AS (
-  SELECT {out} FROM (
-    SELECT {cols},
-      ROW_NUMBER() OVER (PARTITION BY vec_id
-        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM (
+        sql_top_k(
+            f"repaired{sfx}",
+            f"""(
       SELECT g.vec_id, g.neighbor_id, g.cosine FROM {graph} g
       WHERE g.vec_id IN (SELECT vec_id FROM affected{sfx})
       UNION ALL
       SELECT n.neighbor_id AS vec_id, n.vec_id AS neighbor_id, n.cosine
       FROM new_edges n
-    )
-  ) WHERE rank <= {G_K}
-)""",
+    )""",
+            G_K,
+            "*" if keep_score else "vec_id, neighbor_id",
+            part="vec_id",
+        ),
     ]
 
 
@@ -1387,34 +1299,11 @@ def _knn_graph_insert_sql() -> str:
     ]
     ctes = pre + base[1:]
     g = "gf"
-    ctes.append(_sql_score(g, "sfin"))
-    ctes.append(_sql_top_k("sfin", "gfin", G_K, keep_score=True))
+    ctes += _sql_gfin(g)
     # beam search for the new batch over the old graph
     ctes.append("queries AS (SELECT vec_id AS query_id, e FROM newids)")
-    ctes.append(_sql_entries(g))
-    ctes.append(
-        "e0 AS (SELECT q.query_id, e.node"
-        " FROM queries q CROSS JOIN entries e)"
-    )
-    ctes.append(_sql_beam("e0", "f0", qsrc="queries", qid="query_id"))
-    for i in range(1, HOPS + 1):
-        ctes.append(f"""c{i}h AS (
-  SELECT query_id, node FROM f{i - 1}
-  UNION
-  SELECT f.query_id, g.neighbor_id AS node
-  FROM f{i - 1} f JOIN {g} g ON g.vec_id = f.node
-)""")
-        ctes.append(
-            _sql_beam(f"c{i}h", f"f{i}", qsrc="queries", qid="query_id")
-        )
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""fs{HOPS} AS (
-  SELECT f.query_id, f.node AS neighbor_id, {cos} AS cosine
-  FROM f{HOPS} f
-  JOIN corpus y ON y.vec_id = f.node
-  JOIN queries q ON q.query_id = f.query_id
-)""")
-    ctes += _sql_repair_ctes(f"fs{HOPS}", "gfin")
+    ctes += _sql_search_ctes("", g, "queries", "corpus")
+    ctes += _sql_repair_ctes("fs", "gfin")
     sql = (
         "WITH " + ",\n".join(ctes)
         + """
@@ -1502,8 +1391,7 @@ def _graph_insert_policy_sql() -> str:
     ]
     ctes = pre + base
     g = "gf"
-    ctes.append(_sql_score(g, "sfin"))
-    ctes.append(_sql_top_k("sfin", "gfin", G_K, keep_score=True))
+    ctes += _sql_gfin(g)
     # batch beam-searches the OLD graph (scored against the old
     # corpus — new ids are not in it yet, mirroring insert_into_graph)
     ctes.append("bq AS (SELECT vec_id AS query_id, e FROM newids)")
@@ -1645,16 +1533,9 @@ def routed_entry_frontier(
     scored = (
         member.join(F.broadcast(routes), "cluster")
         .filter(F.col("node") != F.col("query_id"))
-        .withColumn("cosine", F.round(F.expr(_COS), 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("node").asc()
-    )
-    return (
-        scored.withColumn("er", F.row_number().over(w))
-        .filter(F.col("er") <= ROUTE_ENTRIES)
-        .select("query_id", "node")
-    )
+    return top_k(scored, ROUTE_ENTRIES, tie="node").select("query_id", "node")
 
 
 def beam_search_routed(
@@ -1663,10 +1544,7 @@ def beam_search_routed(
     cents: list[tuple[int, list[float]]],
 ) -> DataFrame:
     """Beam search starting from IVF-routed per-query entries."""
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("e1"),
-    )
+    queries, _ = split_queries(emb)
     ef = routed_entry_frontier(emb, graph, queries, cents)
     return beam_search(emb, graph, queries=queries, entry_frontier=ef)
 
@@ -1728,10 +1606,7 @@ def _routed_ctes() -> list[str]:
 )""")
     ctes += _build_q8_ctes("", "corpus")
     g = "gf"
-    ctes.append(
-        f"queries AS (SELECT vec_id AS query_id, e FROM corpus"
-        f" WHERE vec_id < {N_QUERIES})"
-    )
+    ctes.append(_SQL_QUERIES)
     d2q = _sql_d2("q.e", "c.centroid")
     ctes.append(f"""routes AS (
   SELECT query_id, cluster FROM (
@@ -1741,39 +1616,17 @@ def _routed_ctes() -> list[str]:
     FROM queries q CROSS JOIN {fin} c
   ) WHERE cr <= {ROUTE_NPROBE}
 )""")
-    cos_e = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""e0 AS (
-  SELECT query_id, node FROM (
+    ctes.append(sql_top_k("e0", f"""(
     SELECT r.query_id, a.vec_id AS node,
-      ROW_NUMBER() OVER (PARTITION BY r.query_id
-        ORDER BY {cos_e} DESC, a.vec_id ASC) AS er
+      ROUND({sql_cosine("q.e", "y.e")}, 6) AS cosine
     FROM routes r
     JOIN afd a ON a.cluster = r.cluster
     JOIN corpus y ON y.vec_id = a.vec_id
     JOIN queries q ON q.query_id = r.query_id
     WHERE a.vec_id <> r.query_id
       AND a.vec_id IN (SELECT DISTINCT vec_id FROM {g})
-  ) WHERE er <= {ROUTE_ENTRIES}
-)""")
-    ctes.append(_sql_beam("e0", "f0", "queries", "query_id", "corpus"))
-    for i in range(1, HOPS + 1):
-        ctes.append(f"""c{i}h AS (
-  SELECT query_id, node FROM f{i - 1}
-  UNION
-  SELECT f.query_id, g.neighbor_id AS node
-  FROM f{i - 1} f JOIN {g} g ON g.vec_id = f.node
-)""")
-        ctes.append(
-            _sql_beam(f"c{i}h", f"f{i}", "queries", "query_id", "corpus")
-        )
-    cos = _SQL_COS.format(q="q.e", c="y.e")
-    ctes.append(f"""fs AS (
-  SELECT f.query_id, f.node AS neighbor_id, {cos} AS cosine
-  FROM f{HOPS} f
-  JOIN corpus y ON y.vec_id = f.node
-  JOIN queries q ON q.query_id = f.query_id
-)""")
-    return ctes
+  )""", ROUTE_ENTRIES, "query_id, node", tie="node"))
+    return ctes + _sql_hop_ctes("", g, "queries", "corpus")
 
 
 def _materialize_routed(sql: str) -> str:
@@ -1788,14 +1641,10 @@ def _materialize_routed(sql: str) -> str:
 
 
 def _knn_graph_routed_sql() -> str:
+    ctes = _routed_ctes() + [sql_top_k("ranked", "fs", TOP_K)]
     sql = (
-        "WITH " + ",\n".join(_routed_ctes())
-        + f"""
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-    ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM fs
-) WHERE rank <= {TOP_K}"""
+        "WITH " + ",\n".join(ctes)
+        + "\nSELECT query_id, neighbor_id, cosine, rank FROM ranked"
     )
     return _materialize_routed(sql)
 
@@ -1884,7 +1733,7 @@ def delete_from_graph(
         .agg(F.min("cosine").alias("cosine"))  # rescore == stored 6-dp
         # value; min is the deterministic dedup pick (build convention)
     )
-    repaired = _top_k(rcand, G_K).select(
+    repaired = top_k(rcand, G_K, part="vec_id").select(
         "vec_id", "neighbor_id", "cosine", "rank"
     )
     untouched = surviving.join(affected, "vec_id", "left_anti").select(
@@ -1939,7 +1788,7 @@ def _delete_ctes() -> list[str]:
     SELECT vec_id, neighbor_id, cosine FROM bscored
   ) GROUP BY vec_id, neighbor_id
 )""")
-    ctes.append(_sql_top_k("rcand", "repaired", G_K, keep_score=True))
+    ctes.append(sql_top_k("repaired", "rcand", G_K, part="vec_id"))
     ctes.append("""gdel AS (
   SELECT vec_id, neighbor_id, cosine, rank FROM surv
   WHERE vec_id NOT IN (SELECT vec_id FROM aff)
@@ -1959,8 +1808,7 @@ def _knn_graph_delete_sql() -> str:
         "corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
         " FROM embeddings)",
     ] + _build_q8_ctes("", "corpus")
-    ctes.append(_sql_score("gf", "sfin"))
-    ctes.append(_sql_top_k("sfin", "gfin", G_K, keep_score=True))
+    ctes += _sql_gfin("gf")
     ctes += _delete_ctes()
     sql = (
         "WITH " + ",\n".join(ctes)
@@ -2026,8 +1874,7 @@ def _knn_graph_update_sql() -> str:
         "corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
         " FROM embeddings)",
     ] + _build_q8_ctes("", "corpus")
-    ctes.append(_sql_score("gf", "sfin"))
-    ctes.append(_sql_top_k("sfin", "gfin", G_K, keep_score=True))
+    ctes += _sql_gfin("gf")
     ctes += _delete_ctes()
     # re-embedded batch + the corpus with the new vectors applied
     ctes.append(

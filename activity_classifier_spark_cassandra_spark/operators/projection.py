@@ -46,11 +46,12 @@ similarity family).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
-from .similarity import N_QUERIES, TOP_K
+from .graph_ann import _sql_btop
+from .similarity import N_QUERIES, TOP_K, cosine, sql_cosine, sql_top_k, top_k
 
 JL_DIM_IN = 64
 JL_DIM_OUT = 16
@@ -94,15 +95,6 @@ def jl_project(emb: DataFrame) -> DataFrame:
     )
 
 
-_COS_INT = (
-    "round(aggregate(zip_with({a}, {b}, (p, q) -> CAST(p AS DOUBLE)"
-    " * CAST(q AS DOUBLE)), CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
-    " / (sqrt(aggregate(transform({a}, p -> CAST(p AS DOUBLE)"
-    " * CAST(p AS DOUBLE)), CAST(0.0 AS DOUBLE), (s, v) -> s + v))"
-    " * sqrt(aggregate(transform({b}, p -> CAST(p AS DOUBLE)"
-    " * CAST(p AS DOUBLE)), CAST(0.0 AS DOUBLE), (s, v) -> s + v))), 6)"
-)
-
 # exact integer squared distance between two long arrays
 _D2_INT = (
     "aggregate(zip_with({a}, {b}, (p, q) -> (p - q) * (p - q)),"
@@ -135,18 +127,11 @@ def q_jl_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("d2q", F.expr(_D2_INT.format(a="xq1", b="xq2")))
         .withColumn("d2p", F.expr(_D2_INT.format(a="y1", b="y2")))
-        .withColumn("cosine", F.expr(_COS_INT.format(a="y1", b="y2")))
+        .withColumn("cosine", F.round(cosine("y1", "y2"), 6))
         .localCheckpoint(eager=True)
     )
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    jl_top = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    jl_top = top_k(pairs, TOP_K).select("query_id", "neighbor_id")
     truth = (
         q_knn_brute(spark, sf_dir)
         .select("query_id", "neighbor_id")
@@ -205,16 +190,6 @@ def _jl_sql() -> str:
         + ")"
         for row in _SIGNS
     )
-    cos_full = (
-        "ROUND(list_dot_product(q.e, y.e)"
-        " / (sqrt(list_dot_product(q.e, q.e))"
-        " * sqrt(list_dot_product(y.e, y.e))), 6)"
-    )
-    cos_jl = (
-        "ROUND(list_dot_product(a.yd, b.yd)"
-        " / (sqrt(list_dot_product(a.yd, a.yd))"
-        " * sqrt(list_dot_product(b.yd, b.yd))), 6)"
-    )
     d2 = (
         "list_reduce(list_transform(range(1, {n} + 1),"
         " i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (s, v) -> s + v)"
@@ -236,27 +211,13 @@ proj AS MATERIALIZED (
 ),
 pairs AS MATERIALIZED (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         {d2q} AS d2q, {d2p} AS d2p, {cos_jl} AS cosine
+         {d2q} AS d2q, {d2p} AS d2p,
+         ROUND({sql_cosine("a.yd", "b.yd")}, 6) AS cosine
   FROM proj a JOIN proj b ON b.vec_id <> a.vec_id
   WHERE a.vec_id < {N_QUERIES}
 ),
-jl_top AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM pairs
-  ) WHERE rank <= {TOP_K}
-),
-btop AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        ORDER BY {cos_full} DESC, y.vec_id ASC) AS r
-    FROM corpus q JOIN corpus y ON y.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE r <= {TOP_K}
-),
+{sql_top_k("jl_top", "pairs", TOP_K, "query_id, neighbor_id")},
+{_sql_btop("corpus")},
 rec AS MATERIALIZED (
   SELECT s.query_id,
     CAST(SUM(CASE WHEN b.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)

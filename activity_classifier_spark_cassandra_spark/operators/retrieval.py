@@ -21,8 +21,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
-from .similarity import _DOT, _N1, _N2
-from .similarity import N_QUERIES as ANN_N_QUERIES
+from .similarity import (
+    _SQL_QC_COS,
+    _sql_qc_top,
+    cosine,
+    split_queries,
+    sql_cosine,
+    sql_top_k,
+    top_k,
+)
 from .text import (
     BM25_QUERY_TERMS,
     BM25_SEARCH_SQL,
@@ -59,29 +66,17 @@ def _dense_scored(emb: DataFrame) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") != DENSE_QUERY_ID).select(
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("e2")
     )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
     return (
         corpus.crossJoin(F.broadcast(q))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
         .select("doc_id", "cosine", "e2")
     )
 
 
-def _dense_rank_w():
-    """The one tie-break every single-query ranking here uses.  A
-    function, not a module constant: building a Column requires an
-    active SparkContext, which imports must not assume."""
-    return Window.orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
-
-
-def _dense_ranking(emb: DataFrame) -> DataFrame:
-    """Brute cosine top-n for the fixed dense query vector, ranked."""
-    return (
-        _dense_scored(emb)
-        .withColumn("dense_rank", F.row_number().over(_dense_rank_w()))
-        .filter(F.col("dense_rank") <= RRF_LIST_N)
-        .select("doc_id", "dense_rank")
-    )
+def _dense_top(emb: DataFrame, n: int) -> DataFrame:
+    """The dense query's top-n by cosine, ties to the lower doc_id —
+    the one ranking every single-query list here uses."""
+    return top_k(_dense_scored(emb), n, part=[], tie="doc_id")
 
 
 def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,7 +93,9 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("lex_rank", F.row_number().over(wl))
         .select("doc_id", "lex_rank")
     )
-    dense = _dense_ranking(emb)
+    dense = _dense_top(emb, RRF_LIST_N).select(
+        "doc_id", F.col("rank").alias("dense_rank")
+    )
 
     fused = (
         lex.join(dense, "doc_id", "full_outer")
@@ -130,6 +127,17 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sql_dense_top(out: str, n: int, cols: str) -> str:
+    """DuckDB twin of ``_dense_top``: CTE ``out`` keeping ``cols`` of
+    (doc_id, cosine, e, rank)."""
+    return sql_top_k(out, f"""(
+    SELECT q.vec_id AS query_id, c.vec_id AS doc_id, {_SQL_QC_COS} AS cosine,
+      CAST(c.embedding AS DOUBLE[]) AS e
+    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
+    WHERE q.vec_id = {DENSE_QUERY_ID}
+  )""", n, cols, tie="doc_id")
+
+
 HYBRID_SEARCH_RRF_SQL = f"""
 WITH lex0 AS MATERIALIZED (
   SELECT * FROM ({BM25_SEARCH_SQL})
@@ -139,21 +147,7 @@ lex AS MATERIALIZED (
     ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id ASC) AS lex_rank
   FROM lex0
 ),
-dense AS MATERIALIZED (
-  SELECT doc_id, dense_rank FROM (
-    SELECT c.vec_id AS doc_id,
-      ROW_NUMBER() OVER (ORDER BY
-        ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                               CAST(c.embedding AS DOUBLE[]))
-        / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                 CAST(q.embedding AS DOUBLE[])))
-         * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                 CAST(c.embedding AS DOUBLE[])))), 6)
-        DESC, c.vec_id ASC) AS dense_rank
-    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id = {DENSE_QUERY_ID}
-  ) WHERE dense_rank <= {RRF_LIST_N}
-),
+{_sql_dense_top("dense", RRF_LIST_N, "doc_id, rank AS dense_rank")},
 fused AS (
   SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id,
     COALESCE(l.lex_rank, 0) AS lex_rank,
@@ -201,9 +195,7 @@ def _mmr_candidates(emb: DataFrame) -> DataFrame:
     e2).  Cached — ten rows feed every greedy round; without the cache
     the lazy chain would re-run the corpus scan per round."""
     return (
-        _dense_scored(emb)
-        .withColumn("rnk", F.row_number().over(_dense_rank_w()))
-        .filter(F.col("rnk") <= MMR_CAND)
+        _dense_top(emb, MMR_CAND)
         .select(
             "doc_id",
             F.col("cosine").alias("rel"),
@@ -225,12 +217,11 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("a"), F.col("e2").alias("e1")
     )
     b = cands.select(F.col("doc_id").alias("b"), "e2")
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
     sims = (
         a.join(b, F.col("a") != F.col("b"))
         .withColumn(
             "sim_e6",
-            F.round(F.round(cos, 6) * 1e6).cast("long"),
+            F.round(F.round(cosine("e1", "e2"), 6) * 1e6).cast("long"),
         )
         .select("a", "b", "sim_e6")
     )
@@ -273,29 +264,17 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mmr_sql() -> str:
     import re as _re
 
-    cos = (
-        "ROUND(list_dot_product({x}, {y})"
-        " / (sqrt(list_dot_product({x}, {x}))"
-        " * sqrt(list_dot_product({y}, {y}))), 6)"
-    )
-    qcos = cos.format(
-        x="CAST(q.embedding AS DOUBLE[])", y="CAST(c.embedding AS DOUBLE[])"
-    )
-    pcos = cos.format(x="x.e", y="y.e")
     ctes = [
-        f"""cand AS (
-  SELECT doc_id, rel, CAST(ROUND(rel * 1000000, 0) AS BIGINT) AS rel_e6, e
-  FROM (
-    SELECT c.vec_id AS doc_id, {qcos} AS rel,
-      CAST(c.embedding AS DOUBLE[]) AS e,
-      ROW_NUMBER() OVER (ORDER BY {qcos} DESC, c.vec_id ASC) AS rnk
-    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id = {DENSE_QUERY_ID}
-  ) WHERE rnk <= {MMR_CAND}
-)""",
+        _sql_dense_top(
+            "cand",
+            MMR_CAND,
+            "doc_id, cosine AS rel,"
+            " CAST(ROUND(cosine * 1000000, 0) AS BIGINT) AS rel_e6, e",
+        ),
         f"""sims AS (
   SELECT x.doc_id AS a, y.doc_id AS b,
-    CAST(ROUND({pcos} * 1000000, 0) AS BIGINT) AS sim_e6
+    CAST(ROUND(ROUND({sql_cosine("x.e", "y.e")}, 6) * 1000000, 0) AS BIGINT)
+      AS sim_e6
   FROM cand x JOIN cand y ON y.doc_id <> x.doc_id
 )""",
         """sel1 AS (
@@ -376,15 +355,10 @@ def _ranked_lists(emb: DataFrame, bucketed: bool) -> DataFrame:
     Deliberately NOT folded into _dense_scored: this is the
     multi-query variant (per-query rank partitions, label-bucket
     candidate filter) with its own output contract."""
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qbucket"),
-        F.col("embedding").alias("e1"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("bucket"),
-        F.col("embedding").alias("e2"),
+    queries, corpus = split_queries(
+        emb,
+        (F.col("label").alias("qbucket"),),
+        (F.col("label").alias("bucket"),),
     )
     if bucketed:
         joined = corpus.join(
@@ -392,17 +366,10 @@ def _ranked_lists(emb: DataFrame, bucketed: bool) -> DataFrame:
         )
     else:
         joined = corpus.crossJoin(F.broadcast(queries))
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= NDCG_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    scored = joined.filter(
+        F.col("neighbor_id") != F.col("query_id")
+    ).withColumn("cosine", F.round(cosine("e1", "e2"), 6))
+    return top_k(scored, NDCG_K).select("query_id", "neighbor_id", "rank")
 
 
 def _decimal_sum_6dp(col):
@@ -462,35 +429,18 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ndcg_ranked_sql(bucketed: bool) -> str:
-    extra = "AND c.label = q.label" if bucketed else ""
-    return f"""
-  SELECT query_id, neighbor_id, rank FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        ROUND(
-          list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                           CAST(c.embedding AS DOUBLE[]))
-          / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                   CAST(q.embedding AS DOUBLE[])))
-           * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                   CAST(c.embedding AS DOUBLE[])))), 6)
-          DESC, c.vec_id ASC) AS rank
-    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id {extra}
-    WHERE q.vec_id < {ANN_N_QUERIES}
-  ) WHERE rank <= {NDCG_K}"""
-
-
 NDCG_EVAL_SQL = f"""
-WITH truth AS MATERIALIZED (
-  SELECT query_id, neighbor_id,
-         {NDCG_K} + 1 - rank AS rel, rank AS t_rank
-  FROM ({_ndcg_ranked_sql(False)})
-),
-approx AS MATERIALIZED (
-  SELECT query_id AS a_query_id, neighbor_id AS cand_id, rank AS a_rank
-  FROM ({_ndcg_ranked_sql(True)})
-),
+WITH {_sql_qc_top(
+    "truth",
+    f"query_id, neighbor_id, {NDCG_K} + 1 - rank AS rel, rank AS t_rank",
+    NDCG_K,
+)},
+{_sql_qc_top(
+    "approx",
+    "query_id AS a_query_id, neighbor_id AS cand_id, rank AS a_rank",
+    NDCG_K,
+    "AND c.label = q.label",
+)},
 dcg AS (
   SELECT a.a_query_id AS query_id,
     ROUND(CAST(SUM(CAST(ROUND(

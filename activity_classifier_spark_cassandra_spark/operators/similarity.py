@@ -15,6 +15,10 @@ variant.  A learned/LSH bucketing drops in the same shape.
 Vector math stays in Column expressions (zip_with + aggregate with
 double accumulation in element order) so the DuckDB oracle
 (list_dot_product over DOUBLE[]) matches bit-for-bit before rounding.
+That cosine and the ``score DESC, id ASC`` top-k ranking are spelled
+once per engine here (``cosine``/``sql_cosine``, ``top_k``/
+``sql_top_k``); every vector-search module scores and ranks through
+them.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
@@ -31,67 +35,129 @@ from .iterate import RoundLoop
 N_QUERIES = 10
 TOP_K = 5
 
-_DOT = (
-    "aggregate(zip_with(e1, e2, (x, y) ->"
-    " CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+
+def cosine(a: str, b: str) -> Column:
+    """Unrounded cosine of the array columns ``a`` and ``b``: DOUBLE
+    folds in element order, bit-equal to ``sql_cosine``."""
+    dot = (
+        f"aggregate(zip_with({a}, {b}, (x, y) ->"
+        " CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    n1, n2 = (
+        f"sqrt(aggregate({e}, CAST(0.0 AS DOUBLE),"
+        " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+        for e in (a, b)
+    )
+    return F.expr(f"({dot}) / (({n1}) * ({n2}))")
+
+
+def sql_cosine(a: str, b: str) -> str:
+    """DuckDB twin of ``cosine`` over DOUBLE[] operands."""
+    return (
+        f"(list_dot_product({a}, {b})"
+        f" / (sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b}))))"
+    )
+
+
+def top_k(
+    scored: DataFrame,
+    k: int,
+    part: str | list[str] = "query_id",
+    score: str = "cosine",
+    tie: str = "neighbor_id",
+) -> DataFrame:
+    """The first ``k`` rows of each ``part`` ranked by ``score`` DESC,
+    ``tie`` ASC, numbered 1.. in ``rank``."""
+    w = Window.partitionBy(part).orderBy(
+        F.col(score).desc(), F.col(tie).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def sql_top_k(
+    out: str,
+    scored: str,
+    k: int,
+    cols: str = "*",
+    part: str = "query_id",
+    score: str = "cosine",
+    tie: str = "neighbor_id",
+) -> str:
+    """DuckDB twin of ``top_k``: CTE ``out`` keeping ``cols`` of the
+    ranked rows of ``scored`` (a CTE name or a parenthesized query)."""
+    return f"""{out} AS (
+  SELECT {cols} FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY {part}
+      ORDER BY {score} DESC, {tie} ASC) AS rank
+    FROM {scored}
+  ) WHERE rank <= {k}
+)"""
+
+
+def split_queries(
+    emb: DataFrame,
+    q_cols: tuple[Column, ...] = (),
+    c_cols: tuple[Column, ...] = (),
+    n: int = N_QUERIES,
+) -> tuple[DataFrame, DataFrame]:
+    """(queries, corpus): the first ``n`` vectors as (query_id,
+    *q_cols, e1) and every vector as (neighbor_id, *c_cols, e2)."""
+    queries = emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"),
+        *q_cols,
+        F.col("embedding").alias("e1"),
+    )
+    corpus = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        *c_cols,
+        F.col("embedding").alias("e2"),
+    )
+    return queries, corpus
+
+
+# the rounded query-vs-corpus cosine of the oracles' ``embeddings q``
+# x ``embeddings c`` joins
+_SQL_QC_COS = "ROUND({}, 6)".format(
+    sql_cosine(
+        "CAST(q.embedding AS DOUBLE[])", "CAST(c.embedding AS DOUBLE[])"
+    )
 )
-_N1 = (
-    "sqrt(aggregate(e1, CAST(0.0 AS DOUBLE),"
-    " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-)
-_N2 = (
-    "sqrt(aggregate(e2, CAST(0.0 AS DOUBLE),"
-    " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-)
+
+
+def _sql_qc_top(
+    out: str, cols: str, k: int, on: str = "", cos: str = _SQL_QC_COS
+) -> str:
+    """CTE ``out``: each sample query's top-k over ``embeddings`` (the
+    ``q`` x ``c`` join, extra join predicate ``on``) by the rounded
+    ``cos`` fragment."""
+    return sql_top_k(out, f"""(
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS cosine
+    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id {on}
+    WHERE q.vec_id < {N_QUERIES}
+  )""", k, cols)
 
 
 def q_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for the first 10 vectors.
     Queries are broadcast; corpus is scanned once, partition-local."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("e1")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("e2")
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
+    queries, corpus = split_queries(load_table(spark, sf_dir, "embeddings"))
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k(scored, TOP_K).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
 KNN_BRUTE_SQL = f"""
-WITH scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-    ROUND(
-      list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                       CAST(c.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                               CAST(q.embedding AS DOUBLE[])))
-       * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                               CAST(c.embedding AS DOUBLE[])))), 6)
-      AS cosine
-  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}
-),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
+WITH {_sql_qc_top("ranked", "*", TOP_K)}
+SELECT query_id, neighbor_id, cosine, rank FROM ranked
 """
 
 
@@ -99,55 +165,30 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed top-3: neighbors only from the query's own coarse
     cluster (label) — the scale path: each query scores 1/k of the
     corpus.  Exact within-cluster, like a trained IVF with nprobe=1."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("bucket"),
-        F.col("embedding").alias("e1"),
+    bucket = (F.col("label").alias("bucket"),)
+    queries, corpus = split_queries(
+        load_table(spark, sf_dir, "embeddings"), bucket, bucket
     )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("bucket"),
-        F.col("embedding").alias("e2"),
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
     scored = (
         corpus.join(F.broadcast(queries), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "bucket", "neighbor_id", "cosine", "rank")
+    return top_k(scored, 3).select(
+        "query_id", "bucket", "neighbor_id", "cosine", "rank"
     )
 
 
 KNN_IVF_SQL = f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, q.label AS bucket, c.vec_id AS neighbor_id,
-    ROUND(
-      list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                       CAST(c.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                               CAST(q.embedding AS DOUBLE[])))
-       * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                               CAST(c.embedding AS DOUBLE[])))), 6)
-      AS cosine
+    {_SQL_QC_COS} AS cosine
   FROM embeddings q
   JOIN embeddings c ON c.label = q.label AND c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, bucket, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= 3
+{sql_top_k("ranked", "scored", 3)}
+SELECT query_id, bucket, neighbor_id, cosine, rank FROM ranked
 """
 
 
@@ -159,16 +200,6 @@ FROM ranked WHERE rank <= 3
 # the candidate union is disjoint — no dedup shuffle is needed before
 # the exact rescore.  tests/test_similarity.py pins that recall@5
 # strictly improves with nprobe=2 on a boundary-query clustered set.
-
-_Q_CENT_COS = (
-    "aggregate(zip_with(e1, centroid, (x, y) ->"
-    " CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    " / (sqrt(aggregate(e1, CAST(0.0 AS DOUBLE),"
-    " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    " * sqrt(aggregate(centroid, CAST(0.0 AS DOUBLE),"
-    " (acc, x) -> acc + x * x)))"
-)
-
 
 def ivf_centroids(corpus: DataFrame) -> DataFrame:
     """Per-bucket element-wise mean centroid: (bucket, centroid
@@ -200,30 +231,20 @@ def knn_ivf_multiprobe(
     rows) broadcasts against the one corpus scan — the corpus is never
     shuffled, exactly like the nprobe=1 path, and only per-query
     candidates reach the final thin top-k window."""
-    cents = ivf_centroids(corpus)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cent_cos").desc(), F.col("bucket").asc()
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cents))
-        .withColumn("cent_cos", F.expr(_Q_CENT_COS))
-        .withColumn("cent_rank", F.row_number().over(wq))
-        .filter(F.col("cent_rank") <= nprobe)
-        .select("query_id", "bucket", "e1")
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
+    cents = queries.crossJoin(F.broadcast(ivf_centroids(corpus)))
+    probes = top_k(
+        cents.withColumn("cent_cos", cosine("e1", "centroid")),
+        nprobe,
+        score="cent_cos",
+        tie="bucket",
+    ).select("query_id", "bucket", "e1")
     scored = (
         corpus.join(F.broadcast(probes), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "bucket", "neighbor_id", "cosine", "rank")
+    return top_k(scored, k).select(
+        "query_id", "bucket", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -234,14 +255,9 @@ def q_knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement is safe because the rank-2/rank-3 centroid-cosine margin
     on this data (>=7e-3 at every sf) is ~12 orders above double
     summation-order noise."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("bucket"),
-        F.col("embedding").alias("e2"),
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("e1")
+    queries, corpus = split_queries(
+        load_table(spark, sf_dir, "embeddings"),
+        c_cols=(F.col("label").alias("bucket"),),
     )
     return knn_ivf_multiprobe(corpus, queries, k=TOP_K, nprobe=2)
 
@@ -258,34 +274,20 @@ cent AS (
     GROUP BY label, pos
   ) GROUP BY label
 ),
-probes AS (
-  SELECT query_id, bucket, qe FROM (
+{sql_top_k("probes", f'''(
     SELECT q.vec_id AS query_id, c.label AS bucket, q.e AS qe,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        list_dot_product(q.e, c.centroid)
-        / (sqrt(list_dot_product(q.e, q.e))
-         * sqrt(list_dot_product(c.centroid, c.centroid))) DESC,
-        c.label ASC) AS cent_rank
+      {sql_cosine("q.e", "c.centroid")} AS cent_cos
     FROM corpus q CROSS JOIN cent c
     WHERE q.vec_id < {N_QUERIES}
-  ) WHERE cent_rank <= 2
-),
+  )''', 2, "query_id, bucket, qe", score="cent_cos", tie="bucket")},
 scored AS (
   SELECT p.query_id, p.bucket, c.vec_id AS neighbor_id,
-    ROUND(
-      list_dot_product(p.qe, c.e)
-      / (sqrt(list_dot_product(p.qe, p.qe))
-       * sqrt(list_dot_product(c.e, c.e))), 6) AS cosine
+    ROUND({sql_cosine("p.qe", "c.e")}, 6) AS cosine
   FROM probes p JOIN corpus c ON c.label = p.bucket
   WHERE c.vec_id <> p.query_id
 ),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, bucket, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= {TOP_K}
+{sql_top_k("ranked", "scored", TOP_K)}
+SELECT query_id, bucket, neighbor_id, cosine, rank FROM ranked
 """
 
 
@@ -323,26 +325,15 @@ def q_knn_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_knn_brute with the cosine computed by the Arrow-batched
     Pandas UDF instead of Column expressions — same broadcast-queries /
     single-corpus-scan / per-partition-top-k plan, same oracle."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("e1")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("e2")
-    )
+    queries, corpus = split_queries(load_table(spark, sf_dir, "embeddings"))
     cos = _cosine_pandas_udf()
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", F.round(cos(F.col("e1"), F.col("e2")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k(scored, TOP_K).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -432,20 +423,12 @@ def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.first("embedding").alias("e2"))
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("e1")
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
+    queries, _ = split_queries(emb)
     scored = cand.join(F.broadcast(queries), "query_id").withColumn(
-        "cosine", F.round(cos, 6)
+        "cosine", F.round(cosine("e1", "e2"), 6)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= LSH_TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k(scored, LSH_TOP_K).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -483,26 +466,13 @@ cand AS (
   WHERE q.vec_id < {N_QUERIES}
 ),
 scored AS (
-  SELECT cand.query_id, cand.neighbor_id,
-    ROUND(
-      list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                       CAST(c.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                               CAST(q.embedding AS DOUBLE[])))
-       * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                               CAST(c.embedding AS DOUBLE[])))), 6)
-      AS cosine
+  SELECT cand.query_id, cand.neighbor_id, {_SQL_QC_COS} AS cosine
   FROM cand
   JOIN embeddings q ON q.vec_id = cand.query_id
   JOIN embeddings c ON c.vec_id = cand.neighbor_id
 ),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= {LSH_TOP_K}
+{sql_top_k("ranked", "scored", LSH_TOP_K)}
+SELECT query_id, neighbor_id, cosine, rank FROM ranked
 """
 
 
@@ -647,30 +617,28 @@ FROM wm, UNNEST(range(1, len(e) + 1)) AS u(i)
 HARD_NEG_K = 3
 
 
+def _labelled_split(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """``split_queries`` carrying each side's label as query_label /
+    neighbor_label."""
+    label = F.col("label")
+    return split_queries(
+        load_table(spark, sf_dir, "embeddings"),
+        (label.alias("query_label"),),
+        (label.alias("neighbor_label"),),
+    )
+
+
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("e1"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("e2"),
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
+    queries, corpus = _labelled_split(spark, sf_dir)
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_label") != F.col("query_label"))
-        .withColumn("cosine", F.round(cos, 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HARD_NEG_K)
+        top_k(scored, HARD_NEG_K)
         .select(
             "query_id",
             "query_label",
@@ -686,24 +654,13 @@ HARD_NEGATIVES_SQL = f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, q.label AS query_label,
          c.vec_id AS neighbor_id, c.label AS neighbor_label,
-    ROUND(
-      list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                       CAST(c.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                               CAST(q.embedding AS DOUBLE[])))
-       * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                               CAST(c.embedding AS DOUBLE[])))), 6)
-      AS cosine
+         {_SQL_QC_COS} AS cosine
   FROM embeddings q JOIN embeddings c ON c.label <> q.label
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
+{sql_top_k("ranked", "scored", HARD_NEG_K)}
 SELECT query_id, query_label, neighbor_id, neighbor_label, cosine, rank
-FROM ranked WHERE rank <= {HARD_NEG_K}
+FROM ranked
 """
 
 
@@ -720,44 +677,31 @@ FROM ranked WHERE rank <= {HARD_NEG_K}
 # oracle reuses both CTE bodies verbatim.
 
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qbucket"),
-        F.col("embedding").alias("e1"),
+    queries, corpus = split_queries(
+        load_table(spark, sf_dir, "embeddings"),
+        (F.col("label").alias("qbucket"),),
+        (F.col("label").alias("bucket"),),
     )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("bucket"),
-        F.col("embedding").alias("e2"),
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    truth = (
+    cos = F.round(cosine("e1", "e2"), 6)
+    truth = top_k(
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            F.col("query_id").alias("t_query_id"),
-            F.col("neighbor_id").alias("t_neighbor_id"),
-        )
+        .withColumn("cosine", cos),
+        TOP_K,
+    ).select(
+        F.col("query_id").alias("t_query_id"),
+        F.col("neighbor_id").alias("t_neighbor_id"),
     )
-    approx = (
+    approx = top_k(
         corpus.join(
             F.broadcast(queries), F.col("bucket") == F.col("qbucket")
         )
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            F.col("query_id").alias("a_query_id"),
-            F.col("neighbor_id").alias("cand_id"),
-        )
+        .withColumn("cosine", cos),
+        TOP_K,
+    ).select(
+        F.col("query_id").alias("a_query_id"),
+        F.col("neighbor_id").alias("cand_id"),
     )
     return (
         truth.join(
@@ -777,39 +721,9 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RECALL_EVAL_SQL = f"""
-WITH truth AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        ROUND(
-          list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                           CAST(c.embedding AS DOUBLE[]))
-          / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                   CAST(q.embedding AS DOUBLE[])))
-           * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                   CAST(c.embedding AS DOUBLE[])))), 6)
-          DESC, c.vec_id ASC) AS rank
-    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE rank <= {TOP_K}
-),
-approx AS (
-  SELECT query_id, neighbor_id AS cand_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        ROUND(
-          list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                           CAST(c.embedding AS DOUBLE[]))
-          / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                   CAST(q.embedding AS DOUBLE[])))
-           * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                   CAST(c.embedding AS DOUBLE[])))), 6)
-          DESC, c.vec_id ASC) AS rank
-    FROM embeddings q
-    JOIN embeddings c ON c.label = q.label AND c.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE rank <= {TOP_K}
-)
+WITH {_sql_qc_top("truth", "query_id, neighbor_id", TOP_K)},
+{_sql_qc_top("approx", "query_id, neighbor_id AS cand_id", TOP_K,
+             "AND c.label = q.label")}
 SELECT t.query_id, COUNT(a.cand_id) AS n_hits,
        ROUND(COUNT(a.cand_id) / CAST({TOP_K} AS DOUBLE), 6) AS recall
 FROM truth t LEFT JOIN approx a
@@ -838,45 +752,26 @@ MRL_DIM = 16
 def q_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, n_hits, recall): recall@TOP_K of MRL_DIM-prefix
     cosine retrieval vs the full-dim brute-force truth."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("e1"),
-        F.slice(F.col("embedding"), 1, MRL_DIM).alias("m1"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("e2"),
-        F.slice(F.col("embedding"), 1, MRL_DIM).alias("m2"),
-    )
-    cos_full = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
-    cos_trunc = F.expr(
-        f"({_DOT.replace('e1', 'm1').replace('e2', 'm2')})"
-        f" / (({_N1.replace('e1', 'm1')}) * ({_N2.replace('e2', 'm2')}))"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    prefix = F.slice(F.col("embedding"), 1, MRL_DIM)
+    queries, corpus = split_queries(
+        load_table(spark, sf_dir, "embeddings"),
+        (prefix.alias("m1"),),
+        (prefix.alias("m2"),),
     )
     base = corpus.crossJoin(F.broadcast(queries)).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    truth = (
-        base.withColumn("cosine", F.round(cos_full, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            F.col("query_id").alias("t_query_id"),
-            F.col("neighbor_id").alias("t_neighbor_id"),
-        )
+    truth = top_k(
+        base.withColumn("cosine", F.round(cosine("e1", "e2"), 6)), TOP_K
+    ).select(
+        F.col("query_id").alias("t_query_id"),
+        F.col("neighbor_id").alias("t_neighbor_id"),
     )
-    approx = (
-        base.withColumn("cosine", F.round(cos_trunc, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            F.col("query_id").alias("a_query_id"),
-            F.col("neighbor_id").alias("cand_id"),
-        )
+    approx = top_k(
+        base.withColumn("cosine", F.round(cosine("m1", "m2"), 6)), TOP_K
+    ).select(
+        F.col("query_id").alias("a_query_id"),
+        F.col("neighbor_id").alias("cand_id"),
     )
     return (
         truth.join(
@@ -895,41 +790,18 @@ def q_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MRL_COS = f"""ROUND(
-          list_dot_product(CAST(q.embedding[1:{MRL_DIM}] AS DOUBLE[]),
-                           CAST(c.embedding[1:{MRL_DIM}] AS DOUBLE[]))
-          / (sqrt(list_dot_product(CAST(q.embedding[1:{MRL_DIM}] AS DOUBLE[]),
-                                   CAST(q.embedding[1:{MRL_DIM}] AS DOUBLE[])))
-           * sqrt(list_dot_product(CAST(c.embedding[1:{MRL_DIM}] AS DOUBLE[]),
-                                   CAST(c.embedding[1:{MRL_DIM}] AS DOUBLE[])))), 6)"""
+# the rounded cosine of the first MRL_DIM dimensions
+_SQL_MRL_COS = "ROUND({}, 6)".format(
+    sql_cosine(
+        f"CAST(q.embedding[1:{MRL_DIM}] AS DOUBLE[])",
+        f"CAST(c.embedding[1:{MRL_DIM}] AS DOUBLE[])",
+    )
+)
 
 MATRYOSHKA_EVAL_SQL = f"""
-WITH truth AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        ROUND(
-          list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                           CAST(c.embedding AS DOUBLE[]))
-          / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                   CAST(q.embedding AS DOUBLE[])))
-           * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                   CAST(c.embedding AS DOUBLE[])))), 6)
-          DESC, c.vec_id ASC) AS rank
-    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE rank <= {TOP_K}
-),
-approx AS (
-  SELECT query_id, neighbor_id AS cand_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        {_MRL_COS}
-          DESC, c.vec_id ASC) AS rank
-    FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) WHERE rank <= {TOP_K}
-)
+WITH {_sql_qc_top("truth", "query_id, neighbor_id", TOP_K)},
+{_sql_qc_top("approx", "query_id, neighbor_id AS cand_id", TOP_K,
+             cos=_SQL_MRL_COS)}
 SELECT t.query_id, COUNT(a.cand_id) AS n_hits,
        ROUND(COUNT(a.cand_id) / CAST({TOP_K} AS DOUBLE), 6) AS recall
 FROM truth t LEFT JOIN approx a
@@ -1170,17 +1042,13 @@ def ivf_trained_search(
     recall@k strict improvement across nprobe on ONE trained index)."""
     cents_lit = _cents_literal(cents)
 
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("e2"),
-        F.expr(_assign_expr(cents_lit)).alias("bucket"),
+    queries, corpus = split_queries(
+        emb, c_cols=(F.expr(_assign_expr(cents_lit)).alias("bucket"),),
+        n=n_queries,
     )
     probes = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("e1"),
-            F.explode(F.expr(cents_lit)).alias("c"),
+        queries.select(
+            "query_id", "e1", F.explode(F.expr(cents_lit)).alias("c")
         )
         .withColumn("d2", F.expr(_D2_FOLD.format(x="e1", c="c.c")))
         .withColumn(
@@ -1194,19 +1062,13 @@ def ivf_trained_search(
         .filter(F.col("cent_rank") <= nprobe)
         .select("query_id", F.col("c.k").alias("bucket"), "e1")
     )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
     scored = (
         corpus.join(F.broadcast(probes), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "bucket", "neighbor_id", "cosine", "rank")
+    return top_k(scored, k).select(
+        "query_id", "bucket", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -1267,23 +1129,16 @@ def _knn_ivf_trained_sql() -> str:
     WHERE v.vec_id < {N_QUERIES}
   ) WHERE cent_rank <= {TRAINED_NPROBE}
 )""")
-    ctes.append("""scored AS (
+    ctes.append(f"""scored AS (
   SELECT p.query_id, p.cluster AS bucket, a.vec_id AS neighbor_id,
-    ROUND(list_dot_product(p.qe, a.e)
-          / (sqrt(list_dot_product(p.qe, p.qe))
-           * sqrt(list_dot_product(a.e, a.e))), 6) AS cosine
+    ROUND({sql_cosine("p.qe", "a.e")}, 6) AS cosine
   FROM probes p JOIN af a ON a.cluster = p.cluster
   WHERE a.vec_id <> p.query_id
 )""")
-    ctes.append("""ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)""")
+    ctes.append(sql_top_k("ranked", "scored", TOP_K))
     sql = (
         "WITH " + ",\n".join(ctes)
-        + f"\nSELECT query_id, bucket, neighbor_id, cosine, rank"
-        f"\nFROM ranked WHERE rank <= {TOP_K}"
+        + "\nSELECT query_id, bucket, neighbor_id, cosine, rank FROM ranked"
     )
     # MATERIALIZED: same rewrite as _knn_pq_sql — the chained training
     # CTEs (corpus, c{i}, af) are multiply referenced, and DuckDB's
@@ -1352,18 +1207,14 @@ def q_knn_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1 = f"sqrt(CAST({_IDOT.format(a='q1', b='q1')} AS DOUBLE))"
     n2 = f"sqrt(CAST({_IDOT.format(a='q2', b='q2')} AS DOUBLE))"
     cos_q = F.expr(f"CAST({dq} AS DOUBLE) / (({n1}) * ({n2}))")
-    cos_exact = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
+    scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine_q", F.round(cos_q, 6))
-        .withColumn("cosine_exact", F.round(cos_exact, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine_q", "cosine_exact", "rank")
+        .withColumn("cosine_exact", F.round(cosine("e1", "e2"), 6))
+    )
+    return top_k(scored, TOP_K, score="cosine_q").select(
+        "query_id", "neighbor_id", "cosine_q", "cosine_exact", "rank"
     )
 
 
@@ -1390,19 +1241,12 @@ scored AS (
           / (sqrt(CAST(list_dot_product(a.q, a.q) AS DOUBLE))
            * sqrt(CAST(list_dot_product(b.q, b.q) AS DOUBLE))), 6)
       AS cosine_q,
-    ROUND(list_dot_product(a.e, b.e)
-          / (sqrt(list_dot_product(a.e, a.e))
-           * sqrt(list_dot_product(b.e, b.e))), 6) AS cosine_exact
+    ROUND({sql_cosine("a.e", "b.e")}, 6) AS cosine_exact
   FROM q8 a JOIN q8 b ON b.vec_id <> a.vec_id
   WHERE a.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine_q, cosine_exact, rank
-FROM ranked WHERE rank <= {TOP_K}
+{sql_top_k("ranked", "scored", TOP_K, score="cosine_q")}
+SELECT query_id, neighbor_id, cosine_q, cosine_exact, rank FROM ranked
 """
 
 
@@ -1418,22 +1262,11 @@ FROM ranked WHERE rank <= {TOP_K}
 # folds the pair into one row.  Plan shape is q_knn_brute's.
 
 def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("e1"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("e2"),
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
+    queries, corpus = _labelled_split(spark, sf_dir)
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(cosine("e1", "e2"), 6))
         .withColumn(
             "side",
             F.when(
@@ -1441,12 +1274,7 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise("neg"),
         )
     )
-    w = Window.partitionBy("query_id", "side").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    top = scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
-    )
+    top = top_k(scored, 1, part=["query_id", "side"])
     pick = lambda s, c: F.max(F.when(F.col("side") == s, F.col(c)))
     return (
         top.groupBy("query_id", "query_label")
@@ -1467,24 +1295,11 @@ WITH scored AS (
   SELECT q.vec_id AS query_id, q.label AS query_label,
          c.vec_id AS neighbor_id,
          CASE WHEN c.label = q.label THEN 'pos' ELSE 'neg' END AS side,
-    ROUND(
-      list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                       CAST(c.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                               CAST(q.embedding AS DOUBLE[])))
-       * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                               CAST(c.embedding AS DOUBLE[])))), 6)
-      AS cosine
+         {_SQL_QC_COS} AS cosine
   FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-top1 AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id, side
-                ORDER BY cosine DESC, neighbor_id ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-)
+{sql_top_k("top1", "scored", 1, part="query_id, side")}
 SELECT query_id, query_label,
   MAX(CASE WHEN side = 'pos' THEN neighbor_id END) AS positive_id,
   MAX(CASE WHEN side = 'pos' THEN cosine END) AS cos_pos,
@@ -1552,9 +1367,7 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             _assign_expr(lit2, _PQ_SLICE[2].format(e="embedding"))
         ).alias("code2"),
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("e1")
-    )
+    queries, _ = split_queries(emb)
 
     def dtab(lit: str, s: int, out: str) -> DataFrame:
         return (
@@ -1594,7 +1407,6 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id", "adc_dist", "rank")
     )
     # exact rescoring of the 50 surviving candidates only
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
     return (
         top.join(F.broadcast(queries), "query_id")
         .join(
@@ -1606,7 +1418,7 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "neighbor_id",
         )
-        .withColumn("cosine_exact", F.round(cos, 6))
+        .withColumn("cosine_exact", F.round(cosine("e1", "e2"), 6))
         .select("query_id", "neighbor_id", "adc_dist", "cosine_exact", "rank")
     )
 
@@ -1666,10 +1478,7 @@ def _knn_pq_sql() -> str:
         + ",\n".join(ctes)
         + f"""
 SELECT r.query_id, r.neighbor_id, r.adc_dist,
-  ROUND(list_dot_product(q.e, n.e)
-        / (sqrt(list_dot_product(q.e, q.e))
-         * sqrt(list_dot_product(n.e, n.e))), 6) AS cosine_exact,
-  r.rank
+  ROUND({sql_cosine("q.e", "n.e")}, 6) AS cosine_exact, r.rank
 FROM ranked r
 JOIN corpus q ON q.vec_id = r.query_id
 JOIN corpus n ON n.vec_id = r.neighbor_id
@@ -1747,22 +1556,25 @@ def ivfpq_residuals(
 
 def train_ivfpq(
     emb: DataFrame,
-    resid_out: list | None = None,
 ) -> tuple[
     list[tuple[int, list[float]]],
     list[list[tuple[int, list[float]]]],
+    DataFrame,
 ]:
-    """Coarse centroids + per-subspace residual codebooks.  The
-    residual frame is computed ONCE and cached — the two codebook
-    trainings and (via ``resid_out``) the search-side encoding all
-    read it; without the cache each Lloyd's job re-derives
-    coarse-assign + subtract over the full corpus (~10 extra scans,
-    measured dominant at the 100x probe)."""
+    """Coarse centroids, per-subspace residual codebooks and the
+    CACHED residual frame.  The residuals are computed once — the two
+    codebook trainings and the search-side encoding all read them;
+    without the cache each Lloyd's job re-derives coarse-assign +
+    subtract over the full corpus (~10 extra scans, measured dominant
+    at the 100x probe).  The caller unpersists the residual frame."""
     coarse = train_kmeans_centroids(emb, k=K_TRAIN, iters=KMEANS_ITERS)
     resid = ivfpq_residuals(emb, coarse).cache()
-    if resid_out is not None:
-        resid_out.append(resid)
-    return coarse, train_pq_codebooks(resid, k=PQ_K, iters=KMEANS_ITERS)
+    try:
+        codebooks = train_pq_codebooks(resid, k=PQ_K, iters=KMEANS_ITERS)
+    except BaseException:
+        resid.unpersist()
+        raise
+    return coarse, codebooks, resid
 
 
 def ivfpq_search(
@@ -1795,12 +1607,10 @@ def ivfpq_search(
         ).alias("code2"),
     )
     # probe the nprobe nearest lists; the query residual is per-list
+    queries, corpus = split_queries(emb, n=n_queries)
     probes = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("e1"),
-            F.explode(F.expr(clit)).alias("c"),
+        queries.select(
+            "query_id", "e1", F.explode(F.expr(clit)).alias("c")
         )
         .withColumn("d2", F.expr(_D2_FOLD.format(x="e1", c="c.c")))
         .withColumn(
@@ -1865,22 +1675,14 @@ def ivfpq_search(
         .filter(F.col("rank") <= k)
         .select("query_id", "bucket", "neighbor_id", "adc_dist", "rank")
     )
-    # exact rescore of the k survivors only
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("e1")
-    )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
-    # the SURVIVOR frame (n_queries x k rows) is the broadcast side;
-    # the corpus is scanned once and never shipped — broadcasting emb
-    # here would build the whole vector table on every executor
+    # exact rescore of the k survivors only.  The SURVIVOR frame
+    # (n_queries x k rows) is the broadcast side; the corpus is scanned
+    # once and never shipped — broadcasting emb here would build the
+    # whole vector table on every executor
     return (
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("e2"),
-        )
-        .join(F.broadcast(top), "neighbor_id")
+        corpus.join(F.broadcast(top), "neighbor_id")
         .join(F.broadcast(queries), "query_id")
-        .withColumn("cosine_exact", F.round(cos, 6))
+        .withColumn("cosine_exact", F.round(cosine("e1", "e2"), 6))
         .select(
             "query_id", "bucket", "neighbor_id", "adc_dist",
             "cosine_exact", "rank",
@@ -1894,9 +1696,15 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescore.  The DuckDB oracle replays BOTH trainings as chained
     MATERIALIZED CTEs."""
     emb = load_table(spark, sf_dir, "embeddings")
-    holder: list = []
-    coarse, codebooks = train_ivfpq(emb, resid_out=holder)
-    return ivfpq_search(emb, coarse, codebooks, resid=holder[0])
+    coarse, codebooks, resid = train_ivfpq(emb)
+    try:
+        # the top-k result is tiny: materialize it while the residual
+        # cache still stands, so the returned frame outlives the release
+        return ivfpq_search(
+            emb, coarse, codebooks, resid=resid
+        ).localCheckpoint(eager=True)
+    finally:
+        resid.unpersist()
 
 
 def _knn_ivfpq_sql() -> str:
@@ -1994,10 +1802,7 @@ def _knn_ivfpq_sql() -> str:
         + ",\n".join(ctes)
         + f"""
 SELECT r.query_id, r.bucket, r.neighbor_id, r.adc_dist,
-  ROUND(list_dot_product(q.e, n.e)
-        / (sqrt(list_dot_product(q.e, q.e))
-         * sqrt(list_dot_product(n.e, n.e))), 6) AS cosine_exact,
-  r.rank
+  ROUND({sql_cosine("q.e", "n.e")}, 6) AS cosine_exact, r.rank
 FROM ranked r
 JOIN corpus q ON q.vec_id = r.query_id
 JOIN corpus n ON n.vec_id = r.neighbor_id
@@ -2232,19 +2037,11 @@ _SIGN_PACK = (
 def q_knn_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-quantized top-5: hamming candidate scan over packed
     sign bits, exact-cosine rerank of the top-50."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("e2"),
-        F.expr(_SIGN_PACK.format(e="embedding")).alias("sig"),
-    )
-    queries = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("e1"),
-            F.expr(_SIGN_PACK.format(e="embedding")).alias("qsig"),
-        )
+    sig = F.expr(_SIGN_PACK.format(e="embedding"))
+    queries, corpus = split_queries(
+        load_table(spark, sf_dir, "embeddings"),
+        (sig.alias("qsig"),),
+        (sig.alias("sig"),),
     )
     scored = (
         corpus.join(F.broadcast(queries), F.col("neighbor_id") != F.col("query_id"))
@@ -2259,15 +2056,9 @@ def q_knn_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = scored.withColumn("hr", F.row_number().over(wh)).filter(
         F.col("hr") <= BINARY_RERANK
     )
-    cos = F.expr(f"({_DOT}) / (({_N1}) * ({_N2}))")
-    reranked = cand.withColumn("cosine", F.round(cos, 6))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "hamming", "cosine", "rank")
+    reranked = cand.withColumn("cosine", F.round(cosine("e1", "e2"), 6))
+    return top_k(reranked, TOP_K).select(
+        "query_id", "neighbor_id", "hamming", "cosine", "rank"
     )
 
 
@@ -2293,19 +2084,14 @@ cand AS MATERIALIZED (
     FROM corpus q JOIN corpus c ON c.vec_id <> q.vec_id
     WHERE q.vec_id < {N_QUERIES}
   ) WHERE hr <= {BINARY_RERANK}
-)
-SELECT query_id, neighbor_id, hamming, cosine, rank FROM (
+),
+scored AS (
   SELECT cand.query_id, cand.neighbor_id, cand.hamming,
-    ROUND(list_dot_product(q.e, c.e)
-          / (sqrt(list_dot_product(q.e, q.e))
-           * sqrt(list_dot_product(c.e, c.e))), 6) AS cosine,
-    ROW_NUMBER() OVER (PARTITION BY cand.query_id
-      ORDER BY ROUND(list_dot_product(q.e, c.e)
-          / (sqrt(list_dot_product(q.e, q.e))
-           * sqrt(list_dot_product(c.e, c.e))), 6) DESC,
-          cand.neighbor_id ASC) AS rank
+    ROUND({sql_cosine("q.e", "c.e")}, 6) AS cosine
   FROM cand
   JOIN corpus q ON q.vec_id = cand.query_id
   JOIN corpus c ON c.vec_id = cand.neighbor_id
-) WHERE rank <= {TOP_K}
+),
+{sql_top_k("ranked", "scored", TOP_K)}
+SELECT query_id, neighbor_id, hamming, cosine, rank FROM ranked
 """

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..constants import TPCH_TABLES
 
 SAMPLES_SCHEMA = T.StructType(
     [
@@ -155,18 +154,6 @@ def ts_literal(df: DataFrame, epoch_ms_value: int):
         return F.expr(f"timestamp_millis({epoch_ms_value})")
     _require_legacy_nanos(dt, "ts")
     return F.lit(epoch_ms_value * 1_000_000)  # legacy epoch nanos
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (for the SQL API)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
 
 
 def read_samples_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -8,6 +8,7 @@ import numpy as np
 from pyspark.sql import Row
 
 from activity_classifier_spark_cassandra_spark.operators import bitext as BT
+from conftest import assert_same_rows, duckdb_frame
 
 SF = "/root/testdata/sf0.001"
 
@@ -180,20 +181,6 @@ def test_bitext_corpus_matches_duckdb_oracle(spark):
     """The registry's full-corpus miner hash-matches its DuckDB replay
     (per-side Lloyd's as chained CTEs, probed-cell scans, integer
     margins)."""
-    import duckdb
-    import pandas as pd
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * "
-        f"FROM read_parquet('{SF}/embeddings.parquet')"
-    )
-    want = con.execute(BT.BITEXT_MINE_CORPUS_SQL).df()
-    con.close()
     got = BT.q_bitext_mine_corpus(spark, SF).toPandas()
-    cols = sorted(got.columns)
-    assert cols == sorted(want.columns)
-    got = got[cols].sort_values(cols).reset_index(drop=True)
-    want = want[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    assert_same_rows(got, duckdb_frame(BT.BITEXT_MINE_CORPUS_SQL, SF))
     assert len(got) > 0

@@ -3,12 +3,11 @@ oracle parity for the registered CDC / reshape / anomaly queries."""
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
 from activity_classifier_spark_cassandra_spark.operators.cdc import upsert_compact
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -40,20 +39,9 @@ def test_compaction_emits_one_row_per_key(spark):
     "name", ["q_upsert_compact", "q_unpivot", "q_zscore_anomaly"]
 )
 def test_matches_duckdb_oracle(spark, name):
-    con = duckdb.connect()
-    for t in ["orders", "lineitem", "events"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
     sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = con.execute(entrymod.oracle_sql()[name]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=1e-9, atol=1e-9)
-    con.close()
+    odf = duckdb_frame(entrymod.oracle_sql()[name], SF_DIR)
+    assert_same_rows(sdf, odf, rtol=1e-9, atol=1e-9)
 
 
 def test_snapshot_diff_classifies_all_four(spark):

@@ -11,6 +11,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from activity_classifier_spark_cassandra_spark.operators import corpus as C
+from conftest import duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -214,26 +215,17 @@ def test_pack_greedy_matches_recursive_cte_oracle(spark):
     recursive-CTE replay bin for bin — if either side's ordering,
     capacity clamp, or first-fit probe drifts, this pins it between
     driver rounds."""
-    import duckdb
-
     sdf = (
         C.q_pack_greedy(spark, SF_DIR)
         .toPandas()
         .sort_values(["domain", "bin_id"])
         .reset_index(drop=True)
     )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    )
     odf = (
-        con.execute(C.PACK_GREEDY_SQL)
-        .df()
+        duckdb_frame(C.PACK_GREEDY_SQL, SF_DIR)
         .sort_values(["domain", "bin_id"])
         .reset_index(drop=True)
     )
-    con.close()
     cols = ["domain", "bin_id", "n_docs", "bin_tokens", "min_doc_id"]
     assert list(sdf.columns) == cols and sorted(odf.columns) == sorted(cols)
     for c in cols:

@@ -3,13 +3,12 @@ oracle parity for the registered queries at sf0.001."""
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from activity_classifier_spark_cassandra_spark.operators.funnel import funnel_counts
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 MS = 1_000_000  # synthetic frames use an exact long-nanos timeline;
@@ -78,19 +77,9 @@ def test_funnel_uses_earliest_stage_event(spark):
 
 @pytest.mark.parametrize("name", ["q_funnel", "q_retention", "q_daily_active"])
 def test_matches_duckdb_oracle(spark, name):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    )
     sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = con.execute(entrymod.oracle_sql()[name]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=1e-9, atol=1e-9)
-    con.close()
+    odf = duckdb_frame(entrymod.oracle_sql()[name], SF_DIR)
+    assert_same_rows(sdf, odf, rtol=1e-9, atol=1e-9)
 
 
 def test_retention_day0_is_full_cohort(spark):

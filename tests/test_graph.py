@@ -2,13 +2,12 @@
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 
 import __spark_entry__ as entrymod
 from activity_classifier_spark_cassandra_spark.operators.graph import (
     connected_components_star,
 )
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -40,20 +39,10 @@ def test_edge_direction_is_irrelevant(spark):
 
 
 def test_matches_recursive_cte_oracle(spark):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    )
     sdf = entrymod.queries()["q_dedup_clusters"](spark, SF_DIR).toPandas()
-    odf = con.execute(entrymod.oracle_sql()["q_dedup_clusters"]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False)
-    assert len(s) > 0
-    con.close()
+    odf = duckdb_frame(entrymod.oracle_sql()["q_dedup_clusters"], SF_DIR)
+    assert_same_rows(sdf, odf)
+    assert len(sdf) > 0
 
 
 def test_star_long_chain(spark):

@@ -13,6 +13,7 @@ import pytest
 
 from activity_classifier_spark_cassandra_spark.operators import graph_ann as GA
 from activity_classifier_spark_cassandra_spark.sources.io import load_table
+from conftest import assert_same_rows, duckdb_frame
 
 SF = "/root/testdata/sf0.001"
 
@@ -358,11 +359,8 @@ def test_delta_termination_early_stop_and_oracle_parity(spark, tmp_path):
     equal running exactly that many rounds, and the DuckDB oracle —
     which replays every round but SELECTS the stopped one — must
     match bit-for-bit (the cross-engine pin of the stop rule)."""
-    import duckdb
-
     emb = _clustered_emb(spark)
-    path = str(tmp_path / "emb_clustered")
-    emb.write.mode("overwrite").parquet(path)
+    emb.write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
 
     g8 = GA.build_knn_graph_q8(emb).toPandas()
     rounds8 = GA.last_realized_rounds
@@ -381,18 +379,9 @@ def test_delta_termination_early_stop_and_oracle_parity(spark, tmp_path):
     b = g8_fixed[cols].sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT *"
-        f" FROM read_parquet('{path}/*.parquet')"
-    )
     for sdf, sql in ((g8, GA.KNN_GRAPH_Q8_SQL), (gx, GA.KNN_GRAPH_SQL)):
-        odf = con.execute(sql).df()
-        s = sdf[cols].sort_values(cols).reset_index(drop=True)
-        o = odf[cols].sort_values(cols).reset_index(drop=True)
-        pd.testing.assert_frame_equal(s, o, check_dtype=False)
-        assert len(s) > 0
-    con.close()
+        assert_same_rows(sdf, duckdb_frame(sql, str(tmp_path)))
+        assert len(sdf) > 0
 
 
 def test_delta_termination_noop_on_test_corpus(spark):

@@ -10,6 +10,7 @@ from activity_classifier_spark_cassandra_spark.sources.io import (
     read_samples_csv,
     write_features_parquet,
 )
+from conftest import assert_same_rows, duckdb_frame
 
 
 def test_read_samples_csv(spark, tmp_path):
@@ -138,9 +139,6 @@ def test_jsonl_roundtrip_matches_oracle(spark):
     the DuckDB rollup over the ORIGINAL parquet — any timestamp format
     or float precision drift in the JSON path breaks min/max ts or the
     decimal-cast checksum."""
-    import duckdb
-    import pandas as pd
-
     from activity_classifier_spark_cassandra_spark.sources.io import (
         JSONL_ROUNDTRIP_SQL,
         q_jsonl_roundtrip,
@@ -148,18 +146,7 @@ def test_jsonl_roundtrip_matches_oracle(spark):
 
     sf = "/root/testdata/sf0.001"
     sdf = q_jsonl_roundtrip(spark, sf).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * "
-        f"FROM read_parquet('{sf}/events.parquet')"
-    )
-    odf = con.execute(JSONL_ROUNDTRIP_SQL).df()
-    con.close()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False)
+    assert_same_rows(sdf, duckdb_frame(JSONL_ROUNDTRIP_SQL, sf))
 
 
 def test_schema_evolution_merge_read(spark, tmp_path):

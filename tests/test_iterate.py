@@ -25,9 +25,9 @@ from activity_classifier_spark_cassandra_spark.streaming.ann_index import (
 SF = "/root/testdata/sf0.001"
 PKG = Path(__file__).resolve().parents[1] / "activity_classifier_spark_cassandra_spark"
 
-# Raw localCheckpoint/persist/unpersist calls allowed outside the
-# helper.  None is a round loop: each materializes one frame read by
-# several plan branches, or a result that must outlive its scratch
+# Raw localCheckpoint/persist/unpersist/cache calls allowed outside
+# the helper.  None is a round loop: each materializes one frame read
+# by several plan branches, or a result that must outlive its scratch
 # input (temp dir, memory sink, released cache).
 _ALLOWED = {
     "streaming/ann_index.py": 1,  # final state, before its temp dir goes
@@ -40,14 +40,18 @@ _ALLOWED = {
     "operators/multimodal.py": 2,  # per-frame hashes
     "operators/graph.py": 1,  # triangle count's pair frame
     "operators/manifest.py": 1,  # manifest rows
-    "operators/retrieval.py": 2,  # rerank candidates (and release)
+    # MMR candidates (and release), NDCG truth ranking
+    "operators/retrieval.py": 3,
+    # IVF-PQ residuals, their release (error path, query), the result
+    "operators/similarity.py": 4,
     "sources/io.py": 4,  # round-trip results over scratch files
-    "ml/models.py": 4,  # model-fit caches, their release, the confusion matrix
+    "ml/models.py": 7,  # model-fit caches, their release, the confusion matrix
 }
 
 
 def test_no_raw_materialization_outside_round_loop():
-    raw = re.compile(r"\.(localCheckpoint|persist|unpersist)\(")
+    # ``.cache()`` but not ``RoundLoop.cache(frame)``
+    raw = re.compile(r"\.(localCheckpoint|persist|unpersist)\(|\.cache\(\)")
     counts = {}
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
@@ -70,6 +74,20 @@ def _new_blocks(sc, before: set[int], timeout: float = 30.0) -> set[int]:
     while (extra := _stored(sc) - before) and time.time() < deadline:
         time.sleep(0.2)
     return extra
+
+
+def test_ivfpq_query_releases_its_residual_cache(spark):
+    """q_knn_ivfpq trains on a cached residual frame; the only block it
+    leaves behind is its own result checkpoint, and that result stays
+    readable after the release."""
+    sc = spark.sparkContext
+    before = _stored(sc)
+    out = SIM.q_knn_ivfpq(spark, SF)
+    plan = out._jdf.queryExecution().analyzed()
+    checkpointed = plan.getClass().getSimpleName() == "LogicalRDD"
+    own = {plan.rdd().id()} if checkpointed else set()
+    assert not _new_blocks(sc, before | own)
+    assert out.count() > 0
 
 
 def test_round_loop_tags_rounds_and_frees_each_round_after_the_next(spark):

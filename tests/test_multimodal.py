@@ -16,6 +16,7 @@ from activity_classifier_spark_cassandra_spark.operators.multimodal import (
     encode_png,
     extract_media_features,
 )
+from conftest import assert_same_rows, duckdb_frame
 
 
 def _gradient_raster(w: int, h: int, ch: int) -> bytes:
@@ -225,24 +226,12 @@ def test_modality_label_usable_downstream(spark):
 def test_q_media_features_matches_closed_form(spark):
     """The registered end-to-end query (synth binary -> mapInPandas
     decode) must equal the closed-form arithmetic oracle."""
-    import duckdb
-    import pandas as pd
-
     import __spark_entry__ as entrymod
 
     sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * "
-        f"FROM read_parquet('{sf}/documents.parquet')"
-    )
     sdf = entrymod.queries()["q_media_features"](spark, sf).toPandas()
-    odf = con.execute(entrymod.oracle_sql()["q_media_features"]).df()
-    cols = sorted(sdf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False)
-    con.close()
+    odf = duckdb_frame(entrymod.oracle_sql()["q_media_features"], sf)
+    assert_same_rows(sdf, odf)
 
 
 def test_malformed_png_is_decode_failure_not_crash(spark):
@@ -377,23 +366,12 @@ def test_media_features_dispatches_wav_container(spark):
 def test_q_audio_features_matches_closed_form(spark):
     """The registered query against its DuckDB oracle at sf0.001 —
     value-exact (the driver's check, inlined)."""
-    import duckdb as _d
-    import pandas as _pd
-
     import __spark_entry__ as entrymod
 
     sf = "/root/testdata/sf0.001"
     got = entrymod.queries()["q_audio_features"](spark, sf).toPandas()
-    con = _d.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = con.execute(entrymod.oracle_sql()["q_audio_features"]).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(want.columns)
-    g = got[cols].sort_values(cols).reset_index(drop=True)
-    w = want[cols].sort_values(cols).reset_index(drop=True)
-    _pd.testing.assert_frame_equal(g, w, check_dtype=False)
+    want = duckdb_frame(entrymod.oracle_sql()["q_audio_features"], sf)
+    assert_same_rows(got, want)
 
 
 # ------------------------------------------------------ perceptual hash

@@ -53,11 +53,12 @@ BNLJ_OK = {
 
 
 def _plan(spark, name: str) -> str:
-    df = entrymod.queries()[name](spark, SF_DIR)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    return df._jdf.queryExecution().explainString(mode)
+    return _explain(entrymod.queries()[name](spark, SF_DIR))
+
+
+def _explain(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return df._jdf.queryExecution().explainString(mode.fromString("formatted"))
 
 
 def _nodes(plan: str, op: str) -> int:
@@ -247,8 +248,22 @@ def test_knn_ivfpq_broadcasts_adc_tables(spark):
     """Composed IVF-PQ: both per-(query, list) ADC tables and the
     rescore sides are broadcast into the encoded-corpus scan — the
     corpus is never shuffled onto buckets or codes, and nothing
-    degenerates to a cartesian product."""
-    plan = _plan(spark, "q_knn_ivfpq")
+    degenerates to a cartesian product.  ``q_knn_ivfpq`` returns a
+    checkpoint of this search (it releases its training cache before
+    returning), so the search plan over a trained index is read here;
+    training runs jobs."""
+    from activity_classifier_spark_cassandra_spark.operators.similarity import (
+        ivfpq_search,
+        train_ivfpq,
+    )
+    from activity_classifier_spark_cassandra_spark.sources.io import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    coarse, codebooks, resid = train_ivfpq(emb)
+    try:
+        plan = _explain(ivfpq_search(emb, coarse, codebooks, resid=resid))
+    finally:
+        resid.unpersist()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 

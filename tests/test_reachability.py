@@ -3,7 +3,8 @@ package must be reachable by name from a production root —
 __spark_entry__.py, bench.py, perfbench/ or the package's own
 module-level code — or be listed below with the reason it stays.
 Code that only tests reach is dead weight: the DuckDB oracles already
-pin semantics."""
+pin semantics.  Module-level imports and ``__all__`` lists are not
+roots: a re-export names a definition without using it."""
 
 from __future__ import annotations
 
@@ -45,6 +46,15 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
+def _reexport(node: ast.AST) -> bool:
+    """An import statement or an ``__all__`` assignment."""
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return True
+    return isinstance(node, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+    )
+
+
 def test_every_package_definition_is_reachable_from_a_production_root():
     defs: dict[str, list[ast.AST]] = {}
     roots: set[str] = set()
@@ -54,7 +64,7 @@ def test_every_package_definition_is_reachable_from_a_production_root():
                 defs.setdefault(node.name, []).append(node)
                 for d in node.decorator_list:  # run at import
                     roots |= _names(d)
-            else:
+            elif not _reexport(node):
                 roots |= _names(node)
     entry = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
     for path in entry + sorted((ROOT / "perfbench").glob("*.py")):

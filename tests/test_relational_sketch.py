@@ -4,11 +4,10 @@ is the correctness gate for the approximate family."""
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -17,19 +16,18 @@ def test_sketches_within_error_bounds(spark):
     from activity_classifier_spark_cassandra_spark.plans.relational import approx_sketch_raw
 
     got = approx_sketch_raw(spark, SF_DIR).toPandas().set_index("l_returnflag")
-    con = duckdb.connect()
-    exact = con.execute(
-        f"""
+    exact = duckdb_frame(
+        """
         SELECT l_returnflag,
                COUNT(DISTINCT l_orderkey) AS n_orders,
                quantile_cont(l_extendedprice, 0.5)  AS q50,
                quantile_cont(l_extendedprice, 0.95) AS q95,
                COUNT(*) AS n_rows
-        FROM read_parquet('{SF_DIR}/lineitem.parquet')
+        FROM lineitem
         GROUP BY l_returnflag
-        """
-    ).df().set_index("l_returnflag")
-    con.close()
+        """,
+        SF_DIR,
+    ).set_index("l_returnflag")
     assert sorted(got.index) == sorted(exact.index)
     for flag in exact.index:
         e, g = exact.loc[flag], got.loc[flag]
@@ -55,17 +53,7 @@ def test_gated_sketch_all_true(spark):
 
 @pytest.mark.parametrize("name", ["q_grouping_sets", "q_ntile_dist"])
 def test_matches_duckdb_oracle(spark, name):
-    con = duckdb.connect()
-    for t in ["lineitem", "orders"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    sdf = entrymod.queries()[name](spark, "/root/testdata/sf0.001").toPandas()
-    odf = con.execute(entrymod.oracle_sql()[name]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=1e-9, atol=1e-9)
-    con.close()
+    sf = "/root/testdata/sf0.001"
+    sdf = entrymod.queries()[name](spark, sf).toPandas()
+    odf = duckdb_frame(entrymod.oracle_sql()[name], sf)
+    assert_same_rows(sdf, odf, rtol=1e-9, atol=1e-9)

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import math
 
-import duckdb
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
@@ -24,6 +22,7 @@ from activity_classifier_spark_cassandra_spark.operators.text import (
     _sql_str,
     bpe_merges,
 )
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -243,20 +242,9 @@ def test_ann_recall_eval_bounds(spark):
     ],
 )
 def test_round6_matches_duckdb_oracle(spark, name):
-    con = duckdb.connect()
-    for t in ["orders", "documents", "embeddings", "events"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
     sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = con.execute(entrymod.oracle_sql()[name]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=1e-9, atol=1e-9)
-    con.close()
+    odf = duckdb_frame(entrymod.oracle_sql()[name], SF_DIR)
+    assert_same_rows(sdf, odf, rtol=1e-9, atol=1e-9)
 
 
 def test_bpe_tokenize_vocab_counts_hand_fixture(spark):

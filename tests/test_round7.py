@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import math
 
-import duckdb
-import pandas as pd
 
 import __spark_entry__ as entrymod
 from pyspark.sql import functions as F
@@ -17,7 +15,6 @@ from activity_classifier_spark_cassandra_spark.operators.similarity import (
     IVFPQ_NPROBE,
     K_TRAIN,
     PQ_K,
-    ivfpq_residuals,
     ivfpq_search,
     q_knn_brute,
     q_knn_ivfpq,
@@ -25,6 +22,7 @@ from activity_classifier_spark_cassandra_spark.operators.similarity import (
     train_ivfpq,
 )
 from activity_classifier_spark_cassandra_spark.sources.io import load_table
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,8 +46,10 @@ def test_ivfpq_training_is_deterministic(spark):
     """Two trainings yield identical coarse centroids and codebooks —
     the chained-CTE oracle replay depends on this."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    a_coarse, a_cbs = train_ivfpq(emb)
-    b_coarse, b_cbs = train_ivfpq(emb)
+    a_coarse, a_cbs, a_resid = train_ivfpq(emb)
+    b_coarse, b_cbs, b_resid = train_ivfpq(emb)
+    a_resid.unpersist()
+    b_resid.unpersist()
     assert a_coarse == b_coarse
     assert a_cbs == b_cbs
     assert sorted(k for k, _ in a_coarse) == list(range(K_TRAIN))
@@ -96,14 +96,14 @@ def test_ivfpq_recall_geq_pq_at_smaller_scan_budget(spark):
     # IVF-PQ scans only the nprobe probed lists
     emb = load_table(spark, SF_DIR, "embeddings")
     n_corpus = emb.count()
-    coarse, _ = train_ivfpq(emb)
+    _, _, resid = train_ivfpq(emb)
     sizes = {
         r.bucket: r.c
-        for r in ivfpq_residuals(emb, coarse)
-        .groupBy("bucket")
+        for r in resid.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
     }
+    resid.unpersist()
     worst_probe = sum(sorted(sizes.values(), reverse=True)[:IVFPQ_NPROBE])
     assert worst_probe < n_corpus
 
@@ -137,11 +137,12 @@ def test_ivfpq_residual_codes_beat_raw_codes_on_clustered_data(spark):
     )
     true5 = {i for _, i in sims[:5]}
 
-    coarse, cbs = train_ivfpq(emb)
+    coarse, cbs, resid = train_ivfpq(emb)
     got_ivfpq = {
         r.neighbor_id
         for r in ivfpq_search(emb, coarse, cbs, n_queries=1, k=5).collect()
     }
+    resid.unpersist()
 
     # PQ-only on the same frame: reuse q_knn_pq's building blocks via
     # raw-vector codebooks + full-corpus ADC (nprobe = all buckets)
@@ -169,17 +170,7 @@ def test_ivfpq_oracle_parity_sf0001(spark):
     """Spark vs DuckDB chained-MATERIALIZED-CTE replay, value-exact."""
     q = entrymod.queries()["q_knn_ivfpq"]
     sql = entrymod.oracle_sql()["q_knn_ivfpq"]
-    got = q(spark, SF_DIR).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF_DIR}/embeddings.parquet'"
-    )
-    want = con.execute(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(want.columns)
-    g = got[cols].sort_values(cols).reset_index(drop=True)
-    w = want[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(g, w, check_dtype=False)
+    assert_same_rows(q(spark, SF_DIR).toPandas(), duckdb_frame(sql, SF_DIR))
 
 
 # ------------------------------------------- retrieval: RRF + MMR

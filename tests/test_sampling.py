@@ -4,8 +4,6 @@ entity holdout, and approximate rate — plus oracle parity at sf0.001."""
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +14,7 @@ from activity_classifier_spark_cassandra_spark.operators.sampling import (
     train_test_split,
 )
 from activity_classifier_spark_cassandra_spark.sources.io import load_table
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -73,20 +72,9 @@ def test_pct_threshold_rejects_degenerate():
      "q_stratified_sample"],
 )
 def test_matches_duckdb_oracle(spark, name):
-    con = duckdb.connect()
-    for t in ["orders", "events", "documents"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
     sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = con.execute(entrymod.oracle_sql()[name]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=1e-9, atol=1e-9)
-    con.close()
+    odf = duckdb_frame(entrymod.oracle_sql()[name], SF_DIR)
+    assert_same_rows(sdf, odf, rtol=1e-9, atol=1e-9)
 
 
 def test_sample_and_complement_partition_the_keyspace(spark):

@@ -4,11 +4,10 @@ a regression is caught before a round boundary."""
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -35,27 +34,11 @@ TPCH_QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def oracle():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("name", TPCH_QUERIES)
-def test_matches_duckdb_oracle(spark, oracle, name):
+def test_matches_duckdb_oracle(spark, name):
     sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = oracle.execute(entrymod.oracle_sql()[name]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=1e-9, atol=1e-9)
+    odf = duckdb_frame(entrymod.oracle_sql()[name], SF_DIR)
+    assert_same_rows(sdf, odf, rtol=1e-9, atol=1e-9)
 
 
 def test_nonvacuous_at_driver_sf(spark):

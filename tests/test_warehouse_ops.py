@@ -5,8 +5,6 @@ queries."""
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
@@ -15,6 +13,7 @@ from activity_classifier_spark_cassandra_spark.operators.timeseries import (
     DAY_MS,
     resample_gapfill,
 )
+from conftest import assert_same_rows, duckdb_frame
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -129,20 +128,9 @@ def test_dq_audit_flags_seeded_violations(spark, tmp_path):
     ],
 )
 def test_matches_duckdb_oracle(spark, name):
-    con = duckdb.connect()
-    for t in ["orders", "lineitem", "customer", "events"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
     sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = con.execute(entrymod.oracle_sql()[name]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
-    s = sdf[cols].sort_values(cols).reset_index(drop=True)
-    o = odf[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=1e-9, atol=1e-9)
-    con.close()
+    odf = duckdb_frame(entrymod.oracle_sql()[name], SF_DIR)
+    assert_same_rows(sdf, odf, rtol=1e-9, atol=1e-9)
 
 
 def test_key_skew_profile_orders_and_bounds(spark):

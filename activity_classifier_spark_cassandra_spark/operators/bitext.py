@@ -452,15 +452,12 @@ def _bitext_corpus_sql() -> str:
             _sql_assign(f"{p}c{KMEANS_ITERS}", f"{p}af", side)
         )
     tc, sc = f"tc{KMEANS_ITERS}", f"sc{KMEANS_ITERS}"
-    d2 = _sql_d2("v.e", "c.centroid")
-    ctes.append(f"""fprobe AS (
-  SELECT src_id, cluster, e1 FROM (
+    ctes.append(sql_top_k("fprobe", f"""(
     SELECT v.vec_id AS src_id, v.e AS e1, c.cluster,
-      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY {d2} ASC, c.cluster ASC) AS cr
+      {_sql_d2("v.e", "c.centroid")} AS d2
     FROM src v CROSS JOIN {tc} c
-  ) WHERE cr <= {BT_NPROBE}
-)""")
+  )""", BT_NPROBE, "src_id, cluster, e1", "src_id", "d2", "cluster",
+        ascending=True))
     ctes.append(sql_top_k("fw", f"""(
     SELECT p.src_id, t.vec_id AS tgt_id,
       {_sql_c6("p.e1", "t.e")} AS c6
@@ -476,14 +473,11 @@ def _bitext_corpus_sql() -> str:
         "ys AS (SELECT DISTINCT b.tgt_id, t.e AS e1 FROM best b"
         " JOIN tgt t ON t.vec_id = b.tgt_id)"
     )
-    ctes.append(f"""bprobe AS (
-  SELECT tgt_id, cluster, e1 FROM (
-    SELECT y.tgt_id, y.e1, c.cluster,
-      ROW_NUMBER() OVER (PARTITION BY y.tgt_id
-        ORDER BY {_sql_d2("y.e1", "c.centroid")} ASC, c.cluster ASC) AS cr
+    ctes.append(sql_top_k("bprobe", f"""(
+    SELECT y.tgt_id, y.e1, c.cluster, {_sql_d2("y.e1", "c.centroid")} AS d2
     FROM ys y CROSS JOIN {sc} c
-  ) WHERE cr <= {BT_NPROBE}
-)""")
+  )""", BT_NPROBE, "tgt_id, cluster, e1", "tgt_id", "d2", "cluster",
+        ascending=True))
     ctes.append(sql_top_k("bw", f"""(
     SELECT p.tgt_id, s.vec_id AS cand_id,
       {_sql_c6("p.e1", "s.e")} AS c6b

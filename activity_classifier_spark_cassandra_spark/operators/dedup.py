@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ..sources.io import load_table
-from .similarity import sql_cosine
+from .similarity import sql_cosine, sql_top_k
 from .text import STOPWORDS, _TOKENIZE, _TOKENIZE_SPARK, _sql_in_list
 
 
@@ -1354,18 +1354,11 @@ def _semdedup_sql() -> str:
         ctes.append(_sql_assign(f"c{i - 1}", f"a{i}"))
         ctes.append(_sql_update(f"a{i}", f"c{i}"))
     final = f"c{KMEANS_ITERS}"
-    d2 = _sql_d2("v.e", "c.centroid")
-    ctes.append(f"""afd AS (
-  SELECT vec_id, e, cluster, d2 FROM (
-    SELECT vec_id, e, cluster, d2,
-      ROW_NUMBER() OVER (PARTITION BY vec_id
-        ORDER BY d2 ASC, cluster ASC) AS rn
-    FROM (
-      SELECT v.vec_id, v.e, c.cluster, {d2} AS d2
-      FROM corpus v CROSS JOIN {final} c
-    )
-  ) WHERE rn = 1
-)""")
+    ctes.append(sql_top_k("afd", f"""(
+    SELECT v.vec_id, v.e, c.cluster, {_sql_d2("v.e", "c.centroid")} AS d2
+    FROM corpus v CROSS JOIN {final} c
+  )""", 1, "vec_id, e, cluster, d2", "vec_id", "d2", "cluster",
+        ascending=True))
     ctes.append(f"""small AS (
   SELECT cluster FROM afd GROUP BY cluster
   HAVING COUNT(*) <= {MAX_CLUSTER_SIZE}

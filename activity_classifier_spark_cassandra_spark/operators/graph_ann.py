@@ -1502,7 +1502,7 @@ def routed_entry_frontier(
     """(query_id, node) per-query entry vertices: the ``ROUTE_ENTRIES``
     members of the query's ``ROUTE_NPROBE`` nearest cells ranked by exact
     cosine to the query (restricted to graph vertices)."""
-    from .similarity import _D2_FOLD, _cents_literal, blas_assign
+    from .similarity import _cents_literal, _route, blas_assign
 
     assigned = blas_assign(emb, cents, keep_embedding=True)
     member = assigned.join(
@@ -1512,23 +1512,8 @@ def routed_entry_frontier(
         F.col("vec_id").alias("node"),
         F.col("embedding").alias("e2"),
     )
-    routes = (
-        queries.select(
-            "query_id",
-            F.col("e1"),
-            F.explode(F.expr(_cents_literal(cents))).alias("c"),
-        )
-        .withColumn("d2", F.expr(_D2_FOLD.format(x="e1", c="c.c")))
-        .withColumn(
-            "cr",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("d2").asc(), F.col("c.k").asc()
-                )
-            ),
-        )
-        .filter(F.col("cr") <= ROUTE_NPROBE)
-        .select("query_id", F.col("c.k").alias("cluster"), "e1")
+    routes = _route(queries, _cents_literal(cents), ROUTE_NPROBE).select(
+        "query_id", F.col("c.k").alias("cluster"), "e1"
     )
     scored = (
         member.join(F.broadcast(routes), "cluster")
@@ -1595,27 +1580,15 @@ def _routed_ctes() -> list[str]:
         ctes.append(_sql_assign(f"c{i - 1}", f"a{i}"))
         ctes.append(_sql_update(f"a{i}", f"c{i}"))
     fin = f"c{KMEANS_ITERS}"
-    d2 = _sql_d2("v.e", "c.centroid")
-    ctes.append(f"""afd AS (
-  SELECT vec_id, cluster FROM (
-    SELECT v.vec_id, c.cluster,
-      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY {d2} ASC, c.cluster ASC) AS rn
-    FROM corpus v CROSS JOIN {fin} c
-  ) WHERE rn = 1
-)""")
+    ctes.append(_sql_assign(fin, "afd"))
     ctes += _build_q8_ctes("", "corpus")
     g = "gf"
     ctes.append(_SQL_QUERIES)
-    d2q = _sql_d2("q.e", "c.centroid")
-    ctes.append(f"""routes AS (
-  SELECT query_id, cluster FROM (
-    SELECT q.query_id, c.cluster,
-      ROW_NUMBER() OVER (PARTITION BY q.query_id
-        ORDER BY {d2q} ASC, c.cluster ASC) AS cr
+    ctes.append(sql_top_k("routes", f"""(
+    SELECT q.query_id, c.cluster, {_sql_d2("q.e", "c.centroid")} AS d2
     FROM queries q CROSS JOIN {fin} c
-  ) WHERE cr <= {ROUTE_NPROBE}
-)""")
+  )""", ROUTE_NPROBE, "query_id, cluster", score="d2", tie="cluster",
+        ascending=True))
     ctes.append(sql_top_k("e0", f"""(
     SELECT r.query_id, a.vec_id AS node,
       ROUND({sql_cosine("q.e", "y.e")}, 6) AS cosine

@@ -14,10 +14,16 @@ public WAVE spec) handles actual audio bytes, and a REAL baseline
 JPEG codec (``decode_jpeg`` — ITU T.81 Annex F: DQT/DHT/SOF0/SOS
 collection, canonical Huffman entropy decode with DC prediction,
 dequant + exact float64 IDCT + JFIF YCbCr->RGB; ``jpeg_dims`` for the
-header-only fast path) handles actual JPEG streams.
-``NotImplementedError`` remains only for genuinely unsupported
-surfaces (progressive/subsampled/12-bit/restart-interval JPEG,
-interlaced/palette PNG, non-PCM WAV); swapping in PIL/libav later
+header-only fast path) handles actual JPEG streams, and a REAL
+MJPEG/AVI container walk (``decode_avi_mjpeg``) handles video.
+
+One error contract: every decoder is wrapped by ``_decoder``, so an
+unsupported surface (progressive/subsampled/12-bit/restart-interval
+JPEG, interlaced/palette PNG, non-PCM WAV, non-MJPEG video) and every
+parse error a corrupt payload can raise surface as
+``NotImplementedError``.  One Arrow stage (``_decode_stage``) turns that
+error, or a null payload, into the extractor's failure value for that
+one row; the Spark task never fails.  Swapping in PIL/libav later
 changes only the marked inner functions, not the dataflow.
 
 Scale design: mapInPandas streams Arrow record batches through one
@@ -33,15 +39,18 @@ this is north-star scope per the build brief / SURVEY.md §2.12.
 
 from __future__ import annotations
 
+import functools
 import math
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources.io import load_table
 
 # ---------------------------------------------------------------- fake codec
 # 16-byte deterministic header: magic "FIMG", u16 width, u16 height,
@@ -73,14 +82,39 @@ def encode_fake_image(
     )
 
 
-def _decode_header(data: bytes) -> tuple[int, int, int, int, int] | None:
+# -------------------------------------------------- the error contract
+#
+# The parse errors a corrupt payload can raise inside a decoder: short
+# struct reads, out-of-range indexes and slices that unpack short, a
+# missing table, an int past int64, a corrupt deflate stream.
+_CORRUPT = (struct.error, IndexError, ValueError, KeyError, OverflowError, zlib.error)
+
+
+def _decoder(fn):
+    """The codec error contract: ``fn`` raises NotImplementedError for
+    an unsupported surface, and every parse error a corrupt payload
+    raises inside it is re-raised as NotImplementedError too, so one
+    bad blob fails one row (``_decode_stage``), never the Spark task."""
+
+    @functools.wraps(fn)
+    def decode(data):
+        try:
+            return fn(data)
+        except _CORRUPT as e:
+            raise NotImplementedError(
+                f"corrupt payload ({fn.__name__}): {type(e).__name__}: {e}"
+            ) from e
+
+    return decode
+
+
+@_decoder
+def _decode_header(data: bytes) -> tuple[int, int, int, int, int]:
     """Header decode, dispatching on magic bytes: the deterministic
     FIMG fixture header, a real PNG IHDR, a real RIFF/WAVE header, or
     a real JPEG SOF marker walk (stdlib parses, all from the public
     specs).  Codecs outside those four raise — that branch is the
     remaining stub."""
-    if data is None or len(data) < 8:
-        return None
     data = bytes(data)
     if data[:8] == _PNG_SIG:
         w, h, c, _depth = _png_ihdr(data)
@@ -93,10 +127,8 @@ def _decode_header(data: bytes) -> tuple[int, int, int, int, int] | None:
         w, h, c = jpeg_dims(data)
         return w, h, c, MODALITY_IMAGE, 0
     if len(data) < _HEADER_LEN:
-        return None
-    magic, w, h, c, m, sr, _crc = struct.unpack(
-        _HEADER, bytes(data[:_HEADER_LEN])
-    )
+        raise NotImplementedError("blob shorter than any media header")
+    magic, w, h, c, m, sr, _crc = struct.unpack(_HEADER, data[:_HEADER_LEN])
     if magic != _MAGIC:
         # video / other codecs are not available in this container;
         # the dataflow treats unknown blobs as undecodable.
@@ -138,9 +170,7 @@ def _png_chunks(data: bytes):
 
 def _png_ihdr(data: bytes) -> tuple[int, int, int, int]:
     """(width, height, channels, depth) from IHDR, gating unsupported
-    shapes.  Malformed containers (truncated/corrupt IHDR) raise
-    NotImplementedError too, so batch extractors record decode_ok=False
-    instead of failing the task on a struct.error."""
+    shapes and malformed (truncated/corrupt) IHDRs."""
     for typ, chunk in _png_chunks(data):
         if typ == b"IHDR":
             if len(chunk) != 13:
@@ -171,6 +201,7 @@ def _paeth(a: int, b: int, c: int) -> int:
     return c
 
 
+@_decoder
 def decode_png(data: bytes) -> tuple[int, int, int, "bytes | list[int]"]:
     """Full decode: (width, height, channels, raster) in scanline
     order, filters reconstructed.  8-bit images return the raster as
@@ -184,10 +215,7 @@ def decode_png(data: bytes) -> tuple[int, int, int, "bytes | list[int]"]:
     data = bytes(data)
     w, h, ch, depth = _png_ihdr(data)
     idat = b"".join(c for t, c in _png_chunks(data) if t == b"IDAT")
-    try:
-        raw = zlib.decompress(idat)
-    except zlib.error as e:
-        raise NotImplementedError(f"corrupt PNG pixel stream: {e}") from e
+    raw = zlib.decompress(idat)
     bpp = ch * (depth // 8)  # filter offset: BYTES per pixel
     stride = w * bpp
     if len(raw) != h * (stride + 1):
@@ -316,13 +344,12 @@ _JPEG_SOF_UNSUPPORTED = {
 _JPEG_NO_LENGTH = {0x01, 0xD8} | set(range(0xD0, 0xD8))  # TEM/SOI/RSTn
 
 
-def jpeg_dims(data: bytes) -> tuple[int, int, int]:
-    """(width, height, channels) from the first SOF0/1/2 marker of a
-    JFIF/EXIF stream.  Malformed streams (desynced markers, truncated
-    segments, missing SOF, non-8-bit precision, exotic frame types)
-    raise NotImplementedError so batch extractors record
-    decode_ok=False instead of failing the task."""
-    data = bytes(data)
+def _jpeg_segments(data: bytes):
+    """Yield (marker, payload, end) for each marker segment of a JPEG
+    stream from SOI up to EOI: fill bytes and the length-less markers
+    (TEM/SOI/RSTn) are skipped, and a segment whose length runs past
+    the buffer raises.  ``end`` is the offset just past the segment,
+    where an SOS segment's entropy-coded scan starts."""
     if data[:2] != b"\xff\xd8":
         raise NotImplementedError("not a JPEG stream")
     pos = 2
@@ -336,16 +363,29 @@ def jpeg_dims(data: bytes) -> tuple[int, int, int]:
         if marker in _JPEG_NO_LENGTH:
             pos += 2
             continue
-        if marker in (0xD9, 0xDA):
-            # EOI, or SOS before any SOF: no frame header to read
-            break
-        if pos + 4 > len(data):
-            break
-        (ln,) = struct.unpack(">H", data[pos + 2 : pos + 4])
+        if marker == 0xD9:  # EOI
+            return
+        # a length field cut short by the buffer end reads < 2 or
+        # runs past it: both are a truncated segment
+        ln = int.from_bytes(data[pos + 2 : pos + 4], "big")
         if ln < 2 or pos + 2 + ln > len(data):
             raise NotImplementedError("truncated JPEG segment")
+        end = pos + 2 + ln
+        yield marker, data[pos + 4 : end], end
+        pos = end
+
+
+@_decoder
+def jpeg_dims(data: bytes) -> tuple[int, int, int]:
+    """(width, height, channels) from the first SOF0/1/2 marker of a
+    JFIF/EXIF stream.  Malformed streams (desynced markers, truncated
+    segments, missing SOF, non-8-bit precision, exotic frame types)
+    raise NotImplementedError so batch extractors record
+    decode_ok=False instead of failing the task."""
+    for marker, seg, _end in _jpeg_segments(bytes(data)):
+        if marker == 0xDA:  # SOS before any SOF: no frame header to read
+            break
         if marker in _JPEG_SOF:
-            seg = data[pos + 4 : pos + 2 + ln]
             if len(seg) < 6:
                 raise NotImplementedError("malformed JPEG SOF header")
             precision, h, w, nc = struct.unpack(">BHHB", seg[:6])
@@ -362,7 +402,6 @@ def jpeg_dims(data: bytes) -> tuple[int, int, int]:
             raise NotImplementedError(
                 f"JPEG SOF{marker - 0xC0} frame type not supported"
             )
-        pos += 2 + ln
     raise NotImplementedError("JPEG missing SOF frame header")
 
 
@@ -420,46 +459,58 @@ MEDIA_FEATURES_SCHEMA = T.StructType(
 )
 
 
+def _decode_stage(
+    df: DataFrame,
+    schema: T.StructType,
+    rows: Callable[[int, bytes], list[tuple]],
+    failed: Callable[[int, bytes | None], list[tuple]] = lambda mid, blob: [],
+) -> DataFrame:
+    """The module's one Arrow decode stage over (media_id, content):
+    ``rows(media_id, blob)`` returns that blob's output tuples.  A null
+    blob or a NotImplementedError (the codec contract) gives
+    ``failed(media_id, blob)`` instead, so a blob's rows are
+    all-or-nothing and the task never fails.  The payload column is
+    pruned inside the stage: only ``schema``'s typed columns leave it."""
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out: list[tuple] = []
+            for mid, blob in zip(pdf["media_id"], pdf["content"]):
+                try:
+                    out += failed(mid, blob) if blob is None else rows(mid, blob)
+                except NotImplementedError:
+                    out += failed(mid, blob)
+            yield pd.DataFrame.from_records(out, columns=names)
+
+    return df.select("media_id", "content").mapInPandas(batches, schema=schema)
+
+
+def _media_features(mid: int, blob: bytes | None, hdr=None) -> list[tuple]:
+    """The MEDIA_FEATURES_SCHEMA row of one blob; no ``hdr`` is the
+    decode_ok=false row."""
+    w, h, c, m, _sr = hdr or (0, 0, 0, -1, 0)
+    # FIMG: bytes past the 16-byte fixture header; PNG, WAV and JPEG:
+    # the whole container is payload.
+    b = bytes(blob or b"")
+    container = b[:8] == _PNG_SIG or b[:4] == b"RIFF" or b[:2] == b"\xff\xd8"
+    payload = len(b) if container else max(0, len(b) - _HEADER_LEN)
+    return [(mid, w, h, c, m, w * h, payload, hdr is not None)]
+
+
 def extract_media_features(df: DataFrame) -> DataFrame:
     """Decode + feature-extract binary media via mapInPandas.
 
     Input needs (media_id, content: binary); output drops the payload
     (column pruning at the first opportunity — the whole point at
-    100 TB) and carries typed metadata only.
+    100 TB) and carries typed metadata only.  Undecodable and null
+    blobs keep their row with decode_ok=false and zeroed dims.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in MEDIA_FEATURES_SCHEMA.fieldNames()}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    hdr = _decode_header(blob)
-                except NotImplementedError:
-                    hdr = None
-                ok = hdr is not None
-                w, h, c, m, _sr = hdr if ok else (0, 0, 0, -1, 0)
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(c)
-                out["modality"].append(m)
-                out["n_pixels"].append(int(w) * int(h))
-                # FIMG: bytes past the 16-byte fixture header; PNG,
-                # WAV and JPEG: the whole container is payload.
-                is_container = blob is not None and (
-                    bytes(blob[:8]) == _PNG_SIG
-                    or bytes(blob[:4]) == b"RIFF"
-                    or bytes(blob[:2]) == b"\xff\xd8"
-                )
-                n = len(blob) if blob is not None else 0
-                out["payload_bytes"].append(
-                    n if is_container else max(0, n - _HEADER_LEN)
-                )
-                out["decode_ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "content").mapInPandas(
-        batches, schema=MEDIA_FEATURES_SCHEMA
+    return _decode_stage(
+        df,
+        MEDIA_FEATURES_SCHEMA,
+        lambda mid, blob: _media_features(mid, blob, _decode_header(blob)),
+        _media_features,
     )
 
 
@@ -503,23 +554,8 @@ def extract_phash(df: DataFrame) -> DataFrame:
     mapInPandas: REAL decode (8- or 16-bit), then aHash over the
     decoded samples.  Undecodable/null rows are skipped (same contract
     as extract_jpeg_stats); payload never leaves the Python stage."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                if blob is None:
-                    continue
-                try:
-                    _w, _h, _ch, samples = decode_png(blob)
-                except (NotImplementedError, zlib.error):
-                    continue
-                ids.append(mid)
-                hashes.append(ahash_bits(samples))
-            yield pd.DataFrame({"media_id": ids, "phash": hashes})
-
-    return df.select("media_id", "content").mapInPandas(
-        batches, schema=PHASH_SCHEMA
+    return _decode_stage(
+        df, PHASH_SCHEMA, lambda mid, blob: [(mid, ahash_bits(decode_png(blob)[3]))]
     )
 
 
@@ -536,32 +572,41 @@ def extract_phash(df: DataFrame) -> DataFrame:
 # libav) would keep the exact (bytes) -> (sr, ch, bits, frames,
 # samples) signature and leave the Spark-side dataflow untouched.
 
+def _walk_riff(data: bytes, pos: int, end: int):
+    """Yield (fourcc, listtype_or_None, payload_start, payload_size)
+    for each RIFF chunk in ``data[pos:end]`` (WAV and AVI share this
+    walk); a chunk declared longer than ``end`` raises."""
+    while pos + 8 <= end:
+        fourcc = data[pos : pos + 4]
+        (size,) = struct.unpack_from("<I", data, pos + 4)
+        body = pos + 8
+        if body + size > end:
+            raise NotImplementedError("truncated RIFF chunk")
+        if fourcc == b"LIST" or fourcc == b"RIFF":
+            yield fourcc, data[body : body + 4], body + 4, size - 4
+        else:
+            yield fourcc, None, body, size
+        pos = body + size + (size % 2)  # chunks are word-aligned
+
+
+@_decoder
 def decode_wav(data: bytes) -> tuple[int, int, int, int, list[int]]:
     """Full decode: (sample_rate, channels, bits, n_frames, samples)
     where samples are interleaved ints centered on 0 (8-bit values are
-    shifted by -128 per the spec's unsigned convention)."""
+    shifted by -128 per the spec's unsigned convention).  A chunk
+    declared longer than the file (a truncated data chunk above all)
+    flags the blob instead of decoding a silently shorter clip."""
     data = bytes(data)
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise NotImplementedError("not a RIFF/WAVE container")
-    pos, fmt, raw = 12, None, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + ln]
+    fmt = raw = None
+    for cid, _ltype, body, size in _walk_riff(data, 12, len(data)):
         if cid == b"fmt ":
-            if len(body) < 16:
+            if size < 16:
                 raise NotImplementedError("malformed WAV fmt chunk")
-            fmt = struct.unpack("<HHIIHH", body[:16])
+            fmt = struct.unpack("<HHIIHH", data[body : body + 16])
         elif cid == b"data":
-            # a declared-but-truncated data chunk must FLAG, not decode
-            # as a silently shorter clip (decode_ok=false downstream,
-            # same contract as the fmt check above)
-            if len(body) < ln:
-                raise NotImplementedError(
-                    f"truncated WAV data chunk ({len(body)} < {ln} bytes)"
-                )
-            raw = body
-        pos += 8 + ln + (ln & 1)  # chunks are word-aligned
+            raw = data[body : body + size]
     if fmt is None or raw is None:
         raise NotImplementedError("WAV missing fmt/data chunk")
     audio_format, channels, sample_rate, _brate, _balign, bits = fmt
@@ -630,40 +675,31 @@ def extract_wav_stats(df: DataFrame) -> DataFrame:
     the derived doubles are single correctly-rounded IEEE ops — the
     closed-form oracle reproduces them bit-for-bit."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in WAV_STATS_SCHEMA.fieldNames()}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                if blob is None:
-                    continue
-                try:
-                    sr, ch, bits, n_frames, samples = decode_wav(blob)
-                except NotImplementedError:
-                    continue
-                n = len(samples)
-                ssum = sum(samples)
-                ssq = sum(v * v for v in samples)
-                out["media_id"].append(mid)
-                out["sample_rate"].append(sr)
-                out["channels"].append(ch)
-                out["bits"].append(bits)
-                out["n_frames"].append(n_frames)
-                out["duration_ms"].append(
-                    round(n_frames * 1000.0 / sr, 6) if sr else 0.0
-                )
-                out["mean_sample"].append(round(ssum / n, 6) if n else 0.0)
-                out["rms"].append(
-                    round(math.sqrt(ssq / n), 6) if n else 0.0
-                )
-                out["peak"].append(max(abs(v) for v in samples) if n else 0)
-            yield pd.DataFrame(out)
+    def rows(mid: int, blob: bytes) -> list[tuple]:
+        sr, ch, bits, n_frames, samples = decode_wav(blob)
+        n = len(samples)
+        return [(
+            mid, sr, ch, bits, n_frames,
+            round(n_frames * 1000.0 / sr, 6) if sr else 0.0,
+            round(sum(samples) / n, 6) if n else 0.0,
+            round(math.sqrt(sum(v * v for v in samples) / n), 6) if n else 0.0,
+            max(abs(v) for v in samples) if n else 0,
+        )]
 
-    return df.select("media_id", "content").mapInPandas(
-        batches, schema=WAV_STATS_SCHEMA
-    )
+    return _decode_stage(df, WAV_STATS_SCHEMA, rows)
 
 
 # ------------------------------------------------------------ query
+def _synth_media(spark: SparkSession, sf_dir: str, udf, *cols: str) -> DataFrame:
+    """(media_id, content) per document: the pandas UDF ``udf`` over
+    the named ``documents`` columns synthesizes each blob, so every
+    decoded field is closed-form arithmetic on the document row."""
+    return load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("media_id"),
+        udf(*map(F.col, cols)).alias("content"),
+    )
+
+
 @F.pandas_udf(T.BinaryType())
 def _encode_media_udf(doc_id: pd.Series, n_chars: pd.Series) -> pd.Series:
     """Deterministic in-query media synthesis: dims derived from the
@@ -691,13 +727,9 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every field from the same arithmetic on (doc_id,
     n_chars), so a wrong header parse, a lost batch, or a truncated
     payload all hash-mismatch."""
-    from ..sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_media_udf(F.col("doc_id"), F.col("n_chars")).alias("content"),
+    return extract_media_features(
+        _synth_media(spark, sf_dir, _encode_media_udf, "doc_id", "n_chars")
     )
-    return extract_media_features(docs)
 
 
 MEDIA_FEATURES_SQL = """
@@ -738,15 +770,9 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/RMS are single correctly-rounded IEEE ops and the closed-form
     oracle matches bit-for-bit — a wrong chunk walk, byte order, or
     sign convention all hash-mismatch."""
-    from ..sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_audio_udf(F.col("doc_id"), F.col("n_chars")).alias(
-            "content"
-        ),
+    return extract_wav_stats(
+        _synth_media(spark, sf_dir, _encode_audio_udf, "doc_id", "n_chars")
     )
-    return extract_wav_stats(docs)
 
 
 AUDIO_FEATURES_SQL = """
@@ -824,7 +850,6 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join is the banded equi-join, never all-pairs.  This is the
     multimodal analogue of q_simhash_near_dup: swap the synthesis UDF
     for a real image column and the pipeline is production-shaped."""
-    from ..sources.io import load_table
     from .dedup import (
         SIMHASH_BAND_BITS,
         SIMHASH_BANDS,
@@ -832,10 +857,7 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shared,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_phash_png_udf(F.col("doc_id")).alias("content"),
-    )
+    docs = _synth_media(spark, sf_dir, _encode_phash_png_udf, "doc_id")
     sigs = _shared(extract_phash(docs))
     bands = sigs.select(
         "media_id",
@@ -946,13 +968,9 @@ def q_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata.  The oracle recomputes every field — including which
     rows are truncated and must surface decode_ok=false with zeroed
     dims — from the same arithmetic on (doc_id, n_chars)."""
-    from ..sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_jpeg_udf(F.col("doc_id"), F.col("n_chars")).alias("content"),
+    return extract_media_features(
+        _synth_media(spark, sf_dir, _encode_jpeg_udf, "doc_id", "n_chars")
     )
-    return extract_media_features(docs)
 
 
 # payload_bytes: JPEG is a container (whole-blob payload, same rule
@@ -1327,6 +1345,7 @@ def encode_jpeg_baseline(pixels: "np.ndarray", ycbcr: bool = False) -> bytes:
     return out
 
 
+@_decoder
 def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     """REAL baseline JPEG pixel decode (T.81 Annex F): returns
     (width, height, channels, raster) with the raster row-major,
@@ -1334,57 +1353,31 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     Unsupported surfaces (progressive, subsampled chroma, restart
     intervals, 12-bit, arithmetic coding) raise NotImplementedError —
     the decode_ok=False contract shared by every codec here.  That
-    contract covers CORRUPT streams too: any parse error a malformed
-    segment can produce (short SOF/SOS, unknown component id in a
-    scan, bit-reader overrun, a corrupt DHT whose DC category builds a
-    magnitude past int64) is re-raised as NotImplementedError so one
-    bad file drops one row instead of failing the Spark task."""
+    contract covers CORRUPT streams too (``_decoder``): any parse error
+    a malformed segment can produce (short SOF/SOS, unknown component
+    id in a scan, bit-reader overrun, a corrupt DHT whose DC category
+    builds a magnitude past int64) is re-raised as NotImplementedError
+    so one bad file drops one row instead of failing the Spark task.
+    Failures are never cached."""
     data = bytes(data)
     cacheable = len(data) <= _CODEC_CACHE_MAX_BYTES
     if cacheable:
         hit = _cache_get(_DEC_CACHE, data, _CACHE_STATS["decode"])
         if hit is not None:
             return hit
-    try:
-        out = _decode_jpeg_checked(data)
-    except NotImplementedError:
-        raise
-    except (
-        struct.error, IndexError, ValueError, KeyError, OverflowError
-    ) as e:
-        raise NotImplementedError(f"corrupt JPEG stream: {e}") from e
+    out = _decode_jpeg_checked(data)
     if cacheable and len(out[3]) <= _CODEC_CACHE_MAX_BYTES:
         _cache_put(_DEC_CACHE, data, out)
     return out
 
 
 def _decode_jpeg_checked(data: bytes) -> tuple[int, int, int, bytes]:
-    if data[:2] != b"\xff\xd8":
-        raise NotImplementedError("not a JPEG stream")
     qts: dict[int, list[int]] = {}
     dc_tabs: dict[int, dict] = {}
     ac_tabs: dict[int, dict] = {}
     frame = None
     comps: list[tuple[int, int, int]] = []  # (comp_id, qt_id)
-    pos = 2
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise NotImplementedError("desynced JPEG marker stream")
-        marker = data[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker in _JPEG_NO_LENGTH:
-            pos += 2
-            continue
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(data):
-            raise NotImplementedError("truncated JPEG segment")
-        (ln,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        if ln < 2 or pos + 2 + ln > len(data):
-            raise NotImplementedError("truncated JPEG segment")
-        seg = data[pos + 4 : pos + 2 + ln]
+    for marker, seg, end in _jpeg_segments(data):
         if marker == 0xDB:
             p = 0
             while p < len(seg):
@@ -1465,8 +1458,7 @@ def _decode_jpeg_checked(data: bytes) -> tuple[int, int, int, bytes]:
             w, h, nc = frame
             if ns != nc:
                 raise NotImplementedError("non-interleaved scan")
-            return _decode_scan(data, pos + 2 + ln, w, h, nc, scan_tabs)
-        pos += 2 + ln
+            return _decode_scan(data, end, w, h, nc, scan_tabs)
     raise NotImplementedError("JPEG missing SOS scan")
 
 
@@ -1706,15 +1698,20 @@ def _decode_scan(
 # a wrong code table, diff sign, or IDCT constant mismatches the hash.
 
 
+def _flat_frame(base: int, mod: int) -> "np.ndarray":
+    """16x16 grayscale fixture frame of four flat 8x8 blocks in
+    row-major block order, block b at 128 + 2·(((base + 17·b) % mod) -
+    mod/2): even offsets from 128, so the frame decodes exactly."""
+    v = [128 + 2 * (((base + 17 * b) % mod) - mod // 2) for b in range(4)]
+    return np.array(v, dtype=np.uint8).reshape(2, 2).repeat(8, 0).repeat(8, 1)
+
+
 @F.pandas_udf(T.BinaryType())
 def _encode_jpeg_px_udf(doc_id: pd.Series, n_chars: pd.Series) -> pd.Series:
     out = []
     for d, n in zip(doc_id, n_chars):
         d, n = int(d), int(n)
-        img = np.zeros((16, 16), dtype=np.uint8)
-        for b, (by, bx) in enumerate([(0, 0), (0, 8), (8, 0), (8, 8)]):
-            v = 128 + 2 * (((d * 31 + b * 17 + n) % 128) - 64)
-            img[by : by + 8, bx : bx + 8] = v
+        img = _flat_frame(d * 31 + n, 128)
         if d % 3 != 0:
             out.append(encode_jpeg_baseline(img))
         else:
@@ -1738,31 +1735,16 @@ def extract_jpeg_stats(df: DataFrame) -> DataFrame:
     payload pruned inside the Python stage, only typed scalars leave
     it, and undecodable rows drop."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in PNG_STATS_SCHEMA.fieldNames()}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                if blob is None:
-                    continue
-                try:
-                    w, h, ch, raster = decode_jpeg(blob)
-                except NotImplementedError:
-                    continue
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["n_pixels"].append(w * h)
-                out["mean_value"].append(
-                    sum(raster) / len(raster) if raster else 0.0
-                )
-                out["min_value"].append(min(raster) if raster else 0)
-                out["max_value"].append(max(raster) if raster else 0)
-            yield pd.DataFrame(out)
+    def rows(mid: int, blob: bytes) -> list[tuple]:
+        w, h, ch, raster = decode_jpeg(blob)
+        return [(
+            mid, w, h, ch, w * h,
+            sum(raster) / len(raster) if raster else 0.0,
+            min(raster) if raster else 0,
+            max(raster) if raster else 0,
+        )]
 
-    return df.select("media_id", "content").mapInPandas(
-        batches, schema=PNG_STATS_SCHEMA
-    )
+    return _decode_stage(df, PNG_STATS_SCHEMA, rows)
 
 
 def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1770,15 +1752,9 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG synthesis (Arrow pandas UDF) -> real T.81 entropy decode ->
     per-image raster stats.  Zero shuffle: both stages are
     partition-local maps; the blob never leaves the Python workers."""
-    from ..sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_jpeg_px_udf(F.col("doc_id"), F.col("n_chars")).alias(
-            "content"
-        ),
+    return extract_jpeg_stats(
+        _synth_media(spark, sf_dir, _encode_jpeg_px_udf, "doc_id", "n_chars")
     )
-    return extract_jpeg_stats(docs)
 
 
 JPEG_DECODE_SQL = """
@@ -1844,12 +1820,9 @@ GROUP BY doc_id, is_color
 # walking, no full-video decode), and only (media_id, frame_idx,
 # stats) rows ever shuffle.
 
-_struct = struct  # module-top import
-
-
 def _riff_chunk(fourcc: bytes, payload: bytes) -> bytes:
     pad = b"\x00" if len(payload) % 2 else b""
-    return fourcc + _struct.pack("<I", len(payload)) + payload + pad
+    return fourcc + struct.pack("<I", len(payload)) + payload + pad
 
 
 def _riff_list(listtype: bytes, payload: bytes) -> bytes:
@@ -1866,7 +1839,7 @@ def encode_avi_mjpeg(
     ``handler`` other than MJPG builds a structurally valid file the
     DECODER must refuse (the codec-gate fixture)."""
     n = len(frames)
-    avih = _struct.pack(
+    avih = struct.pack(
         "<14I",
         1_000_000 // 10,  # dwMicroSecPerFrame
         0, 0, 0,           # maxbytes/sec, padding, flags
@@ -1877,7 +1850,7 @@ def encode_avi_mjpeg(
     strh = (
         b"vids"
         + handler
-        + _struct.pack(
+        + struct.pack(
             "<IHHIIIIIIII4H",
             0, 0, 0, 0,        # flags, priority, language, initialframes
             1, 10,             # dwScale / dwRate
@@ -1886,7 +1859,7 @@ def encode_avi_mjpeg(
             0, 0, width, height,           # rcFrame
         )
     )
-    strf = _struct.pack(
+    strf = struct.pack(
         "<IiiHH4sIiiII",
         40, width, height, 1, 24, handler, width * height * 3, 0, 0, 0, 0,
     )
@@ -1903,27 +1876,15 @@ def encode_avi_mjpeg(
     return _riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
 
-def _walk_riff(data: bytes, pos: int, end: int):
-    """Yield (fourcc, listtype_or_None, payload_start, payload_size)."""
-    while pos + 8 <= end:
-        fourcc = data[pos : pos + 4]
-        (size,) = _struct.unpack_from("<I", data, pos + 4)
-        body = pos + 8
-        if body + size > end:
-            raise NotImplementedError("avi: truncated chunk")
-        if fourcc == b"LIST" or fourcc == b"RIFF":
-            yield fourcc, data[body : body + 4], body + 4, size - 4
-        else:
-            yield fourcc, None, body, size
-        pos = body + size + (size % 2)
-
-
+@_decoder
 def decode_avi_mjpeg(data: bytes) -> tuple[int, int, int, list[bytes]]:
     """(width, height, n_frames_declared, jpeg_frames) from an MJPEG
     AVI.  Raises NotImplementedError for anything this pure-python
     path cannot honestly decode: non-AVI RIFF, truncated chunks, a
     video stream whose handler is not MJPG, or frame chunks that are
-    not JPEG (extractors surface those rows as decode_ok=false)."""
+    not JPEG, and (through ``_decoder``) a corrupt header such as an
+    ``avih`` shorter than its 56 bytes (extractors surface those rows
+    as decode_ok=false)."""
     data = bytes(data)
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise NotImplementedError("avi: not a RIFF/AVI stream")
@@ -1937,7 +1898,7 @@ def decode_avi_mjpeg(data: bytes) -> tuple[int, int, int, list[bytes]]:
             if f2 == b"LIST" and l2 == b"hdrl":
                 for f3, l3, b3, s3 in _walk_riff(data, b2, b2 + s2):
                     if f3 == b"avih":
-                        vals = _struct.unpack_from("<14I", data, b3)
+                        vals = struct.unpack("<14I", data[b3 : b3 + s3][:56])
                         total, width, height = vals[4], vals[8], vals[9]
                     elif f3 == b"LIST" and l3 == b"strl":
                         for f4, _l4, b4, s4 in _walk_riff(data, b3, b3 + s3):
@@ -1971,6 +1932,14 @@ VIDEO_FRAME_SCHEMA = T.StructType(
     ]
 )
 
+VIDEO_PHASH_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("phash", T.LongType()),
+    ]
+)
+
 VIDEO_N_FRAMES = 8      # synthesized frames per clip
 VIDEO_SAMPLE_EVERY = 3  # keep frames 0, 3, 6 — sampling BEFORE decode
 
@@ -1981,37 +1950,20 @@ def extract_video_frame_stats(df: DataFrame) -> DataFrame:
     frame, real JPEG decode of only those, mean over the decoded raster.  An
     undecodable container (wrong codec, truncation) surfaces ONE
     decode_ok=false row with zeroed stats — the row is preserved, the
-    task never fails."""
+    task never fails.  A null blob, or a clip with any sampled frame
+    that fails to decode, surfaces that same single row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in VIDEO_FRAME_SCHEMA.fieldNames()}
+    def rows(mid: int, blob: bytes) -> list[tuple]:
+        frames = decode_avi_mjpeg(blob)[3]
+        out = []
+        for idx in range(0, len(frames), VIDEO_SAMPLE_EVERY):
+            fw, fh, _ch, raster = decode_jpeg(frames[idx])
+            mean = sum(raster) / len(raster) if raster else 0.0
+            out.append((mid, idx, fw, fh, mean, True))
+        return out
 
-            def emit(mid, idx, w, h, mean, ok):
-                out["media_id"].append(mid)
-                out["frame_idx"].append(idx)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_value"].append(mean)
-                out["decode_ok"].append(ok)
-
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                if blob is None:
-                    continue
-                try:
-                    w, h, _total, frames = decode_avi_mjpeg(blob)
-                    for idx in range(0, len(frames), VIDEO_SAMPLE_EVERY):
-                        fw, fh, _ch, raster = decode_jpeg(frames[idx])
-                        mean = (
-                            sum(raster) / len(raster) if raster else 0.0
-                        )
-                        emit(mid, idx, fw, fh, mean, True)
-                except NotImplementedError:
-                    emit(mid, -1, 0, 0, 0.0, False)
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "content").mapInPandas(
-        batches, schema=VIDEO_FRAME_SCHEMA
+    return _decode_stage(
+        df, VIDEO_FRAME_SCHEMA, rows, lambda mid, blob: [(mid, -1, 0, 0, 0.0, False)]
     )
 
 
@@ -2026,13 +1978,10 @@ def _encode_avi_udf(doc_id: pd.Series, n_chars: pd.Series) -> pd.Series:
     out = []
     for d, n in zip(doc_id, n_chars):
         d, n = int(d), int(n)
-        frames = []
-        for f in range(VIDEO_N_FRAMES):
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for b, (by, bx) in enumerate([(0, 0), (0, 8), (8, 0), (8, 8)]):
-                v = 128 + 2 * (((d * 31 + f * 23 + b * 17 + n) % 128) - 64)
-                img[by : by + 8, bx : bx + 8] = v
-            frames.append(encode_jpeg_baseline(img))
+        frames = [
+            encode_jpeg_baseline(_flat_frame(d * 31 + f * 23 + n, 128))
+            for f in range(VIDEO_N_FRAMES)
+        ]
         handler = b"XVID" if d % 7 == 0 else b"MJPG"
         out.append(encode_avi_mjpeg(frames, 16, 16, handler=handler))
     return pd.Series(out)
@@ -2044,13 +1993,9 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     every-3rd-frame REAL JPEG decode -> per-frame raster stats, with
     the wrong-codec path surfacing decode_ok=false rows.  Zero
     shuffle: both stages are partition-local maps."""
-    from ..sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_avi_udf(F.col("doc_id"), F.col("n_chars")).alias("content"),
+    return extract_video_frame_stats(
+        _synth_media(spark, sf_dir, _encode_avi_udf, "doc_id", "n_chars")
     )
-    return extract_video_frame_stats(docs)
 
 
 VIDEO_FRAMES_SQL = f"""
@@ -2104,67 +2049,48 @@ _VID_MASK0 = sum(1 << j for j in range(PHASH_BITS) if (j % 16) < 8)
 _VID_MASK1 = sum(1 << j for j in range(PHASH_BITS) if (j % 16) >= 8)
 
 
+def _page_clip(d: int, trim: int) -> bytes:
+    """MJPEG/AVI of page d DIV 3's clip content at brightness
+    +2·(d % 3), its first ``trim`` frames dropped (output frame i
+    carries content frame i + trim)."""
+    page, delta = d // 3, 2 * (d % 3)
+    frames = [
+        encode_jpeg_baseline(_flat_frame(page * 31 + f * 23, 124) + delta)
+        for f in range(trim, VIDEO_N_FRAMES)
+    ]
+    return encode_avi_mjpeg(frames, 16, 16)
+
+
 @F.pandas_udf(T.BinaryType())
 def _encode_avi_dup_udf(doc_id: pd.Series) -> pd.Series:
     """Re-encode synthesis: every 3 consecutive doc_ids carry the SAME
     clip content (pixels derive from the page = doc_id DIV 3), each
     copy at a different brightness (+2·(doc_id%3) — invisible to
     aHash, visible to any byte-level hash)."""
-    out = []
-    for d in doc_id:
-        d = int(d)
-        page, delta = d // 3, 2 * (d % 3)
-        frames = []
-        for f in range(VIDEO_N_FRAMES):
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for b, (by, bx) in enumerate([(0, 0), (0, 8), (8, 0), (8, 8)]):
-                v = 128 + 2 * (((page * 31 + f * 23 + b * 17) % 124) - 62)
-                img[by : by + 8, bx : bx + 8] = v + delta
-            frames.append(encode_jpeg_baseline(img))
-        out.append(encode_avi_mjpeg(frames, 16, 16))
-    return pd.Series(out)
+    return pd.Series([_page_clip(int(d), 0) for d in doc_id])
 
 
 def extract_video_phash(df: DataFrame) -> DataFrame:
     """(media_id, frame_idx, phash) over (media_id, content) MJPEG/AVI
     rows: container walk + real per-frame decode + aHash, one Arrow
     stage.  Undecodable containers are skipped (extract_video_frame_
-    stats is the row-preserving audit; this is the dedup feed)."""
+    stats is the row-preserving audit; this is the dedup feed): a clip
+    with any frame that fails to decode gives no rows at all."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, hashes = [], [], []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                if blob is None:
-                    continue
-                try:
-                    _w, _h, _t, frames = decode_avi_mjpeg(blob)
-                    for i, fr in enumerate(frames):
-                        _fw, _fh, _ch, raster = decode_jpeg(fr)
-                        ids.append(mid)
-                        idxs.append(i)
-                        hashes.append(ahash_bits(raster))
-                except NotImplementedError:
-                    continue
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "phash": hashes}
-            )
+    def rows(mid: int, blob: bytes) -> list[tuple]:
+        frames = decode_avi_mjpeg(blob)[3]
+        return [
+            (mid, i, ahash_bits(decode_jpeg(fr)[3]))
+            for i, fr in enumerate(frames)
+        ]
 
-    return df.select("media_id", "content").mapInPandas(
-        batches,
-        schema="media_id long, frame_idx int, phash long",
-    )
+    return _decode_stage(df, VIDEO_PHASH_SCHEMA, rows)
 
 
 def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, sig, keep): clip-signature dedup over the re-encode
     synthesis — keep is TRUE for the lowest media_id per signature."""
-    from ..sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_avi_dup_udf(F.col("doc_id")).alias("content"),
-    )
+    docs = _synth_media(spark, sf_dir, _encode_avi_dup_udf, "doc_id")
     # sig feeds both the firsts aggregate and the join-back; the two
     # plan branches cannot share the expensive encode+decode Arrow
     # stage (column pruning specializes each branch below the
@@ -2314,21 +2240,7 @@ def _encode_avi_trim_udf(doc_id: pd.Series) -> pd.Series:
     output frame i carries content frame i+1).  The full-sequence
     signature provably misses variant 2 (different frame count, every
     frame_idx re-aligned); the shingle band catches it."""
-    out = []
-    for d in doc_id:
-        d = int(d)
-        page, variant = d // 3, d % 3
-        delta = 2 * variant
-        trim = 1 if variant == 2 else 0
-        frames = []
-        for f in range(trim, VIDEO_N_FRAMES):
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for b, (by, bx) in enumerate([(0, 0), (0, 8), (8, 0), (8, 8)]):
-                v = 128 + 2 * (((page * 31 + f * 23 + b * 17) % 124) - 62)
-                img[by : by + 8, bx : bx + 8] = v + delta
-            frames.append(encode_jpeg_baseline(img))
-        out.append(encode_avi_mjpeg(frames, 16, 16))
-    return pd.Series(out)
+    return pd.Series([_page_clip(int(d), int(d % 3 == 2)) for d in doc_id])
 
 
 def q_video_near_dup_shingle(
@@ -2336,12 +2248,7 @@ def q_video_near_dup_shingle(
 ) -> DataFrame:
     """(media_id, first_id, keep): shingle-banded clip dedup over the
     re-cut synthesis — trimmed copies collapse onto their source."""
-    from ..sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        _encode_avi_trim_udf(F.col("doc_id")).alias("content"),
-    )
+    docs = _synth_media(spark, sf_dir, _encode_avi_trim_udf, "doc_id")
     # video_shingle_dedup consumes the per-frame hash frame in three
     # plan branches (shingle window -> bucket_min + clip_min, plus the
     # clip list); plan branches cannot share an expression, so without

@@ -421,12 +421,18 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anchor on IDCG (every query has truth rows): a query whose
     # bucketed ranking is EMPTY (singleton label) must surface as
     # ndcg = 0, not silently vanish and inflate the average
-    return (
-        idcg.join(F.broadcast(dcg), "query_id", "left")
-        .withColumn("dcg", F.coalesce(F.col("dcg"), F.lit(0.0)))
-        .withColumn("ndcg", F.round(F.col("dcg") / F.col("idcg"), 6))
-        .select("query_id", "dcg", "idcg", "ndcg")
-    )
+    try:
+        # one row per query: materialize it while the truth ranking
+        # still stands, so the returned frame outlives the release
+        return (
+            idcg.join(F.broadcast(dcg), "query_id", "left")
+            .withColumn("dcg", F.coalesce(F.col("dcg"), F.lit(0.0)))
+            .withColumn("ndcg", F.round(F.col("dcg") / F.col("idcg"), 6))
+            .select("query_id", "dcg", "idcg", "ndcg")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        truth.unpersist()
 
 
 NDCG_EVAL_SQL = f"""

@@ -67,12 +67,13 @@ def top_k(
     part: str | list[str] = "query_id",
     score: str = "cosine",
     tie: str = "neighbor_id",
+    ascending: bool = False,
 ) -> DataFrame:
-    """The first ``k`` rows of each ``part`` ranked by ``score`` DESC,
+    """The first ``k`` rows of each ``part`` ranked by ``score`` DESC
+    (ASC when ``ascending``: nearest-centroid routing by ``d2``),
     ``tie`` ASC, numbered 1.. in ``rank``."""
-    w = Window.partitionBy(part).orderBy(
-        F.col(score).desc(), F.col(tie).asc()
-    )
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(part).orderBy(order, F.col(tie).asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
@@ -86,13 +87,15 @@ def sql_top_k(
     part: str = "query_id",
     score: str = "cosine",
     tie: str = "neighbor_id",
+    ascending: bool = False,
 ) -> str:
     """DuckDB twin of ``top_k``: CTE ``out`` keeping ``cols`` of the
     ranked rows of ``scored`` (a CTE name or a parenthesized query)."""
+    order = "ASC" if ascending else "DESC"
     return f"""{out} AS (
   SELECT {cols} FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY {part}
-      ORDER BY {score} DESC, {tie} ASC) AS rank
+      ORDER BY {score} {order}, {tie} ASC) AS rank
     FROM {scored}
   ) WHERE rank <= {k}
 )"""
@@ -871,6 +874,15 @@ _D2_FOLD = (
 )
 
 
+def _route(queries: DataFrame, cents_lit: str, n: int) -> DataFrame:
+    """Each (query_id, e1) row with the ``n`` nearest of the centroid
+    structs ``c`` (k, c) of ``cents_lit``, ranked d2 ASC, k ASC."""
+    probes = queries.select(
+        "query_id", "e1", F.explode(F.expr(cents_lit)).alias("c")
+    ).withColumn("d2", F.expr(_D2_FOLD.format(x="e1", c="c.c")))
+    return top_k(probes, n, score="d2", tie="c.k", ascending=True)
+
+
 def _assign_expr(cents_lit: str, vec_col: str = "embedding") -> str:
     """Nearest-centroid id: array_min over (d2, k) structs — struct
     ordering is lexicographic, so ties in d2 break to the lowest k,
@@ -1046,21 +1058,8 @@ def ivf_trained_search(
         emb, c_cols=(F.expr(_assign_expr(cents_lit)).alias("bucket"),),
         n=n_queries,
     )
-    probes = (
-        queries.select(
-            "query_id", "e1", F.explode(F.expr(cents_lit)).alias("c")
-        )
-        .withColumn("d2", F.expr(_D2_FOLD.format(x="e1", c="c.c")))
-        .withColumn(
-            "cent_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("d2").asc(), F.col("c.k").asc()
-                )
-            ),
-        )
-        .filter(F.col("cent_rank") <= nprobe)
-        .select("query_id", F.col("c.k").alias("bucket"), "e1")
+    probes = _route(queries, cents_lit, nprobe).select(
+        "query_id", F.col("c.k").alias("bucket"), "e1"
     )
     scored = (
         corpus.join(F.broadcast(probes), "bucket")
@@ -1081,15 +1080,10 @@ def _sql_d2(e: str, c: str) -> str:
 
 
 def _sql_assign(prev_cents: str, out: str, corpus: str = "corpus") -> str:
-    d2 = _sql_d2("v.e", "c.centroid")
-    return f"""{out} AS (
-  SELECT vec_id, e, cluster FROM (
-    SELECT v.vec_id, v.e, c.cluster,
-      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY {d2} ASC, c.cluster ASC) AS rn
+    return sql_top_k(out, f"""(
+    SELECT v.vec_id, v.e, c.cluster, {_sql_d2("v.e", "c.centroid")} AS d2
     FROM {corpus} v CROSS JOIN {prev_cents} c
-  ) WHERE rn = 1
-)"""
+  )""", 1, "vec_id, e, cluster", "vec_id", "d2", "cluster", ascending=True)
 
 
 def _sql_update(assigned: str, out: str) -> str:
@@ -1119,16 +1113,13 @@ def _knn_ivf_trained_sql() -> str:
         ctes.append(_sql_update(f"a{i}", f"c{i}"))
     final = f"c{KMEANS_ITERS}"
     ctes.append(_sql_assign(final, "af"))
-    d2q = _sql_d2("v.e", "c.centroid")
-    ctes.append(f"""probes AS (
-  SELECT query_id, cluster, qe FROM (
+    ctes.append(sql_top_k("probes", f"""(
     SELECT v.vec_id AS query_id, v.e AS qe, c.cluster,
-      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY {d2q} ASC, c.cluster ASC) AS cent_rank
+      {_sql_d2("v.e", "c.centroid")} AS d2
     FROM corpus v CROSS JOIN {final} c
     WHERE v.vec_id < {N_QUERIES}
-  ) WHERE cent_rank <= {TRAINED_NPROBE}
-)""")
+  )""", TRAINED_NPROBE, "query_id, cluster, qe", score="d2", tie="cluster",
+        ascending=True))
     ctes.append(f"""scored AS (
   SELECT p.query_id, p.cluster AS bucket, a.vec_id AS neighbor_id,
     ROUND({sql_cosine("p.qe", "a.e")}, 6) AS cosine
@@ -1609,19 +1600,7 @@ def ivfpq_search(
     # probe the nprobe nearest lists; the query residual is per-list
     queries, corpus = split_queries(emb, n=n_queries)
     probes = (
-        queries.select(
-            "query_id", "e1", F.explode(F.expr(clit)).alias("c")
-        )
-        .withColumn("d2", F.expr(_D2_FOLD.format(x="e1", c="c.c")))
-        .withColumn(
-            "cent_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("d2").asc(), F.col("c.k").asc()
-                )
-            ),
-        )
-        .filter(F.col("cent_rank") <= nprobe)
+        _route(queries, clit, nprobe)
         .select(
             "query_id",
             F.col("c.k").alias("bucket"),
@@ -1762,18 +1741,15 @@ def _knn_ivfpq_sql() -> str:
   JOIN p2af b ON b.vec_id = r.vec_id
 )""")
     # probes: nprobe nearest lists, query residual per probed list
-    d2q = _sql_d2("v.e", "c.centroid")
-    ctes.append(f"""probes AS (
-  SELECT query_id, bucket, qr FROM (
+    ctes.append(sql_top_k("probes", f"""(
     SELECT v.vec_id AS query_id, c.cluster AS bucket,
       list_transform(range(1, len(v.e) + 1),
                      j -> round(v.e[j] - c.centroid[j], 6)) AS qr,
-      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY {d2q} ASC, c.cluster ASC) AS cent_rank
+      {_sql_d2("v.e", "c.centroid")} AS d2
     FROM corpus v CROSS JOIN {fin} c
     WHERE v.vec_id < {N_QUERIES}
-  ) WHERE cent_rank <= {IVFPQ_NPROBE}
-)""")
+  )""", IVFPQ_NPROBE, "query_id, bucket, qr", score="d2", tie="bucket",
+        ascending=True))
     slices = {
         1: "list_slice(p.qr, 1, len(p.qr) // 2)",
         2: "list_slice(p.qr, len(p.qr) // 2 + 1, len(p.qr))",

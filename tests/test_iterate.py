@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from activity_classifier_spark_cassandra_spark.operators import coreset as CS
 from activity_classifier_spark_cassandra_spark.operators import graph as G
 from activity_classifier_spark_cassandra_spark.operators import graph_ann as GA
+from activity_classifier_spark_cassandra_spark.operators import retrieval as RET
 from activity_classifier_spark_cassandra_spark.operators import similarity as SIM
 from activity_classifier_spark_cassandra_spark.operators.iterate import RoundLoop
 from activity_classifier_spark_cassandra_spark.sources.io import load_table
@@ -40,8 +41,8 @@ _ALLOWED = {
     "operators/multimodal.py": 2,  # per-frame hashes
     "operators/graph.py": 1,  # triangle count's pair frame
     "operators/manifest.py": 1,  # manifest rows
-    # MMR candidates (and release), NDCG truth ranking
-    "operators/retrieval.py": 3,
+    # MMR candidates (and release), NDCG truth ranking (its release, the result)
+    "operators/retrieval.py": 5,
     # IVF-PQ residuals, their release (error path, query), the result
     "operators/similarity.py": 4,
     "sources/io.py": 4,  # round-trip results over scratch files
@@ -76,18 +77,28 @@ def _new_blocks(sc, before: set[int], timeout: float = 30.0) -> set[int]:
     return extra
 
 
-def test_ivfpq_query_releases_its_residual_cache(spark):
-    """q_knn_ivfpq trains on a cached residual frame; the only block it
-    leaves behind is its own result checkpoint, and that result stays
-    readable after the release."""
+def _assert_leaves_only_its_result(spark, query) -> None:
+    """After its result is read, the only block ``query`` leaves
+    stored is its own result checkpoint."""
     sc = spark.sparkContext
     before = _stored(sc)
-    out = SIM.q_knn_ivfpq(spark, SF)
+    out = query(spark, SF)
+    assert out.count() > 0
     plan = out._jdf.queryExecution().analyzed()
     checkpointed = plan.getClass().getSimpleName() == "LogicalRDD"
     own = {plan.rdd().id()} if checkpointed else set()
     assert not _new_blocks(sc, before | own)
-    assert out.count() > 0
+
+
+def test_ivfpq_query_releases_its_residual_cache(spark):
+    """q_knn_ivfpq trains on a cached residual frame and releases it."""
+    _assert_leaves_only_its_result(spark, SIM.q_knn_ivfpq)
+
+
+def test_ndcg_query_releases_its_truth_ranking(spark):
+    """q_ndcg_eval reads its persisted truth ranking twice (DCG join,
+    IDCG aggregate) and releases it."""
+    _assert_leaves_only_its_result(spark, RET.q_ndcg_eval)
 
 
 def test_round_loop_tags_rounds_and_frees_each_round_after_the_next(spark):

@@ -319,3 +319,14 @@ def test_decoders_byte_flip_fuzz_only_notimplemented_escapes():
                 decode(bytes(b))
             except NotImplementedError:
                 pass
+
+
+def test_short_avih_is_notimplemented():
+    """An AVI whose ``avih`` chunk is shorter than its 56 bytes is a
+    corrupt header: it must surface as NotImplementedError, never as
+    the struct.error of a short read, which would fail the Spark task."""
+    avih = MM._riff_chunk(b"avih", struct.pack("<4I", 100_000, 0, 0, 0))
+    avi = MM._riff_chunk(b"RIFF", b"AVI " + MM._riff_list(b"hdrl", avih))
+    MM._DEC_CACHE.clear()
+    with pytest.raises(NotImplementedError):
+        MM.decode_avi_mjpeg(avi)

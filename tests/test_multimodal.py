@@ -535,6 +535,74 @@ def test_q_video_frames_contract(spark):
     assert got == want
 
 
+def _clip_rows(spark, *rows):
+    return spark.createDataFrame(list(rows), "media_id long, content binary")
+
+
+def test_video_clip_with_a_corrupt_sampled_frame_is_one_failure(spark):
+    """A clip whose sampled frame 3 is a truncated JPEG is one failed
+    blob: extract_video_frame_stats gives exactly ONE decode_ok=false
+    row for it (no frame-0 row beside it), and extract_video_phash
+    gives no rows (no partial hash list for the dedup queries)."""
+    import numpy as np
+
+    from activity_classifier_spark_cassandra_spark.operators.multimodal import (
+        encode_avi_mjpeg,
+        encode_jpeg_baseline,
+        extract_video_frame_stats,
+        extract_video_phash,
+    )
+
+    frames = [
+        encode_jpeg_baseline(np.full((16, 16), 40 + 20 * i, dtype=np.uint8))
+        for i in range(4)
+    ]
+    frames[3] = frames[3][:40]
+    df = _clip_rows(spark, (7, bytearray(encode_avi_mjpeg(frames, 16, 16))))
+    stats = [r.asDict() for r in extract_video_frame_stats(df).collect()]
+    assert stats == [
+        {"media_id": 7, "frame_idx": -1, "width": 0, "height": 0,
+         "mean_value": 0.0, "decode_ok": False}
+    ]
+    assert extract_video_phash(df).collect() == []
+
+
+def test_video_frame_stats_null_content_is_one_failure_row(spark):
+    """A null payload is a failed blob like any undecodable one: one
+    decode_ok=false row, beside the decoded clip's sampled frames."""
+    import numpy as np
+
+    from activity_classifier_spark_cassandra_spark.operators.multimodal import (
+        encode_avi_mjpeg,
+        encode_jpeg_baseline,
+        extract_video_frame_stats,
+    )
+
+    frame = encode_jpeg_baseline(np.full((16, 16), 90, dtype=np.uint8))
+    df = _clip_rows(
+        spark, (1, bytearray(encode_avi_mjpeg([frame] * 4, 16, 16))), (2, None)
+    )
+    got = sorted(
+        (r.media_id, r.frame_idx, r.decode_ok)
+        for r in extract_video_frame_stats(df).collect()
+    )
+    assert got == [(1, 0, True), (1, 3, True), (2, -1, False)]
+
+
+def test_one_decode_stage_and_one_error_handler():
+    """Every extractor runs on the module's one Arrow decode stage, and
+    the codec error contract is handled in one place: a second
+    ``mapInPandas(`` or ``except NotImplementedError`` in
+    operators/multimodal.py is a hand-rolled extractor loop."""
+    from pathlib import Path
+
+    from activity_classifier_spark_cassandra_spark.operators import multimodal
+
+    src = Path(multimodal.__file__).read_text()
+    assert src.count("mapInPandas(") <= 1
+    assert src.count("except NotImplementedError") <= 1
+
+
 def test_q_video_near_dup_groups_reencodes(spark):
     """Brightness-shifted re-encodes of the same clip content (every 3
     consecutive doc_ids) must share a signature with keep on the
